@@ -894,8 +894,10 @@ def embedding_near_dup_pairs(
     dim = int(first["d"]) if first is not None else 0
     if dim <= 0:
         # no usable vectors at all — the result is trivially empty
-        return df.sparkSession.createDataFrame(
-            [],
+        from sif_spark.sources.memory import local_frame
+
+        return local_frame(
+            df.sparkSession,
             T.StructType(
                 [
                     T.StructField("id_a", T.LongType(), False),

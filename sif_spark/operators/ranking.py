@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from sif_spark.sources.memory import local_frame
+
 
 def _global_rank_with_total(
     df: DataFrame,
@@ -54,9 +56,10 @@ def _global_rank_with_total(
     # would run (VERDICT r2 "What's wrong" #2); the join stays O(1) in
     # plan size regardless of partition count and the broadcast is
     # #partitions rows.
-    offsets_df = df.sparkSession.createDataFrame(
-        [(int(pid), int(off)) for pid, off in offsets.items()],
+    offsets_df = local_frame(
+        df.sparkSession,
         "__pid int, __offset long",
+        {"__pid": list(offsets), "__offset": list(offsets.values())},
     )
     w = Window.partitionBy("__pid").orderBy(*order_by)
     out = (

@@ -33,6 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
+from sif_spark.sources.memory import local_frame
+
 
 # ---------------------------------------------------------------------------
 # Expression-level cosine (reference form; fine for a few rows, do NOT
@@ -183,8 +185,8 @@ def _bf_knn_single(
     qids, Q = _collect_normalized(queries, vec_col, query_id_col)
     spark = corpus.sparkSession
     if len(qids) == 0:  # empty query set (or empty hash-chunk)
-        empty = spark.createDataFrame(
-            [],
+        empty = local_frame(
+            spark,
             T.StructType(
                 [
                     T.StructField("qid", T.LongType(), False),
@@ -692,6 +694,69 @@ def _committed_gen(session, index_table_path: str) -> int:
     return int(max(gens)) if gens else 0
 
 
+def _probe_state_path(index_table_path: str) -> str:
+    return f"{index_table_path}/ann_meta/probe_state.json"
+
+
+# Probe state goes through the SAME Hadoop FileSystem API as the
+# manifests (VERDICT r14 "What's wrong" #4): a raw local open() on a
+# table path breaks the moment the index table lives on an object
+# store. Only a missing or garbled file is harmless by design — the
+# row count degrades to 0 and the next fold re-probes; any other error
+# (permissions, a dead gateway, a bug) propagates.
+_MISSING = "java.io.FileNotFoundException"
+_GARBLED = "org.apache.hadoop.fs.ChecksumException"
+
+
+def _read_probe_state(session, index_table_path: str) -> int:
+    """Corpus rows at the maintainer's last recall probe (0 if the
+    state file is missing or unparsable)."""
+    import json as _json
+
+    from py4j.protocol import Py4JJavaError
+
+    from sif_spark.table import _fs, _java_error_is
+
+    fs, p, _jvm = _fs(session, _probe_state_path(index_table_path))
+    try:
+        stream = fs.open(p)
+        try:
+            data = bytes(stream.readAllBytes())  # Java 11+ API
+        finally:
+            stream.close()
+    except Py4JJavaError as e:
+        if _java_error_is(session, e, _MISSING) or _java_error_is(session, e, _GARBLED):
+            return 0
+        raise
+    try:
+        return int(_json.loads(data.decode("utf-8"))["rows_at_probe"])
+    except (ValueError, KeyError, TypeError):  # torn or foreign content
+        return 0
+
+
+def _write_probe_state(session, index_table_path: str, rows: int) -> None:
+    """Record ``rows`` as the corpus size of the last recall probe. A
+    missing index directory (the table was dropped meanwhile) only
+    costs an extra probe, so it is ignored."""
+    import json as _json
+
+    from py4j.protocol import Py4JJavaError
+
+    from sif_spark.table import _fs, _java_error_is
+
+    fs, p, _jvm = _fs(session, _probe_state_path(index_table_path))
+    try:
+        out = fs.create(p, True)
+    except Py4JJavaError as e:
+        if _java_error_is(session, e, _MISSING):
+            return
+        raise
+    try:
+        out.write(bytearray(_json.dumps({"rows_at_probe": int(rows)}), "utf-8"))
+    finally:
+        out.close()
+
+
 def _hash_sample(df: DataFrame, id_col: str, n: int) -> DataFrame:
     """Bounded deterministic sample — xxhash64 order, the same rows on
     any partitioning (train_pq's discipline)."""
@@ -1049,49 +1114,6 @@ def maintain_ivf_index_table(
                 return False
         return True
 
-    _probe_state_path = f"{index_table_path}/ann_meta/probe_state.json"
-
-    # Probe state goes through the SAME Hadoop FileSystem API as the
-    # manifests (VERDICT r14 "What's wrong" #4): a raw local open() on
-    # a table path breaks the moment the index table lives on an
-    # object store. Losing or tearing the file is harmless by design —
-    # _rows_at_last_probe degrades to 0 and the next fold re-probes.
-
-    def _rows_at_last_probe(session) -> int:
-        import json as _json
-
-        from sif_spark.table import _fs
-
-        try:
-            fs, p, _jvm = _fs(session, _probe_state_path)
-            stream = fs.open(p)
-            try:
-                data = bytes(stream.readAllBytes())  # Java 11+ API
-            finally:
-                stream.close()
-            return int(_json.loads(data.decode("utf-8"))["rows_at_probe"])
-        except Exception:
-            return 0
-
-    def _save_probe_state(session, rows: int) -> None:
-        import json as _json
-
-        from sif_spark.table import _fs
-
-        try:
-            fs, p, _jvm = _fs(session, _probe_state_path)
-            out = fs.create(p, True)
-            try:
-                out.write(
-                    bytearray(
-                        _json.dumps({"rows_at_probe": int(rows)}), "utf-8"
-                    )
-                )
-            finally:
-                out.close()
-        except Exception:
-            pass  # degraded = an extra probe next growth check
-
     def _probe_ok(session, meta, ctx: dict) -> bool:
         """Exact top-k of a bounded query sample all contained in the
         index's ADC top-(margin x candidates)? One bounded distributed
@@ -1148,7 +1170,7 @@ def maintain_ivf_index_table(
             return  # nothing indexed yet
         rows_now = _corpus_rows(session)
         if rows_now < refresh_growth_check * max(
-            1, _rows_at_last_probe(session)
+            1, _read_probe_state(session, index_table_path)
         ):
             return
         dim = meta.centroids.shape[1]
@@ -1165,7 +1187,7 @@ def maintain_ivf_index_table(
                 session, meta, e4 + 1 + attempt, m_new=m_esc,
                 keep_centroids=True,
             )
-        _save_probe_state(session, rows_now)
+        _write_probe_state(session, index_table_path, rows_now)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Observation
@@ -1363,8 +1385,24 @@ def extend_ivf_index(
     )
 
 
+def _probe_frame(spark, qids: np.ndarray, cells: np.ndarray) -> DataFrame:
+    """(qid, cell) for every cell ``cells[i]`` that query ``qids[i]``
+    probes, as a local frame: it plans as a LocalTableScan, so the
+    broadcast side of the probe join runs no Python task."""
+    return local_frame(
+        spark,
+        "qid long, cell int",
+        {
+            "qid": np.repeat(qids.astype(np.int64), cells.shape[1]),
+            "cell": cells.reshape(-1).astype(np.int32),
+        },
+    )
+
+
 def load_ivf_index(spark, path: str) -> IVFIndex:
     import os
+
+    from pyspark.errors import AnalysisException
 
     cent = (
         spark.read.parquet(os.path.join(path, "centroids"))
@@ -1376,10 +1414,13 @@ def load_ivf_index(spark, path: str) -> IVFIndex:
     vec_col = corpus_rows = None
     try:
         meta = spark.read.parquet(os.path.join(path, "meta")).first()
-        if meta is not None:
-            vec_col, corpus_rows = meta["vec_col"], meta["corpus_rows"]
-    except Exception:
-        pass  # pre-metadata artifact — validation will skip these
+    except AnalysisException as e:
+        # a pre-metadata artifact has no meta/ — validation skips these
+        if (e.getCondition() or "") != "PATH_NOT_FOUND":
+            raise
+        meta = None
+    if meta is not None:
+        vec_col, corpus_rows = meta["vec_col"], meta["corpus_rows"]
     return IVFIndex(centroids, assigned, vec_col=vec_col, corpus_rows=corpus_rows)
 
 
@@ -1459,14 +1500,7 @@ def ivf_knn(
         # query-side probe list: small — computed on the driver
         qids, Q = _collect_normalized(queries, vec_col, id_col)
         probe_cells = np.argsort(-(Q @ cnorm.T), axis=1)[:, :n_probe]
-        probes = spark.createDataFrame(
-            [
-                (int(qid), int(cell))
-                for qid, cells in zip(qids, probe_cells)
-                for cell in cells
-            ],
-            "qid long, cell int",
-        )
+        probes = _probe_frame(spark, qids, probe_cells)
         cands = (
             assigned_slim.join(nvecs, "nid")
             .join(F.broadcast(probes), "cell")
@@ -1846,9 +1880,7 @@ def pq_knn(
     qids, _Qm, luts = _pq_luts(codebook, queries, vec_col, query_id_col)
     spark = codes.sparkSession
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, nid long, rank int, adist double"
-        )
+        return local_frame(spark, "qid long, nid long, rank int, adist double")
     bc = spark.sparkContext.broadcast((qids, luts))
     out_schema = T.StructType(
         [
@@ -1912,9 +1944,7 @@ def ivf_pq_knn(
     qids, Qm, luts = _pq_luts(codebook, queries, vec_col, query_id_col)
     spark = codes.sparkSession
     if len(qids) == 0:
-        return spark.createDataFrame(
-            [], "qid long, nid long, rank int, adist double"
-        )
+        return local_frame(spark, "qid long, nid long, rank int, adist double")
     cents = index.centroids
     if codebook.normalized:
         nrm = np.linalg.norm(cents, axis=1, keepdims=True)
@@ -1930,10 +1960,7 @@ def ivf_pq_knn(
     )
     n_probe = min(n_probe, cents.shape[0])
     probe = np.argsort(d2, axis=1)[:, :n_probe]
-    pairs = [
-        (int(qids[i]), int(c)) for i in range(len(qids)) for c in probe[i]
-    ]
-    probe_df = spark.createDataFrame(pairs, "qid long, cell int")
+    probe_df = _probe_frame(spark, qids, probe)
     cand = (
         F.broadcast(probe_df)
         .join(index.assigned, "cell")

@@ -454,6 +454,8 @@ def daily_ingest(
         minhash_signatures,
         sig_band_keys,
     )
+    from sif_spark.sources.memory import local_frame
+
     spark = batch.sparkSession
     params = (
         f"{epoch_token}|k={decontaminate_k}|hits={min_hits}|h={num_hashes}"
@@ -573,7 +575,7 @@ def daily_ingest(
             hist_sigs = spark.read.parquet(*[f"{d}/sigs" for d in history])
             hist_bands = None
     else:
-        hist_fps = spark.createDataFrame([], "fingerprint string")
+        hist_fps = local_frame(spark, "fingerprint string")
         hist_sigs = minhash_signatures(
             batch.limit(0), text_col, id_col, num_hashes, shingle_k, hash_fn
         )

@@ -297,6 +297,14 @@ def _fs(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
+def _java_error_is(spark: SparkSession, e, java_class: str) -> bool:
+    """True iff the Py4JJavaError ``e`` wraps a ``java_class`` (or a
+    subclass), e.g. ``java.io.FileNotFoundException``."""
+    from py4j.java_gateway import is_instance_of
+
+    return is_instance_of(spark.sparkContext._gateway, e.java_exception, java_class)
+
+
 def prune_groups(m: dict, col: str, lo, hi) -> list[dict]:
     """Groups of manifest ``m`` that MAY hold a row with ``col`` in
     [lo, hi] — the read-side data-skipping decision, as a module
@@ -1224,7 +1232,9 @@ class SifTable:
         class shares written names + ids), so renamed/dropped columns
         surface exactly as before."""
         if not groups:
-            return self.spark.createDataFrame([], target)
+            from sif_spark.sources.memory import local_frame
+
+            return local_frame(self.spark, target)
         gids = {g["id"] for g in groups}
         dvs = [
             d for d in m.get("dvs") or [] if gids & set(d["gids"])
@@ -1461,11 +1471,13 @@ class SifTable:
         return out
 
     def _empty_changes(self, target: T.StructType, cdf: bool) -> DataFrame:
+        from sif_spark.sources.memory import local_frame
+
         extra = (
             [T.StructField("_change_type", T.StringType(), False)] if cdf else []
         )
-        return self.spark.createDataFrame(
-            [],
+        return local_frame(
+            self.spark,
             T.StructType(
                 target.fields
                 + extra

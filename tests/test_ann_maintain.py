@@ -392,3 +392,70 @@ def test_append_window_folds_without_rewriting_index_groups(spark, dirs):
     assert idx_rows.count() == 120
     assert idx_rows.select("nid").distinct().count() == 120
     _assert_index_exact(spark, idx_path, src.read(), centroids)
+
+
+def test_probe_state_tolerates_only_missing_or_garbled_file(spark, tmp_path, monkeypatch):
+    """The maintainer's probe-state hint degrades to 0 (one extra recall
+    probe) when the file is missing or unparsable; any other failure of
+    the read or the write propagates instead of being swallowed."""
+    from py4j.protocol import Py4JJavaError
+
+    import sif_spark.table as table_mod
+
+    idx = str(tmp_path / "idx")
+    assert sgsim._read_probe_state(spark, idx) == 0  # never written
+    sgsim._write_probe_state(spark, idx, 1234)
+    assert sgsim._read_probe_state(spark, idx) == 1234
+    state = tmp_path / "idx" / "ann_meta" / "probe_state.json"
+    state.write_bytes(b"{\"rows_at")  # no longer matches its checksum
+    assert sgsim._read_probe_state(spark, idx) == 0
+    (tmp_path / "idx" / "ann_meta" / ".probe_state.json.crc").unlink()
+    for garbled in (b"{\"rows_at", b"[1, 2]", b"{}", b"\xff\xfe"):
+        state.write_bytes(garbled)
+        assert sgsim._read_probe_state(spark, idx) == 0, garbled
+
+    jvm = spark.sparkContext._jvm
+    io_error = Py4JJavaError("fs call", jvm.java.io.IOException("disk gone"))
+
+    class FailingFs:
+        def __init__(self, err):
+            self.err = err
+
+        def open(self, p):
+            raise self.err
+
+        def create(self, p, overwrite):
+            raise self.err
+
+    for err in (io_error, RuntimeError("gateway down")):
+        monkeypatch.setattr(
+            table_mod, "_fs", lambda s, p, err=err: (FailingFs(err), p, None)
+        )
+        with pytest.raises(type(err)):
+            sgsim._read_probe_state(spark, idx)
+        with pytest.raises(type(err)):
+            sgsim._write_probe_state(spark, idx, 1)
+
+
+def test_load_ivf_index_meta_errors_propagate(spark, tmp_path):
+    """A missing meta/ (an index saved before provenance metadata) loads
+    without validation metadata; an unreadable one is an error."""
+    import shutil
+
+    corpus = spark.createDataFrame(
+        [(i, [float(np.cos(i * 0.7 + d)) for d in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "ivf")
+    sgsim.save_ivf_index(sgsim.build_ivf_index(corpus, n_cells=4, max_iter=2), path)
+    assert sgsim.load_ivf_index(spark, path).corpus_rows == 40
+
+    shutil.rmtree(tmp_path / "ivf" / "meta")
+    legacy = sgsim.load_ivf_index(spark, path)
+    assert legacy.vec_col is None and legacy.corpus_rows is None
+
+    (tmp_path / "ivf" / "meta").mkdir()
+    (tmp_path / "ivf" / "meta" / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception) as err:
+        sgsim.load_ivf_index(spark, path)
+    assert "PATH_NOT_FOUND" not in str(err.value)

@@ -227,6 +227,28 @@ def test_ivf_knn_distributed_query_tier(spark):
     assert got == exp
 
 
+def test_ivf_knn_probe_list_is_a_local_scan(spark, tmp_path):
+    """The driver-built query->cell probe list ships as Arrow and plans
+    as a LocalTableScan: no ExistingRDD scan (a Python RDD whose tasks
+    start Python workers to do no Python work) in the executed plan."""
+    from sif_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_knn,
+        load_ivf_index,
+        save_ivf_index,
+    )
+
+    corpus = _vec_df(spark, 200)
+    queries = _vec_df(spark, 15)
+    save_ivf_index(build_ivf_index(corpus, n_cells=4, max_iter=2, seed=7), str(tmp_path))
+    index = load_ivf_index(spark, str(tmp_path))
+    out = ivf_knn(corpus, queries, k=3, n_probe=2, index=index)
+    assert len(out.collect()) == 15 * 3
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in executed, executed
+    assert "LocalTableScan" in executed, executed
+
+
 def test_global_rank_plan_flat_at_high_partition_count(spark):
     """VERDICT r2 'What's wrong' #2: the per-partition rank offsets must
     ship as a broadcast-joined frame, not an O(#partitions) CASE chain —
