@@ -208,21 +208,54 @@ def _split_top(s: str) -> list[str]:
     return items
 
 
+def _gid_index(branches: list[list[str]]) -> int | None:
+    """The gid literal's position in Expand branch tuples: the first
+    position holding a bare integer in EVERY branch, all distinct (the
+    gid numbers the branches). A constant projected in only some
+    branches never qualifies, so it stays part of the fingerprint."""
+    for i in range(min(len(b) for b in branches)):
+        vals = [b[i] for b in branches]
+        if all(_BARE_INT.match(x) for x in vals) and len(set(vals)) == len(
+            vals
+        ):
+            return i
+    return None
+
+
 def _canon_items(s: str) -> str:
     """Sort top-level comma items; nested [..] items (Expand branch
-    tuples) first canonicalize recursively with their bare-integer
-    gid literal masked (the gid is the branch's position, which is
-    exactly the unstable part)."""
-    items = []
-    for it in _split_top(s):
-        if it.startswith("[") and it.endswith("]"):
-            inner = [
-                "N" if _BARE_INT.match(x) else x
-                for x in _split_top(it[1:-1])
-            ]
-            it = "[" + ", ".join(sorted(inner)) + "]"
-        items.append(it)
-    return ", ".join(sorted(items))
+    tuples) first canonicalize recursively with their gid literal
+    masked (the gid is the branch's position, which is exactly the
+    unstable part)."""
+    items = _split_top(s)
+    nested = [
+        _split_top(it[1:-1])
+        for it in items
+        if it.startswith("[") and it.endswith("]")
+    ]
+    gid = _gid_index(nested) if nested else None
+    out = [it for it in items if not (it.startswith("[") and it.endswith("]"))]
+    for inner in nested:
+        if gid is not None:
+            inner = inner[:gid] + ["N"] + inner[gid + 1:]
+        out.append("[" + ", ".join(sorted(inner)) + "]")
+    return ", ".join(sorted(out))
+
+
+def _mask_filter_gids(text: str) -> str:
+    """``gid# = N`` inside every ``FILTER (WHERE …)`` clause: there the
+    literal is the branch's position — the same unstable ordering in
+    another costume — and the function name (count(col)) already
+    identifies the branch. A gid comparison anywhere else is kept."""
+    out, i = [], 0
+    while (j := text.find("FILTER (WHERE ", i)) >= 0:
+        k, depth = j + len("FILTER ("), 1
+        while k < len(text) and depth:
+            depth += {"(": 1, ")": -1}.get(text[k], 0)
+            k += 1
+        out += [text[i:j], re.sub(r"gid# = \d+", "gid# = N", text[j:k])]
+        i = k
+    return "".join(out) + text[i:]
 
 
 def _canon_group(s: str) -> str:
@@ -281,11 +314,7 @@ def _canon_distinct_rewrite(text: str) -> str:
         and _QUALIFIED_ATTR.search(text)
     ):
         return text
-    # the gid literal in the rewrite's FILTER (WHERE (gid# = N))
-    # predicates is the branch's position — the same unstable ordering
-    # in another costume; the function name (count(col)) already
-    # identifies the branch, so the literal carries no stable signal
-    text = re.sub(r"gid# = \d+", "gid# = N", text)
+    text = _mask_filter_gids(text)
     out = []
     for line in text.splitlines():
         stripped = line.strip()

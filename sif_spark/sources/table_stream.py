@@ -865,6 +865,11 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         import uuid
 
         from sif_spark.logstore import PosixExclLogStore
+        from sif_spark.table import (
+            _advance_txns,
+            _intern_col_eras,
+            next_manifest,
+        )
 
         files = [m for m in messages if m is not None and m.file]
         total_rows = sum(m.rows for m in files)
@@ -890,9 +895,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         for _ in range(30):
             versions = _versions_on_disk(self.table_path)
             if not versions:
-                m = None
-                v = 1
-                op = "create"
+                m, v, op = {}, 1, "create"
             else:
                 m = _load_manifest(self.table_path, versions[-1])
                 if m.get("bucket"):
@@ -908,15 +911,12 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                     )
                 v = m["version"] + 1
                 op = "overwrite" if self.overwrite else "append"
-            txns = dict(m.get("txns", {})) if m else {}
-            if self.txn is not None:
-                app, epoch = self.txn
-                if int(txns.get(app, -1)) >= epoch:
-                    shutil.rmtree(self.staging, ignore_errors=True)
-                    return  # replayed epoch: committed no-op
-                txns[app] = epoch
-            key = (m or {}).get("key_col") or self.key_col
-            if m is not None:
+            txns = _advance_txns(m, self.txn)
+            if txns is None:
+                shutil.rmtree(self.staging, ignore_errors=True)
+                return  # replayed epoch: committed no-op
+            key = m.get("key_col") or self.key_col
+            if m:
                 columns = m.get("columns")
             else:
                 # fresh table: mint column ids (the rename/drop
@@ -962,54 +962,20 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             # an empty-frame OVERWRITE commits groups=[] (a readable
             # empty snapshot) — a zero-file group dir would make the
             # new latest version unreadable
-            groups = new_groups if (self.overwrite or m is None) else (
+            groups = new_groups if (self.overwrite or not m) else (
                 m["groups"] + new_groups
             )
-            # the monotonic column-id watermark carries forward (the
-            # DS writer never mints ids — schema must match exactly —
-            # but omitting it would reset the floor a later API-side
-            # drop/re-add relies on)
-            manifest = {
-                "version": v,
-                "parent": m["version"] if m else None,
-                "op": op,
-                "columns": columns,
-                "key_col": key,
-                "key_cols": (m or {}).get("key_cols"),
-                "bucket": None,
-                "key_bloom": bool(m.get("key_bloom", False)) if m else False,
-                "cdf": bool(m.get("cdf", False)) if m else False,
-                # dv/dvs carry EXACTLY like SifTable.append/overwrite
-                # (ADVICE r13 high): omitting them on an append to a
-                # dv=True table with live tombstones published a head
-                # with no dvs list — every tombstoned row silently
-                # resurrected for all subsequent reads. Overwrite
-                # keeps the dv property but clears the sidecars (the
-                # old groups they cover leave the snapshot), mirroring
-                # SifTable.overwrite.
-                "dv": bool(m.get("dv", False)) if m else False,
-                "dvs": (
-                    [] if (self.overwrite or m is None)
-                    else (m.get("dvs") or [])
-                ),
-                "txns": txns,
-                "added": added,
-                "schema": ddl,
-                "groups": groups,
-            }
-            if columns is not None:
-                # the monotonic column-id watermark carries forward
-                # (the DS writer never mints ids — schema must match
-                # exactly — but omitting it would reset the floor a
-                # later API-side drop/re-add relies on)
-                manifest["last_column_id"] = max(
-                    [int((m or {}).get("last_column_id", -1))]
-                    + [int(c["id"]) for c in columns]
-                )
+            # next_manifest carries dv/dvs EXACTLY like SifTable.append/
+            # overwrite (ADVICE r13 high: a head published without its
+            # dvs list silently resurrected every tombstoned row) and
+            # the monotonic column-id watermark (the DS writer never
+            # mints ids, but a later API-side drop/re-add relies on it)
+            manifest = next_manifest(
+                m, op, groups, ddl, columns=columns, added=added,
+                txns=txns, key_col=key,
+            )
             os.makedirs(mdir, exist_ok=True)
             target = os.path.join(mdir, f"v{v:010d}.json")
-            from sif_spark.table import _intern_col_eras
-
             if store.put_if_absent(
                 target, json.dumps(_intern_col_eras(manifest), indent=1)
             ):

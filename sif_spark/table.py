@@ -61,6 +61,18 @@ range-only — skipping is an optimization, never a correctness input
 (false positive ⇒ harmless rewrite). Group dirs are plain parquet:
 every scan benefit (pushdown, pruning, row-group stats) is Spark's.
 
+Keyed mutations: upsert, merge and delete_keys share ONE per-attempt
+core, ``SifTable._keyed_once`` (txn-replay check → key validation →
+source materialization → the bounds ∥ bloom-probe wave → the two-tier
+group split → one parallel write wave → manifest → the conflict-
+granular ``_commit_keyed``), retried by one wrapper (``_retrying``);
+each op only plans what differs — the anti-join survivor rewrite
+(upsert, copy-on-write delete_keys), merge's LEFT join + CASE, or the
+deletion-vector sidecar (dv delete_keys, delete-only merge). Every
+commit, including the `sif_table` DataSource writer's, builds its
+manifest with ``next_manifest``: the manifest field set lives there and
+nowhere else.
+
 Reference: sif datasource/file/file_datasource.go:24-47 is read-only
 glob loading; the commit/resume contract here extends
 sif_spark/pipeline.py's epoch stores (fault-injection-proven r9).
@@ -68,9 +80,11 @@ sif_spark/pipeline.py's epoch stores (fault-injection-proven r9).
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -89,13 +103,21 @@ def _parallel_jobs(*thunks):
     tasks back-fill executors freed by the earlier job's tail, and two
     independent group writes overlap instead of serializing their
     commit latencies). Returns results in thunk order; the first
-    failure propagates after all threads settle."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    failure propagates after all threads settle. Each pool thread runs
+    with a copy of the caller's local properties (job group,
+    description, scheduler pool) and job tags, so its jobs are
+    attributed like the caller's own."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
+    if isinstance(inherit, SparkSession):  # pinned-thread mode off
+        inherit = lambda t: t  # noqa: E731
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        futs = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futs]
 
 # per-group key Bloom filters (file skipping beyond min/max ranges),
@@ -313,28 +335,12 @@ def prune_groups(m: dict, col: str, lo, hi) -> list[dict]:
     SifTable.read_between/lookup. Conservative by design: groups
     without stats for the column always survive; an all-null group
     never can (range predicates reject NULL)."""
-    columns = m.get("columns")
-    col_id = None
-    if columns is not None:
-        for c in columns:
-            if c["name"] == col:
-                col_id = c["id"]
-                break
     keep = []
     for g in m["groups"]:
-        stat_key = col
-        ids = g.get("col_ids")
-        if col_id is not None and ids is not None:
-            # id-aware: the group's stats are keyed by its WRITTEN
-            # name; a group that never held this column id holds only
-            # NULLs for it — range predicates reject NULL, so it
-            # prunes outright (stronger than the by-name fallback)
-            written = [w for w, i in ids.items() if i == col_id]
-            if not written:
-                continue
-            stat_key = written[0]
-        st = g.get("stats", {}).get(stat_key)
-        if st is None:
+        st = _group_stat_range(m.get("columns"), g, col)
+        if st is _RANGE_ABSENT:
+            continue
+        if st is _RANGE_UNKNOWN:
             keep.append(g)
             continue
         gmin, gmax = st
@@ -372,6 +378,173 @@ def _carry_dvs(m: dict, groups: list[dict]) -> list[dict]:
         if kept:
             out.append({**d, "gids": kept} if kept != d["gids"] else d)
     return out
+
+
+def _ddl(schema: T.StructType) -> str:
+    """A schema as the manifest's DDL string (``name type, ...``)."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+    )
+
+
+# the table-level spec every manifest carries forward, with its default
+_SPEC = {
+    "key_col": None, "key_cols": None, "bucket": None,
+    "key_bloom": False, "cdf": False, "dv": False,
+}
+_CARRY = object()
+
+
+def next_manifest(
+    m: dict,
+    op: str,
+    groups: list[dict],
+    schema: T.StructType | str,
+    *,
+    columns=_CARRY,
+    added: list[str] = (),
+    txns: dict | None = None,
+    dvs: list[dict] | None = None,
+    **fields,
+) -> dict:
+    """The manifest of the snapshot that follows ``m`` (``{}`` before a
+    table's first commit) — the ONE place the manifest field set lives;
+    every commit (the SifTable ops and the `sif_table` DataSource
+    writer) builds its manifest here. Carries forward m's key spec,
+    bucket, bloom, cdf and dv flags (a keyword in ``fields`` overrides
+    any of them), its txn map and column ids unless given, and its
+    deletion vectors pruned to ``groups`` (_carry_dvs) unless ``dvs``
+    is given; renders ``schema`` (a StructType or DDL string) and
+    stamps the monotonic ``last_column_id`` watermark on a
+    columns-bearing manifest (legacy manifests stay legacy). The other
+    ``fields`` (op counters, ``cdc``, ``restored_from``, ...) are
+    recorded when not None."""
+    out = {
+        "version": int(m.get("version", 0)) + 1,
+        "parent": m.get("version"),
+        "op": op,
+        **{f: fields.pop(f, m.get(f, d)) for f, d in _SPEC.items()},
+        "txns": dict(m.get("txns", {})) if txns is None else txns,
+        "added": list(added),
+        "schema": schema if isinstance(schema, str) else _ddl(schema),
+        "columns": m.get("columns") if columns is _CARRY else columns,
+        "groups": groups,
+        "dvs": _carry_dvs(m, groups) if dvs is None else dvs,
+    }
+    out.update((k, v) for k, v in fields.items() if v is not None)
+    if out["columns"] is not None:
+        out["last_column_id"] = _last_col_id_after(m, out["columns"])
+    return out
+
+
+def _advance_txns(m: dict, txn: tuple[str, int] | None) -> dict | None:
+    """m's txn high-water map with ``txn=(app_id, epoch)`` recorded, or
+    None when that epoch already committed — a crash-replay, which the
+    caller turns into a no-op returning m's version."""
+    txns = dict(m.get("txns", {}))
+    if txn is not None:
+        app_id, epoch = txn
+        if int(txns.get(app_id, -1)) >= int(epoch):
+            return None
+        txns[app_id] = int(epoch)
+    return txns
+
+
+def _retrying(attempt, retries: int) -> int:
+    """Run one optimistic attempt up to ``retries`` times: a lost
+    commit race re-runs it against the fresh snapshot; the last loss
+    propagates."""
+    last: Exception | None = None
+    for _ in range(retries):
+        try:
+            return attempt()
+        except ConcurrentCommitError as e:
+            last = e
+    raise last  # type: ignore[misc]
+
+
+class _KeyedPlan(NamedTuple):
+    """A keyed op's plan, handed to the shared core (_keyed_once)."""
+
+    carried: list  # groups kept into the next snapshot, in order
+    frames: dict  # write-wave slot -> frame: "wg" / "ig" / "cdc" / "dv"
+    counts: Callable  # settled write results -> {counter: rows}
+    per_gid: dict | None = None  # "dv": tombstones per group id
+
+
+def _tagged(df: DataFrame, change_type: str) -> DataFrame:
+    return df.withColumn("_change_type", F.lit(change_type))
+
+
+def _key_match(keys: list[str]):
+    """The t/s equi-join condition on every key column."""
+    cond = F.lit(True)
+    for k in keys:
+        cond = cond & (F.col(f"t.`{k}`") == F.col(f"s.`{k}`"))
+    return cond
+
+
+def _target_side(merged: T.StructType) -> list:
+    return [F.col(f"t.`{f.name}`").alias(f.name) for f in merged.fields]
+
+
+def _clause(c: bool | str):
+    return F.expr(c) if isinstance(c, str) else F.lit(bool(c))
+
+
+def _merge_inserts(
+    source: DataFrame,
+    matched_from: DataFrame | None,
+    keys: list[str],
+    merged: T.StructType,
+    ins: bool | dict,
+    ins_cond: str | None,
+) -> DataFrame:
+    """merge's NOT MATCHED rows: source rows whose key no row of
+    ``matched_from`` holds (None: nothing can match), gated by
+    ``ins_cond`` and projected by ``ins`` — True inserts the source row
+    aligned to ``merged``, a mapping computes each listed column from
+    SQL over ``s.*`` (unlisted columns NULL)."""
+    s_new = (
+        source
+        if matched_from is None
+        else source.join(
+            matched_from.select(*keys).distinct(), on=keys, how="left_anti"
+        )
+    )
+    if ins_cond is not None:
+        s_new = s_new.alias("s").filter(
+            F.coalesce(F.expr(ins_cond), F.lit(False))
+        )
+    if not isinstance(ins, dict):
+        return _align(s_new, merged)
+    return s_new.alias("s").select(
+        *[
+            (
+                F.expr(ins[f.name]).cast(f.dataType)
+                if f.name in ins
+                else F.lit(None).cast(f.dataType)
+            ).alias(f.name)
+            for f in merged.fields
+        ]
+    )
+
+
+# clock reads: Spark folds each to one literal per QUERY (so it reports
+# them deterministic), but a group write and a change file are two
+# queries
+_CLOCK_NODES = frozenset(
+    {"CurrentTimestamp", "Now", "CurrentDate", "LocalTimestamp", "CurrentTime"}
+)
+
+
+def _volatile(expr) -> bool:
+    """True when the analyzed (JVM) expression can evaluate differently
+    in two queries over the same rows."""
+    if not expr.deterministic() or expr.nodeName() in _CLOCK_NODES:
+        return True
+    kids = expr.children()
+    return any(_volatile(kids.apply(i)) for i in range(kids.length()))
 
 
 _RANGE_ABSENT = object()   # group never held the column id: all NULL
@@ -817,15 +990,6 @@ class SifTable:
             json.loads(self.log.read_text(self._manifest_path(v)))
         )
 
-    def _stamp_floor(self, manifest: dict, m_prev: dict) -> dict:
-        """Record the monotonic ``last_column_id`` watermark on a
-        columns-bearing manifest (legacy manifests stay legacy)."""
-        if manifest.get("columns") is not None:
-            manifest["last_column_id"] = _last_col_id_after(
-                m_prev, manifest["columns"]
-            )
-        return manifest
-
     def _commit(self, manifest: dict) -> int:
         """Publish the manifest via the log store's put-if-absent:
         exactly one writer wins a version; the loser re-reads the new
@@ -844,12 +1008,16 @@ class SifTable:
     # -- data groups ---------------------------------------------------------
 
     def _write_group(self, df: DataFrame, version: int, seq: int,
-                     key_col: str | list[str] | None,
-                     bucket: dict | None = None,
-                     key_bloom: bool = False,
-                     columns: list[dict] | None = None) -> dict:
+                     m: dict | str, columns: list[dict] | None = None) -> dict:
+        """Write ``df`` as data group ``seq`` of ``version``, laid out
+        by the key spec, bucket and bloom flag of manifest ``m`` (a bare
+        key name stands for a plain keyed table), its written columns
+        recorded against the snapshot ``columns``."""
         from pyspark.sql import Observation
 
+        if isinstance(m, str):
+            m = {"key_col": m}
+        keys, bucket = _key_cols(m), m.get("bucket")
         gid = f"g-{version:010d}-{seq:03d}-{uuid.uuid4().hex[:8]}"
         gpath = f"{self.path}/data/{gid}"
         # group stats (row count, key min/max for file skipping) ride
@@ -858,7 +1026,6 @@ class SifTable:
         # which at compaction scale means reading the table twice
         obs = Observation()
         agg = [F.count(F.lit(1)).alias("rows")]
-        keys = [key_col] if isinstance(key_col, str) else list(key_col or [])
         # the dedicated key_min/key_max pair is the 1-ary fast path;
         # composite keys skip via the per-column `stats` ranges (below)
         # plus the key-TUPLE bloom
@@ -921,7 +1088,7 @@ class SifTable:
         if has_key:
             stats["key_min"] = row["kmin"]
             stats["key_max"] = row["kmax"]
-        if key_bloom and keys and all(k in df.columns for k in keys):
+        if m.get("key_bloom") and keys and all(k in df.columns for k in keys):
             # one column-pruned scan of the freshly written group
             # (the key column(s) only); None when saturated
             bloom = _bloom_of(
@@ -929,14 +1096,7 @@ class SifTable:
             )
             if bloom is not None:
                 stats["key_bloom"] = bloom
-        out = {
-            "id": gid,
-            "path": gpath,
-            "schema": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            ),
-            **stats,
-        }
+        out = {"id": gid, "path": gpath, "schema": _ddl(df.schema), **stats}
         ids = _col_ids_for(columns, df.schema)
         if ids:
             out["col_ids"] = ids
@@ -993,10 +1153,7 @@ class SifTable:
         out = {
             "path": cpath,
             "rows": int(obs.get["rows"]),
-            "schema": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields
-            ),
+            "schema": _ddl(df.schema),
         }
         ids = _col_ids_for(columns, df.schema)
         if ids:
@@ -1069,31 +1226,22 @@ class SifTable:
                 "dv=True (deletion vectors) needs a keyed table — "
                 "tombstones identify rows by the merge key"
             )
-        bucket = {"col": bucket_by, "n": n_buckets} if bucket_by else None
+        spec = {
+            "key_col": keys[0] if len(keys) == 1 else None,
+            "key_cols": keys if len(keys) > 1 else None,
+            "bucket": {"col": bucket_by, "n": n_buckets} if bucket_by else None,
+            "key_bloom": key_bloom,
+            "cdf": cdf,
+            "dv": dv,
+        }
         columns = [
             {"id": i, "name": f.name} for i, f in enumerate(df.schema.fields)
         ]
-        group = t._write_group(df, 1, 0, keys, bucket, key_bloom, columns)
-        t._commit(
-            t._stamp_floor({
-                "version": 1,
-                "parent": None,
-                "op": "create",
-                "key_col": keys[0] if len(keys) == 1 else None,
-                "key_cols": keys if len(keys) > 1 else None,
-                "bucket": bucket,
-                "key_bloom": key_bloom,
-                "cdf": cdf,
-                "dv": dv,
-                "txns": {txn[0]: int(txn[1])} if txn else {},
-                "added": [group["id"]],
-                "schema": ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-                ),
-                "columns": columns,
-                "groups": [group],
-            }, {})
-        )
+        group = t._write_group(df, 1, 0, spec, columns)
+        t._commit(next_manifest(
+            {}, "create", [group], df.schema, columns=columns,
+            added=[group["id"]], txns=_advance_txns({}, txn), **spec,
+        ))
         return t
 
     def bucketed_frame(self, version: int | None = None) -> DataFrame:
@@ -1203,10 +1351,7 @@ class SifTable:
                 w = written_by_id.get(id_of.get(k), k)
                 sel.append(F.col(w).alias(k))
             parts.append(df.select(*sel))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _read_groups(
         self,
@@ -1214,13 +1359,17 @@ class SifTable:
         groups: list[dict],
         target: T.StructType,
         columns: list[dict] | None = None,
+        keep_gid: bool = False,
     ) -> DataFrame:
         """Aligned union of ``groups``, with the snapshot's deletion
         vectors applied as ONE broadcast anti-join on (group id, key
         tuple) — group files are never rewritten by a dv delete, so
         the read side is where tombstones take effect (merge-on-read).
         Tables without live dvs keep the exact pre-dv plan (no _gid
-        projection, no join).
+        projection, no join). ``keep_gid=True`` keeps each row's
+        owning group id (__gid, derived from the file path) — the read
+        shape every dv-writing op needs (already-deleted rows must
+        never re-count or re-tombstone).
 
         Groups batch into ONE multi-path scan per distinct (on-disk
         schema, col_ids) class — the _batched_tagged_read shape
@@ -1245,7 +1394,7 @@ class SifTable:
                     F.col("_metadata.file_path"), _GID_PAT, 1
                 ).alias("__gid")
             ]
-            if dvs
+            if dvs or keep_gid
             else []
         )
         parts = []
@@ -1259,9 +1408,7 @@ class SifTable:
                     *gid_col,
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = functools.reduce(DataFrame.unionByName, parts)
         if dvs:
             keys = _key_cols(m)
             dvf = self._dv_frame(m, dvs, columns)
@@ -1271,9 +1418,9 @@ class SifTable:
             # the broadcast budget — fall back to Spark's own join
             # planning (shuffled hash anti-join) instead of forcing a
             # too-big broadcast
-            out = out.join(
-                dvf, on=["__gid"] + keys, how="left_anti"
-            ).drop("__gid")
+            out = out.join(dvf, on=["__gid"] + keys, how="left_anti")
+            if not keep_gid:
+                out = out.drop("__gid")
         return out
 
     def read_between(
@@ -1465,10 +1612,7 @@ class SifTable:
                     )
             cols.append(ver)
             parts.append(df.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _empty_changes(self, target: T.StructType, cdf: bool) -> DataFrame:
         from sif_spark.sources.memory import local_frame
@@ -1661,10 +1805,7 @@ class SifTable:
         ]
         if not parts:
             return self._empty_changes(target, cdf)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     @staticmethod
     def _check_cdf_version(m: dict) -> None:
@@ -1723,47 +1864,25 @@ class SifTable:
         concurrent-commit loss re-reads the snapshot: if the epoch
         landed (the racing writer was our own replay), it skips;
         otherwise it retries against the new parent."""
-        last: Exception | None = None
-        for _ in range(retries):
+
+        def attempt() -> int:
             m = self._load()
-            txns = dict(m.get("txns", {}))
-            if txn is not None:
-                app_id, epoch = txn
-                if int(txns.get(app_id, -1)) >= int(epoch):
-                    return m["version"]  # replayed epoch: no-op
-                txns[app_id] = int(epoch)
-            merged = _merge_schema(T._parse_datatype_string(m["schema"]), df.schema)
+            txns = _advance_txns(m, txn)
+            if txns is None:
+                return m["version"]  # replayed epoch: no-op
+            merged = _merge_schema(
+                T._parse_datatype_string(m["schema"]), df.schema
+            )
             cols_next = _next_columns(m, merged)
-            v = m["version"] + 1
-            group = self._write_group(df, v, 0, _key_cols(m),
-                                      m.get("bucket"), m.get("key_bloom", False),
-                                      cols_next)
-            try:
-                manifest = {
-                    "version": v,
-                    "parent": m["version"],
-                    "op": "append",
-                    "key_col": m.get("key_col"),
-                    "key_cols": m.get("key_cols"),
-                    "bucket": m.get("bucket"),
-                    "key_bloom": m.get("key_bloom", False),
-                    "cdf": m.get("cdf", False),
-                    "dv": m.get("dv", False),
-                    "dvs": m.get("dvs") or [],
-                    "txns": txns,
-                    "added": [group["id"]],
-                    "schema": ", ".join(
-                        f"{f.name} {f.dataType.simpleString()}"
-                        for f in merged.fields
-                    ),
-                    "groups": m["groups"] + [group],
-                }
-                if cols_next is not None:
-                    manifest["columns"] = cols_next
-                return self._commit(self._stamp_floor(manifest, m))
-            except ConcurrentCommitError as e:
-                last = e
-        raise last  # type: ignore[misc]
+            group = self._write_group(df, m["version"] + 1, 0, m, cols_next)
+            return self._commit(next_manifest(
+                m, "append", m["groups"] + [group], merged,
+                columns=cols_next, added=[group["id"]], txns=txns,
+            ))
+
+        return _retrying(attempt, retries)
+
+    # -- keyed mutations: upsert / merge / delete_keys ------------------------
 
     def upsert(
         self,
@@ -1784,151 +1903,11 @@ class SifTable:
         ``txn=(app_id, epoch)`` gives the same crash-replay
         idempotence as append(txn=) — the contract incremental
         materialized-view maintenance needs."""
-        last: Exception | None = None
-        for _ in range(retries):
-            try:
-                return self._upsert_once(updates, txn)
-            except ConcurrentCommitError as e:
-                last = e
-        raise last  # type: ignore[misc]
-
-    def _upsert_once(
-        self, updates: DataFrame, txn: tuple[str, int] | None = None
-    ) -> int:
-        m = self._load()
-        txns = dict(m.get("txns", {}))
-        if txn is not None:
-            app_id, epoch = txn
-            if int(txns.get(app_id, -1)) >= int(epoch):
-                return m["version"]  # replayed epoch: committed no-op
-            txns[app_id] = int(epoch)
-        keys = _key_cols(m)
-        if not keys:
-            raise ValueError(
-                "upsert needs a table created with key_col=/key_cols="
-            )
-        missing = [k for k in keys if k not in updates.columns]
-        if missing:
-            raise ValueError(f"upsert batch lacks key column(s) {missing}")
-        updates = _materialize_source(updates)
-        merged = _merge_schema(T._parse_datatype_string(m["schema"]), updates.schema)
-        cols_next = _next_columns(m, merged)
-        # bounds + bloom probes are independent jobs over the (already
-        # materialized) source — one overlapped wave, not two serial
-        # ones (guide §2.6; round 15)
-        bounds, probes = _parallel_jobs(
-            lambda: self._key_bounds(updates, keys),
-            lambda: self._bloom_probe_sets(m, updates, keys),
-        )
-        v = m["version"] + 1
-        keep, rewrite = self._split_groups_by_keys(m, keys, bounds, probes)
-        groups = list(keep)
-        seq = 0
-        target = T._parse_datatype_string(m["schema"])
-        old_union = None
-        surv_group = None
-        cdc_spec = None
-        upd_keys = updates.select(*keys).distinct()
-        if rewrite:
-            # dv-aware: tombstoned rows must not resurrect into the
-            # survivor rewrite
-            old_union = self._read_groups(m, rewrite, target, _columns_of(m))
-            survivors = old_union.join(upd_keys, on=keys, how="left_anti")
-            # the survivor rewrite, the update-group write and (on a
-            # cdf table) the change-file write are independent jobs —
-            # overlap all three (guide §2.6). The cdc write is
-            # SPECULATIVE: its content never depends on the exact
-            # replaced count, only the manifest's reference does — a
-            # bloom/range false positive (replaced == 0) leaves the
-            # file an invisible orphan, exactly like a pre-commit
-            # crash, instead of serializing every cdf upsert behind
-            # the survivor write.
-            thunks = [
-                lambda: self._write_group(
-                    _align(survivors, merged), v, 0, keys, m.get("bucket"),
-                    m.get("key_bloom", False), cols_next
-                ),
-                lambda: self._write_group(
-                    _align(updates, merged), v, 1, keys, m.get("bucket"),
-                    m.get("key_bloom", False), cols_next
-                ),
-            ]
-            if m.get("cdf", False):
-                # the version's full CDC: pre-images (matched old
-                # rows), post-images (updates whose key existed),
-                # inserts (the rest) — one change file, read by
-                # changes(cdf=True)
-                matched_old = _align(
-                    old_union.join(upd_keys, on=keys, how="left_semi"),
-                    merged,
-                )
-                matched_keys = matched_old.select(*keys).distinct()
-                upd_aligned = _align(updates, merged)
-                cdc_df = (
-                    matched_old.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    .unionByName(
-                        upd_aligned.join(
-                            matched_keys, on=keys, how="left_semi"
-                        ).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                    .unionByName(
-                        upd_aligned.join(
-                            matched_keys, on=keys, how="left_anti"
-                        ).withColumn("_change_type", F.lit("insert"))
-                    )
-                )
-                thunks.append(
-                    lambda: self._write_cdc(cdc_df, v, cols_next)
-                )
-            res = _parallel_jobs(*thunks)
-            surv_group, upd_group = res[0], res[1]
-            if len(res) > 2:
-                cdc_spec = res[2]
-            groups.append(surv_group)
-        else:
-            upd_group = self._write_group(
-                _align(updates, merged), v, seq, keys, m.get("bucket"),
-                m.get("key_bloom", False), cols_next
-            )
-        groups.append(upd_group)
-        # EXACT replacement count, free from the write jobs' stats: the
-        # rows that left the rewritten groups are the matched keys. A
-        # bloom/range false positive rewrites a group but replaces 0 —
-        # the counter (not the rewrite) is what guards downstream folds
-        replaced = (
-            sum(_live_rows(g) for g in rewrite) - int(surv_group["rows"])
-            if rewrite
-            else 0
-        )
-        cdc = cdc_spec if replaced > 0 else None
-        manifest = {
-            "version": v,
-            "parent": m["version"],
-            "op": "upsert",
-            "columns": cols_next,
-            "added": [upd_group["id"]],
-            "replaced_rows": replaced,
-            "txns": txns,
-            "key_col": m.get("key_col"),
-            "key_cols": m.get("key_cols"),
-            "bucket": m.get("bucket"),
-            "key_bloom": m.get("key_bloom", False),
-            "cdf": m.get("cdf", False),
-            "dv": m.get("dv", False),
-            "dvs": _carry_dvs(m, groups),
-            "schema": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in merged.fields
+        return _retrying(
+            lambda: self._keyed_once(
+                "upsert", updates, txn, self._plan_keyset
             ),
-            "groups": groups,
-        }
-        if cdc:
-            manifest["cdc"] = cdc
-        return self._commit_keyed(
-            self._stamp_floor(manifest, m), m, keys, bounds, probes, txn
+            retries,
         )
 
     def merge(
@@ -1983,26 +1962,30 @@ class SifTable:
         table schema: source-only columns don't evolve it (the
         Debezium-loop contract — a `_op` column must not become a
         table column); the default True keeps append()'s
-        add-and-widen rules."""
+        add-and-widen rules.
+
+        On a ``cdf=True`` table a clause that can evaluate differently
+        twice over the same rows (``rand()``, ``uuid()``,
+        ``current_timestamp()``) raises ValueError before any write:
+        the change file re-evaluates the join in its own job, so it
+        could disagree with the committed rows. Writing every output
+        of the merge from one evaluation (ROADMAP direction 4, one-pass
+        writes) lifts this."""
         if not (
             when_matched_update or when_matched_delete
             or when_not_matched_insert
         ):
             raise ValueError("merge with no clauses is a no-op — pass at "
                              "least one when_* clause")
-        last: Exception | None = None
-        for _ in range(retries):
-            try:
-                return self._merge_once(
-                    source, when_matched_update,
-                    when_matched_update_condition, when_matched_delete,
-                    when_not_matched_insert,
-                    when_not_matched_insert_condition, txn,
-                    evolve_schema,
-                )
-            except ConcurrentCommitError as e:
-                last = e
-        raise last  # type: ignore[misc]
+        return _retrying(
+            lambda: self._merge_once(
+                source, when_matched_update,
+                when_matched_update_condition, when_matched_delete,
+                when_not_matched_insert,
+                when_not_matched_insert_condition, txn, evolve_schema,
+            ),
+            retries,
+        )
 
     def _merge_once(
         self,
@@ -2015,123 +1998,269 @@ class SifTable:
         txn: tuple[str, int] | None,
         evolve: bool = True,
     ) -> int:
+        """One attempt of merge() — the callable its retry loop re-runs."""
+        clauses = (upd, upd_cond, dele, ins, ins_cond)
+        return self._keyed_once(
+            "merge", source, txn,
+            functools.partial(self._plan_merge, clauses),
+            evolve=evolve,
+            check=functools.partial(self._check_merge_clauses, clauses),
+        )
+
+    def delete_keys(
+        self,
+        keys: DataFrame,
+        retries: int = 3,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """Bulk delete by the table's key_col — the ``DELETE WHERE key
+        IN (<millions>)`` shape a predicate string cannot express.
+        Exactly the upsert's two-tier file skipping (range-disjoint
+        groups carry by reference; range-overlapping groups also skip
+        on a bloom miss), with the matched rows anti-joined out and no
+        update group appended. Records the EXACT deleted count; on a
+        cdf=True table the deleted rows are materialized as 'delete'
+        tombstones in the version's change file. ``txn=`` gives the
+        crash-replay idempotence the cdf-mode ANN index maintainer
+        needs (a replayed micro-batch of deletions must not commit
+        twice)."""
+        return _retrying(
+            lambda: self._keyed_once(
+                "delete", keys, txn, self._plan_delete_keys, evolve=False
+            ),
+            retries,
+        )
+
+    # the manifest counters each keyed op records
+    _COUNTERS = {
+        "upsert": ("replaced_rows",),
+        "merge": ("replaced_rows", "deleted_rows"),
+        "delete": ("deleted_rows",),
+    }
+
+    def _keyed_once(
+        self,
+        op: str,
+        batch: DataFrame,
+        txn: tuple[str, int] | None,
+        plan: Callable,
+        evolve: bool = True,
+        check: Callable | None = None,
+    ) -> int:
+        """One attempt of a keyed mutation — upsert, merge and
+        delete_keys all run this core: txn-replay check → key
+        validation → the op's clause ``check`` → source
+        materialization → the bounds ∥ bloom-probe wave → the two-tier
+        group split → the op's ``plan`` → ONE parallel write wave → the
+        successor manifest → the conflict-granular commit
+        (_commit_keyed).
+
+        ``plan(m, batch, keys, merged, cols_next, keep, touched)``
+        returns a _KeyedPlan: the groups carried into the next
+        snapshot, the write wave's frames by slot ("wg" the rewrite of
+        the touched groups, "ig" the op's added group, "cdc" the change
+        file, "dv" the doomed rows of a deletion-vector sidecar) and
+        the counters the settled writes give. The writes are
+        independent jobs, so the wave overlaps them (guide §2.6). The
+        change file is SPECULATIVE: it is referenced only when the
+        counters show a change, so a bloom/range false positive (no key
+        matched) leaves it an invisible orphan — the artifact a
+        pre-commit crash already leaves."""
         m = self._load()
-        txns = dict(m.get("txns", {}))
-        if txn is not None:
-            app_id, epoch = txn
-            if int(txns.get(app_id, -1)) >= int(epoch):
-                return m["version"]  # replayed epoch: committed no-op
-            txns[app_id] = int(epoch)
+        txns = _advance_txns(m, txn)
+        if txns is None:
+            return m["version"]  # replayed epoch: committed no-op
         keys = _key_cols(m)
+        name = "delete_keys" if op == "delete" else op
         if not keys:
             raise ValueError(
-                "merge needs a table created with key_col=/key_cols="
+                f"{name} needs a table created with key_col=/key_cols="
             )
-        if upd:
-            clash = [k for k in keys if k in upd]
-            if clash:
-                raise ValueError(
-                    "when_matched_update cannot update the merge "
-                    f"key(s) {clash}"
-                )
-        missing = [k for k in keys if k not in source.columns]
+        missing = [k for k in keys if k not in batch.columns]
         if missing:
-            raise ValueError(f"merge source has no key column(s) {missing}")
-        source = _materialize_source(source)
-        merged = (
-            _merge_schema(T._parse_datatype_string(m["schema"]), source.schema)
-            if evolve
-            else T._parse_datatype_string(m["schema"])
-        )
-        cols_next = _next_columns(m, merged)
-        # ANSI MERGE cardinality rule + per-key-column range bounds for
-        # group skipping, in ONE aggregate job over the source. The
-        # distinct count is over fully-non-null key TUPLES (a null part
-        # never equi-matches, so such rows can only be dead weight);
-        # any shortfall vs the row count — duplicate tuples OR null
-        # parts — is rejected, the same contract as the 1-ary key.
-        nn = F.lit(True)
-        for k in keys:
-            nn = nn & F.col(k).isNotNull()
-        aggs = [
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(
-                F.when(nn, F.struct(*[F.col(k) for k in keys]))
-            ).alias("nk"),
-        ]
-        for i, k in enumerate(keys):
-            aggs += [F.min(k).alias(f"lo{i}"), F.max(k).alias(f"hi{i}")]
-        # cardinality/bounds aggregate ∥ bloom probes — independent
-        # jobs over the materialized source (guide §2.6; round 15).
-        # The cardinality check still raises before any write.
-        row, probes = _parallel_jobs(
-            lambda: source.agg(*aggs).collect()[0],
-            lambda: self._bloom_probe_sets(m, source, keys),
-        )
-        if int(row["n"]) != int(row["nk"]):
-            raise ValueError(
-                f"merge source has {row['n']} rows but {row['nk']} "
-                f"distinct non-null {keys} key tuples — ANSI MERGE "
-                "forbids multiple source rows matching one target row "
-                "(and a null key part never matches anything)"
-            )
-        bounds = [(row[f"lo{i}"], row[f"hi{i}"]) for i in range(len(keys))]
-        keep, rewrite = self._split_groups_by_keys(m, keys, bounds, probes)
-        v = m["version"] + 1
-        if m.get("dv", False) and rewrite and dele and not upd:
-            # delete-only merge on a dv table (the CDC-erasure shape):
-            # tombstone the matched-and-condition-true rows instead of
-            # rewriting the touched groups — same zero-rewrite contract
-            # as delete_keys; an update clause still forces the rewrite
-            # (updated rows must change bytes)
-            return self._merge_delete_only_dv(
-                m, source, dele, ins, ins_cond, txns, v, keys, merged,
-                cols_next, bounds, probes, txn, rewrite,
-            )
+            raise ValueError(f"{name} batch lacks key column(s) {missing}")
         target = T._parse_datatype_string(m["schema"])
-        groups = list(keep)
-        seq = 0
-        # matched pairs: target rows of the touched groups joined to
-        # the source on the key; the join is bounded by the skipping
-        # (keep-groups PROVABLY hold no source key, so "unmatched"
-        # only needs the anti-join against the touched groups)
-        old_union = None
-        updated = deleted_pre = rewritten = None
-        merge_obs = None
-        n_updated = n_deleted = 0
-        if rewrite and (upd or dele):
+        merged = _merge_schema(target, batch.schema) if evolve else target
+        if check is not None:
+            check(m, batch, keys, merged)
+        if op == "delete":
+            # delete_keys works on the distinct key tuples. The dedup's
+            # Aggregate node would always trip _materialize_source, so
+            # the wide/narrow decision looks at the PRE-distinct input
+            # (ADVICE r14 low): a key list that is already an in-memory
+            # leaf (the streaming folds' checkpointed batches, a
+            # driver-local list) re-runs its tiny distinct per action
+            # instead of paying an unconditional checkpoint job.
+            sel = batch.select(*keys)
+            batch = (
+                sel.distinct()
+                if _materialized_leaf_plan(sel)
+                else _materialize_source(sel.distinct())
+            )
+        else:
+            batch = _materialize_source(batch)
+        cols_next = _next_columns(m, merged)
+        # bounds (+ merge's cardinality check) ∥ bloom probes: independent
+        # jobs over the materialized source — one overlapped wave
+        # (guide §2.6; round 15). A failed check raises before any write.
+        bounds, probes = _parallel_jobs(
+            lambda: self._key_bounds(batch, keys, cardinality=op == "merge"),
+            lambda: self._bloom_probe_sets(m, batch, keys),
+        )
+        keep, touched = self._split_groups_by_keys(m, keys, bounds, probes)
+        p = plan(m, batch, keys, merged, cols_next, keep, touched)
+        v = m["version"] + 1
+        writers = {
+            "wg": lambda f: self._write_group(f, v, 0, m, cols_next),
+            "ig": lambda f: self._write_group(
+                f, v, int("wg" in p.frames), m, cols_next
+            ),
+            "cdc": lambda f: self._write_cdc(f, v, cols_next),
+            "dv": lambda f: self._write_dv_sidecar(
+                f, keys, v, cols_next, p.per_gid
+            ),
+        }
+        res = dict(zip(p.frames, _parallel_jobs(*[
+            functools.partial(writers[slot], f)
+            for slot, f in p.frames.items()
+        ])))
+        counts = p.counts(res)
+        counters = {c: int(counts.get(c, 0)) for c in self._COUNTERS[op]}
+        groups, added = list(p.carried), []
+        for slot in ("wg", "ig"):
+            g = res.get(slot)
+            # a zero-row group stays an unreferenced orphan — except
+            # upsert's, which keeps its layout (survivors, then batch)
+            if g is not None and (op == "upsert" or int(g["rows"]) > 0):
+                groups.append(g)
+                if slot == "ig":
+                    added = [g["id"]]
+        manifest = next_manifest(
+            m, op, groups, merged, columns=cols_next, added=added,
+            txns=txns,
+            dvs=_carry_dvs(m, groups) + ([res["dv"]] if "dv" in res else []),
+            cdc=res.get("cdc") if any(counters.values()) else None,
+            **counters,
+        )
+        return self._commit_keyed(manifest, m, keys, bounds, probes, txn)
+
+    def _plan_keyset(
+        self, m, batch, keys, merged, cols_next, keep, touched, upsert=True
+    ) -> _KeyedPlan:
+        """upsert, and delete_keys on a copy-on-write table: the touched
+        groups rewrite as their anti-join survivors against the batch's
+        key set ("wg"), and the counter is the rows that left them.
+        Upsert also writes the WHOLE batch as its own group ("ig"), so
+        every batch row lands — a key duplicated inside the batch lands
+        twice (upsert runs no cardinality check). On a cdf table the
+        change file holds the removed rows' pre-images — delete_keys:
+        'delete'; upsert: 'update_preimage', plus the batch rows as
+        'update_postimage' or 'insert' by whether their key matched."""
+        frames = {}
+        keyset = batch.select(*keys).distinct() if upsert else batch
+        if touched:
+            # dv-aware: tombstoned rows must not resurrect into the
+            # survivor rewrite
+            old = self._read_groups(
+                m, touched, T._parse_datatype_string(m["schema"]),
+                _columns_of(m),
+            )
+            frames["wg"] = _align(
+                old.join(keyset, on=keys, how="left_anti"), merged
+            )
+        if upsert:
+            frames["ig"] = _align(batch, merged)
+        if touched and m.get("cdf", False):
+            pre = _align(old.join(keyset, on=keys, how="left_semi"), merged)
+            cdc = _tagged(pre, "update_preimage" if upsert else "delete")
+            if upsert:
+                matched = pre.select(*keys).distinct()
+                new = frames["ig"]
+                cdc = cdc.unionByName(
+                    _tagged(
+                        new.join(matched, on=keys, how="left_semi"),
+                        "update_postimage",
+                    )
+                ).unionByName(
+                    _tagged(new.join(matched, on=keys, how="left_anti"),
+                            "insert")
+                )
+            frames["cdc"] = cdc
+        live = sum(_live_rows(g) for g in touched)
+        counter = "replaced_rows" if upsert else "deleted_rows"
+        return _KeyedPlan(
+            keep,
+            frames,
+            lambda res: (
+                {counter: live - int(res["wg"]["rows"])} if "wg" in res
+                else {}
+            ),
+        )
+
+    def _plan_delete_keys(
+        self, m, keys_df, keys, merged, cols_next, keep, touched
+    ) -> _KeyedPlan:
+        if m.get("dv", False) and touched:
+            # merge-on-read: a key-tombstone sidecar instead of rewriting
+            # the touched groups (VERDICT r12 "Next round" #2) — a
+            # scattered delete across a 100 TB table touches nearly
+            # every group; rewriting them all per batch is the
+            # scale-killer this mode removes
+            return self._plan_dv(
+                m, keys, merged, cols_next, touched,
+                lambda u: u.join(keys_df, on=keys, how="left_semi"),
+            )
+        return self._plan_keyset(
+            m, keys_df, keys, merged, cols_next, keep, touched, upsert=False
+        )
+
+    def _plan_merge(
+        self, clauses, m, source, keys, merged, cols_next, keep, touched
+    ) -> _KeyedPlan:
+        """merge's clauses over the touched groups: ONE LEFT join of
+        their rows to the RAW source with a per-row CASE (round 15,
+        guide §2.4/§2.6) rewrites them ("wg") — matched rows deleted or
+        updated, the rest carried — and the EXACT counters ride that
+        write as observed metrics. The old shape derived survivors ∪
+        untouched ∪ updated as three branches over the touched groups
+        plus a separate tagged-count job. The ANSI cardinality check
+        proves ≤1 source row per target key, so the left join cannot
+        duplicate target rows, and the source's key tuples are fully
+        non-null (same check), so "s-side key not null" ⟺ matched.
+        Clause conditions and update/insert expressions may reference
+        source-only columns (CDC op codes); only the SELECT lists
+        align to the table schema. The NOT MATCHED rows write as their
+        own group ("ig"). An insert-only merge rewrites nothing (the
+        touched groups carry BY REFERENCE), and a delete-only merge on
+        a dv table tombstones instead (_plan_dv)."""
+        upd, upd_cond, dele, ins, ins_cond = clauses
+        on = _key_match(keys)
+        if m.get("dv", False) and touched and dele and not upd:
+            # delete-only merge on a dv table (the CDC-erasure shape):
+            # same zero-rewrite contract as delete_keys; an update
+            # clause still forces the rewrite (updated rows must change
+            # bytes). A key matched only by a deleted row is still
+            # MATCHED — it does not insert.
+            del_c = F.coalesce(_clause(dele), F.lit(False))
+            return self._plan_dv(
+                m, keys, merged, cols_next, touched,
+                lambda u: u.alias("t").join(source.alias("s"), on, "inner")
+                .filter(del_c)
+                .select(*_target_side(merged), F.col("t.__gid").alias("__gid")),
+                (
+                    lambda u: _merge_inserts(
+                        source, u, keys, merged, ins, ins_cond
+                    )
+                ) if ins else None,
+            )
+        carried, frames, old, obs, cdc = list(keep), {}, None, None, None
+        if touched and (upd or dele):
             from pyspark.sql import Observation
 
-            old_union = self._read_groups(m, rewrite, merged, cols_next)
-            jcond = F.lit(True)
-            for k in keys:
-                jcond = jcond & (F.col(f"t.`{k}`") == F.col(f"s.`{k}`"))
-            # RAW source on the build side: clause conditions and
-            # update/insert expressions may reference source-only
-            # columns (CDC op codes); only the SELECT lists align to
-            # the table schema.
-            #
-            # ONE LEFT join pass (round 15, guide §2.4/§2.6): the old
-            # shape derived survivors (anti-join) ∪ untouched ∪ updated
-            # as three branches over the touched groups plus a separate
-            # tagged-count job — the rewritten-group write re-scanned
-            # the touched groups three times and the counters cost one
-            # more action wave. A left join with per-row CASE computes
-            # the same rows in one scan+join; the EXACT counters ride
-            # the write job as observed metrics. The ANSI cardinality
-            # check above proves ≤1 source row per target key, so the
-            # left join cannot duplicate target rows, and the source's
-            # key tuples are fully non-null (same check), so
-            # "s-side key not null" ⟺ matched.
-            j = old_union.alias("t").join(
-                source.alias("s"), jcond, "left"
-            )
+            old = self._read_groups(m, touched, merged, cols_next)
+            j = old.alias("t").join(source.alias("s"), on, "left")
             matched = F.col(f"s.`{keys[0]}`").isNotNull()
-            del_c = (
-                F.expr(dele) if isinstance(dele, str)
-                else F.lit(bool(dele))
-            )
-            del_c = matched & F.coalesce(del_c, F.lit(False))
+            del_c = matched & F.coalesce(_clause(dele), F.lit(False))
             # bool(upd), not `upd is not None`: an EMPTY update mapping
             # is inert (it updates no columns), but `is not None` made
             # it an active clause that counted every matched
@@ -2140,179 +2269,168 @@ class SifTable:
             upd_c = matched & F.lit(bool(upd)) & ~del_c
             if upd_cond is not None:
                 upd_c = upd_c & F.coalesce(F.expr(upd_cond), F.lit(False))
-            t_cols = [F.col(f"t.`{f.name}`").alias(f.name)
-                      for f in merged.fields]
-            # cdc branches re-derive from the un-observed join: the cdc
-            # write is an independent parallel job, so it overlaps the
-            # rewritten-group write instead of serializing behind a
-            # shared materialization
-            deleted_pre = j.filter(del_c).select(*t_cols)
-            upd_sel = [
-                (
-                    F.expr(upd[f.name]).cast(f.dataType).alias(f.name)
-                    if upd and f.name in upd
-                    else F.col(f"t.`{f.name}`").alias(f.name)
-                )
-                for f in merged.fields
-            ]
-            updated = j.filter(upd_c).select(*upd_sel)
-            case_sel = [
-                (
-                    F.when(
-                        upd_c,
-                        F.expr(upd[f.name]).cast(f.dataType),
-                    )
-                    .otherwise(F.col(f"t.`{f.name}`"))
-                    .alias(f.name)
-                    if upd and f.name in upd
-                    else F.col(f"t.`{f.name}`").alias(f.name)
-                )
-                for f in merged.fields
-            ]
-            merge_obs = Observation()
-            rewritten = (
+
+            def row(updated_value):
+                """The target row, each updated column from
+                ``updated_value(new value, old value)``."""
+                return [
+                    (
+                        updated_value(
+                            F.expr(upd[f.name]).cast(f.dataType),
+                            F.col(f"t.`{f.name}`"),
+                        )
+                        if upd and f.name in upd
+                        else F.col(f"t.`{f.name}`")
+                    ).alias(f.name)
+                    for f in merged.fields
+                ]
+
+            obs = Observation()
+            frames["wg"] = _align(
                 j.observe(
-                    merge_obs,
+                    obs,
                     F.sum(upd_c.cast("long")).alias("nu"),
                     F.sum(del_c.cast("long")).alias("nd"),
                 )
                 .filter(~del_c)
-                .select(*case_sel)
+                .select(*row(lambda new, was: F.when(upd_c, new).otherwise(was))),
+                merged,
             )
-            seq += 1
-        elif rewrite:
+            if m.get("cdf", False):
+                # the change-file branches re-derive from the
+                # un-observed join: the cdc write is an independent
+                # parallel job, so it overlaps the rewritten-group
+                # write instead of serializing behind a shared
+                # materialization
+                updated = j.filter(upd_c).select(*row(lambda new, was: new))
+                cdc = (
+                    _tagged(j.filter(del_c).select(*_target_side(merged)),
+                            "delete")
+                    .unionByName(_tagged(
+                        old.join(updated.select(*keys), on=keys,
+                                 how="left_semi"),
+                        "update_preimage",
+                    ))
+                    .unionByName(_tagged(updated, "update_postimage"))
+                )
+        elif touched:
             # insert-only merge: matched rows are untouched — carry the
             # touched groups BY REFERENCE, no rewrite at all
-            groups = list(m["groups"])
-            old_union = self._read_groups(m, rewrite, merged, cols_next)
-        inserts = None
-        added: list[str] = []
+            carried = list(m["groups"])
+            old = self._read_groups(m, touched, merged, cols_next)
         if ins:
-            matched_keys = (
-                old_union.select(*keys).distinct()
-                if old_union is not None
-                else None
+            # keep-groups PROVABLY hold no source key, so "unmatched"
+            # only needs the anti-join against the touched groups
+            frames["ig"] = _merge_inserts(
+                source, old, keys, merged, ins, ins_cond
             )
-            s_new = (
-                source.join(matched_keys, on=keys, how="left_anti")
-                if matched_keys is not None
-                else source
+        if cdc is not None:
+            # a version's change file REPLACES its added groups in the
+            # feed, so the inserts ride along
+            frames["cdc"] = (
+                cdc.unionByName(_tagged(frames["ig"], "insert"))
+                if ins else cdc
             )
-            if ins_cond is not None:
-                s_new = s_new.alias("s").filter(
-                    F.coalesce(F.expr(ins_cond), F.lit(False))
-                )
-            if isinstance(ins, dict):
-                unset = [k for k in keys if k not in ins]
-                if unset:
-                    raise ValueError(
-                        "when_not_matched_insert mapping must set the "
-                        f"merge key(s) {unset}"
-                    )
-                ins_sel = [
-                    (
-                        F.expr(ins[f.name]).cast(f.dataType).alias(f.name)
-                        if f.name in ins
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-                    for f in merged.fields
-                ]
-                inserts = s_new.alias("s").select(*ins_sel)
-            else:
-                inserts = _align(s_new, merged)
-        # the rewritten-group write, the insert-group write and (on a
-        # cdf table with matched clauses) the change-file write are
-        # independent jobs — overlap all of them (guide §2.6). The cdc
-        # write is SPECULATIVE only against a bloom/range false
-        # positive (every matched count lands 0), which leaves the file
-        # an invisible orphan — the artifact a pre-commit crash already
-        # leaves; the manifest reference keeps the exact
-        # count-gated contract below (same pattern as the upsert's
-        # speculative cdc). Empty clause branches contribute zero rows
-        # — identical file content to the old pre-counted gate.
-        wg = ig = cdc = None
-        thunks = []
-        slots = []
-        if rewritten is not None:
-            thunks.append(
-                lambda: self._write_group(
-                    _align(rewritten, merged), v, 0, keys, m.get("bucket"),
-                    m.get("key_bloom", False), cols_next
-                )
-            )
-            slots.append("wg")
-        if inserts is not None:
-            thunks.append(
-                lambda i=inserts, s=seq: self._write_group(
-                    i, v, s, keys, m.get("bucket"),
-                    m.get("key_bloom", False), cols_next
-                )
-            )
-            slots.append("ig")
-        if m.get("cdf", False) and rewritten is not None:
-            pre_keys = updated.select(*keys)
-            cdc_df = (
-                deleted_pre.withColumn("_change_type", F.lit("delete"))
-                .unionByName(
-                    old_union.join(pre_keys, on=keys, how="left_semi")
-                    .withColumn("_change_type", F.lit("update_preimage"))
-                )
-                .unionByName(
-                    updated.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            )
-            if inserts is not None:
-                cdc_df = cdc_df.unionByName(
-                    inserts.withColumn("_change_type", F.lit("insert"))
-                )
-            thunks.append(lambda: self._write_cdc(cdc_df, v, cols_next))
-            slots.append("cdc")
-        if thunks:
-            res = dict(zip(slots, _parallel_jobs(*thunks)))
-            wg, ig, cdc = res.get("wg"), res.get("ig"), res.get("cdc")
-        if merge_obs is not None:
-            row_m = merge_obs.get  # settled by the rewritten-group write
-            n_updated = int(row_m["nu"] or 0)
-            n_deleted = int(row_m["nd"] or 0)
-        if cdc is not None and not (n_updated or n_deleted):
-            cdc = None  # false-positive rewrite: orphan the change file
-        if wg is not None and int(wg["rows"]) > 0:
-            groups.append(wg)
-        if ig is not None:
-            if int(ig["rows"]) > 0:
-                groups.append(ig)
-                added = [ig["id"]]
-            else:
-                inserts = None
-        manifest = {
-            "version": v,
-            "parent": m["version"],
-            "op": "merge",
-            "columns": cols_next,
-            "added": added,
-            "replaced_rows": n_updated,
-            "deleted_rows": n_deleted,
-            "txns": txns,
-            "key_col": m.get("key_col"),
-            "key_cols": m.get("key_cols"),
-            "bucket": m.get("bucket"),
-            "key_bloom": m.get("key_bloom", False),
-            "cdf": m.get("cdf", False),
-            "dv": m.get("dv", False),
-            "dvs": _carry_dvs(m, groups),
-            "schema": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in merged.fields
+        return _KeyedPlan(
+            carried,
+            frames,
+            lambda res: (
+                {
+                    "replaced_rows": obs.get["nu"] or 0,
+                    "deleted_rows": obs.get["nd"] or 0,
+                }
+                if obs is not None
+                else {}
             ),
-            "groups": groups,
-        }
-        if cdc:
-            manifest["cdc"] = cdc
-        return self._commit_keyed(
-            self._stamp_floor(manifest, m), m, keys, bounds, probes, txn
         )
+
+    def _plan_dv(
+        self, m, keys, merged, cols_next, touched, doomed_of, inserts_of=None
+    ) -> _KeyedPlan:
+        """Merge-on-read delete on a ``dv=True`` table (delete_keys and
+        the delete-only merge): ZERO group rewrites. ``doomed_of`` picks
+        the doomed rows from the touched groups' LIVE rows (each tagged
+        with its __gid; rows already tombstoned never re-count); they
+        become ONE (group id, key tuple) sidecar under <table>/dv/
+        ("dv") plus, on a cdf table, their full pre-images as the change
+        file — all written BEFORE the manifest commit, so a SIGKILL
+        between the writes leaves invisible orphans, never a torn feed.
+        ``inserts_of`` (merge's NOT MATCHED rows, against the same live
+        rows) adds a plain group. The groups carry BY REFERENCE in their
+        original order, only the touched entries' dv_rows metadata
+        advancing (the q189 pin: zero group paths change). Every read
+        path applies live sidecars as a broadcast anti-join; compact()
+        reconciles and clears them."""
+        u = self._read_groups(m, touched, merged, cols_next, keep_gid=True)
+        # lazily checkpointed: feeds the per-group counts, the sidecar
+        # write AND the cdc write without re-running the joins. The
+        # counts run first (one aggregate job: it materializes the
+        # checkpoint and settles every gate exactly)
+        doomed = doomed_of(u).localCheckpoint(eager=False)
+        per_gid, n = self._dv_per_gid(doomed)
+        frames = {"dv": doomed} if n else {}
+        if inserts_of is not None:
+            frames["ig"] = inserts_of(u)
+        if m.get("cdf", False) and n:
+            cdc = _tagged(doomed.drop("__gid"), "delete")
+            frames["cdc"] = (
+                cdc.unionByName(_tagged(frames["ig"], "insert"))
+                if "ig" in frames else cdc
+            )
+        return _KeyedPlan(
+            self._dv_bumped_groups(m, per_gid),
+            frames,
+            lambda res: {"deleted_rows": n},
+            per_gid,
+        )
+
+    def _check_merge_clauses(self, clauses, m, source, keys, merged) -> None:
+        """merge's clause validation, driver-side (no job): the key is
+        never updated, an insert mapping sets every key column, and on
+        a cdf table no clause may be non-deterministic — the change
+        file re-evaluates the join in its own job, so such a clause
+        could commit a change file that disagrees with the committed
+        rows."""
+        upd, upd_cond, dele, ins, ins_cond = clauses
+        clash = [k for k in keys if k in (upd or {})]
+        if clash:
+            raise ValueError(
+                f"when_matched_update cannot update the merge key(s) {clash}"
+            )
+        if isinstance(ins, dict):
+            unset = [k for k in keys if k not in ins]
+            if unset:
+                raise ValueError(
+                    "when_not_matched_insert mapping must set the merge "
+                    f"key(s) {unset}"
+                )
+        if not m.get("cdf", False):
+            return
+        from sif_spark.sources.memory import local_frame
+
+        joined = local_frame(self.spark, merged).alias("t").join(
+            source.alias("s"), _key_match(keys), "left"
+        )
+        for frame, exprs in (
+            (joined, [*(upd or {}).values(), upd_cond, dele]),
+            (
+                source.alias("s"),
+                [*(ins.values() if isinstance(ins, dict) else ()), ins_cond],
+            ),
+        ):
+            exprs = [e for e in exprs if isinstance(e, str)]
+            if not exprs:
+                continue
+            resolved = frame.select(*[F.expr(e) for e in exprs])._jdf
+            proj = resolved.queryExecution().analyzed().projectList()
+            bad = [e for i, e in enumerate(exprs) if _volatile(proj.apply(i))]
+            if bad:
+                raise ValueError(
+                    f"merge clause(s) {bad} are non-deterministic — on a "
+                    "cdf=True table the change file re-evaluates them in "
+                    "its own job and could disagree with the committed "
+                    "rows"
+                )
 
     def _rename_dir(self, old_path: str, new_path: str) -> None:
         """Rename with the result CHECKED (ADVICE r13 medium):
@@ -2334,17 +2452,18 @@ class SifTable:
 
     @staticmethod
     def _meta_matches(a: dict, b: dict) -> bool:
-        """The snapshot metadata a keyed op's plan depends on.
-        dv/dvs normalize absent-vs-empty (ADVICE r13 low): a
-        pre-round-13 head has no `dvs` key at all, which must compare
-        equal to a newer commit's normalized `[]` — otherwise every
-        rebase against such a head degrades to a full retry."""
-        plain = (
-            "schema", "columns", "key_col", "key_cols", "bucket",
-            "key_bloom", "cdf",
-        )
+        """The snapshot metadata a keyed op's plan depends on: schema,
+        column ids and the table spec (_SPEC). dv/dvs normalize
+        absent-vs-empty (ADVICE r13 low): a pre-round-13 head has no
+        `dvs` key at all, which must compare equal to a newer commit's
+        normalized `[]` — otherwise every rebase against such a head
+        degrades to a full retry."""
         return (
-            all(a.get(f) == b.get(f) for f in plain)
+            all(
+                a.get(f) == b.get(f)
+                for f in ("schema", "columns", *_SPEC)
+                if f != "dv"
+            )
             and bool(a.get("dv")) == bool(b.get("dv"))
             and (a.get("dvs") or []) == (b.get("dvs") or [])
         )
@@ -2487,13 +2606,37 @@ class SifTable:
             "starved through 10 rebase attempts — full retry"
         )
 
-    def _key_bounds(self, df: DataFrame, keys: list[str]) -> list[tuple]:
+    def _key_bounds(
+        self, df: DataFrame, keys: list[str], cardinality: bool = False
+    ) -> list[tuple]:
         """Per-key-column (min, max) of the batch's non-null values —
-        ONE aggregate job regardless of key arity."""
+        ONE aggregate job regardless of key arity. ``cardinality=True``
+        (merge) enforces ANSI MERGE's cardinality rule in the same job:
+        the distinct count is over fully-non-null key TUPLES (a null
+        part never equi-matches, so such rows can only be dead weight),
+        and any shortfall vs the row count — duplicate tuples OR null
+        parts — raises."""
         aggs = []
         for i, k in enumerate(keys):
             aggs += [F.min(k).alias(f"lo{i}"), F.max(k).alias(f"hi{i}")]
+        if cardinality:
+            nn = F.lit(True)
+            for k in keys:
+                nn = nn & F.col(k).isNotNull()
+            aggs += [
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct(
+                    F.when(nn, F.struct(*[F.col(k) for k in keys]))
+                ).alias("nk"),
+            ]
         row = df.agg(*aggs).collect()[0]
+        if cardinality and int(row["n"]) != int(row["nk"]):
+            raise ValueError(
+                f"merge source has {row['n']} rows but {row['nk']} "
+                f"distinct non-null {keys} key tuples — ANSI MERGE "
+                "forbids multiple source rows matching one target row "
+                "(and a null key part never matches anything)"
+            )
         return [(row[f"lo{i}"], row[f"hi{i}"]) for i in range(len(keys))]
 
     def _bloom_probe_sets(
@@ -2552,151 +2695,6 @@ class SifTable:
                 else None
             )
         return out, snap_kt
-
-    def _merge_delete_only_dv(
-        self,
-        m: dict,
-        source: DataFrame,
-        dele: bool | str,
-        ins: bool | dict,
-        ins_cond: str | None,
-        txns: dict,
-        v: int,
-        keys: list[str],
-        merged: T.StructType,
-        cols_next: list[dict] | None,
-        bounds: list[tuple],
-        probes: tuple[dict, str],
-        txn: tuple[str, int] | None,
-        rewrite: list[dict],
-    ) -> int:
-        """Delete-only conditional MERGE, merge-on-read: matched pairs
-        where the delete condition holds become (group id, key)
-        tombstones in a dv sidecar — ZERO group rewrites; unmatched
-        source rows still insert as a plain added group. ANSI clause
-        semantics are unchanged (a key matched only by a deleted row
-        is still MATCHED — it does not insert)."""
-        u = self._read_groups_gid(m, rewrite, merged, cols_next, keys)
-        jcond = F.lit(True)
-        for k in keys:
-            jcond = jcond & (F.col(f"t.`{k}`") == F.col(f"s.`{k}`"))
-        j = u.alias("t").join(source.alias("s"), jcond, "inner")
-        del_c = (
-            F.expr(dele) if isinstance(dele, str) else F.lit(bool(dele))
-        )
-        del_c = F.coalesce(del_c, F.lit(False))
-        t_cols = [
-            F.col(f"t.`{f.name}`").alias(f.name) for f in merged.fields
-        ] + [F.col("t.__gid").alias("__gid")]
-        doomed = j.filter(del_c).select(*t_cols).localCheckpoint(
-            eager=False
-        )
-        inserts = None
-        if ins:
-            matched_keys = u.select(*keys).distinct()
-            s_new = source.join(matched_keys, on=keys, how="left_anti")
-            if ins_cond is not None:
-                s_new = s_new.alias("s").filter(
-                    F.coalesce(F.expr(ins_cond), F.lit(False))
-                )
-            if isinstance(ins, dict):
-                unset = [k for k in keys if k not in ins]
-                if unset:
-                    raise ValueError(
-                        "when_not_matched_insert mapping must set the "
-                        f"merge key(s) {unset}"
-                    )
-                ins_sel = [
-                    (
-                        F.expr(ins[f.name]).cast(f.dataType).alias(f.name)
-                        if f.name in ins
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-                    for f in merged.fields
-                ]
-                inserts = s_new.alias("s").select(*ins_sel)
-            else:
-                inserts = _align(s_new, merged)
-        # per-gid counts first (one aggregate, materializes the doomed
-        # checkpoint and settles every gate exactly), then the sidecar
-        # write, the insert-group write and (cdf) the change-file
-        # write — all independent jobs — overlap (guide §2.6)
-        per_gid, n_deleted = self._dv_per_gid(doomed)
-        thunks = []
-        slots = []
-        if n_deleted:
-            thunks.append(
-                lambda: self._write_dv_sidecar(
-                    doomed, keys, v, cols_next, per_gid=per_gid
-                )
-            )
-            slots.append("dv")
-        if inserts is not None:
-            thunks.append(
-                lambda: self._write_group(
-                    inserts, v, 0, keys, m.get("bucket"),
-                    m.get("key_bloom", False), cols_next
-                )
-            )
-            slots.append("ig")
-        if m.get("cdf", False) and n_deleted > 0:
-            cdc_df = doomed.drop("__gid").withColumn(
-                "_change_type", F.lit("delete")
-            )
-            if inserts is not None:
-                # a version's change file REPLACES its added groups in
-                # the feed — the inserts must ride along (a zero-row
-                # insert group contributes an empty branch — identical
-                # file content to the old post-write gate)
-                cdc_df = cdc_df.unionByName(
-                    inserts.withColumn("_change_type", F.lit("insert"))
-                )
-            thunks.append(lambda: self._write_cdc(cdc_df, v, cols_next))
-            slots.append("cdc")
-        res = (
-            dict(zip(slots, _parallel_jobs(*thunks))) if thunks else {}
-        )
-        dv_entry = res["dv"][2] if "dv" in res else None
-        ig = res.get("ig")
-        cdc = res.get("cdc")
-        groups = self._dv_bumped_groups(m, per_gid)
-        added: list[str] = []
-        if ig is not None:
-            if int(ig["rows"]) > 0:
-                groups.append(ig)
-                added = [ig["id"]]
-            else:
-                inserts = None
-        dvs = _carry_dvs(m, groups)
-        if dv_entry:
-            dvs.append(dv_entry)
-        manifest = {
-            "version": v,
-            "parent": m["version"],
-            "op": "merge",
-            "columns": cols_next,
-            "added": added,
-            "replaced_rows": 0,
-            "deleted_rows": n_deleted,
-            "txns": txns,
-            "key_col": m.get("key_col"),
-            "key_cols": m.get("key_cols"),
-            "bucket": m.get("bucket"),
-            "key_bloom": m.get("key_bloom", False),
-            "cdf": m.get("cdf", False),
-            "dv": True,
-            "dvs": dvs,
-            "schema": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in merged.fields
-            ),
-            "groups": groups,
-        }
-        if cdc:
-            manifest["cdc"] = cdc
-        return self._commit_keyed(
-            self._stamp_floor(manifest, m), m, keys, bounds, probes, txn
-        )
 
     def _split_groups_by_keys(
         self, m: dict, keys: list[str], bounds: list[tuple],
@@ -2768,185 +2766,6 @@ class SifTable:
             (keep if disjoint else rewrite).append(g)
         return keep, rewrite
 
-    def delete_keys(
-        self,
-        keys: DataFrame,
-        retries: int = 3,
-        txn: tuple[str, int] | None = None,
-    ) -> int:
-        """Bulk delete by the table's key_col — the ``DELETE WHERE key
-        IN (<millions>)`` shape a predicate string cannot express.
-        Exactly the upsert's two-tier file skipping (range-disjoint
-        groups carry by reference; range-overlapping groups also skip
-        on a bloom miss), with the matched rows anti-joined out and no
-        update group appended. Records the EXACT deleted count; on a
-        cdf=True table the deleted rows are materialized as 'delete'
-        tombstones in the version's change file. ``txn=`` gives the
-        crash-replay idempotence the cdf-mode ANN index maintainer
-        needs (a replayed micro-batch of deletions must not commit
-        twice)."""
-        last: Exception | None = None
-        for _ in range(retries):
-            try:
-                return self._delete_keys_once(keys, txn)
-            except ConcurrentCommitError as e:
-                last = e
-        raise last  # type: ignore[misc]
-
-    def _delete_keys_once(
-        self, keys: DataFrame, txn: tuple[str, int] | None = None
-    ) -> int:
-        m = self._load()
-        txns = dict(m.get("txns", {}))
-        if txn is not None:
-            app_id, epoch = txn
-            if int(txns.get(app_id, -1)) >= int(epoch):
-                return m["version"]  # replayed epoch: committed no-op
-            txns[app_id] = int(epoch)
-        kcols = _key_cols(m)
-        if not kcols:
-            raise ValueError(
-                "delete_keys needs a table created with key_col=/key_cols="
-            )
-        missing = [k for k in kcols if k not in keys.columns]
-        if missing:
-            raise ValueError(f"delete_keys batch lacks key column(s) {missing}")
-        target = T._parse_datatype_string(m["schema"])
-        sel = keys.select(*[F.col(k) for k in kcols])
-        # The dedup's Aggregate node would always trip
-        # _materialize_source, so the wide/narrow decision looks at the
-        # PRE-distinct input (ADVICE r14 low): a key list that is
-        # already an in-memory leaf (the streaming folds' checkpointed
-        # batches, a driver-local list) re-runs its tiny distinct per
-        # action instead of paying an unconditional checkpoint job.
-        if _materialized_leaf_plan(sel):
-            keys_df = sel.distinct()
-        else:
-            keys_df = _materialize_source(sel.distinct())
-        bounds, probes = _parallel_jobs(
-            lambda: self._key_bounds(keys_df, kcols),
-            lambda: self._bloom_probe_sets(m, keys_df, kcols),
-        )
-        v = m["version"] + 1
-        keep, rewrite = self._split_groups_by_keys(m, kcols, bounds, probes)
-        if m.get("dv", False) and rewrite:
-            # merge-on-read: write a key-tombstone sidecar instead of
-            # rewriting the touched groups (VERDICT r12 "Next round"
-            # #2) — a scattered delete across a 100 TB table touches
-            # nearly every group; rewriting them all per batch is the
-            # scale-killer this mode removes
-            return self._delete_keys_dv(
-                m, keys_df, kcols, keep, rewrite, txns, v,
-                bounds, probes, txn,
-            )
-        groups = list(keep)
-        surv_group = None
-        old_union = None
-        cdc_spec = None
-        if rewrite:
-            old_union = self._read_groups(m, rewrite, target, _columns_of(m))
-            survivors = old_union.join(keys_df, on=kcols, how="left_anti")
-            # survivor rewrite ∥ (on a cdf table) the tombstone change
-            # file — independent jobs (guide §2.6). The cdc write is
-            # speculative only against a bloom/range false positive
-            # (deleted == 0), which leaves it an invisible orphan —
-            # the same artifact a pre-commit crash leaves.
-            thunks = [
-                lambda: self._write_group(
-                    survivors, v, 0, kcols, m.get("bucket"),
-                    m.get("key_bloom", False), _columns_of(m)
-                )
-            ]
-            if m.get("cdf", False):
-                thunks.append(
-                    lambda: self._write_cdc(
-                        old_union.join(
-                            keys_df, on=kcols, how="left_semi"
-                        ).withColumn("_change_type", F.lit("delete")),
-                        v,
-                        _columns_of(m),
-                    )
-                )
-            res = _parallel_jobs(*thunks)
-            surv_group = res[0]
-            if len(res) > 1:
-                cdc_spec = res[1]
-            if int(surv_group["rows"]) > 0:
-                groups.append(surv_group)
-            # else: every row of the rewritten groups was deleted — the
-            # zero-row dir stays an invisible orphan, never referenced
-        deleted = (
-            sum(_live_rows(g) for g in rewrite) - int(surv_group["rows"])
-            if rewrite
-            else 0
-        )
-        cdc = cdc_spec if deleted > 0 else None
-        manifest = {
-            "version": v,
-            "parent": m["version"],
-            "op": "delete",
-            "columns": _columns_of(m),
-            "added": [],
-            "deleted_rows": deleted,
-            "txns": txns,
-            "key_col": m.get("key_col"),
-            "key_cols": m.get("key_cols"),
-            "bucket": m.get("bucket"),
-            "key_bloom": m.get("key_bloom", False),
-            "cdf": m.get("cdf", False),
-            "dv": m.get("dv", False),
-            "dvs": _carry_dvs(m, groups),
-            "schema": m["schema"],
-            "groups": groups,
-        }
-        if cdc:
-            manifest["cdc"] = cdc
-        return self._commit_keyed(
-            self._stamp_floor(manifest, m), m, kcols, bounds, probes, txn
-        )
-
-    def _read_groups_gid(
-        self,
-        m: dict,
-        groups: list[dict],
-        target: T.StructType,
-        columns: list[dict] | None,
-        kcols: list[str],
-    ) -> DataFrame:
-        """Aligned union of ``groups`` WITH each row's owning group id
-        (__gid, derived from the file path) and prior tombstones
-        anti-joined out — the read shape every dv-writing op needs
-        (already-deleted rows must never re-count or re-tombstone).
-        Batched like _read_groups: one scan per (schema, col_ids)
-        class, __gid from _metadata.file_path exactly as before."""
-        gid_expr = F.regexp_extract(
-            F.col("_metadata.file_path"), _GID_PAT, 1
-        ).alias("__gid")
-        parts = []
-        for ids, paths, _ in _scan_classes(groups):
-            df = self.spark.read.parquet(*paths)
-            parts.append(
-                df.select(
-                    *_align_ids_select(
-                        df.columns, ids, target, columns
-                    ),
-                    gid_expr,
-                )
-            )
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        gids = {g["id"] for g in groups}
-        prior = [
-            d for d in m.get("dvs") or [] if gids & set(d["gids"])
-        ]
-        if prior:
-            pf = self._dv_frame(m, prior, columns)
-            if sum(int(d["rows"]) for d in prior) <= _DV_BROADCAST_MAX_ROWS:
-                pf = F.broadcast(pf)
-            u = u.join(pf, on=["__gid"] + kcols, how="left_anti")
-        return u
-
     def _dv_per_gid(self, doomed: DataFrame) -> tuple[dict, int]:
         """Per-group tombstone counts of the doomed (__gid + row)
         frame, ONE aggregate job (it also materializes the caller's
@@ -2965,18 +2784,12 @@ class SifTable:
         kcols: list[str],
         v: int,
         columns: list[dict] | None,
-        per_gid: dict | None = None,
-    ) -> tuple[dict, int, dict | None]:
-        """(per-gid counts, total, manifest dv entry or None): count
-        the doomed (__gid + row) frame per group (or take the caller's
-        precomputed counts, letting the sidecar write overlap other
-        independent writes), then persist its (group id, key tuple)
-        sidecar under <table>/dv/."""
-        if per_gid is None:
-            per_gid, _ = self._dv_per_gid(doomed)
-        deleted = sum(per_gid.values())
-        if not deleted:
-            return per_gid, 0, None
+        per_gid: dict,
+    ) -> dict:
+        """Persist the doomed (__gid + row) frame's (group id, key
+        tuple) sidecar under <table>/dv/; returns its manifest dv entry
+        (``per_gid``: the precomputed per-group counts, so this write
+        overlaps the wave's other writes)."""
         did = f"d-{v:010d}-000-{uuid.uuid4().hex[:8]}"
         dpath = f"{self.path}/dv/{did}"
         written = doomed.select(
@@ -2987,16 +2800,13 @@ class SifTable:
         ).parquet(dpath)
         id_of = {c["name"]: c["id"] for c in columns} if columns else {}
         kids = {k: id_of[k] for k in kcols if k in id_of}
-        return per_gid, deleted, {
+        return {
             "path": dpath,
-            "rows": deleted,
+            "rows": sum(per_gid.values()),
             "gids": sorted(g for g, n in per_gid.items() if n),
             # the written DDL keys _scan_classes: sidecars of one
             # (schema, col_ids) class read as ONE multi-path scan
-            "schema": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in written.schema.fields
-            ),
+            "schema": _ddl(written.schema),
             **({"col_ids": kids} if kids else {}),
         }
 
@@ -3012,94 +2822,6 @@ class SifTable:
             )
         return groups
 
-    def _delete_keys_dv(
-        self,
-        m: dict,
-        keys_df: DataFrame,
-        kcols: list[str],
-        keep: list[dict],
-        touched: list[dict],
-        txns: dict,
-        v: int,
-        bounds: list[tuple],
-        probes: tuple[dict, str],
-        txn: tuple[str, int] | None,
-    ) -> int:
-        """delete_keys on a ``dv=True`` table: ZERO group rewrites.
-        The newly deleted rows — matched by key in the touched
-        groups, minus rows already tombstoned — are written as ONE
-        (group id, key tuple) sidecar under <table>/dv/ (plus, on a
-        cdf table, their full pre-images as the version's change
-        file), both BEFORE the manifest commit: a SIGKILL between the
-        writes leaves invisible orphans, never a torn feed. Every
-        read path applies live sidecars as a broadcast anti-join;
-        compact() reconciles and clears them. Exact counters: one
-        bounded per-group count aggregate over the matched set."""
-        target = T._parse_datatype_string(m["schema"])
-        columns = _columns_of(m)
-        u = self._read_groups_gid(m, touched, target, columns, kcols)
-        # lazily checkpointed: feeds the per-group counts, the sidecar
-        # write AND the cdc write without re-running the joins
-        doomed = u.join(keys_df, on=kcols, how="left_semi").localCheckpoint(
-            eager=False
-        )
-        # counts first (one aggregate, materializes the checkpoint),
-        # then the sidecar write and the cdc change file — independent
-        # jobs over the cached frame — overlap (guide §2.6)
-        per_gid, deleted = self._dv_per_gid(doomed)
-        dv_entry = None
-        cdc = None
-        if deleted:
-            thunks = [
-                lambda: self._write_dv_sidecar(
-                    doomed, kcols, v, columns, per_gid=per_gid
-                )
-            ]
-            if m.get("cdf", False):
-                thunks.append(
-                    lambda: self._write_cdc(
-                        doomed.drop("__gid").withColumn(
-                            "_change_type", F.lit("delete")
-                        ),
-                        v,
-                        columns,
-                    )
-                )
-            res = _parallel_jobs(*thunks)
-            dv_entry = res[0][2]
-            if len(res) > 1:
-                cdc = res[1]
-        # groups carry BY REFERENCE in their original order — only the
-        # touched entries' dv_rows metadata advances (the q189 pin:
-        # zero group paths change under a scattered dv delete)
-        groups = self._dv_bumped_groups(m, per_gid)
-        dvs = _carry_dvs(m, groups)
-        if dv_entry:
-            dvs.append(dv_entry)
-        manifest = {
-            "version": v,
-            "parent": m["version"],
-            "op": "delete",
-            "columns": columns,
-            "added": [],
-            "deleted_rows": deleted,
-            "txns": txns,
-            "key_col": m.get("key_col"),
-            "key_cols": m.get("key_cols"),
-            "bucket": m.get("bucket"),
-            "key_bloom": m.get("key_bloom", False),
-            "cdf": m.get("cdf", False),
-            "dv": True,
-            "dvs": dvs,
-            "schema": m["schema"],
-            "groups": groups,
-        }
-        if cdc:
-            manifest["cdc"] = cdc
-        return self._commit_keyed(
-            self._stamp_floor(manifest, m), m, kcols, bounds, probes, txn
-        )
-
     def delete(self, predicate: str) -> int:
         """Delete rows matching the SQL predicate — groups with no
         matches carry over by reference; matched groups rewrite. The
@@ -3111,7 +2833,6 @@ class SifTable:
         target = T._parse_datatype_string(m["schema"])
         v = m["version"] + 1
         cdf_on = m.get("cdf", False)
-        kcols = _key_cols(m) or []
         # ONE batched dv-aware probe over every group (guide §1.2/§2.4
         # — the old shape ran two limit-1 probe jobs PER GROUP,
         # serially: O(groups) driver-side action waves before a single
@@ -3121,8 +2842,8 @@ class SifTable:
         # and of surviving rows (rewrite lands a group iff > 0).
         counts: dict[str, tuple[int, int]] = {}
         if m["groups"]:
-            u = self._read_groups_gid(
-                m, m["groups"], target, _columns_of(m), kcols
+            u = self._read_groups(
+                m, m["groups"], target, _columns_of(m), keep_gid=True
             )
             pred_t = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
             counts = {
@@ -3158,10 +2879,7 @@ class SifTable:
         def _rw(g: dict, s: int):
             gdf = self._read_groups(m, [g], target, _columns_of(m))
             remaining = gdf.filter(f"NOT coalesce(({predicate}), false)")
-            return self._write_group(
-                remaining, v, s, _key_cols(m), m.get("bucket"),
-                m.get("key_bloom", False), _columns_of(m)
-            )
+            return self._write_group(remaining, v, s, m, _columns_of(m))
 
         thunks = [lambda g=g, s=s: _rw(g, s) for _, g, s in rewrites]
         cdc_idx = None
@@ -3169,14 +2887,12 @@ class SifTable:
             cdc_idx = len(thunks)
             thunks.append(
                 lambda: self._write_cdc(
-                    u.filter(pred_t)
-                    .drop("__gid")
-                    .withColumn("_change_type", F.lit("delete")),
+                    _tagged(u.filter(pred_t).drop("__gid"), "delete"),
                     v,
                     _columns_of(m),
                 )
             )
-        res = _parallel_jobs(*thunks) if thunks else []
+        res = _parallel_jobs(*thunks)
         kept_new = 0
         for (pos, _, _), wg in zip(rewrites, res):
             kept_new += int(wg["rows"])
@@ -3184,27 +2900,9 @@ class SifTable:
         groups = [g for g in groups if g is not None]
         deleted = removed_old - kept_new
         cdc = res[cdc_idx] if cdc_idx is not None and deleted > 0 else None
-        manifest = {
-            "version": v,
-            "parent": m["version"],
-            "op": "delete",
-            "columns": _columns_of(m),
-            "added": [],
-            "deleted_rows": deleted,
-            "txns": m.get("txns", {}),
-            "key_col": m.get("key_col"),
-            "key_cols": m.get("key_cols"),
-            "bucket": m.get("bucket"),
-            "key_bloom": m.get("key_bloom", False),
-            "cdf": cdf_on,
-            "dv": m.get("dv", False),
-            "dvs": _carry_dvs(m, groups),
-            "schema": m["schema"],
-            "groups": groups,
-        }
-        if cdc:
-            manifest["cdc"] = cdc
-        return self._commit(self._stamp_floor(manifest, m))
+        return self._commit(next_manifest(
+            m, "delete", groups, m["schema"], deleted_rows=deleted, cdc=cdc
+        ))
 
     def overwrite(
         self,
@@ -3225,59 +2923,19 @@ class SifTable:
         forward. Schema may change freely — an overwrite owns the new
         snapshot's schema (column ids are re-minted for NEW names,
         preserved for surviving ones, so later renames stay safe)."""
-        last: Exception | None = None
-        for _ in range(retries):
+        def attempt() -> int:
             m = self._load()
-            txns = dict(m.get("txns", {}))
-            if txn is not None:
-                app_id, epoch = txn
-                if int(txns.get(app_id, -1)) >= int(epoch):
-                    return m["version"]  # replayed epoch: no-op
-                txns[app_id] = int(epoch)
-            cols = _columns_of(m)
-            if cols is not None:
-                by_name = {c["name"]: c["id"] for c in cols}
-                next_id = _mint_floor(m) + 1
-                new_cols = []
-                for f in df.schema.fields:
-                    cid = by_name.get(f.name)
-                    if cid is None:
-                        cid = next_id
-                        next_id += 1
-                    new_cols.append({"id": cid, "name": f.name})
-            else:
-                new_cols = None
-            v = m["version"] + 1
-            group = self._write_group(
-                df, v, 0, _key_cols(m), m.get("bucket"),
-                m.get("key_bloom", False), new_cols,
-            )
-            try:
-                return self._commit(
-                    self._stamp_floor({
-                        "version": v,
-                        "parent": m["version"],
-                        "op": "overwrite",
-                        "columns": new_cols,
-                        "added": [group["id"]],
-                        "txns": txns,
-                        "key_col": m.get("key_col"),
-                        "key_cols": m.get("key_cols"),
-                        "bucket": m.get("bucket"),
-                        "key_bloom": m.get("key_bloom", False),
-                        "cdf": m.get("cdf", False),
-                        "dv": m.get("dv", False),
-                        "dvs": [],
-                        "schema": ", ".join(
-                            f"{f.name} {f.dataType.simpleString()}"
-                            for f in df.schema.fields
-                        ),
-                        "groups": [group],
-                    }, m)
-                )
-            except ConcurrentCommitError as e:
-                last = e
-        raise last  # type: ignore[misc]
+            txns = _advance_txns(m, txn)
+            if txns is None:
+                return m["version"]  # replayed epoch: no-op
+            new_cols = _next_columns(m, df.schema)
+            group = self._write_group(df, m["version"] + 1, 0, m, new_cols)
+            return self._commit(next_manifest(
+                m, "overwrite", [group], df.schema, columns=new_cols,
+                added=[group["id"]], txns=txns,
+            ))
+
+        return _retrying(attempt, retries)
 
     def compact(
         self,
@@ -3324,28 +2982,8 @@ class SifTable:
             df = df.repartition(num_files)
         elif keys:
             df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        v = m["version"] + 1
-        group = self._write_group(df, v, 0, keys, bucket,
-                                  m.get("key_bloom", False), _columns_of(m))
-        return self._commit(
-            self._stamp_floor({
-                "version": v,
-                "parent": m["version"],
-                "op": "compact",
-                "columns": _columns_of(m),
-                "added": [],
-                "txns": m.get("txns", {}),
-                "key_col": m.get("key_col"),
-                "key_cols": m.get("key_cols"),
-                "bucket": bucket,
-                "key_bloom": m.get("key_bloom", False),
-                "cdf": m.get("cdf", False),
-                "dv": m.get("dv", False),
-                "dvs": [],
-                "schema": m["schema"],
-                "groups": [group],
-            }, m)
-        )
+        group = self._write_group(df, m["version"] + 1, 0, m, _columns_of(m))
+        return self._commit(next_manifest(m, "compact", [group], m["schema"]))
 
     def restore(self, version: int) -> int:
         """Roll the table back to ``version`` as a NEW commit (the
@@ -3360,27 +2998,12 @@ class SifTable:
         not tombstoned)."""
         old = self._load(version)  # raises on unknown version
         m = self._load()
-        v = m["version"] + 1
-        return self._commit(
-            self._stamp_floor({
-                "version": v,
-                "parent": m["version"],
-                "op": "restore",
-                "restored_from": version,
-                "columns": _columns_of(old),
-                "added": [],
-                "txns": m.get("txns", {}),
-                "key_col": old.get("key_col"),
-                "key_cols": old.get("key_cols"),
-                "bucket": old.get("bucket"),
-                "key_bloom": old.get("key_bloom", False),
-                "cdf": m.get("cdf", False),
-                "dv": m.get("dv", False),
-                "dvs": old.get("dvs") or [],
-                "schema": old["schema"],
-                "groups": old["groups"],
-            }, m)
-        )
+        return self._commit(next_manifest(
+            m, "restore", old["groups"], old["schema"],
+            columns=_columns_of(old), dvs=old.get("dvs") or [],
+            restored_from=version,
+            **{f: old.get(f, _SPEC[f]) for f in _SPEC if f not in ("cdf", "dv")},
+        ))
 
     def _bootstrap_columns(self, m: dict) -> tuple[list[dict], list[dict]]:
         """(columns, groups) with ids synthesized for a legacy table:
@@ -3441,30 +3064,16 @@ class SifTable:
             f"{f.dataType.simpleString()}"
             for f in target.fields
         )
-        return self._commit(
-            self._stamp_floor({
-                "version": m["version"] + 1,
-                "parent": m["version"],
-                "op": "rename_column",
-                "renamed": {"from": old, "to": new},
-                "columns": columns,
-                "added": [],
-                "txns": m.get("txns", {}),
-                "key_col": new if m.get("key_col") == old else m.get("key_col"),
-                "key_cols": (
-                    [new if c == old else c for c in m["key_cols"]]
-                    if m.get("key_cols")
-                    else m.get("key_cols")
-                ),
-                "bucket": m.get("bucket"),
-                "key_bloom": m.get("key_bloom", False),
-                "cdf": m.get("cdf", False),
-                "dv": m.get("dv", False),
-                "dvs": m.get("dvs") or [],
-                "schema": ddl,
-                "groups": groups,
-            }, m)
-        )
+        return self._commit(next_manifest(
+            m, "rename_column", groups, ddl, columns=columns,
+            renamed={"from": old, "to": new},
+            key_col=new if m.get("key_col") == old else m.get("key_col"),
+            key_cols=(
+                [new if c == old else c for c in m["key_cols"]]
+                if m.get("key_cols")
+                else m.get("key_cols")
+            ),
+        ))
 
     def drop_column(self, name: str) -> int:
         """Drop a column as a METADATA-ONLY commit: the data files
@@ -3493,26 +3102,9 @@ class SifTable:
             for f in target.fields
             if f.name != name
         )
-        return self._commit(
-            self._stamp_floor({
-                "version": m["version"] + 1,
-                "parent": m["version"],
-                "op": "drop_column",
-                "dropped": name,
-                "columns": columns,
-                "added": [],
-                "txns": m.get("txns", {}),
-                "key_col": m.get("key_col"),
-                "key_cols": m.get("key_cols"),
-                "bucket": m.get("bucket"),
-                "key_bloom": m.get("key_bloom", False),
-                "cdf": m.get("cdf", False),
-                "dv": m.get("dv", False),
-                "dvs": m.get("dvs") or [],
-                "schema": ddl,
-                "groups": groups,
-            }, m)
-        )
+        return self._commit(next_manifest(
+            m, "drop_column", groups, ddl, columns=columns, dropped=name
+        ))
 
     def vacuum(
         self, retain_last: int = 2, cdf_retain_last: int | None = None

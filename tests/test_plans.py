@@ -1178,6 +1178,39 @@ def test_distinct_rewrite_canonicalization_is_order_insensitive():
     assert _canon_distinct_rewrite(plain) == plain
 
 
+def test_distinct_rewrite_canonicalization_keeps_non_gid_literals():
+    """The distinct-rewrite canonicalizer masks only the gid element of
+    each Expand branch tuple and only the gid comparisons inside
+    FILTER (WHERE …): a plan that differs from another only in a
+    constant projected in one branch, or in a gid comparison outside a
+    FILTER clause, must canonicalize differently."""
+    from sif_spark.plans.audit import _canon_distinct_rewrite
+
+    def plan(const: str, where: str = "(gid# = 1)") -> str:
+        return (
+            "(9) Expand\n"
+            "Arguments: [[_groupingexpression#, null, null, 0, " + const + "], "
+            "[_groupingexpression#, l_partkey#L, null, 1, null], "
+            "[_groupingexpression#, null, l_suppkey#L, 2, null]], "
+            "[_groupingexpression#, lineitem.l_partkey#L, lineitem.l_suppkey#L, gid#, q#]\n"
+            "(10) HashAggregate\n"
+            "Functions [2]: [partial_count(lineitem.l_partkey#L) FILTER (WHERE (gid# = 1)), "
+            "partial_count(lineitem.l_suppkey#L) FILTER (WHERE (gid# = 2))]\n"
+            "(11) Filter\n"
+            "Condition : " + where + "\n"
+        )
+
+    assert _canon_distinct_rewrite(plan("5")) != _canon_distinct_rewrite(
+        plan("7")
+    )
+    assert _canon_distinct_rewrite(plan("5")) != _canon_distinct_rewrite(
+        plan("5", "(gid# = 2)")
+    )
+    canon = _canon_distinct_rewrite(plan("5"))
+    assert "FILTER (WHERE (gid# = N))" in canon
+    assert "Condition : (gid# = 1)" in canon
+
+
 def test_multi_distinct_fingerprint_stable_across_rebuilds(spark):
     """Two builds of the same multi-distinct aggregate must fingerprint
     identically even after other queries shift the session's exprId

@@ -1,0 +1,261 @@
+"""Job-count and manifest-shape pins for the table layer's keyed
+mutations (upsert / merge / delete_keys) and append.
+
+Each case builds a tiny table, then counts the Spark jobs ONE operation
+starts (the scheduler's job-id delta: the jobs tools/entry_job_probe.py
+counts from the status store, without its retention cap)
+and checks the head manifest: its field set (an absent field and a
+null one count the same), ``op``, the row counters, the group count,
+``len(added)`` and whether a change file / deletion vector is present.
+Job counts are load-immune, so any refactor of the mutation paths that
+adds a job, or changes what a version commits, fails here.
+
+Also pins that the mutation write wave keeps the caller's job group:
+every job a parallel-write mutation starts carries it."""
+
+from __future__ import annotations
+
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from sif_spark.table import SifTable
+
+BASE = "/tmp/sif_table_jobs_test"
+
+# every field a keyed-mutation / append manifest may carry (absent ≡
+# null: the set compared is the fields with a non-null value)
+_BASE_FIELDS = {
+    "version", "parent", "op", "key_bloom", "cdf", "dv", "dvs", "txns",
+    "added", "schema", "columns", "last_column_id", "groups",
+    "col_id_eras",
+}
+
+
+@pytest.fixture()
+def tdir():
+    shutil.rmtree(BASE, ignore_errors=True)
+    yield BASE
+    shutil.rmtree(BASE, ignore_errors=True)
+
+
+def _df(spark, lo, hi, val):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"), F.lit(val).alias("v")
+    )
+
+
+def _cdf(spark, lo, hi, val):
+    """Composite-key rows: (r, d) = (id // 10, id % 10)."""
+    return spark.range(lo, hi).select(
+        (F.col("id") / 10).cast("long").alias("r"),
+        (F.col("id") % 10).alias("d"),
+        F.lit(val).alias("v"),
+    )
+
+
+def _jobs(spark) -> int:
+    """Jobs submitted so far in this SparkContext: the scheduler's job-id
+    counter, which (unlike the status store's job list) is not capped by
+    ``spark.ui.retainedJobs`` in a long-lived test session."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _count_jobs(spark, fn):
+    n0 = _jobs(spark)
+    out = fn()
+    return out, _jobs(spark) - n0
+
+
+def _shape(m: dict) -> dict:
+    return {
+        "fields": {k for k, v in m.items() if v is not None},
+        "op": m["op"],
+        "replaced_rows": m.get("replaced_rows"),
+        "deleted_rows": m.get("deleted_rows"),
+        "groups": len(m["groups"]),
+        "added": len(m["added"]),
+        "cdc": bool(m.get("cdc")),
+        "dvs": len(m.get("dvs") or []),
+    }
+
+
+def _two_group_table(spark, path, **kw):
+    """Groups [0, 40) and [40, 80): a batch keyed inside [0, 40) touches
+    exactly the first group."""
+    t = SifTable.create(spark, path, _df(spark, 0, 40, "a"), **kw)
+    t.append(_df(spark, 40, 80, "b"))
+    return t
+
+
+def _check(spark, t, fn, jobs, shape):
+    assert not spark.streams.active
+    v, n = _count_jobs(spark, fn)
+    m = t._load()
+    assert v == m["version"]
+    got = _shape(m)
+    assert (n, got) == (jobs, shape)
+    assert not spark.streams.active
+
+
+def _fields(*extra):
+    return _BASE_FIELDS | set(extra)
+
+
+def test_jobs_upsert_plain(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    _check(spark, t, lambda: t.upsert(_df(spark, 5, 10, "u")), 6, {
+        "fields": _fields("key_col", "replaced_rows"),
+        "op": "upsert", "replaced_rows": 5, "deleted_rows": None,
+        "groups": 3, "added": 1, "cdc": False, "dvs": 0,
+    })
+
+
+def test_jobs_upsert_key_bloom(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k", key_bloom=True)
+    _check(spark, t, lambda: t.upsert(_df(spark, 5, 10, "u")), 14, {
+        "fields": _fields("key_col", "replaced_rows"),
+        "op": "upsert", "replaced_rows": 5, "deleted_rows": None,
+        "groups": 3, "added": 1, "cdc": False, "dvs": 0,
+    })
+
+
+def test_jobs_upsert_cdf(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k", cdf=True)
+    _check(spark, t, lambda: t.upsert(_df(spark, 35, 45, "u")), 10, {
+        "fields": _fields("key_col", "replaced_rows", "cdc"),
+        "op": "upsert", "replaced_rows": 10, "deleted_rows": None,
+        "groups": 2, "added": 1, "cdc": True, "dvs": 0,
+    })
+
+
+def test_jobs_upsert_composite_key(spark, tdir):
+    t = SifTable.create(
+        spark, tdir, _cdf(spark, 0, 40, "a"), key_cols=["r", "d"]
+    )
+    t.append(_cdf(spark, 40, 80, "b"))
+    _check(spark, t, lambda: t.upsert(_cdf(spark, 5, 10, "u")), 7, {
+        "fields": _fields("key_cols", "replaced_rows"),
+        "op": "upsert", "replaced_rows": 5, "deleted_rows": None,
+        "groups": 3, "added": 1, "cdc": False, "dvs": 0,
+    })
+
+
+def test_jobs_append(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    _check(spark, t, lambda: t.append(_df(spark, 80, 90, "c")), 1, {
+        "fields": _fields("key_col"),
+        "op": "append", "replaced_rows": None, "deleted_rows": None,
+        "groups": 3, "added": 1, "cdc": False, "dvs": 0,
+    })
+
+
+def _merge_upd_ins(t, spark):
+    return t.merge(
+        _df(spark, 30, 45, "m").unionByName(_df(spark, 100, 105, "i")),
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert=True,
+    )
+
+
+def test_jobs_merge_update_insert_plain(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    _check(spark, t, lambda: _merge_upd_ins(t, spark), 10, {
+        "fields": _fields("key_col", "replaced_rows", "deleted_rows"),
+        "op": "merge", "replaced_rows": 15, "deleted_rows": 0,
+        "groups": 2, "added": 1, "cdc": False, "dvs": 0,
+    })
+
+
+def test_jobs_merge_update_insert_cdf(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k", cdf=True)
+    _check(spark, t, lambda: _merge_upd_ins(t, spark), 16, {
+        "fields": _fields(
+            "key_col", "replaced_rows", "deleted_rows", "cdc"
+        ),
+        "op": "merge", "replaced_rows": 15, "deleted_rows": 0,
+        "groups": 2, "added": 1, "cdc": True, "dvs": 0,
+    })
+
+
+def _dv_table(spark, path, **kw):
+    """Three interleaved groups (k % 3): every scattered batch overlaps
+    every group's range — the deletion-vector use case."""
+    def part(rem, val):
+        return (
+            spark.range(0, 90).filter(F.col("id") % 3 == rem)
+            .select(F.col("id").alias("k"), F.lit(val).alias("v"))
+        )
+
+    t = SifTable.create(spark, path, part(0, "a"), key_col="k", dv=True,
+                        **kw)
+    t.append(part(1, "b"))
+    t.append(part(2, "c"))
+    return t
+
+
+def test_jobs_merge_delete_only_dv(spark, tdir):
+    t = _dv_table(spark, tdir)
+    _check(
+        spark, t,
+        lambda: t.merge(
+            _df(spark, 10, 20, "x"), when_matched_delete=True
+        ),
+        8,
+        {
+            "fields": _fields("key_col", "replaced_rows", "deleted_rows"),
+            "op": "merge", "replaced_rows": 0, "deleted_rows": 10,
+            "groups": 3, "added": 0, "cdc": False, "dvs": 1,
+        },
+    )
+
+
+def _keys(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("k"))
+
+
+def test_jobs_delete_keys_plain(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    _check(spark, t, lambda: t.delete_keys(_keys(spark, 5, 10)), 6, {
+        "fields": _fields("key_col", "deleted_rows"),
+        "op": "delete", "replaced_rows": None, "deleted_rows": 5,
+        "groups": 2, "added": 0, "cdc": False, "dvs": 0,
+    })
+
+
+def test_jobs_delete_keys_cdf(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k", cdf=True)
+    _check(spark, t, lambda: t.delete_keys(_keys(spark, 5, 10)), 8, {
+        "fields": _fields("key_col", "deleted_rows", "cdc"),
+        "op": "delete", "replaced_rows": None, "deleted_rows": 5,
+        "groups": 2, "added": 0, "cdc": True, "dvs": 0,
+    })
+
+
+def test_jobs_delete_keys_dv(spark, tdir):
+    t = _dv_table(spark, tdir)
+    _check(spark, t, lambda: t.delete_keys(_keys(spark, 10, 20)), 8, {
+        "fields": _fields("key_col", "deleted_rows"),
+        "op": "delete", "replaced_rows": None, "deleted_rows": 10,
+        "groups": 3, "added": 0, "cdc": False, "dvs": 1,
+    })
+
+
+def test_write_wave_jobs_keep_the_callers_job_group(spark, tdir):
+    """The survivor rewrite, the batch group and the change file of a
+    cdf upsert are written from pool threads: each of those jobs must
+    still carry the job group the caller set."""
+    t = _two_group_table(spark, tdir, key_col="k", cdf=True)
+    sc = spark.sparkContext
+    group = "sif-table-jobs-group"
+    sc.setJobGroup(group, "cdf upsert")
+    try:
+        _, n = _count_jobs(spark, lambda: t.upsert(_df(spark, 35, 45, "u")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert t._load()["cdc"]
+    assert n >= 3
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == n
