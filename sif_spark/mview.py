@@ -23,7 +23,8 @@ Scope: ADDITIVE aggregates (SUM; COUNT is SUM(1)). Two source modes:
   assumption is ENFORCED, not assumed — the stream reader plans with
   fail_on_content_removal (it refuses any version whose exact
   replaced_rows/deleted_rows counter is non-zero or unrecorded), and
-  merge_partials re-checks the manifests of every version it folds.
+  merge_partials re-checks the manifests of every version it folds
+  with the same rule (table.feed_refusal).
   The r10 silent-drift case (an upsert's post-image folding on top of
   the already-folded old value) is now a typed error, never a wrong
   sum.
@@ -134,7 +135,7 @@ def merge_partials(
     upsert's post-images would silently stack them on the folded old
     values). With cdf=True the fold is signed by _change_type and
     replacements/deletes maintain the view exactly."""
-    from sif_spark.table import ChangeFeedIncompleteError, SifTable
+    from sif_spark.table import SifTable, feed_refusal
 
     from pyspark.sql import Observation
 
@@ -172,50 +173,9 @@ def merge_partials(
         # that case is covered by the stream reader's plan-time
         # fail_on_content_removal guard, which iterates EVERY version
         # in the offset window (incremental_view always sets it).
-        batch_versions = [
-            v
-            for v in src._versions()
-            if min(row_versions) <= v <= max(row_versions)
-        ]
-        for v in batch_versions:
-            m = src._load(int(v))
-            op = m.get("op")
-            if op in ("restore", "overwrite"):
-                raise ChangeFeedIncompleteError(
-                    f"mview fold over append feed hit version {v} ({op}) "
-                    "— its removals are not representable; rebuild the "
-                    "view or start after it."
-                )
-            if op == "upsert":
-                r = m.get("replaced_rows")
-                if r is None or r > 0:
-                    raise ChangeFeedIncompleteError(
-                        f"mview fold over append feed hit version {v} "
-                        f"(upsert, {'unrecorded' if r is None else r} "
-                        "replaced rows) — folding its post-images would "
-                        "corrupt the view. Use cdf=True on a table "
-                        "created with cdf=True."
-                    )
-            if op == "delete":
-                d = m.get("deleted_rows")
-                if d is None or d > 0:
-                    raise ChangeFeedIncompleteError(
-                        f"mview fold over append feed hit version {v} "
-                        f"(delete, {'unrecorded' if d is None else d} "
-                        "removed rows) — the view would never hear the "
-                        "removals. Use cdf=True."
-                    )
-            if op == "merge":
-                for counter in ("replaced_rows", "deleted_rows"):
-                    c = m.get(counter)
-                    if c is None or c > 0:
-                        raise ChangeFeedIncompleteError(
-                            f"mview fold over append feed hit version {v} "
-                            f"(merge, {counter}="
-                            f"{'unrecorded' if c is None else c}) — "
-                            "folding it would corrupt the view. Use "
-                            "cdf=True."
-                        )
+        for v in src._versions():
+            if min(row_versions) <= v <= max(row_versions):
+                feed_refusal(src._load(v))
     if cdf:
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"),

@@ -9,6 +9,17 @@ delivery of every committed row with no file-listing heuristics — the
 manifest chain is the log. Together with stream_into_table this
 closes the loop: tables feed incremental pipelines that feed tables.
 
+One planner, two readers: each micro-batch's files, their column ids
+and its refusals come from ``table.feed_window`` — the function
+SifTable.changes() plans with — over manifests read through the same
+log store and decoder SifTable uses. So a stream and ``changes()``
+over the same window cannot disagree: both refuse a version through
+``table.feed_refusal`` (the ``fail_on_content_removal`` /
+``fail_on_removal_ops`` options and the cdf mode's check of versions
+without a change file), and both raise ChangeFeedIncompleteError for
+a window that reaches into a vacuumed prefix or a reclaimed change
+file.
+
 Built on PySpark 4's DataSource API (same extension point as
 sources/custom.py — the reference's datasource.go:21-27 analogue).
 Planner-side calls (schema, offsets, partition listing) read manifest
@@ -32,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
@@ -51,8 +63,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-_MANIFESTS = "_manifests"
-
 
 def _local_path(p: str) -> str:
     """SQL DDL (CREATE TABLE ... USING sif_table) hands the path
@@ -65,29 +75,17 @@ def _local_path(p: str) -> str:
 
 
 def _versions_on_disk(table_path: str) -> list[int]:
-    mdir = os.path.join(table_path, _MANIFESTS)
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    from sif_spark.logstore import PosixExclLogStore
+    from sif_spark.table import _log_versions
+
+    return _log_versions(PosixExclLogStore(), table_path)
 
 
 def _load_manifest(table_path: str, version: int) -> dict:
-    p = os.path.join(table_path, _MANIFESTS, f"v{version:010d}.json")
-    with open(p, encoding="utf-8") as fh:
-        m = json.load(fh)
-    # rehydrate interned per-era col_ids (table.py _intern_col_eras) —
-    # inline rather than imported: this runs sessionless on executors
-    eras = m.get("col_id_eras")
-    if eras:
-        for g in m.get("groups", []):
-            e = g.pop("col_era", None)
-            if e is not None:
-                g["col_ids"] = eras[e]
-    return m
+    from sif_spark.logstore import PosixExclLogStore
+    from sif_spark.table import _log_manifest
+
+    return _log_manifest(PosixExclLogStore(), table_path, version)
 
 
 class _GroupFilePartition(InputPartition):
@@ -110,191 +108,6 @@ class _GroupFilePartition(InputPartition):
         # anti-filters rows whose key tuple is tombstoned for this
         # gid. None = no live dv touches this group (zero overhead).
         self.dv = dv
-
-
-def _plan_colmap(
-    written_ids: dict | None,
-    columns: list | None,
-    schema_names: list,
-) -> dict | None:
-    """Planner-side: resolve the column-id mapping of one file group
-    against the read schema into an explicit {schema_name:
-    written_name | None} map the executor can apply without the
-    manifest. None when plain by-name alignment is already exact."""
-    from sif_spark.table import _dead_written_names, _rename_map
-
-    if not written_ids or not columns:
-        return None
-    ren = _rename_map(written_ids, columns)
-    dead = _dead_written_names(written_ids, columns)
-    if not ren and not dead:
-        return None
-    cur_to_written = {cur: w for w, cur in ren.items()}
-    blocked = dead | set(ren)
-    out = {}
-    for n in schema_names:
-        w = cur_to_written.get(n)
-        if w is None:
-            w = n if n not in blocked else None
-        out[n] = w
-    return out
-
-
-def _ids_of_group(g: dict, m: dict) -> dict | None:
-    """A group's written-name→id map: its own record, else derived
-    from the manifest's columns over the group's written schema."""
-    if g.get("col_ids") is not None:
-        return g["col_ids"]
-    cols = m.get("columns")
-    if cols is None:
-        return None
-    from sif_spark.table import _schema_names
-
-    by_name = {c["name"]: c["id"] for c in cols}
-    return {
-        n: by_name[n] for n in _schema_names(g["schema"]) if n in by_name
-    } or None
-
-
-def _raise_if_removal(m: dict) -> None:
-    """Planner-side guard (fail_on_content_removal): refuse to plan a
-    micro-batch over a version that replaced or removed rows — an
-    append-feed consumer folding such a version drifts SILENTLY (the
-    r10 mview bug). Runs sessionless, so it raises ValueError (the
-    driver-side SifTable API raises the ChangeFeedIncompleteError
-    subtype)."""
-    v, op = m["version"], m.get("op")
-    if op in ("restore", "overwrite"):
-        raise ValueError(
-            f"sif_table version {v} is a {op} — an append-feed "
-            "consumer cannot represent it; start after it or rebuild"
-        )
-    if op == "upsert":
-        r = m.get("replaced_rows")
-        if r is None or r > 0:
-            raise ValueError(
-                f"sif_table version {v} (upsert) replaced "
-                f"{'unrecorded' if r is None else r} rows — an "
-                "append-feed fold would double-count them. Use "
-                "cdf=true (table created with cdf=True) instead."
-            )
-    if op == "delete":
-        d = m.get("deleted_rows")
-        if d is None or d > 0:
-            raise ValueError(
-                f"sif_table version {v} (delete) removed "
-                f"{'unrecorded' if d is None else d} rows — an "
-                "append-feed fold would never hear about them. Use "
-                "cdf=true (table created with cdf=True) instead."
-            )
-    if op == "merge":
-        for counter in ("replaced_rows", "deleted_rows"):
-            c = m.get(counter)
-            if c is None or c > 0:
-                raise ValueError(
-                    f"sif_table version {v} (merge) has {counter}="
-                    f"{'unrecorded' if c is None else c} — an append-feed "
-                    "fold cannot represent it. Use cdf=true (table "
-                    "created with cdf=True) instead."
-                )
-
-
-def _raise_if_removal_op(m: dict) -> None:
-    """Planner-side guard (fail_on_removal_ops) for KEYED folds: a
-    consumer that materializes each key's latest image (e.g. the ANN
-    index maintainer) folds upsert post-images correctly as keyed
-    REPLACEMENTS, so upserts pass — but a delete / overwrite / restore
-    (or a merge that deleted rows) removes keys the append feed never
-    mentions, leaving stale rows in the materialization (ADVICE r11
-    high). Refuse to plan past such a version instead of silently
-    skipping it."""
-    v, op = m["version"], m.get("op")
-    if op in ("restore", "overwrite"):
-        raise ValueError(
-            f"sif_table version {v} is a {op} — a keyed fold over the "
-            "append feed cannot represent its removals; use cdf=true "
-            "(table created with cdf=True) or rebuild downstream"
-        )
-    if op == "delete":
-        d = m.get("deleted_rows")
-        if d is None or d > 0:
-            raise ValueError(
-                f"sif_table version {v} (delete) removed "
-                f"{'unrecorded' if d is None else d} rows — a keyed "
-                "fold over the append feed would keep their stale "
-                "images forever. Use cdf=true (table created with "
-                "cdf=True) instead."
-            )
-    if op == "merge":
-        # UNLIKE an upsert (whose post-images ARE the version's added
-        # group), a merge's updated rows live in the REWRITTEN group —
-        # invisible to the append feed — so a keyed fold would keep
-        # stale images for every updated key, and deleted keys forever
-        for counter in ("replaced_rows", "deleted_rows"):
-            c = m.get(counter)
-            if c is None or c > 0:
-                raise ValueError(
-                    f"sif_table version {v} (merge) has {counter}="
-                    f"{'unrecorded' if c is None else c} — its changed "
-                    "rows are not in the append feed's added groups, "
-                    "so a keyed fold would silently go stale. Use "
-                    "cdf=true (table created with cdf=True) instead."
-                )
-
-
-def _cdc_partitions_for_version(
-    table_path: str, m: dict, read_columns: list | None,
-    schema_names: list,
-) -> list:
-    """CDF-mode partition plan for one version: its materialized
-    change file when present; otherwise its added groups tagged
-    'insert' — but ONLY when the manifest's exact counters prove the
-    version added rows and nothing else (anything less raises).
-    ``read_columns`` is the column-id list the stream pinned at start,
-    so files written before a later rename still land under the
-    pinned names."""
-    v = m["version"]
-    parts: list[InputPartition] = []
-    if m.get("cdc"):
-        cpath = m["cdc"]["path"]
-        if not os.path.isdir(cpath):
-            raise ValueError(
-                f"sif_table version {v}'s change file was reclaimed by "
-                "vacuum(cdf_retain_last=...) — this CDC stream cannot "
-                f"replay it; restart from a version after {v}"
-            )
-        from sif_spark.table import _schema_names
-
-        cdc_ids = m["cdc"].get("col_ids")
-        if cdc_ids is None and m.get("columns") is not None:
-            by_name = {c["name"]: c["id"] for c in m["columns"]}
-            cdc_ids = {
-                n: by_name[n]
-                for n in _schema_names(m["cdc"]["schema"])
-                if n in by_name
-            } or None
-        cmap = _plan_colmap(cdc_ids, read_columns, schema_names)
-        for name in sorted(os.listdir(cpath)):
-            if name.endswith(".parquet"):
-                parts.append(
-                    _GroupFilePartition(
-                        os.path.join(cpath, name), v, None, cmap
-                    )
-                )
-        return parts
-    _raise_if_removal(m)  # no change file: must be provably add-only
-    by_id = {g["id"]: g for g in m["groups"]}
-    for gid in m["added"]:
-        g = by_id[gid]
-        cmap = _plan_colmap(_ids_of_group(g, m), read_columns, schema_names)
-        for name in sorted(os.listdir(g["path"])):
-            if name.endswith(".parquet"):
-                parts.append(
-                    _GroupFilePartition(
-                        os.path.join(g["path"], name), v, "insert", cmap
-                    )
-                )
-    return parts
 
 
 class _SifTableStreamReader(DataSourceStreamReader):
@@ -331,15 +144,11 @@ class _SifTableStreamReader(DataSourceStreamReader):
             == "true"
         )
         self.anchor_dir = options.get("rate_anchor_dir")
-        # pin the column-id list alongside the schema: files written
+        # pin the head manifest alongside the schema: files written
         # under pre-rename names map BY ID to the pinned names; a
         # restarted stream re-pins both from the then-latest manifest
         vs = _versions_on_disk(self.table_path)
-        self.pinned_columns = (
-            _load_manifest(self.table_path, vs[-1]).get("columns")
-            if vs
-            else None
-        )
+        self.head = _load_manifest(self.table_path, vs[-1]) if vs else {}
         if self.max_versions and not self.anchor_dir:
             raise ValueError(
                 "max_versions_per_trigger needs rate_anchor_dir= (a "
@@ -400,41 +209,33 @@ class _SifTableStreamReader(DataSourceStreamReader):
                 "lost?). Anchor re-seated from the checkpoint — restart "
                 "the query to resume exactly-once."
             )
+        from sif_spark.table import _written_names, feed_window
+
+        # the batch feed's planner (SifTable.changes): it loads only the
+        # manifests inside (start, end] — and, for a history that
+        # predates column ids, those up to the bootstrap commit — and
+        # starts no Spark job
+        entries = feed_window(
+            _versions_on_disk(self.table_path),
+            partial(_load_manifest, self.table_path),
+            int(start["version"]),
+            int(end["version"]),
+            head=self.head,
+            cdf=self.cdf,
+            guard=self.guard or self.guard_removal_ops,
+            keyed=not self.guard,
+        )
+        names = [f.name for f in self.schema.fields]
         parts: list[InputPartition] = []
-        for v in _versions_on_disk(self.table_path):
-            if not start["version"] < v <= end["version"]:
-                continue
-            m = _load_manifest(self.table_path, v)
-            if "added" not in m:
-                raise ValueError(
-                    f"version {v} predates the change feed (no 'added')"
-                )
-            names = [f.name for f in self.schema.fields]
-            if self.cdf:
-                parts.extend(
-                    _cdc_partitions_for_version(
-                        self.table_path, m, self.pinned_columns, names
-                    )
-                )
-                continue
-            if self.guard:
-                _raise_if_removal(m)
-            if self.guard_removal_ops:
-                _raise_if_removal_op(m)
-            by_id = {g["id"]: g for g in m["groups"]}
-            for gid in m["added"]:
-                g = by_id[gid]
-                cmap = _plan_colmap(
-                    _ids_of_group(g, m), self.pinned_columns, names
-                )
-                for name in sorted(os.listdir(g["path"])):
-                    if name.endswith(".parquet"):
-                        parts.append(
-                            _GroupFilePartition(
-                                os.path.join(g["path"], name), v,
-                                colmap=cmap,
-                            )
+        for e in entries:
+            cmap = _written_names(e.col_ids, self.head.get("columns"), names)
+            for name in sorted(os.listdir(e.path)):
+                if name.endswith(".parquet"):
+                    parts.append(
+                        _GroupFilePartition(
+                            os.path.join(e.path, name), e.version, e.tag, cmap
                         )
+                    )
         return parts
 
     def read(self, partition: _GroupFilePartition) -> Iterator:
@@ -654,7 +455,7 @@ class _SifTableBatchReader(DataSourceReader):
         if v not in versions:
             raise ValueError(f"version {v} not in {versions}")
         m = _load_manifest(self.table_path, v)
-        from sif_spark.table import _key_cols, prune_groups
+        from sif_spark.table import _key_cols, _written_names, prune_groups
 
         groups = m["groups"]
         for col, (lo, hi) in self._bounds.items():
@@ -685,7 +486,7 @@ class _SifTableBatchReader(DataSourceReader):
         names = [f.name for f in self.schema.fields]
         for g in groups:
             gv = int(g["id"].split("-")[1])  # the version that minted it
-            cmap = _plan_colmap(_ids_of_group(g, m), m.get("columns"), names)
+            cmap = _written_names(g.get("col_ids"), m.get("columns"), names)
             dv = (
                 {
                     "gid": g["id"],
@@ -868,6 +669,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         from sif_spark.table import (
             _advance_txns,
             _intern_col_eras,
+            _manifest_file,
             next_manifest,
         )
 
@@ -890,7 +692,6 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                                 max(his) if his else None]
         ddl = self._ddl()
         store = PosixExclLogStore()
-        mdir = os.path.join(self.table_path, _MANIFESTS)
         gpath = None
         for _ in range(30):
             versions = _versions_on_disk(self.table_path)
@@ -974,10 +775,9 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 m, op, groups, ddl, columns=columns, added=added,
                 txns=txns, key_col=key,
             )
-            os.makedirs(mdir, exist_ok=True)
-            target = os.path.join(mdir, f"v{v:010d}.json")
             if store.put_if_absent(
-                target, json.dumps(_intern_col_eras(manifest), indent=1)
+                _manifest_file(self.table_path, v),
+                json.dumps(_intern_col_eras(manifest), indent=1),
             ):
                 self._moved_gpath = None  # committed: now owned by readers
                 shutil.rmtree(

@@ -82,6 +82,7 @@ from __future__ import annotations
 
 import functools
 import json
+import os
 import re
 import uuid
 from typing import Callable, NamedTuple
@@ -310,7 +311,9 @@ class ChangeFeedIncompleteError(ValueError):
     incomplete feed (the r10 mview silent-drift bug, now a typed
     error). Fix: recreate the table with ``create(..., cdf=True)`` and
     consume ``changes(cdf=True)`` / the `sif_table` source's
-    ``cdf`` option."""
+    ``cdf`` option. Also raised (by feed_window, for every reader)
+    when the window reaches into a vacuumed prefix or a reclaimed
+    change file."""
 
 
 def _fs(spark: SparkSession, path: str):
@@ -737,7 +740,19 @@ def _align(df: DataFrame, target: T.StructType) -> DataFrame:
 
 
 def _schema_names(ddl: str) -> list[str]:
-    return [f.name for f in T._parse_datatype_string(ddl).fields]
+    """The top-level field names of a manifest DDL (_ddl's ``name type,
+    ...``), parsed without a session so the stream planner can call it:
+    split at the commas outside <> and (), keep each field's first
+    token."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(ddl + ","):
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            field = ddl[start:i].strip()
+            if field:
+                names.append(field.split(" ", 1)[0])
+            start = i + 1
+    return names
 
 
 def _columns_of(m: dict) -> list[dict] | None:
@@ -886,6 +901,26 @@ def _dead_written_names(written_ids: dict | None, columns: list[dict] | None) ->
     return {w for w, i in written_ids.items() if i not in live}
 
 
+def _written_names(
+    written_ids: dict | None, columns: list[dict] | None, names: list
+) -> dict | None:
+    """{name: the written name its values come from, or None for a
+    NULL column} for each read name, resolved by column id. None when
+    plain by-name alignment is already exact. Sessionless: the stream
+    planner hands the map to its executors as is."""
+    ren = _rename_map(written_ids, columns)
+    dead = _dead_written_names(written_ids, columns)
+    if not ren and not dead:
+        return None
+    cur_to_written = {cur: w for w, cur in ren.items()}
+    # a written name claimed by a rename, or whose id was dropped,
+    # must not ALSO serve a same-named (re-added, fresh-id) column
+    blocked = dead | set(ren)
+    return {
+        n: cur_to_written.get(n, None if n in blocked else n) for n in names
+    }
+
+
 def _align_ids(
     df: DataFrame,
     written_ids: dict | None,
@@ -910,23 +945,205 @@ def _align_ids_select(
     columns ``have`` — shared by _align_ids and the batched
     change-feed read (which must keep the raw scan so
     _metadata.file_path stays referenceable)."""
-    ren = _rename_map(written_ids, columns)
-    dead = _dead_written_names(written_ids, columns)
-    cur_to_written = {cur: w for w, cur in ren.items()}
-    # a written name claimed by a rename, or whose id was dropped,
-    # must not ALSO serve a same-named (re-added, fresh-id) column
-    blocked = dead | set(ren)
+    src = _written_names(written_ids, columns, target.fieldNames()) or {}
     cols = []
     have_set = set(have)
     for f in target.fields:
-        w = cur_to_written.get(f.name)
-        if w is None:
-            w = f.name if f.name not in blocked else None
+        w = src.get(f.name, f.name)
         if w is not None and w in have_set:
             cols.append(F.col(w).cast(f.dataType).alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return cols
+
+
+# ---------------------------------------------------------------------------
+# the change feed: one version→files rule and one removal rule, shared by
+# SifTable.changes(), the sif_table stream reader and the mview fold. All
+# sessionless functions over manifest dicts — the stream planner runs
+# them in a Python worker with no Spark session.
+# ---------------------------------------------------------------------------
+
+
+def _manifest_file(path: str, version: int) -> str:
+    return f"{path}/{_MANIFESTS}/v{version:010d}.json"
+
+
+def _log_versions(log, path: str) -> list[int]:
+    """The committed versions of the table at ``path``, ascending."""
+    return sorted(
+        int(n[1:-5])
+        for n in log.list_names(f"{path}/{_MANIFESTS}")
+        if n.startswith("v") and n.endswith(".json")
+    )
+
+
+def _log_manifest(log, path: str, version: int) -> dict:
+    """Version ``version``'s manifest, with per-group col_ids
+    rehydrated."""
+    return _expand_col_eras(
+        json.loads(log.read_text(_manifest_file(path, version)))
+    )
+
+
+# the manifest counters each keyed op records
+_OP_COUNTERS = {
+    "upsert": ("replaced_rows",),
+    "merge": ("replaced_rows", "deleted_rows"),
+    "delete": ("deleted_rows",),
+}
+
+
+def feed_refusal(m: dict, keyed: bool = False) -> None:
+    """Raise ChangeFeedIncompleteError when manifest ``m``'s added
+    groups are not the whole of its change, so a consumer that folds
+    only added rows would drift silently (the r10 mview bug): a restore
+    or overwrite (its diff is never materialized), or an upsert, delete
+    or merge whose exact replaced_rows/deleted_rows counter is non-zero
+    or unrecorded. ``keyed`` lets upserts pass: a consumer that keeps
+    each key's latest image (the ANN index maintainer) folds an
+    upsert's post-images as replacements. A merge never passes: its
+    updated rows live in the rewritten group, which no feed carries."""
+    v, op = m["version"], m.get("op")
+    if op in ("restore", "overwrite"):
+        raise ChangeFeedIncompleteError(
+            f"version {v} is a {op} — its logical diff is not "
+            "materialized; start the feed after it or rebuild the consumer"
+        )
+    if keyed and op == "upsert":
+        return
+    for counter in _OP_COUNTERS.get(op, ()):
+        n = m.get(counter)
+        if n is None or n > 0:
+            raise ChangeFeedIncompleteError(
+                f"version {v} ({op}) "
+                f"{'replaced' if counter == 'replaced_rows' else 'removed'} "
+                f"{'an unrecorded number of' if n is None else n} rows "
+                "without a change file — the append feed carries only "
+                "added rows (an upsert's post-images), never what they "
+                "replaced or removed. Read with cdf=True on a table "
+                "created with cdf=True."
+            )
+
+
+class FeedEntry(NamedTuple):
+    """One dir of a version's change feed (feed_window's unit)."""
+
+    version: int
+    path: str  # a data group dir, or a cdc change-file dir
+    ddl: str  # the schema its files were written with
+    col_ids: dict | None  # written name → column id; None = by name
+    tag: str | None  # 'insert'; None = the files carry _change_type
+
+
+def _bootstrap_ids(versions: list[int], load: Callable) -> dict | None:
+    """The first columns-bearing manifest's by-name id assignment. A
+    pre-bootstrap version aligned by name up to the bootstrap commit,
+    so that correspondence IS its id map — the rule _bootstrap_columns
+    applies to live groups. The bootstrap commit may itself be the
+    rename/drop: its ``columns`` carry POST-change names, but its
+    groups' synthesized col_ids record the by-name assignment as of the
+    bootstrap moment, so they are overlaid (authoritative for written
+    names, including the renamed-from or dropped name)."""
+    for v in versions:
+        m = load(v)
+        if _columns_of(m) is not None:
+            found = {c["name"]: c["id"] for c in m["columns"]}
+            for g in m["groups"]:
+                found.update(g.get("col_ids") or {})
+            return found
+    return None
+
+
+def feed_window(
+    versions: list[int],
+    load: Callable,
+    after: int,
+    hi: int,
+    head: dict | None = None,
+    cdf: bool = False,
+    guard: bool = False,
+    keyed: bool = False,
+    exists: Callable = os.path.isdir,
+) -> list[FeedEntry]:
+    """The change feed over versions (after, hi] as the dirs that carry
+    it, in version order. ``versions`` lists every committed version,
+    ascending; ``load(v)`` is the caller's manifest loader; ``head`` is
+    the snapshot the consumer aligns to (default: version ``hi``).
+
+    Per version: its added data groups, tagged 'insert'; with ``cdf``,
+    its change file instead when it has one. Without a change file, a
+    cdf feed holds every version to feed_refusal; an append feed does
+    so only with ``guard`` (``keyed`` as in feed_refusal).
+
+    Column ids per dir: its own record, else the head's record for the
+    same (still live) group, else by name over its version's columns —
+    or, for a version that predates column ids under a head that has
+    them, by name over _bootstrap_ids (ADVICE r12 medium: aligning it by
+    name against the post-rename head NULLed the renamed column).
+
+    Raises ChangeFeedIncompleteError, naming the version or range, for
+    a window that reaches into a vacuumed prefix, a reclaimed change
+    file, a manifest without ``added``, or a refused version — never a
+    silent gap."""
+    first = versions[0] if versions else hi
+    if after + 1 < first or hi < first:
+        # versions are contiguous, so everything between ``after`` and
+        # the oldest surviving manifest was vacuumed; ``hi < first``
+        # is a window entirely inside the vacuumed prefix
+        raise ChangeFeedIncompleteError(
+            f"change-feed window ({after}, {hi}] needs versions "
+            f"{after + 1}..{min(hi, first - 1)}, which were vacuumed — "
+            f"rebuild the consumer or start after version {first - 1}"
+        )
+    head = load(hi) if head is None else head
+    head_has_ids = _columns_of(head) is not None
+    live = {g["id"]: g.get("col_ids") for g in head.get("groups", [])}
+    boot: list = []
+
+    def by_name(m: dict, ddl: str) -> dict | None:
+        if _columns_of(m) is not None:
+            ids = {c["name"]: c["id"] for c in m["columns"]}
+        elif not head_has_ids:
+            return None  # legacy end to end: by name is exact
+        else:
+            if not boot:
+                boot.append(_bootstrap_ids(versions, load))
+            ids = boot[0] or {}
+        return {n: ids[n] for n in _schema_names(ddl) if n in ids} or None
+
+    out = []
+    for v in versions:
+        if not after < v <= hi:
+            continue
+        m = load(v)
+        if "added" not in m:
+            raise ChangeFeedIncompleteError(
+                f"version {v} predates the change feed (no 'added' "
+                "record in its manifest)"
+            )
+        cdc = m.get("cdc") if cdf else None
+        if cdc:
+            if not exists(cdc["path"]):
+                raise ChangeFeedIncompleteError(
+                    f"version {v}'s change file was reclaimed by "
+                    "vacuum(cdf_retain_last=...) — the CDC window "
+                    f"({after}, {hi}] is no longer replayable; rebuild "
+                    f"the consumer or start after version {v}"
+                )
+            # the change file REPLACES the added groups (it holds
+            # inserts, pre/post-images and deletes in one dir)
+            ids = cdc.get("col_ids") or by_name(m, cdc["schema"])
+            out.append(FeedEntry(v, cdc["path"], cdc["schema"], ids, None))
+            continue
+        if cdf or guard:
+            feed_refusal(m, keyed=keyed and not cdf)
+        by_id = {g["id"]: g for g in m["groups"]}
+        for gid in m["added"]:
+            g = by_id[gid]
+            ids = g.get("col_ids") or live.get(gid) or by_name(m, g["schema"])
+            out.append(FeedEntry(v, g["path"], g["schema"], ids, "insert"))
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -970,14 +1187,10 @@ class SifTable:
     # -- manifest plumbing -------------------------------------------------
 
     def _manifest_path(self, version: int) -> str:
-        return f"{self.path}/{_MANIFESTS}/v{version:010d}.json"
+        return _manifest_file(self.path, version)
 
     def _versions(self) -> list[int]:
-        out = []
-        for name in self.log.list_names(f"{self.path}/{_MANIFESTS}"):
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
+        return _log_versions(self.log, self.path)
 
     def _load(self, version: int | None = None) -> dict:
         versions = self._versions()
@@ -986,9 +1199,7 @@ class SifTable:
         v = version if version is not None else versions[-1]
         if v not in versions:
             raise ValueError(f"version {v} not in {versions}")
-        return _expand_col_eras(
-            json.loads(self.log.read_text(self._manifest_path(v)))
-        )
+        return _log_manifest(self.log, self.path, v)
 
     def _commit(self, manifest: dict) -> int:
         """Publish the manifest via the log store's put-if-absent:
@@ -1657,6 +1868,13 @@ class SifTable:
         A restore in the window raises ChangeFeedIncompleteError — its
         logical diff is not materialized.
 
+        Which dirs make up each version, under which column ids, and
+        which versions are refused is ``feed_window`` — the same
+        planner the `sif_table` stream runs per micro-batch, so the
+        batch and streamed feeds cannot disagree. A window reaching
+        into a vacuumed prefix or a reclaimed change file raises
+        ChangeFeedIncompleteError naming the missing range.
+
         Plan shape: one parquet scan per DISTINCT group schema in the
         window (not per group) — _commit_version derives from each
         file's path, so a thousand-commit history plans O(1) nodes
@@ -1665,190 +1883,27 @@ class SifTable:
         if not versions:
             raise FileNotFoundError(f"no committed snapshots under {self.path}")
         hi = to_version if to_version is not None else versions[-1]
-        # a vacuumed stretch inside the requested window is a TYPED
-        # error naming the range — never a silent gap (VERDICT r11
-        # "Next round" #8): versions are contiguous, so anything
-        # between after_version and the oldest surviving manifest was
-        # reclaimed
-        first = versions[0]
-        if after_version + 1 < first or hi < first:
-            # `hi < first` covers the window that lies ENTIRELY inside
-            # the vacuumed prefix (an explicit to_version older than
-            # every surviving manifest): the old guard let it fall
-            # through to _load(hi) and raise a raw not-found error
-            # instead of the documented typed one (ADVICE r12 low)
-            raise ChangeFeedIncompleteError(
-                f"change-feed window ({after_version}, {hi}] needs "
-                f"versions {after_version + 1}..{min(hi, first - 1)}, "
-                "which were vacuumed — rebuild the consumer or start "
-                f"after version {first - 1}"
-            )
-        hi_m = self._load(hi)
+        load = functools.cache(self._load)
+        entries = feed_window(
+            versions, load, after_version, hi, cdf=cdf,
+            exists=self._path_exists,
+        )
+        hi_m = load(hi)
         target = T._parse_datatype_string(hi_m["schema"])
-        hi_cols = _columns_of(hi_m)
-        # live groups carry forward WITH their (possibly synthesized)
-        # col_ids — the richest id source for a group whose own
-        # version predates the bootstrap
-        hi_group_ids = {
-            g["id"]: g.get("col_ids") for g in hi_m["groups"]
-        }
-
-        # lazily resolved: the FIRST columns-bearing manifest's by-name
-        # id assignment. A pre-bootstrap version aligned by name up to
-        # the bootstrap commit, so that correspondence IS its id map —
-        # the same rule _bootstrap_columns applies to live groups. The
-        # old fallback (align by name against the POST-rename snapshot)
-        # silently NULLed the renamed column for pre-bootstrap versions
-        # whose group was later rewritten away (ADVICE r12 medium).
-        bootstrap_by_name: list[dict | None] = []
-
-        def _bootstrap_ids() -> dict | None:
-            if not bootstrap_by_name:
-                found = None
-                for v2 in versions:
-                    m2 = self._load(v2)
-                    cols2 = _columns_of(m2)
-                    if cols2 is not None:
-                        # the bootstrap commit may itself be the
-                        # rename/drop: its `columns` carry POST-change
-                        # names, but its groups' synthesized col_ids
-                        # record the by-name assignment as of the
-                        # bootstrap MOMENT — overlay them (they are
-                        # authoritative for written names, including
-                        # the renamed-from / dropped name)
-                        found = {c["name"]: c["id"] for c in cols2}
-                        for g2 in m2["groups"]:
-                            found.update(g2.get("col_ids") or {})
-                        break
-                bootstrap_by_name.append(found)
-            return bootstrap_by_name[0]
-
-        def _ids_from_manifest(m_v: dict, ddl: str) -> dict | None:
-            cols_v = _columns_of(m_v)
-            if cols_v is None:
-                if hi_cols is None:
-                    return None  # legacy end-to-end: by-name is exact
-                # pre-bootstrap version under a columns-bearing HEAD:
-                # synthesize ids with the bootstrap rule (by-name
-                # against the first id assignment). Names outside it
-                # were invisible at bootstrap and stay invisible.
-                boot = _bootstrap_ids()
-                if boot is None:
-                    return None
-                return {
-                    n: boot[n] for n in _schema_names(ddl) if n in boot
-                } or None
-            by_name = {c["name"]: c["id"] for c in cols_v}
-            return {
-                n: by_name[n]
-                for n in _schema_names(ddl)
-                if n in by_name
-            } or None
-
-        insert_paths: list[tuple[str, str, dict | None]] = []
-        cdc_paths: list[tuple[str, str, dict | None]] = []
-        for v in versions:
-            if not after_version < v <= hi:
-                continue
-            m = self._load(v)
-            if "added" not in m:
-                raise ValueError(
-                    f"version {v} predates the change feed (no 'added' "
-                    "record in its manifest)"
-                )
-            if cdf:
-                self._check_cdf_version(m)
-                if m.get("cdc"):
-                    if not self._path_exists(m["cdc"]["path"]):
-                        raise ChangeFeedIncompleteError(
-                            f"version {v}'s change file was reclaimed "
-                            "by vacuum(cdf_retain_last=...) — the CDC "
-                            f"window ({after_version}, {hi}] is no "
-                            "longer replayable; rebuild the consumer "
-                            f"or start after version {v}"
-                        )
-                    # the change file REPLACES the added groups for
-                    # this version (it holds postimages+inserts+
-                    # preimages/deletes in one dir); its names are the
-                    # version's names — ids come from that manifest
-                    cdc_paths.append(
-                        (
-                            m["cdc"]["path"],
-                            m["cdc"]["schema"],
-                            m["cdc"].get("col_ids")
-                            or _ids_from_manifest(m, m["cdc"]["schema"]),
-                        )
-                    )
-                    continue
-            by_id = {g["id"]: g for g in m["groups"]}
-            for gid in m["added"]:
-                g = by_id[gid]
-                ids = (
-                    g.get("col_ids")
-                    or hi_group_ids.get(gid)
-                    or _ids_from_manifest(m, g["schema"])
-                )
-                insert_paths.append((g["path"], g["schema"], ids))
         parts = [
             p
             for p in (
                 self._batched_tagged_read(
-                    insert_paths, target, hi_cols, "insert", cdf
-                ),
-                self._batched_tagged_read(
-                    cdc_paths, target, hi_cols, None, cdf
+                    [(e.path, e.ddl, e.col_ids) for e in entries if e.tag == tag],
+                    target, _columns_of(hi_m), tag, cdf,
                 )
-                if cdf
-                else None,
+                for tag in ("insert", None)
             )
             if p is not None
         ]
         if not parts:
             return self._empty_changes(target, cdf)
         return functools.reduce(DataFrame.unionByName, parts)
-
-    @staticmethod
-    def _check_cdf_version(m: dict) -> None:
-        """Raise ChangeFeedIncompleteError when manifest ``m``'s
-        version removed/replaced rows that were NOT materialized as a
-        change file — emitting anything less would silently drop
-        changes (the exact bug class the r10 verdict flagged)."""
-        v, op = m["version"], m.get("op")
-        if m.get("cdc"):
-            return
-        if op in ("restore", "overwrite"):
-            raise ChangeFeedIncompleteError(
-                f"version {v} is a {op} — its logical diff is not "
-                "materialized; start the CDC read after it"
-            )
-        if op == "upsert":
-            replaced = m.get("replaced_rows")
-            if replaced is None or replaced > 0:
-                raise ChangeFeedIncompleteError(
-                    f"version {v} (upsert) replaced "
-                    f"{'an unrecorded number of' if replaced is None else replaced} "
-                    "rows but materialized no change file — create the "
-                    "table with cdf=True to stream upserts"
-                )
-        if op == "delete":
-            deleted = m.get("deleted_rows")
-            if deleted is None or deleted > 0:
-                raise ChangeFeedIncompleteError(
-                    f"version {v} (delete) removed "
-                    f"{'an unrecorded number of' if deleted is None else deleted} "
-                    "rows but materialized no change file — create the "
-                    "table with cdf=True to stream deletes"
-                )
-        if op == "merge":
-            for counter in ("replaced_rows", "deleted_rows"):
-                c = m.get(counter)
-                if c is None or c > 0:
-                    raise ChangeFeedIncompleteError(
-                        f"version {v} (merge) has {counter}="
-                        f"{'unrecorded' if c is None else c} but "
-                        "materialized no change file — create the table "
-                        "with cdf=True to stream merges"
-                    )
 
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None, retries: int = 3
@@ -2031,13 +2086,6 @@ class SifTable:
             retries,
         )
 
-    # the manifest counters each keyed op records
-    _COUNTERS = {
-        "upsert": ("replaced_rows",),
-        "merge": ("replaced_rows", "deleted_rows"),
-        "delete": ("deleted_rows",),
-    }
-
     def _keyed_once(
         self,
         op: str,
@@ -2125,7 +2173,7 @@ class SifTable:
             for slot, f in p.frames.items()
         ])))
         counts = p.counts(res)
-        counters = {c: int(counts.get(c, 0)) for c in self._COUNTERS[op]}
+        counters = {c: int(counts.get(c, 0)) for c in _OP_COUNTERS[op]}
         groups, added = list(p.carried), []
         for slot in ("wg", "ig"):
             g = res.get(slot)
@@ -3121,10 +3169,12 @@ class SifTable:
         reclaimed even while their snapshots stay time-travelable
         (change files carry full pre/post-images, so they outgrow the
         data they describe). The contract for a slow consumer is a
-        TYPED error, never a silent gap: ``changes(cdf=True)`` over a
-        reclaimed (or manifest-dropped) stretch raises
+        TYPED error, never a silent gap: ``changes()`` over a reclaimed
+        change file (cdf) or a dropped manifest (either mode) raises
         ChangeFeedIncompleteError naming the missing range, and the
-        streaming source refuses to plan the batch. Must be <=
+        `sif_table` stream, which plans through the same
+        ``feed_window``, fails its query with that error instead of
+        delivering the surviving part of the window. Must be <=
         retain_last is not required — values above it are simply
         capped by the manifest retention."""
         versions = self._versions()

@@ -1667,11 +1667,9 @@ def test_merge_guards(spark, tdir):
     """Cardinality violation raises; a deleting merge poisons the
     append feed (stream + keyed-fold + mview + batch-CDC guards all
     see op=merge); key update is rejected."""
-    from sif_spark.sources.table_stream import (
-        _raise_if_removal,
-        _raise_if_removal_op,
-    )
-    from sif_spark.table import ChangeFeedIncompleteError
+    from functools import partial
+
+    from sif_spark.table import ChangeFeedIncompleteError, feed_refusal
 
     t = SifTable.create(spark, tdir, _df(spark, 0, 20, "a"), key_col="k")
     dup = _df(spark, 5, 10, "x").unionAll(_df(spark, 5, 6, "y"))
@@ -1685,11 +1683,11 @@ def test_merge_guards(spark, tdir):
             when_not_matched_insert=True)
     m = t._load()
     assert m["deleted_rows"] == 2 and m["replaced_rows"] == 0
-    for guard in (_raise_if_removal, _raise_if_removal_op):
+    for guard in (feed_refusal, partial(feed_refusal, keyed=True)):
         with pytest.raises(ValueError, match="merge"):
             guard(m)
     with pytest.raises(ChangeFeedIncompleteError, match="merge"):
-        SifTable._check_cdf_version(m)
+        feed_refusal(m)
     # an updating (non-deleting) merge fails BOTH guards: unlike an
     # upsert, its post-images live in the REWRITTEN group, which the
     # append feed never emits — even a keyed fold would go stale
@@ -1698,15 +1696,15 @@ def test_merge_guards(spark, tdir):
     t2 = SifTable.create(spark, t2_dir, _df(spark, 0, 20, "a"), key_col="k")
     t2.merge(_df(spark, 0, 5, "u"), when_matched_update={"v": "s.v"})
     m2 = t2._load()
-    for guard in (_raise_if_removal, _raise_if_removal_op):
+    for guard in (feed_refusal, partial(feed_refusal, keyed=True)):
         with pytest.raises(ValueError, match="merge"):
             guard(m2)
     # an INSERT-ONLY merge (both counters zero) passes both: its only
     # change is the added group, which the feed emits completely
     t2.merge(_df(spark, 100, 105, "n"), when_not_matched_insert=True)
     m3 = t2._load()
-    _raise_if_removal(m3)
-    _raise_if_removal_op(m3)
+    feed_refusal(m3)
+    feed_refusal(m3, keyed=True)
     shutil.rmtree(t2_dir, ignore_errors=True)
 
 

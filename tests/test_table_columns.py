@@ -229,8 +229,10 @@ def test_legacy_table_bootstraps_ids_on_first_rename(spark, tdir):
         with open(p) as fh:
             m = json.load(fh)
         m.pop("columns", None)
+        m.pop("col_id_eras", None)
         for g in m["groups"]:
             g.pop("col_ids", None)
+            g.pop("col_era", None)
         with open(p, "w") as fh:
             json.dump(m, fh)
     t2 = SifTable(spark, tdir)
@@ -315,8 +317,10 @@ def test_changes_across_rename_for_prebootstrap_rewritten_group(spark, tdir):
             m = json.load(fh)
         m.pop("columns", None)
         m.pop("last_column_id", None)
+        m.pop("col_id_eras", None)
         for g in m["groups"]:
             g.pop("col_ids", None)
+            g.pop("col_era", None)
         with open(p, "w") as fh:
             json.dump(m, fh)
     t2 = SifTable(spark, tdir)

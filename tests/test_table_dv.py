@@ -117,10 +117,10 @@ def test_dv_cdf_images_balance_and_feed_guard(spark, tdir):
     # any delete — downstream folds guard on the exact counters), and
     # the stream planner's removal guard refuses it
     assert t.changes(v - 1, to_version=v, cdf=False).count() == 0
-    from sif_spark.sources.table_stream import _raise_if_removal
+    from sif_spark.table import feed_refusal
 
     with pytest.raises(ValueError, match="delete"):
-        _raise_if_removal(t._load(v))
+        feed_refusal(t._load(v))
 
 
 def test_dv_compact_reconciles_and_vacuum_reclaims(spark, tdir):
