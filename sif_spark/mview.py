@@ -6,10 +6,13 @@
 
 without ever re-scanning `src`: the `sif_table` streaming source
 (sources/table_stream.py) delivers each committed version's ADDED rows
-exactly once, the batch folds them into per-key partials (one small
-shuffle over the batch, never the table), and the partials merge into
-the view with a key-joined upsert — additive aggregates compose, so
-old + partial is the exact new value. Exactly-once end to end:
+exactly once through the shared change-feed consumer
+(``fold_table_changes`` starts the query, ``settle_changes``
+materializes each batch once), the batch folds them into per-key
+partials (one small shuffle over the batch, never the table), and the
+partials merge into the view with a key-joined upsert — additive
+aggregates compose, so old + partial is the exact new value.
+Exactly-once end to end:
 
 - upstream: version offsets through the streaming checkpoint;
 - downstream: `SifTable.upsert(..., txn=(app_id, epoch))` — the
@@ -80,9 +83,7 @@ def incremental_aggregate_view(
     fold is signed by _change_type, so replaced/deleted rows retract).
     Returns the StreamingQuery; stop it and restart with the same
     checkpoint to resume incrementally."""
-    from sif_spark.sources.table_stream import register_table_source
-
-    register_table_source(spark)
+    from sif_spark.sources.table_stream import fold_table_changes
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         merge_partials(
@@ -90,28 +91,15 @@ def incremental_aggregate_view(
             src_path=src_path, cdf=cdf,
         )
 
-    reader = (
-        spark.readStream.format("sif_table")
-        .option("path", src_path)
-        .option("starting_version", starting_version)
-    )
-    if cdf:
-        reader = reader.option("cdf", "true")
-    else:
-        # the append-only assumption is ENFORCED at plan time: any
-        # version that replaced/removed rows fails the query instead
-        # of silently drifting the view
-        reader = reader.option("fail_on_content_removal", "true")
-    if max_versions_per_trigger:
-        reader = reader.option(
-            "max_versions_per_trigger", max_versions_per_trigger
-        ).option("rate_anchor_dir", f"{checkpoint_dir}/sif_anchor")
-    stream = reader.load()
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    # the append-only assumption is ENFORCED at plan time: an additive
+    # feed fails the query at any version that replaced/removed rows
+    # instead of silently drifting the view
+    return fold_table_changes(
+        spark, src_path, fold, checkpoint_dir,
+        feed="cdf" if cdf else "additive",
+        starting_version=starting_version,
+        trigger_seconds=trigger_seconds,
+        max_versions_per_trigger=max_versions_per_trigger,
     )
 
 
@@ -135,27 +123,13 @@ def merge_partials(
     upsert's post-images would silently stack them on the folded old
     values). With cdf=True the fold is signed by _change_type and
     replacements/deletes maintain the view exactly."""
+    from sif_spark.sources.table_stream import settle_changes
     from sif_spark.table import SifTable, feed_refusal
-
-    from pyspark.sql import Observation
 
     session = batch_df.sparkSession
     names = list(sums)
-    # ONE read of the Python streaming source per fold: the emptiness
-    # check, the version-window set and the partial aggregate all come
-    # off this in-memory checkpoint instead of re-planning the DSV2
-    # source per action (guide §4.1). The row count AND the distinct
-    # version set ride the checkpoint job itself as observed metrics —
-    # the old isEmpty + distinct().collect() pair cost two more action
-    # waves per micro-batch for numbers the materialization job
-    # already knows.
-    obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if not cdf and src_path is not None:
-        aggs.append(F.collect_set("_commit_version").alias("vers"))
-    batch_df = batch_df.observe(obs, *aggs).localCheckpoint(eager=True)
-    row = obs.get
-    if int(row["n"]) == 0:
+    batch_df, rows, lo, hi = settle_changes(batch_df)
+    if rows == 0:
         # a version window of deletes/compactions feeds an empty batch:
         # nothing to fold, nothing to commit — skipping is replay-safe
         # because an epoch that committed nothing can't double anything
@@ -163,7 +137,6 @@ def merge_partials(
         return
     if not cdf and src_path is not None:
         src = SifTable(session, src_path)
-        row_versions = [int(x) for x in row["vers"]]
         # Scan the full CONTIGUOUS manifest range covered by this
         # batch, not just the versions that contributed rows: a pure
         # removal version (delete/restore) emits no rows, so a
@@ -174,7 +147,7 @@ def merge_partials(
         # fail_on_content_removal guard, which iterates EVERY version
         # in the offset window (incremental_view always sets it).
         for v in src._versions():
-            if min(row_versions) <= v <= max(row_versions):
+            if lo <= v <= hi:
                 feed_refusal(src._load(v))
     if cdf:
         sign = F.when(

@@ -889,10 +889,12 @@ def maintain_ivf_index_table(
     `IVFIndex(centroids, table.read()...)` serves queries."""
     import os
 
-    from sif_spark.sources.table_stream import register_table_source
+    from sif_spark.sources.table_stream import (
+        fold_table_changes,
+        settle_changes,
+    )
     from sif_spark.table import SifTable
 
-    register_table_source(spark)
     if refresh_candidates is not None and pq_codebook is None:
         raise ValueError(
             "refresh_candidates (the serving-health probe) measures the "
@@ -1096,12 +1098,10 @@ def maintain_ivf_index_table(
         this micro-batch is NEW (neither mode's feed can smuggle an
         existing key out of an append version). Driver-side json
         reads, O(versions-per-trigger), no Spark job."""
-        if lo is None or hi is None:
-            return False
         t = SifTable(session, corpus_table_path)
-        for v in range(int(lo), int(hi) + 1):
+        for v in range(lo, hi + 1):
             try:
-                op = t._load(int(v)).get("op")
+                op = t._load(v).get("op")
             except (FileNotFoundError, ValueError):
                 # a version in the window may be GONE (concurrent
                 # vacuum): _load raises ValueError for a dropped
@@ -1190,108 +1190,43 @@ def maintain_ivf_index_table(
         _write_probe_state(session, index_table_path, rows_now)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        # ONE read of the Python streaming source per fold: the batch
-        # is checkpointed eagerly up front, so the emptiness check and
-        # every derived frame (window dedup, assignment, the merge's
-        # bounds/probe/write actions) rescan the in-memory copy
-        # instead of re-planning the DSV2 source (guide §4.1 — each
-        # re-evaluation crossed the JVM<->Python boundary again). The
-        # row count rides the checkpoint job as an observed metric —
-        # the old isEmpty probe was one more action wave per fold.
-        obs = Observation()
-        # min/max _commit_version ride the same checkpoint job: they
-        # tell the driver which manifest window this batch covers, so
-        # the append fast-path below costs zero extra actions
-        batch_df = batch_df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.min("_commit_version").alias("vlo"),
-            F.max("_commit_version").alias("vhi"),
-        ).localCheckpoint(eager=True)
-        if int(obs.get["n"]) == 0:
+        # each nid's LATEST image: one micro-batch can span an append
+        # AND a later upsert of the same keys (e.g. a restart over
+        # backlog with no rate limit; upserting duplicate keys would
+        # land both rows), and in cdf mode a key may be replaced in one
+        # version and deleted in a later one — only the last change
+        # matters to a keyed materialization
+        fin, rows, lo, hi = settle_changes(batch_df, [id_col])
+        if rows == 0:
             return  # compact/no-op window: nothing to fold
-        session = batch_df.sparkSession
+        session = fin.sparkSession
         # the append fast-path additionally requires that no refresh
         # swap has published yet (gen 0): _do_swap re-indexes the
         # CURRENT corpus snapshot, which can run AHEAD of the fold —
         # after a swap, keys from still-unfolded append versions
         # already live in the index, so an append would duplicate them
-        all_new = _window_all_appends(
-            session, obs.get["vlo"], obs.get["vhi"]
-        ) and (not refresh_on or _committed_gen(session, index_table_path) == 0)
-        from pyspark.sql import Window
-
+        all_new = _window_all_appends(session, lo, hi) and (
+            not refresh_on or _committed_gen(session, index_table_path) == 0
+        )
+        meta = _meta_for(session)
         if not cdf:
-            # one micro-batch can span an append AND a later upsert of
-            # the same keys (e.g. a restart over backlog with no rate
-            # limit): keep each nid's LATEST image only — upserting a
-            # frame with duplicate keys would land both rows
-            latest = (
-                batch_df.withColumn(
-                    "__rn",
-                    F.row_number().over(
-                        Window.partitionBy(id_col).orderBy(
-                            F.col("_commit_version").desc()
-                        )
-                    ),
-                )
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            meta = _meta_for(session)
-            assigned, mean_d = _assign(latest, meta)
+            assigned, mean_d = _assign(fin, meta)
             _merge(session, assigned, (app_id, int(epoch_id)), all_new)
             _maybe_refresh(session, meta, mean_d, epoch_id)
             return
-        # cdf: reduce the batch to each nid's FINAL image (a key may
-        # be replaced in one version and deleted in a later one inside
-        # the same window — only the last change matters; pre-images
-        # are irrelevant to a keyed materialization)
-        fin = (
-            batch_df.filter(
-                F.col("_change_type").isin(
-                    "insert", "update_postimage", "delete"
-                )
-            )
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(id_col).orderBy(
-                        F.col("_commit_version").desc()
-                    )
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .localCheckpoint(eager=False)
-        )
-        # ONE aggregate settles both emptiness gates and materializes
-        # the window result — the old ups.isEmpty() + dels.isEmpty()
-        # pair re-ran the window per probe, and the retire's own
-        # actions re-ran it again over the un-checkpointed frame
-        crow = fin.agg(
-            F.sum(
-                F.when(F.col("_change_type") != "delete", 1).otherwise(0)
-            ).alias("nu"),
-            F.sum(
-                F.when(F.col("_change_type") == "delete", 1).otherwise(0)
-            ).alias("nd"),
-        ).collect()[0]
-        n_ups = int(crow["nu"] or 0)
-        n_dels = int(crow["nd"] or 0)
-        ups = fin.filter(F.col("_change_type") != "delete")
-        dels = fin.filter(F.col("_change_type") == "delete").select(
-            F.col(id_col).alias("nid")
-        )
+        # ONE aggregate over the settled in-memory batch settles both
+        # emptiness gates
+        is_del = F.col("_change_type") == "delete"
+        n_ups, n_dels = fin.agg(
+            F.count_if(~is_del), F.count_if(is_del)
+        ).first()
+        ups = fin.filter(~is_del)
+        dels = fin.filter(is_del).select(F.col(id_col).alias("nid"))
         # two sub-epochs per micro-batch (2e for the merge, 2e+1 for
         # the retire): both monotonic, so a crash between the halves
         # replays exactly — the committed half no-ops, the lost half
         # commits
         base = 2 * int(epoch_id)
-        dst = None
-        meta = _meta_for(session)
         mean_d = None
         if n_ups:
             assigned, mean_d = _assign(ups, meta)
@@ -1306,31 +1241,18 @@ def maintain_ivf_index_table(
             dst.delete_keys(dels, txn=(app_id, base + 1))
         _maybe_refresh(session, meta, mean_d, epoch_id)
 
-    reader = (
-        spark.readStream.format("sif_table")
-        .option("path", corpus_table_path)
-        .option("starting_version", starting_version)
-    )
-    if cdf:
-        reader = reader.option("cdf", "true")
-    else:
-        # the docstring's "a delete version fails the stream loudly"
-        # promise, ENFORCED at plan time (ADVICE r11 high): without
-        # this, a corpus delete/overwrite/restore version adds no
-        # groups, plans zero partitions, and is silently skipped —
-        # stale index rows forever. Upserts still pass (their
-        # post-images fold correctly as keyed replacements).
-        reader = reader.option("fail_on_removal_ops", "true")
-    if max_versions_per_trigger:
-        reader = reader.option(
-            "max_versions_per_trigger", max_versions_per_trigger
-        ).option("rate_anchor_dir", f"{checkpoint_dir}/sif_anchor")
-    return (
-        reader.load()
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    # keyed: the docstring's "a delete version fails the stream loudly"
+    # promise, ENFORCED at plan time (ADVICE r11 high) — without the
+    # guard a corpus delete/overwrite/restore version adds no groups,
+    # plans zero partitions, and is silently skipped: stale index rows
+    # forever. Upserts still pass (their post-images fold correctly as
+    # keyed replacements).
+    return fold_table_changes(
+        spark, corpus_table_path, fold, checkpoint_dir,
+        feed="cdf" if cdf else "keyed",
+        starting_version=starting_version,
+        trigger_seconds=trigger_seconds,
+        max_versions_per_trigger=max_versions_per_trigger,
     )
 
 

@@ -32,6 +32,15 @@ stores and SifTable itself already require. Schema is pinned at
 stream start (the latest manifest's DDL); later evolved columns are
 ignored until a new stream starts — the usual streaming-source rule.
 
+One consumer for the internal folds: the aggregate view
+(mview.incremental_aggregate_view), the ANN index maintainer
+(similarity.maintain_ivf_index_table) and the CDC merge
+(streaming.stream.merge_changes_into_table) start their foreachBatch
+query through ``fold_table_changes`` and begin each fold with
+``settle_changes`` (one materialization of the batch; its row count
+and version window; each key's latest image), so all three share one
+empty-window rule: an empty window commits nothing.
+
 Usage:
     register_table_source(spark)
     stream = (spark.readStream.format("sif_table")
@@ -42,10 +51,11 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -61,6 +71,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 
@@ -869,3 +880,92 @@ def register_table_source(
     spark.dataSource.register(SifTableDataSource)
     if set_filter_pushdown_conf:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+
+
+# the reader option each change-feed consumer's feed mode sets: cdf
+# reads the change files; the two guards keep an append feed and refuse
+# (table.feed_refusal) a version an additive fold (no replaced or
+# removed rows) or a keyed fold (no delete/overwrite/restore op) cannot
+# consume
+_FEED_OPTIONS = {
+    "cdf": "cdf",
+    "additive": "fail_on_content_removal",
+    "keyed": "fail_on_removal_ops",
+}
+
+
+def fold_table_changes(
+    spark: SparkSession,
+    src_path: str,
+    fold: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    *,
+    feed: str,
+    starting_version: int = 0,
+    trigger_seconds: float = 0.0,
+    max_versions_per_trigger: int = 0,
+) -> StreamingQuery:
+    """Start the one change-feed consumer: a ``foreachBatch`` query
+    that hands each micro-batch of ``src_path``'s ``sif_table`` feed
+    (versions after ``starting_version``) to ``fold(batch, epoch_id)``.
+
+    ``feed`` is ``"cdf"`` (every row change with its ``_change_type``),
+    ``"additive"`` or ``"keyed"`` (the append feed behind the
+    ``fail_on_content_removal`` / ``fail_on_removal_ops`` guard).
+    ``max_versions_per_trigger`` caps each batch's version window; its
+    rate anchor lives under ``<checkpoint_dir>/sif_anchor``. The fold
+    starts with ``settle_changes`` and commits with
+    ``txn=(app_id, epoch_id)``, so a replayed epoch is a no-op."""
+    register_table_source(spark)
+    reader = (
+        spark.readStream.format("sif_table")
+        .option("path", src_path)
+        .option("starting_version", starting_version)
+        .option(_FEED_OPTIONS[feed], "true")
+    )
+    if max_versions_per_trigger:
+        reader = reader.option(
+            "max_versions_per_trigger", max_versions_per_trigger
+        ).option("rate_anchor_dir", f"{checkpoint_dir}/sif_anchor")
+    return (
+        reader.load()
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
+
+
+def settle_changes(
+    batch: DataFrame, keys: list[str] | None = None
+) -> tuple[DataFrame, int, int | None, int | None]:
+    """Materialize one change-feed micro-batch once; returns
+    ``(frame, rows, lo, hi)``.
+
+    ``rows`` and the ``lo``/``hi`` ``_commit_version`` window are the
+    RAW batch's, observed on the same one ``localCheckpoint`` job, so
+    every later action of the fold rescans the in-memory copy instead
+    of re-planning the Python source. ``rows == 0`` is an empty window
+    (deletes, compactions): the fold commits nothing. With ``keys`` the
+    frame is each key's latest image: update pre-images dropped, then
+    the row with the highest ``_commit_version`` per key (one version
+    emits at most one terminal change per key, so the order is total).
+    A frame without ``_commit_version`` reports ``lo = hi = None``."""
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if "_commit_version" in batch.columns:
+        aggs += [F.min("_commit_version").alias("lo"),
+                 F.max("_commit_version").alias("hi")]
+    frame = batch.observe(obs, *aggs)
+    if keys:
+        if "_change_type" in frame.columns:
+            frame = frame.filter(F.col("_change_type") != "update_preimage")
+        w = Window.partitionBy(*keys).orderBy(F.col("_commit_version").desc())
+        frame = (
+            frame.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+    frame = frame.localCheckpoint(eager=True)
+    got = obs.get
+    return frame, got["n"], got.get("lo"), got.get("hi")

@@ -871,18 +871,17 @@ def merge_changes_into_table(
     the Debezium loop users actually run (VERDICT r12 "Next round"
     #7), on this repo's own infrastructure end to end.
 
-    Per micro-batch: drop the update_preimages, fold to each key's
-    LATEST image (row_number over _commit_version descending — one
-    cdf version emits at most one terminal op per key, so the order
-    is total), then ONE conditional merge: tombstones delete matched
+    Per micro-batch (sources.table_stream.fold_table_changes):
+    settle_changes drops the update_preimages and folds to each key's
+    LATEST image, then ONE conditional merge: tombstones delete matched
     rows, everything else upserts (update matched / insert
     unmatched), all clauses steering on the source-only
     ``_change_type`` column — ``evolve_schema=False`` keeps the CDC
     metadata out of the target schema. The single merge commit per
     batch carries ``txn=(app_id, epoch)``, so Structured Streaming's
     at-least-once foreachBatch replay (after a crash, the SAME epoch
-    re-fires) lands as a committed no-op — no double-apply; even a
-    change-free batch commits a no-op version to record its epoch.
+    re-fires) lands as a committed no-op — no double-apply. A
+    change-free window (a compaction) commits nothing.
 
     The TARGET must exist (merge needs its key spec) — typically
     created from a snapshot of the source, with the stream starting
@@ -891,26 +890,14 @@ def merge_changes_into_table(
     tombstone-heavy workload pairs naturally with a dv=True target
     once deletes outweigh updates.
     """
-    from pyspark.sql.window import Window
-
-    from sif_spark.sources.table_stream import register_table_source
+    from sif_spark.sources.table_stream import (
+        fold_table_changes,
+        settle_changes,
+    )
     from sif_spark.table import SifTable, _key_cols
 
-    register_table_source(spark)
-    reader = (
-        spark.readStream.format("sif_table")
-        .option("path", source_table_path)
-        .option("cdf", "true")
-        .option("starting_version", starting_version)
-    )
-    if max_versions_per_trigger:
-        reader = reader.option(
-            "max_versions_per_trigger", max_versions_per_trigger
-        ).option("rate_anchor_dir", f"{checkpoint_dir}/sif_anchor")
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        t = SifTable(sess, target_table_path)
+        t = SifTable(batch_df.sparkSession, target_table_path)
         m = t._load()
         keys = _key_cols(m)
         if not keys:
@@ -918,26 +905,14 @@ def merge_changes_into_table(
                 "merge_changes_into_table target must be keyed "
                 "(key_col=/key_cols=)"
             )
+        latest, rows, _, _ = settle_changes(batch_df, keys)
+        if rows == 0:
+            return  # a change-free window (compact): nothing to commit
         biz = [
             f.name
             for f in T._parse_datatype_string(m["schema"]).fields
             if f.name in batch_df.columns
         ]
-        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-            F.col("_commit_version").desc()
-        )
-        latest = (
-            batch_df.filter(F.col("_change_type") != "update_preimage")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        # ONE read of the Python streaming source per batch: merge runs
-        # several actions over its source (cardinality/bounds aggregate,
-        # bloom probes, the clause writes, the cdf change file) and each
-        # would otherwise re-plan the DSV2 source and re-pay the window
-        # (guide §4.1 — cross the JVM<->Python boundary once)
-        latest = latest.localCheckpoint(eager=True)
         t.merge(
             latest,
             when_matched_delete="s.`_change_type` = 'delete'",
@@ -951,10 +926,9 @@ def merge_changes_into_table(
             evolve_schema=False,
         )
 
-    return (
-        reader.load()
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return fold_table_changes(
+        spark, source_table_path, apply_batch, checkpoint_dir, feed="cdf",
+        starting_version=starting_version,
+        trigger_seconds=trigger_seconds,
+        max_versions_per_trigger=max_versions_per_trigger,
     )

@@ -10,8 +10,10 @@ null one count the same), ``op``, the row counters, the group count,
 Job counts are load-immune, so any refactor of the mutation paths that
 adds a job, or changes what a version commits, fails here.
 
-Also pins that the mutation write wave keeps the caller's job group:
-every job a parallel-write mutation starts carries it."""
+Also pins that the mutation write wave keeps the caller's job group
+(every job a parallel-write mutation starts carries it), and the job
+counts of the three change-feed folds (aggregate view, ANN index
+maintainer, CDC merge) over a backlog fixed before the query starts."""
 
 from __future__ import annotations
 
@@ -259,3 +261,124 @@ def test_write_wave_jobs_keep_the_callers_job_group(spark, tdir):
     assert n >= 3
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == n
+
+
+# --- change-feed folds: jobs one drained stream query starts ---------
+#
+# Each case fixes the source backlog BEFORE the query starts, then
+# counts every job from start() through processAllAvailable(): the
+# register / read / settle / fold path of the three change-feed
+# consumers (incremental_aggregate_view, maintain_ivf_index_table,
+# merge_changes_into_table).
+
+
+def _fold_jobs(spark, start) -> int:
+    assert not spark.streams.active
+    n0 = _jobs(spark)
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+    return _jobs(spark) - n0
+
+
+def _mv_source(spark, path, cdf):
+    """A source table and its view, both at the source's first version;
+    returns the source and the view query's starter."""
+    from sif_spark.mview import incremental_aggregate_view
+
+    t = SifTable.create(spark, f"{path}/src", _df(spark, 0, 40, "a"),
+                        key_col="k", cdf=cdf)
+    SifTable.create(
+        spark, f"{path}/dst",
+        t.read().groupBy("v").agg(F.count(F.lit(1)).alias("n"),
+                                  F.sum("k").alias("s")),
+        key_col="v",
+    )
+    return t, lambda: incremental_aggregate_view(
+        spark, f"{path}/src", f"{path}/dst", key="v",
+        sums={"n": "1", "s": "k"}, checkpoint_dir=f"{path}/ck",
+        app_id="mvj", starting_version=1, cdf=cdf,
+    )
+
+
+def test_jobs_mview_additive_fold(spark, tdir):
+    src, start = _mv_source(spark, tdir, cdf=False)
+    src.append(_df(spark, 40, 60, "b"))
+    assert _fold_jobs(spark, start) == 8
+    view = SifTable(spark, f"{tdir}/dst").read()
+    assert sorted(tuple(r) for r in view.collect()) == [
+        ("a", 40, 780), ("b", 20, 990),
+    ]
+
+
+def test_jobs_mview_cdf_fold(spark, tdir):
+    src, start = _mv_source(spark, tdir, cdf=True)
+    src.upsert(_df(spark, 30, 50, "b"))
+    assert _fold_jobs(spark, start) == 13
+    view = SifTable(spark, f"{tdir}/dst").read()
+    assert sorted(tuple(r) for r in view.collect()) == [
+        ("a", 30, 435), ("b", 20, 790),
+    ]
+
+
+def _vec_df(spark, lo, hi, sign=1.0):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[
+            (F.lit(sign) * F.cos(F.col("id") * (i + 1))).cast("float")
+            for i in range(4)
+        ]).alias("embedding"),
+    )
+
+
+def test_jobs_ann_maintainer_folds(spark, tdir):
+    """One index, two counted folds: an append-only window (the keyed
+    APPEND path) and then an upsert window (the upsert path)."""
+    import numpy as np
+
+    from sif_spark.operators.similarity import maintain_ivf_index_table
+
+    src = SifTable.create(spark, f"{tdir}/src", _vec_df(spark, 0, 40),
+                          key_col="vec_id")
+    cents = np.array(
+        [[1, 0, 0, 0], [0, 1, 0, 0], [-1, 0, 0, 0]], dtype=np.float32
+    )
+
+    def start():
+        return maintain_ivf_index_table(
+            spark, f"{tdir}/src", f"{tdir}/idx", cents, f"{tdir}/ck",
+            app_id="annj",
+        )
+
+    _fold_jobs(spark, start)  # the index exists before the counted folds
+    idx = SifTable(spark, f"{tdir}/idx")
+    src.append(_vec_df(spark, 40, 60))
+    assert _fold_jobs(spark, start) == 4
+    assert idx._load()["op"] == "append"
+    src.upsert(_vec_df(spark, 10, 20, sign=-1.0))
+    assert _fold_jobs(spark, start) == 11
+    assert idx._load()["op"] == "upsert"
+    nids = idx.read().select("nid")
+    assert (nids.count(), nids.distinct().count()) == (60, 60)
+
+
+def test_jobs_cdc_merge_fold(spark, tdir):
+    from sif_spark.streaming.stream import merge_changes_into_table
+
+    src = SifTable.create(spark, f"{tdir}/src", _df(spark, 0, 40, "a"),
+                          key_col="k", cdf=True)
+    dst = SifTable.create(spark, f"{tdir}/dst", src.read(), key_col="k")
+    src.upsert(_df(spark, 30, 50, "b"))
+    src.delete_keys(_keys(spark, 0, 5))
+    n = _fold_jobs(spark, lambda: merge_changes_into_table(
+        spark, f"{tdir}/src", f"{tdir}/dst", app_id="cdcj",
+        checkpoint_dir=f"{tdir}/ck", starting_version=1,
+    ))
+    assert n == 13
+    assert dst._load()["op"] == "merge"
+    assert sorted(tuple(r) for r in dst.read().collect()) == sorted(
+        tuple(r) for r in src.read().collect()
+    )

@@ -1,8 +1,8 @@
 """Deterministic per-entry instrument: run catalog entries once in a
-fresh session and report the Spark JOB COUNT (statusTracker) plus wall
-seconds. Job counts are weather-immune — the round-14/15 adjudication
-pin for streaming entries whose wall-clock swings 2-15x with external
-host load on identical code.
+fresh session and report the Spark JOB COUNT plus wall seconds. Job
+counts are weather-immune — the round-14/15 adjudication pin for
+streaming entries whose wall-clock swings 2-15x with external host load
+on identical code.
 
 Usage: python tools/entry_job_probe.py ENTRY [ENTRY ...] [--sf-dir D]
 """
@@ -32,19 +32,19 @@ def main() -> None:
 
     spark = get_session("entry-job-probe")
     spark.range(1).count()  # warm the session
-    tracker = spark.sparkContext.statusTracker()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     out = {}
     for name in args.entries:
-        before = len(tracker.getJobIdsForGroup(None))
-        # count ALL jobs: use the highest job id delta instead of a
-        # group filter (streams run jobs in their own groups)
-        jids0 = spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+        # count ALL jobs (streams run theirs in their own groups) by the
+        # scheduler's job-id counter: the status store's job list stops
+        # growing at spark.ui.retainedJobs, which a multi-entry run passes
+        jids0 = scheduler.nextJobId()
         t0 = time.time()
         QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         dt = time.time() - t0
-        jids1 = spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+        jids1 = scheduler.nextJobId()
         out[name] = {"jobs": jids1 - jids0, "sec": round(dt, 3)}
         print(f"{name}: jobs={jids1 - jids0} sec={dt:.3f}", flush=True)
     print(json.dumps(out))
