@@ -4,17 +4,16 @@
 
     dst = src.groupBy(key).agg(SUM(expr) AS name, ...)
 
-without ever re-scanning `src`: the `sif_table` streaming source
-(sources/table_stream.py) delivers each committed version's ADDED rows
-exactly once through the shared change-feed consumer
-(``fold_table_changes`` starts the query, ``settle_changes``
-materializes each batch once), the batch folds them into per-key
-partials (one small shuffle over the batch, never the table), and the
-partials merge into the view with a key-joined upsert — additive
-aggregates compose, so old + partial is the exact new value.
-Exactly-once end to end:
+without ever re-scanning `src`: the shared change-feed consumer
+(sources/table_stream.py: ``fold_table_changes`` runs the driver-side
+fold loop, ``settle_changes`` materializes each batch once) delivers
+each committed version's ADDED rows exactly once, the batch folds
+them into per-key partials (one small shuffle over the batch, never
+the table), and the partials merge into the view with a key-joined
+upsert — additive aggregates compose, so old + partial is the exact
+new value. Exactly-once end to end:
 
-- upstream: version offsets through the streaming checkpoint;
+- upstream: version offsets through the fold's offset/commit log;
 - downstream: `SifTable.upsert(..., txn=(app_id, epoch))` — the
   manifest's txn high-water makes a crash-replayed micro-batch a
   committed no-op, so the merge can never double-count (the same
@@ -23,8 +22,8 @@ Exactly-once end to end:
 Scope: ADDITIVE aggregates (SUM; COUNT is SUM(1)). Two source modes:
 
 - default (append feed): the source table must stay add-only, and the
-  assumption is ENFORCED, not assumed — the stream reader plans with
-  fail_on_content_removal (it refuses any version whose exact
+  assumption is ENFORCED, not assumed — the fold plans each window
+  with the additive guard (it refuses any version whose exact
   replaced_rows/deleted_rows counter is non-zero or unrecorded), and
   merge_partials re-checks the manifests of every version it folds
   with the same rule (table.feed_refusal).
@@ -40,8 +39,8 @@ Scope: ADDITIVE aggregates (SUM; COUNT is SUM(1)). Two source modes:
 AVG et al. decompose into (sum, count) pairs by the caller.
 
 Single writer per view: the merge frame embeds the view values read
-BEFORE the upsert, so only the view's own (serial) streaming query may
-write the view table — exactly what a Structured Streaming query is.
+BEFORE the upsert, so only the view's own (serial) fold loop may
+write the view table.
 A second concurrent writer to the SAME view would make a CAS-retried
 merge stale; the txn guard still prevents double-folds of the same
 epoch, but cross-writer merges are not a supported topology.
@@ -53,14 +52,19 @@ table can be bucketed on its key for zero-shuffle downstream joins.
 
 Reference basis: go-sif has neither storage nor incremental queries
 (SURVEY §2.1/§3.3); this is north-star surface composing this repo's
-table layer with Structured Streaming, in the spirit of the public
-lakehouse engines' MV maintenance.
+table layer with its own change feed, re-run in a loop on the driver
+the way the reference's plan executor re-runs a plan over a stream
+source, in the spirit of the public lakehouse engines' MV maintenance.
 """
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+if TYPE_CHECKING:
+    from sif_spark.sources.table_stream import FoldQuery
 
 
 def incremental_aggregate_view(
@@ -75,14 +79,16 @@ def incremental_aggregate_view(
     trigger_seconds: float = 0.0,
     max_versions_per_trigger: int = 0,
     cdf: bool = False,
-) -> StreamingQuery:
+) -> FoldQuery:
     """Start maintaining ``dst = src.groupBy(key).agg(SUM(expr))``.
 
     ``sums`` maps output column name → a SQL expression over the source
     columns (evaluated per change row, then SUM-folded; in cdf mode the
     fold is signed by _change_type, so replaced/deleted rows retract).
-    Returns the StreamingQuery; stop it and restart with the same
-    checkpoint to resume incrementally."""
+    Returns the running fold: ``processAllAvailable()`` waits until
+    the versions on disk are folded, ``stop()`` ends it (restart with
+    the same checkpoint to resume incrementally), and
+    ``awaitTermination()`` / ``exception()`` surface a failed fold."""
     from sif_spark.sources.table_stream import fold_table_changes
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -92,7 +98,7 @@ def incremental_aggregate_view(
         )
 
     # the append-only assumption is ENFORCED at plan time: an additive
-    # feed fails the query at any version that replaced/removed rows
+    # feed fails the fold at any version that replaced/removed rows
     # instead of silently drifting the view
     return fold_table_changes(
         spark, src_path, fold, checkpoint_dir,
@@ -118,8 +124,8 @@ def merge_partials(
     committed no-op at BOTH guards (the early epoch check and the
     upsert's own txn high-water), so the additive merge can never
     double-count. With ``src_path`` and cdf=False, the fold REFUSES
-    versions whose manifest records replacements (belt to the stream
-    reader's plan-time braces — a fold that reached here with an
+    versions whose manifest records replacements (belt to the fold
+    planner's braces — a fold that reached here with an
     upsert's post-images would silently stack them on the folded old
     values). With cdf=True the fold is signed by _change_type and
     replacements/deletes maintain the view exactly."""
@@ -143,9 +149,8 @@ def merge_partials(
         # rows-only scan could never see it (ADVICE r11 low). A
         # removal version strictly AFTER the last row-bearing version
         # of the window is still invisible to this fold-level belt —
-        # that case is covered by the stream reader's plan-time
-        # fail_on_content_removal guard, which iterates EVERY version
-        # in the offset window (incremental_view always sets it).
+        # that case is covered by the fold planner's additive guard,
+        # which checks EVERY version in the window.
         for v in src._versions():
             if lo <= v <= hi:
                 feed_refusal(src._load(v))

@@ -28,12 +28,16 @@ Tiers:
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from sif_spark.sources.memory import local_frame
+
+if TYPE_CHECKING:
+    from sif_spark.sources.table_stream import FoldQuery
 
 
 # ---------------------------------------------------------------------------
@@ -820,7 +824,7 @@ def maintain_ivf_index_table(
     refresh_probe_queries: int = 8,
     refresh_growth_check: float = 1.5,
     refresh_margin: float = 0.5,
-):
+) -> FoldQuery:
     """Maintain an IVF index AS a SifTable, incrementally, from a
     corpus SifTable's change feed (VERDICT r10 "Next round" #6 — the
     table stack composed with similarity): each committed corpus
@@ -884,7 +888,9 @@ def maintain_ivf_index_table(
 
     Serve through ``load_maintained_index``.
 
-    Returns the StreamingQuery; the index table is readable mid-stream
+    Returns the running fold (``processAllAvailable``, ``stop``,
+    ``awaitTermination``, ``exception``, ``recentProgress``); the index
+    table is readable mid-stream
     (snapshot isolation); without refresh,
     `IVFIndex(centroids, table.read()...)` serves queries."""
     import os
@@ -1244,7 +1250,7 @@ def maintain_ivf_index_table(
     # keyed: the docstring's "a delete version fails the stream loudly"
     # promise, ENFORCED at plan time (ADVICE r11 high) — without the
     # guard a corpus delete/overwrite/restore version adds no groups,
-    # plans zero partitions, and is silently skipped: stale index rows
+    # plans no files, and is silently skipped: stale index rows
     # forever. Upserts still pass (their post-images fold correctly as
     # keyed replacements).
     return fold_table_changes(

@@ -32,11 +32,15 @@ stores and SifTable itself already require. Schema is pinned at
 stream start (the latest manifest's DDL); later evolved columns are
 ignored until a new stream starts — the usual streaming-source rule.
 
-One consumer for the internal folds: the aggregate view
-(mview.incremental_aggregate_view), the ANN index maintainer
-(similarity.maintain_ivf_index_table) and the CDC merge
-(streaming.stream.merge_changes_into_table) start their foreachBatch
-query through ``fold_table_changes`` and begin each fold with
+One consumer for the internal folds, and it is not a stream: the
+aggregate view (mview.incremental_aggregate_view), the ANN index
+maintainer (similarity.maintain_ivf_index_table) and the CDC merge
+(streaming.stream.merge_changes_into_table) run through
+``fold_table_changes``, a loop on one driver thread that plans each
+window with ``feed_window``, reads it with SifTable.changes()' JVM
+parquet reader and keeps Spark's offsets/commits checkpoint layout
+(FoldQuery). It starts no streaming query, no Python streaming-source
+runner and no data-source planner worker. Each fold begins with
 ``settle_changes`` (one materialization of the batch; its row count
 and version window; each key's latest image), so all three share one
 empty-window rule: an empty window commits nothing.
@@ -49,10 +53,15 @@ Usage:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import threading
+import time
+from collections import deque
 from collections.abc import Callable, Iterator
-from functools import partial
+from functools import cache, partial
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -71,8 +80,11 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.util import inheritable_thread_target
+
+if TYPE_CHECKING:
+    from sif_spark.table import SifTable
 
 
 def _local_path(p: str) -> str:
@@ -647,11 +659,6 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
 
     # -- driver side -----------------------------------------------------------
 
-    def _ddl(self) -> str:
-        return ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in self.schema.fields
-        )
-
     def commit(self, messages) -> None:
         import shutil
 
@@ -679,6 +686,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         from sif_spark.logstore import PosixExclLogStore
         from sif_spark.table import (
             _advance_txns,
+            _ddl,
             _intern_col_eras,
             _manifest_file,
             next_manifest,
@@ -701,7 +709,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 his = [m.stats[c][1] for m in files if m.stats[c][1] is not None]
                 col_stats[c] = [min(los) if los else None,
                                 max(his) if his else None]
-        ddl = self._ddl()
+        ddl = _ddl(self.schema)
         store = PosixExclLogStore()
         gpath = None
         for _ in range(30):
@@ -882,16 +890,225 @@ def register_table_source(
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
 
-# the reader option each change-feed consumer's feed mode sets: cdf
-# reads the change files; the two guards keep an append feed and refuse
-# (table.feed_refusal) a version an additive fold (no replaced or
-# removed rows) or a keyed fold (no delete/overwrite/restore op) cannot
-# consume
-_FEED_OPTIONS = {
-    "cdf": "cdf",
-    "additive": "fail_on_content_removal",
-    "keyed": "fail_on_removal_ops",
+# each consumer's feed mode as feed_window flags: cdf reads the change
+# files; the two append feeds refuse (table.feed_refusal) a version an
+# additive fold (no replaced or removed rows) or a keyed fold (no
+# delete/overwrite/restore op) cannot consume
+_FEED_FLAGS = {
+    "cdf": {"cdf": True},
+    "additive": {"guard": True},
+    "keyed": {"guard": True, "keyed": True},
 }
+
+# Spark's streaming checkpoint layout: offsets/<n> ends with the source
+# offset line, commits/<n> marks batch n folded; Spark keeps the last
+# 100 of each and polls an idle source every 10 ms
+_OFFSET_HEAD = 'v1\n{"batchWatermarkMs":0,"batchTimestampMs":%d,"conf":{}}\n'
+_COMMIT_RECORD = 'v1\n{"nextBatchWatermarkMs":0}'
+_RETAIN = 100
+_MIN_POLL_S = 0.01
+# a step's phases under the names of Spark's progress durations
+_STEP_PHASES = (
+    "latestOffset", "queryPlanning", "walCommit", "addBatch", "commitOffsets"
+)
+
+
+class FoldQuery:
+    """A running change-feed fold (``fold_table_changes``): one daemon
+    thread on the driver folds each window of the source's feed, and
+    this handle is the slice of the StreamingQuery surface its callers
+    use — ``processAllAvailable``, ``awaitTermination``, ``stop``,
+    ``exception`` and ``recentProgress``.
+
+    Each step lists the source log, picks the window ``(after, hi]``
+    (capped by ``max_versions``), plans it with ``feed_window`` against
+    the head manifest pinned at start, writes the offset record, reads
+    the window with SifTable.changes()' JVM reader, calls
+    ``fold(batch, epoch)`` (skipped for a window with no files) and
+    writes the commit record. An epoch with an offset record but no
+    commit record re-runs the same window under the same epoch."""
+
+    def __init__(self, table: SifTable,
+                 fold: Callable[[DataFrame, int], None],
+                 checkpoint_dir: str, feed: str, starting_version: int,
+                 trigger_seconds: float, max_versions: int):
+        from sif_spark.table import strip_file_scheme
+
+        self._table = table
+        self._fold = fold
+        self._ck = strip_file_scheme(checkpoint_dir.rstrip("/"))
+        self._flags = _FEED_FLAGS[feed]
+        self._cdf = feed == "cdf"
+        self._start = int(starting_version)
+        self._poll = max(float(trigger_seconds), _MIN_POLL_S)
+        self._cap = int(max_versions)
+        self._head = table._load()
+        self._epoch, self._after, self._pending = self._recover()
+        self._progress: deque = deque(maxlen=_RETAIN)
+        self._error: Exception | None = None
+        self._stopping = self._wake = False
+        self._alive = True
+        self._cv = threading.Condition()
+        self._thread = threading.Thread(
+            target=inheritable_thread_target(table.spark)(self._run),
+            name=f"sif-fold-{os.path.basename(table.path)}",
+            daemon=True,
+        )
+        self._thread.start()
+
+    # -- the StreamingQuery surface ---------------------------------------
+
+    @property
+    def recentProgress(self) -> list[dict]:
+        """One entry per folded epoch (the last 100): ``batchId``,
+        ``numInputRows`` (the window's recorded row counts) and
+        ``durationMs`` split as Spark's progress reports are."""
+        return list(self._progress)
+
+    def processAllAvailable(self) -> None:
+        """Block until every version on disk now is folded; raise the
+        fold's error if the loop failed."""
+        versions = self._table._versions()
+        target = versions[-1] if versions else self._start
+        with self._cv:
+            self._wake = True
+            self._cv.notify_all()
+            while self._alive and self._after < target:
+                self._cv.wait()
+        if self._error is not None:
+            raise self._error
+
+    def awaitTermination(self, timeout: float | None = None) -> bool | None:
+        self._thread.join(timeout)
+        if self._error is not None:
+            raise self._error
+        return None if timeout is None else not self._thread.is_alive()
+
+    def stop(self) -> None:
+        """Stop after the step in flight; never raises."""
+        with self._cv:
+            self._stopping = True
+            self._cv.notify_all()
+        self._thread.join()
+
+    def exception(self) -> Exception | None:
+        return self._error
+
+    # -- the loop --------------------------------------------------------------
+
+    def _run(self) -> None:
+        try:
+            while not self._stopping:
+                if self._step():
+                    continue
+                with self._cv:
+                    if not (self._wake or self._stopping):
+                        self._cv.wait(self._poll)
+                    self._wake = False
+        except Exception as e:  # any fold or planner error ends the query
+            self._error = self._query_error(e)
+        finally:
+            with self._cv:
+                self._alive = False
+                self._cv.notify_all()
+
+    def _step(self) -> bool:
+        """Fold the next window; False when there is none."""
+        from sif_spark.table import _log_manifest, feed_window
+
+        t = self._table
+        marks = [time.perf_counter()]
+        versions = t._versions()
+        hi = self._pending
+        if hi is None:
+            hi = versions[-1] if versions else self._after
+            if self._cap:
+                hi = min(hi, self._after + self._cap)
+            if hi <= self._after:
+                return False
+        marks.append(time.perf_counter())
+        entries = feed_window(
+            versions, cache(partial(_log_manifest, t.log, t.path)),
+            self._after, hi, head=self._head, exists=t._path_exists,
+            **self._flags,
+        )
+        marks.append(time.perf_counter())
+        if self._pending is None:
+            self._write("offsets", _OFFSET_HEAD % (time.time() * 1000)
+                        + json.dumps({"version": hi}))
+        marks.append(time.perf_counter())
+        if entries:
+            self._fold(t._read_feed(entries, self._head, self._cdf), self._epoch)
+        marks.append(time.perf_counter())
+        self._write("commits", _COMMIT_RECORD)
+        self._purge(self._epoch - _RETAIN)
+        marks.append(time.perf_counter())
+        ms = {
+            k: round((b - a) * 1000)
+            for k, a, b in zip(_STEP_PHASES, marks, marks[1:])
+        }
+        ms["triggerExecution"] = round((marks[-1] - marks[0]) * 1000)
+        with self._cv:
+            self._progress.append({
+                "batchId": self._epoch,
+                "numInputRows": sum(e.rows or 0 for e in entries),
+                "durationMs": ms,
+            })
+            self._epoch, self._after, self._pending = self._epoch + 1, hi, None
+            self._cv.notify_all()
+        return True
+
+    def _query_error(self, e: Exception):
+        import traceback
+
+        from pyspark.errors.exceptions.captured import StreamingQueryException
+
+        err = StreamingQueryException(
+            desc=f"change-feed fold of {self._table.path} failed in epoch "
+                 f"{self._epoch}: {type(e).__name__}: {e}",
+            stackTrace="".join(traceback.format_exception(e)),
+        )
+        err.__cause__ = e
+        return err
+
+    # -- the checkpoint --------------------------------------------------------
+
+    def _batch_ids(self, kind: str) -> list[int]:
+        try:
+            names = os.listdir(os.path.join(self._ck, kind))
+        except FileNotFoundError:
+            return []
+        return sorted(int(n) for n in names if n.isdigit())
+
+    def _offset(self, n: int) -> int:
+        with open(os.path.join(self._ck, "offsets", str(n))) as fh:
+            return int(json.loads(fh.read().splitlines()[-1])["version"])
+
+    def _recover(self) -> tuple[int, int, int | None]:
+        """(next epoch, last folded version, the end of an epoch that
+        has an offset record but no commit record, else None)."""
+        offsets = self._batch_ids("offsets")
+        if not offsets:
+            return 0, self._start, None
+        n = offsets[-1]
+        if os.path.exists(os.path.join(self._ck, "commits", str(n))):
+            return n + 1, self._offset(n), None
+        after = self._offset(n - 1) if n > 0 else self._start
+        return n, after, self._offset(n)
+
+    def _write(self, kind: str, text: str) -> None:
+        d = os.path.join(self._ck, kind)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{self._epoch}.tmp")
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, os.path.join(d, str(self._epoch)))
+
+    def _purge(self, n: int) -> None:
+        for kind in ("offsets", "commits") if n >= 0 else ():
+            for name in (str(n), f".{n}.crc"):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(self._ck, kind, name))
 
 
 def fold_table_changes(
@@ -904,35 +1121,31 @@ def fold_table_changes(
     starting_version: int = 0,
     trigger_seconds: float = 0.0,
     max_versions_per_trigger: int = 0,
-) -> StreamingQuery:
-    """Start the one change-feed consumer: a ``foreachBatch`` query
-    that hands each micro-batch of ``src_path``'s ``sif_table`` feed
-    (versions after ``starting_version``) to ``fold(batch, epoch_id)``.
+) -> FoldQuery:
+    """Start the one change-feed consumer: hand each window of
+    ``src_path``'s change feed (versions after ``starting_version``) to
+    ``fold(batch, epoch_id)`` on a driver-side loop (FoldQuery), with
+    no streaming query and no Python data-source process.
 
     ``feed`` is ``"cdf"`` (every row change with its ``_change_type``),
-    ``"additive"`` or ``"keyed"`` (the append feed behind the
-    ``fail_on_content_removal`` / ``fail_on_removal_ops`` guard).
-    ``max_versions_per_trigger`` caps each batch's version window; its
-    rate anchor lives under ``<checkpoint_dir>/sif_anchor``. The fold
-    starts with ``settle_changes`` and commits with
-    ``txn=(app_id, epoch_id)``, so a replayed epoch is a no-op."""
-    register_table_source(spark)
-    reader = (
-        spark.readStream.format("sif_table")
-        .option("path", src_path)
-        .option("starting_version", starting_version)
-        .option(_FEED_OPTIONS[feed], "true")
-    )
-    if max_versions_per_trigger:
-        reader = reader.option(
-            "max_versions_per_trigger", max_versions_per_trigger
-        ).option("rate_anchor_dir", f"{checkpoint_dir}/sif_anchor")
-    return (
-        reader.load()
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    ``"additive"`` or ``"keyed"`` (the append feed, refusing a version
+    that replaced or removed rows, or only one that removed them).
+    ``max_versions_per_trigger`` caps each window; ``trigger_seconds``
+    is the idle poll interval. ``checkpoint_dir`` keeps Spark's
+    offsets/commits layout, so a checkpoint written by a ``sif_table``
+    foreachBatch query resumes here. The fold starts with
+    ``settle_changes`` and commits with ``txn=(app_id, epoch_id)``, so
+    a replayed epoch is a no-op. A fold or planner error ends the loop
+    and surfaces as a StreamingQueryException.
+
+    Unlike a ``sif_table`` stream, starting a fold registers no data
+    source, so it no longer sets the session-wide
+    ``spark.sql.python.filterPushdown.enabled``."""
+    from sif_spark.table import SifTable
+
+    return FoldQuery(
+        SifTable(spark, src_path), fold, checkpoint_dir, feed,
+        starting_version, trigger_seconds, max_versions_per_trigger,
     )
 
 
@@ -945,7 +1158,7 @@ def settle_changes(
     ``rows`` and the ``lo``/``hi`` ``_commit_version`` window are the
     RAW batch's, observed on the same one ``localCheckpoint`` job, so
     every later action of the fold rescans the in-memory copy instead
-    of re-planning the Python source. ``rows == 0`` is an empty window
+    of re-reading the window's files. ``rows == 0`` is an empty window
     (deletes, compactions): the fold commits nothing. With ``keys`` the
     frame is each key's latest image: update pre-images dropped, then
     the row with the highest ``_commit_version`` per key (one version

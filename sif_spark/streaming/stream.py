@@ -25,9 +25,13 @@ Mapping here:
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
+
+if TYPE_CHECKING:
+    from sif_spark.sources.table_stream import FoldQuery
 
 
 def rate_stream(
@@ -865,7 +869,7 @@ def merge_changes_into_table(
     trigger_seconds: float = 0.0,
     starting_version: int = 0,
     max_versions_per_trigger: int = 0,
-) -> StreamingQuery:
+) -> FoldQuery:
     """Exactly-once streaming CDC-apply: stream a cdf=True SifTable's
     change feed and MERGE each micro-batch into a target SifTable —
     the Debezium loop users actually run (VERDICT r12 "Next round"
@@ -878,10 +882,14 @@ def merge_changes_into_table(
     unmatched), all clauses steering on the source-only
     ``_change_type`` column — ``evolve_schema=False`` keeps the CDC
     metadata out of the target schema. The single merge commit per
-    batch carries ``txn=(app_id, epoch)``, so Structured Streaming's
-    at-least-once foreachBatch replay (after a crash, the SAME epoch
-    re-fires) lands as a committed no-op — no double-apply. A
+    batch carries ``txn=(app_id, epoch)``, so the fold loop's
+    at-least-once replay (after a crash, the SAME epoch re-runs the
+    same window) lands as a committed no-op — no double-apply. A
     change-free window (a compaction) commits nothing.
+
+    Returns the running fold: ``processAllAvailable()`` waits until
+    the source versions on disk are applied, ``stop()`` ends it, and
+    ``awaitTermination()`` / ``exception()`` surface a failed merge.
 
     The TARGET must exist (merge needs its key spec) — typically
     created from a snapshot of the source, with the stream starting

@@ -87,6 +87,7 @@ import re
 import uuid
 from typing import Callable, NamedTuple
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 _MANIFESTS = "_manifests"
@@ -384,10 +385,18 @@ def _carry_dvs(m: dict, groups: list[dict]) -> list[dict]:
 
 
 def _ddl(schema: T.StructType) -> str:
-    """A schema as the manifest's DDL string (``name type, ...``)."""
+    """A schema as the manifest's DDL string (``name type, ...``), a
+    name that is not a plain identifier in backticks (Spark's
+    quoteIfNeeded rule), so that every DDL parses back."""
     return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+        f"{_quote(f.name)} {f.dataType.simpleString()}" for f in schema.fields
     )
+
+
+def _quote(name: str) -> str:
+    if re.fullmatch(r"\w+", name, re.ASCII) and not name.isdigit():
+        return name
+    return "`" + name.replace("`", "``") + "`"
 
 
 # the table-level spec every manifest carries forward, with its default
@@ -621,6 +630,33 @@ def _scan_classes(
     return [tuple(out[k]) for k in order]
 
 
+@functools.lru_cache(maxsize=256)
+def _written_schema(ddl: str | None) -> T.StructType | None:
+    """The schema a recorded DDL names, or None when it cannot be
+    trusted: no DDL recorded (legacy entries), or one that does not
+    round-trip through the parser and _ddl (a name such as "a b"
+    recorded without the backticks _ddl now adds)."""
+    if ddl is None:
+        return None
+    try:
+        schema = T._parse_datatype_string(ddl)
+    except ParseException:
+        return None
+    if isinstance(schema, T.StructType) and _ddl(schema) == ddl:
+        return schema
+    return None
+
+
+def _scan(spark: SparkSession, ddl: str | None, paths: list[str]) -> DataFrame:
+    """One multi-path parquet scan of files written with ``ddl``. Under
+    the recorded schema Spark starts no footer-inference job (one per
+    scan otherwise); a DDL _written_schema cannot trust falls back to
+    inference."""
+    schema = _written_schema(ddl)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def _merge_schema(old: T.StructType, new: T.StructType) -> T.StructType:
     """Evolution-on-write rules: existing columns keep (or widen to)
     their type, new columns append. Narrowing/retyping raises — a
@@ -742,15 +778,20 @@ def _align(df: DataFrame, target: T.StructType) -> DataFrame:
 def _schema_names(ddl: str) -> list[str]:
     """The top-level field names of a manifest DDL (_ddl's ``name type,
     ...``), parsed without a session so the stream planner can call it:
-    split at the commas outside <> and (), keep each field's first
-    token."""
-    names, depth, start = [], 0, 0
+    split at the commas outside backticks, <> and (), keep each field's
+    first token (unquoted)."""
+    names, depth, start, quoted = [], 0, 0, False
     for i, ch in enumerate(ddl + ","):
+        if ch == "`":
+            quoted = not quoted  # a doubled `` toggles back
+        if quoted:
+            continue
         depth += (ch in "<(") - (ch in ">)")
         if ch == "," and depth == 0:
             field = ddl[start:i].strip()
             if field:
-                names.append(field.split(" ", 1)[0])
+                q, plain = re.match(r"`((?:[^`]|``)*)`|(\S+)", field).groups()
+                names.append(plain if q is None else q.replace("``", "`"))
             start = i + 1
     return names
 
@@ -1034,6 +1075,7 @@ class FeedEntry(NamedTuple):
     ddl: str  # the schema its files were written with
     col_ids: dict | None  # written name → column id; None = by name
     tag: str | None  # 'insert'; None = the files carry _change_type
+    rows: int | None = None  # the dir's recorded row count
 
 
 def _bootstrap_ids(versions: list[int], load: Callable) -> dict | None:
@@ -1134,7 +1176,9 @@ def feed_window(
             # the change file REPLACES the added groups (it holds
             # inserts, pre/post-images and deletes in one dir)
             ids = cdc.get("col_ids") or by_name(m, cdc["schema"])
-            out.append(FeedEntry(v, cdc["path"], cdc["schema"], ids, None))
+            out.append(FeedEntry(
+                v, cdc["path"], cdc["schema"], ids, None, cdc.get("rows")
+            ))
             continue
         if cdf or guard:
             feed_refusal(m, keyed=keyed and not cdf)
@@ -1142,7 +1186,9 @@ def feed_window(
         for gid in m["added"]:
             g = by_id[gid]
             ids = g.get("col_ids") or live.get(gid) or by_name(m, g["schema"])
-            out.append(FeedEntry(v, g["path"], g["schema"], ids, "insert"))
+            out.append(FeedEntry(
+                v, g["path"], g["schema"], ids, "insert", g.get("rows")
+            ))
     return out
 
 
@@ -1303,7 +1349,8 @@ class SifTable:
             # one column-pruned scan of the freshly written group
             # (the key column(s) only); None when saturated
             bloom = _bloom_of(
-                self.spark.read.parquet(gpath), keys, int(row["rows"])
+                self.spark.read.schema(df.schema).parquet(gpath), keys,
+                int(row["rows"]),
             )
             if bloom is not None:
                 stats["key_bloom"] = bloom
@@ -1553,8 +1600,8 @@ class SifTable:
             {c["name"]: c["id"] for c in columns} if columns else {}
         )
         parts = []
-        for ids, paths, _ in _scan_classes(dvs):
-            df = self.spark.read.parquet(*paths)
+        for ids, paths, ents in _scan_classes(dvs):
+            df = _scan(self.spark, ents[0].get("schema"), paths)
             ids = ids or {}
             written_by_id = {i: w for w, i in ids.items()}
             sel = [F.col("_gid").alias("__gid")]
@@ -1609,8 +1656,8 @@ class SifTable:
             else []
         )
         parts = []
-        for ids, paths, _ in _scan_classes(groups):
-            df = self.spark.read.parquet(*paths)
+        for ids, paths, ents in _scan_classes(groups):
+            df = _scan(self.spark, ents[0].get("schema"), paths)
             parts.append(
                 df.select(
                     *_align_ids_select(
@@ -1808,8 +1855,8 @@ class SifTable:
             .alias("_commit_version")
         )
         parts = []
-        for ids, paths in by_class.values():
-            df = self.spark.read.parquet(*paths)
+        for (ddl, _), (ids, paths) in by_class.items():
+            df = _scan(self.spark, ddl, paths)
             cols = _align_ids_select(df.columns, ids, target, columns)
             if with_change_type:
                 if tag is not None:
@@ -1888,14 +1935,22 @@ class SifTable:
             versions, load, after_version, hi, cdf=cdf,
             exists=self._path_exists,
         )
-        hi_m = load(hi)
-        target = T._parse_datatype_string(hi_m["schema"])
+        return self._read_feed(entries, load(hi), cdf)
+
+    def _read_feed(
+        self, entries: list[FeedEntry], head: dict, cdf: bool
+    ) -> DataFrame:
+        """The rows of feed_window ``entries``, aligned to snapshot
+        ``head`` (columns by id, then by name) and tagged with
+        _commit_version (and _change_type with ``cdf``): the JVM read
+        behind changes() and the driver-side change-feed folds."""
+        target = T._parse_datatype_string(head["schema"])
         parts = [
             p
             for p in (
                 self._batched_tagged_read(
                     [(e.path, e.ddl, e.col_ids) for e in entries if e.tag == tag],
-                    target, _columns_of(hi_m), tag, cdf,
+                    target, _columns_of(head), tag, cdf,
                 )
                 for tag in ("insert", None)
             )
@@ -3107,13 +3162,12 @@ class SifTable:
             {**c, "name": new} if c["name"] == old else c for c in columns
         ]
         target = T._parse_datatype_string(m["schema"])
-        ddl = ", ".join(
-            f"{new if f.name == old else f.name} "
-            f"{f.dataType.simpleString()}"
+        renamed = T.StructType([
+            T.StructField(new, f.dataType) if f.name == old else f
             for f in target.fields
-        )
+        ])
         return self._commit(next_manifest(
-            m, "rename_column", groups, ddl, columns=columns,
+            m, "rename_column", groups, renamed, columns=columns,
             renamed={"from": old, "to": new},
             key_col=new if m.get("key_col") == old else m.get("key_col"),
             key_cols=(
@@ -3145,13 +3199,9 @@ class SifTable:
         columns, groups = self._bootstrap_columns(m)
         columns = [c for c in columns if c["name"] != name]
         target = T._parse_datatype_string(m["schema"])
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in target.fields
-            if f.name != name
-        )
+        kept = T.StructType([f for f in target.fields if f.name != name])
         return self._commit(next_manifest(
-            m, "drop_column", groups, ddl, columns=columns, dropped=name
+            m, "drop_column", groups, kept, columns=columns, dropped=name
         ))
 
     def vacuum(

@@ -107,7 +107,7 @@ def _fields(*extra):
 
 def test_jobs_upsert_plain(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k")
-    _check(spark, t, lambda: t.upsert(_df(spark, 5, 10, "u")), 6, {
+    _check(spark, t, lambda: t.upsert(_df(spark, 5, 10, "u")), 5, {
         "fields": _fields("key_col", "replaced_rows"),
         "op": "upsert", "replaced_rows": 5, "deleted_rows": None,
         "groups": 3, "added": 1, "cdc": False, "dvs": 0,
@@ -116,7 +116,7 @@ def test_jobs_upsert_plain(spark, tdir):
 
 def test_jobs_upsert_key_bloom(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k", key_bloom=True)
-    _check(spark, t, lambda: t.upsert(_df(spark, 5, 10, "u")), 14, {
+    _check(spark, t, lambda: t.upsert(_df(spark, 5, 10, "u")), 11, {
         "fields": _fields("key_col", "replaced_rows"),
         "op": "upsert", "replaced_rows": 5, "deleted_rows": None,
         "groups": 3, "added": 1, "cdc": False, "dvs": 0,
@@ -125,7 +125,7 @@ def test_jobs_upsert_key_bloom(spark, tdir):
 
 def test_jobs_upsert_cdf(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k", cdf=True)
-    _check(spark, t, lambda: t.upsert(_df(spark, 35, 45, "u")), 10, {
+    _check(spark, t, lambda: t.upsert(_df(spark, 35, 45, "u")), 9, {
         "fields": _fields("key_col", "replaced_rows", "cdc"),
         "op": "upsert", "replaced_rows": 10, "deleted_rows": None,
         "groups": 2, "added": 1, "cdc": True, "dvs": 0,
@@ -137,7 +137,7 @@ def test_jobs_upsert_composite_key(spark, tdir):
         spark, tdir, _cdf(spark, 0, 40, "a"), key_cols=["r", "d"]
     )
     t.append(_cdf(spark, 40, 80, "b"))
-    _check(spark, t, lambda: t.upsert(_cdf(spark, 5, 10, "u")), 7, {
+    _check(spark, t, lambda: t.upsert(_cdf(spark, 5, 10, "u")), 6, {
         "fields": _fields("key_cols", "replaced_rows"),
         "op": "upsert", "replaced_rows": 5, "deleted_rows": None,
         "groups": 3, "added": 1, "cdc": False, "dvs": 0,
@@ -163,7 +163,7 @@ def _merge_upd_ins(t, spark):
 
 def test_jobs_merge_update_insert_plain(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k")
-    _check(spark, t, lambda: _merge_upd_ins(t, spark), 10, {
+    _check(spark, t, lambda: _merge_upd_ins(t, spark), 9, {
         "fields": _fields("key_col", "replaced_rows", "deleted_rows"),
         "op": "merge", "replaced_rows": 15, "deleted_rows": 0,
         "groups": 2, "added": 1, "cdc": False, "dvs": 0,
@@ -172,7 +172,7 @@ def test_jobs_merge_update_insert_plain(spark, tdir):
 
 def test_jobs_merge_update_insert_cdf(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k", cdf=True)
-    _check(spark, t, lambda: _merge_upd_ins(t, spark), 16, {
+    _check(spark, t, lambda: _merge_upd_ins(t, spark), 15, {
         "fields": _fields(
             "key_col", "replaced_rows", "deleted_rows", "cdc"
         ),
@@ -204,7 +204,7 @@ def test_jobs_merge_delete_only_dv(spark, tdir):
         lambda: t.merge(
             _df(spark, 10, 20, "x"), when_matched_delete=True
         ),
-        8,
+        7,
         {
             "fields": _fields("key_col", "replaced_rows", "deleted_rows"),
             "op": "merge", "replaced_rows": 0, "deleted_rows": 10,
@@ -219,7 +219,7 @@ def _keys(spark, lo, hi):
 
 def test_jobs_delete_keys_plain(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k")
-    _check(spark, t, lambda: t.delete_keys(_keys(spark, 5, 10)), 6, {
+    _check(spark, t, lambda: t.delete_keys(_keys(spark, 5, 10)), 5, {
         "fields": _fields("key_col", "deleted_rows"),
         "op": "delete", "replaced_rows": None, "deleted_rows": 5,
         "groups": 2, "added": 0, "cdc": False, "dvs": 0,
@@ -228,7 +228,7 @@ def test_jobs_delete_keys_plain(spark, tdir):
 
 def test_jobs_delete_keys_cdf(spark, tdir):
     t = _two_group_table(spark, tdir, key_col="k", cdf=True)
-    _check(spark, t, lambda: t.delete_keys(_keys(spark, 5, 10)), 8, {
+    _check(spark, t, lambda: t.delete_keys(_keys(spark, 5, 10)), 7, {
         "fields": _fields("key_col", "deleted_rows", "cdc"),
         "op": "delete", "replaced_rows": None, "deleted_rows": 5,
         "groups": 2, "added": 0, "cdc": True, "dvs": 0,
@@ -237,7 +237,7 @@ def test_jobs_delete_keys_cdf(spark, tdir):
 
 def test_jobs_delete_keys_dv(spark, tdir):
     t = _dv_table(spark, tdir)
-    _check(spark, t, lambda: t.delete_keys(_keys(spark, 10, 20)), 8, {
+    _check(spark, t, lambda: t.delete_keys(_keys(spark, 10, 20)), 7, {
         "fields": _fields("key_col", "deleted_rows"),
         "op": "delete", "replaced_rows": None, "deleted_rows": 10,
         "groups": 3, "added": 0, "cdc": False, "dvs": 1,
@@ -265,11 +265,11 @@ def test_write_wave_jobs_keep_the_callers_job_group(spark, tdir):
 
 # --- change-feed folds: jobs one drained stream query starts ---------
 #
-# Each case fixes the source backlog BEFORE the query starts, then
-# counts every job from start() through processAllAvailable(): the
-# register / read / settle / fold path of the three change-feed
-# consumers (incremental_aggregate_view, maintain_ivf_index_table,
-# merge_changes_into_table).
+# Each case fixes the source backlog BEFORE the fold starts, then
+# counts every job from start through processAllAvailable(): the
+# read / settle / fold path of the three change-feed consumers
+# (incremental_aggregate_view, maintain_ivf_index_table,
+# merge_changes_into_table) on the driver-side fold loop.
 
 
 def _fold_jobs(spark, start) -> int:
@@ -307,7 +307,7 @@ def _mv_source(spark, path, cdf):
 def test_jobs_mview_additive_fold(spark, tdir):
     src, start = _mv_source(spark, tdir, cdf=False)
     src.append(_df(spark, 40, 60, "b"))
-    assert _fold_jobs(spark, start) == 8
+    assert _fold_jobs(spark, start) == 7
     view = SifTable(spark, f"{tdir}/dst").read()
     assert sorted(tuple(r) for r in view.collect()) == [
         ("a", 40, 780), ("b", 20, 990),
@@ -317,7 +317,7 @@ def test_jobs_mview_additive_fold(spark, tdir):
 def test_jobs_mview_cdf_fold(spark, tdir):
     src, start = _mv_source(spark, tdir, cdf=True)
     src.upsert(_df(spark, 30, 50, "b"))
-    assert _fold_jobs(spark, start) == 13
+    assert _fold_jobs(spark, start) == 10
     view = SifTable(spark, f"{tdir}/dst").read()
     assert sorted(tuple(r) for r in view.collect()) == [
         ("a", 30, 435), ("b", 20, 790),
@@ -359,7 +359,7 @@ def test_jobs_ann_maintainer_folds(spark, tdir):
     assert _fold_jobs(spark, start) == 4
     assert idx._load()["op"] == "append"
     src.upsert(_vec_df(spark, 10, 20, sign=-1.0))
-    assert _fold_jobs(spark, start) == 11
+    assert _fold_jobs(spark, start) == 9
     assert idx._load()["op"] == "upsert"
     nids = idx.read().select("nid")
     assert (nids.count(), nids.distinct().count()) == (60, 60)
@@ -377,8 +377,59 @@ def test_jobs_cdc_merge_fold(spark, tdir):
         spark, f"{tdir}/src", f"{tdir}/dst", app_id="cdcj",
         checkpoint_dir=f"{tdir}/ck", starting_version=1,
     ))
-    assert n == 13
+    assert n == 10
     assert dst._load()["op"] == "merge"
     assert sorted(tuple(r) for r in dst.read().collect()) == sorted(
         tuple(r) for r in src.read().collect()
     )
+
+
+# --- scans under the recorded schema ---------------------------------
+
+
+def test_jobs_read_count_scans_with_recorded_schema(spark, tdir):
+    """Every group records the DDL its files were written with, so a
+    snapshot scan starts no parquet footer-inference job: a count over
+    a one-class table is its own two jobs, not three."""
+    t = _two_group_table(spark, tdir, key_col="k")
+    count, n = _count_jobs(spark, lambda: t.read().count())
+    assert (count, n) == (80, 2)
+
+
+def test_column_name_with_space_reads_and_upserts(spark, tdir):
+    """A name that is not a plain identifier is backquoted in the
+    manifest DDL, so the table reads and upserts; a group whose
+    recorded DDL does not parse back (unquoted "a b", as such a DDL was
+    written before) reads through schema inference, one job dearer."""
+    import json
+
+    from sif_spark.table import _manifest_file
+
+    def rows(lo, hi, val):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.lit(val).alias("a b")
+        )
+
+    t = SifTable.create(spark, tdir, rows(0, 20, "x"), key_col="k",
+                        key_bloom=True)
+    t.append(rows(20, 30, "y"))
+    t.upsert(rows(15, 25, "u"))
+    want = sorted(
+        [(k, "x") for k in range(15)] + [(k, "u") for k in range(15, 25)]
+        + [(k, "y") for k in range(25, 30)]
+    )
+    m = t._load()
+    assert m["schema"] == "k bigint, `a b` string"
+    assert t.read().columns == ["k", "a b"]
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    _, quoted = _count_jobs(spark, lambda: t.read().count())
+    path = _manifest_file(tdir, m["version"])
+    with open(path) as fh:
+        raw = json.load(fh)
+    for g in raw["groups"]:
+        g["schema"] = "k bigint, a b string"
+    with open(path, "w") as fh:
+        json.dump(raw, fh)
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    _, inferred = _count_jobs(spark, lambda: t.read().count())
+    assert inferred == quoted + 1

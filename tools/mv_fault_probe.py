@@ -1,8 +1,8 @@
 """SIGKILL fault injection for incremental materialized views
 (sif_spark/mview.py) — the crash window that matters is BETWEEN the
-view table's txn-upsert commit and Structured Streaming's checkpoint
-commit: on restart Spark replays that epoch, and a broken idempotence
-guard would fold the same change window into the sums twice.
+view table's txn-upsert commit and the fold loop's commit record: on
+restart the loop re-runs that epoch over the same window, and a broken
+idempotence guard would fold it into the sums twice.
 
 Protocol per round:
 

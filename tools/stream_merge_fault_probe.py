@@ -4,10 +4,10 @@ target table via merge_changes_into_table (one table version per
 micro-batch, each batch ONE merge with txn=(app, epoch)); the parent
 SIGKILLs the whole streaming JVM mid-flight, then RESUMES the stream
 from the same checkpoint. Verification: the target's content equals
-the source's final snapshot row-for-row — Structured Streaming's
-replay of the in-flight epoch after the kill must land as a committed
-no-op (the txn high-water), never a double-apply, and the interrupted
-merge's orphan files must stay invisible.
+the source's final snapshot row-for-row — the fold loop's replay of
+the in-flight epoch after the kill must land as a committed no-op (the
+txn high-water), never a double-apply, and the interrupted merge's
+orphan files must stay invisible.
 
 Run directly:  python tools/stream_merge_fault_probe.py
 Modes:         --setup <dir> | --stream <dir> | --verify <dir>
