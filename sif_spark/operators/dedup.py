@@ -738,7 +738,8 @@ def near_dup_clusters(
     with a driver union-find, bit-identical labels (keep-min roots) by
     construction. The collect is Arrow-columnar
     (``DataFrame.toArrow``), not Row objects — measured on this host
-    (tools/cc_driver_probe.py, SCALE.md round-7 probe): 500k long-id
+    (SCALE.md "CC driver-tier collect cost", round 7; script:
+    `git show fea8842:tools/cc_driver_probe.py`): 500k long-id
     edges cost 8.0 MB of Arrow buffers and ~70 MB driver RSS delta
     including the pylist ids + union-find dict, vs ~190 MB for the
     old Row-object collect (str40 hash ids: 44 MB Arrow / ~161 MB RSS

@@ -47,8 +47,9 @@ def salted_join(
     replicated, so right-outer semantics would need dedup — use the
     plain join there).
 
-    WHEN to salt — the measured decision rule (tools/skew_probe.py,
-    round 6; 12M-row fact with 60% of rows on one key, 2M-row build):
+    WHEN to salt — the measured decision rule (SCALE.md "AQE vs
+    manual salting", round 6; script: `git show fea8842:tools/skew_probe.py`;
+    12M-row fact with 60% of rows on one key, 2M-row build):
     AQE skew-join ON → plain 2.05s vs salted 2.44s; AQE OFF → plain
     2.95s vs salted 2.52s. With AQE's skew-join enabled (the
     sif_spark default) the PLAIN join wins: AQE splits the hot

@@ -20,8 +20,9 @@ keeps metadata-only queries from ever reading the bytes; hot paths
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` — size it so
 batch_rows × max_blob_bytes fits executor memory.
 
-Built-in codec throughput boundary — MEASURED (round 8,
-tools/codec_throughput_probe.py; full table in SCALE.md): the
+Built-in codec throughput boundary — MEASURED (round 8; full table in
+SCALE.md "Built-in codec decode throughput"; script:
+`git show fea8842:tools/codec_throughput_probe.py`): the
 PPM/BMP/WAV/TIFF paths are fully NumPy-vectorized at 0.5-13 GB/s/core
 — never a reason to inject a codec. PNG none/up filters ride zlib at
 170-400 MB/s/core. The SERIAL paths — PNG average/paeth unfilter

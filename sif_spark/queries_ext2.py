@@ -1804,7 +1804,8 @@ def q118_salted_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandasWithState) carry the full hot-key share (0.902
     unsalted → 0.088 salted/64 buckets). This entry is the EXACTNESS
     witness for the decomposition both cases rely on; the skew
-    measurement lives in tools/stream_skew_probe.py + SCALE.md."""
+    measurement is recorded in SCALE.md ("Stateful-streaming skew",
+    round 7; script: `git show fea8842:tools/stream_skew_probe.py`)."""
     from sif_spark.queries_ext import _io_dir
     from sif_spark.streaming.stream import combine_salted, salted_stream_agg
 

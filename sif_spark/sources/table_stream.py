@@ -689,6 +689,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             _ddl,
             _intern_col_eras,
             _manifest_file,
+            _quoted_ddl,
             next_manifest,
         )
 
@@ -723,7 +724,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                         "bucketed tables own their layout — write through "
                         "SifTable.append(), which plans the bucketed write"
                     )
-                if m["schema"] != ddl:
+                if _quoted_ddl(m["schema"]) != ddl:
                     raise ValueError(
                         f"sif_table writer schema {ddl!r} != snapshot schema "
                         f"{m['schema']!r} — schema evolution goes through "
@@ -827,6 +828,8 @@ class SifTableDataSource(DataSource):
     def schema(self) -> str:
         # a DDL STRING, not a StructType: this runs in a sessionless
         # planner worker where _parse_datatype_string cannot run
+        from sif_spark.table import _quoted_ddl
+
         table_path = _local_path(self.options["path"])
         versions = _versions_on_disk(table_path)
         if not versions:
@@ -838,7 +841,7 @@ class SifTableDataSource(DataSource):
             if self.options.get("version")
             else versions[-1]
         )
-        ddl = _load_manifest(table_path, v)["schema"]
+        ddl = _quoted_ddl(_load_manifest(table_path, v)["schema"])
         if str(self.options.get("cdf", "false")).lower() == "true":
             return f"{ddl}, _change_type string, _commit_version int"
         return f"{ddl}, _commit_version int"
@@ -868,26 +871,21 @@ class SifTableDataSource(DataSource):
         return _SifTableStreamReader(base, self.options)
 
 
-def register_table_source(
-    spark: SparkSession, set_filter_pushdown_conf: bool = True
-) -> None:
+def register_table_source(spark: SparkSession) -> None:
     """Register the ``sif_table`` DataSource on this session.
 
-    SIDE EFFECT (ADVICE r11): by default this also sets the
-    SESSION-WIDE runtime conf ``spark.sql.python.filterPushdown.
-    enabled=true`` — the batch reader implements pushFilters and Spark
-    refuses to plan ANY pushdown-capable Python source while the conf
-    is off, so registration without it would make every
+    SIDE EFFECT (ADVICE r11): this also sets the SESSION-WIDE runtime
+    conf ``spark.sql.python.filterPushdown.enabled=true`` — the batch
+    reader implements pushFilters and Spark refuses to plan ANY
+    pushdown-capable Python source while the conf is off, so
+    registration without it would make every
     ``spark.read.format("sif_table")`` raise. The conf changes
     planning for every OTHER Python data source in the session too
     (their pushFilters starts being called — a behavior change, not a
     correctness change: the API contract requires unhandled filters to
-    be yielded back). Pass ``set_filter_pushdown_conf=False`` to leave
-    the conf alone and manage it yourself (batch reads will fail until
-    it is set; the streaming source is unaffected)."""
+    be yielded back)."""
     spark.dataSource.register(SifTableDataSource)
-    if set_filter_pushdown_conf:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
 
 # each consumer's feed mode as feed_window flags: cdf reads the change

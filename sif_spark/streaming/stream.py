@@ -365,9 +365,9 @@ def salted_stream_agg(
     """Two-level SALTED streaming aggregation — the stateful-streaming
     arm of the salting rule (operators/joins.py docstring; SCALE.md).
 
-    The full measured salting rule (tools/stream_skew_probe.py,
-    SCALE.md round-7 row; batch arm measured round 6 in
-    operators/joins.py):
+    The full measured salting rule (SCALE.md "Stateful-streaming
+    skew", round 7; script: `git show fea8842:tools/stream_skew_probe.py`;
+    batch arm measured round 6 in operators/joins.py):
 
     - BATCH shuffle joins: never salt under AQE (AQE's skew split
       handles them; salting measured slower).
@@ -902,7 +902,7 @@ def merge_changes_into_table(
         fold_table_changes,
         settle_changes,
     )
-    from sif_spark.table import SifTable, _key_cols
+    from sif_spark.table import SifTable, _key_cols, _schema_names
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         t = SifTable(batch_df.sparkSession, target_table_path)
@@ -916,11 +916,7 @@ def merge_changes_into_table(
         latest, rows, _, _ = settle_changes(batch_df, keys)
         if rows == 0:
             return  # a change-free window (compact): nothing to commit
-        biz = [
-            f.name
-            for f in T._parse_datatype_string(m["schema"]).fields
-            if f.name in batch_df.columns
-        ]
+        biz = [n for n in _schema_names(m["schema"]) if n in batch_df.columns]
         t.merge(
             latest,
             when_matched_delete="s.`_change_type` = 'delete'",

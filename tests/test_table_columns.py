@@ -430,3 +430,55 @@ def test_manifest_interns_col_id_eras(spark, tdir):
     # and the round-trip is exact
     back = _expand_col_eras(_json.loads(_json.dumps(_intern_col_eras(big))))
     assert all(g["col_ids"] == ids for g in back["groups"])
+
+
+def test_legacy_unquoted_ddl_reads_and_next_manifest_quotes(spark, tdir):
+    """Manifests written before names were backquoted record a column
+    "a b" as ``k bigint, a b string``. Such a table still reads,
+    appends, upserts and serves the sif_table DataSource, and the next
+    commit records its DDL quoted."""
+    from sif_spark.sources.table_stream import register_table_source
+    from sif_spark.table import _ddl_fields
+
+    assert _ddl_fields("k bigint, a b string, `c,d` map<string,int>") == [
+        ("k", "bigint"), ("a b", "string"), ("c,d", "map<string,int>")
+    ]
+
+    def rows(lo, hi, val):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.lit(val).alias("a b")
+        )
+
+    def unquote(node):
+        if isinstance(node, dict):
+            return {
+                k: v.replace("`a b`", "a b") if k == "schema" else unquote(v)
+                for k, v in node.items()
+            }
+        return [unquote(v) for v in node] if isinstance(node, list) else node
+
+    t = SifTable.create(spark, tdir, rows(0, 20, "x"), key_col="k")
+    t.append(rows(20, 30, "y"))
+    mdir = os.path.join(tdir, "_manifests")
+    for name in os.listdir(mdir):
+        p = os.path.join(mdir, name)
+        with open(p) as fh:
+            m = json.load(fh)
+        with open(p, "w") as fh:
+            json.dump(unquote(m), fh)
+    t = SifTable(spark, tdir)
+    assert t._load()["schema"] == "k bigint, a b string"
+    want = [(k, "x") for k in range(20)] + [(k, "y") for k in range(20, 30)]
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    register_table_source(spark)
+    ds = spark.read.format("sif_table").option("path", tdir).load()
+    assert ds.columns[:2] == ["k", "a b"]
+    assert sorted(tuple(r)[:2] for r in ds.collect()) == want
+    t.append(rows(30, 35, "z"))
+    t.upsert(rows(0, 5, "u"))
+    want = (
+        [(k, "u") for k in range(5)] + want[5:]
+        + [(k, "z") for k in range(30, 35)]
+    )
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+    assert t._load()["schema"] == "k bigint, `a b` string"

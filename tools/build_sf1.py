@@ -8,7 +8,8 @@ pairs ~100×) and the sweep measures the data artifact, not the plan.
 Each replica r therefore gets:
 
 - all entity keys shifted by r·10M (orderkey/custkey/partkey/suppkey/
-  event_id/user_id/doc_id/vec_id), and — unlike tools/scale_probe.py —
+  event_id/user_id/doc_id/vec_id), and — unlike the 10× probe
+  (SCALE.md "10× probe"; `git show fea8842:tools/scale_probe.py`) —
   lineitem's l_partkey/l_suppkey shift WITH their dimensions, so each
   replica is a self-contained star and join selectivities are
   preserved at 10×;
@@ -39,7 +40,7 @@ import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -18,13 +18,14 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sif_spark.session import get_session
 from sif_spark.sources.parquet import TABLES

@@ -34,7 +34,7 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _executor_pids() -> set[int]:

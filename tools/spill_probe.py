@@ -22,11 +22,12 @@ Run:  python tools/spill_probe.py
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pyarrow as pa
@@ -55,7 +56,6 @@ def _spill_totals(ui_port: int) -> tuple[int, int]:
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
     from check_oracle import compare_tables  # tools/ is on sys.path via __main__
 
@@ -109,5 +109,5 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     sys.exit(main())

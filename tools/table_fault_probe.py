@@ -31,7 +31,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_OPS = 20  # op s (1-based), keys [5s, 5s+50): odd s = whole-row
 # upsert val=s; s%4==2 = conditional MERGE (matched & k%13==0 →

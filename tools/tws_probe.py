@@ -36,7 +36,7 @@ import sys
 import tempfile
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 # The shim builder moved into the library in round 10 (session.py now
