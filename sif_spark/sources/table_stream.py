@@ -689,7 +689,6 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             _ddl,
             _intern_col_eras,
             _manifest_file,
-            _quoted_ddl,
             next_manifest,
         )
 
@@ -724,7 +723,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                         "bucketed tables own their layout — write through "
                         "SifTable.append(), which plans the bucketed write"
                     )
-                if _quoted_ddl(m["schema"]) != ddl:
+                if m["schema"] != ddl:
                     raise ValueError(
                         f"sif_table writer schema {ddl!r} != snapshot schema "
                         f"{m['schema']!r} — schema evolution goes through "
@@ -828,8 +827,6 @@ class SifTableDataSource(DataSource):
     def schema(self) -> str:
         # a DDL STRING, not a StructType: this runs in a sessionless
         # planner worker where _parse_datatype_string cannot run
-        from sif_spark.table import _quoted_ddl
-
         table_path = _local_path(self.options["path"])
         versions = _versions_on_disk(table_path)
         if not versions:
@@ -841,7 +838,7 @@ class SifTableDataSource(DataSource):
             if self.options.get("version")
             else versions[-1]
         )
-        ddl = _quoted_ddl(_load_manifest(table_path, v)["schema"])
+        ddl = _load_manifest(table_path, v)["schema"]
         if str(self.options.get("cdf", "false")).lower() == "true":
             return f"{ddl}, _change_type string, _commit_version int"
         return f"{ddl}, _commit_version int"

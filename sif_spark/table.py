@@ -438,7 +438,7 @@ def next_manifest(
         **{f: fields.pop(f, m.get(f, d)) for f, d in _SPEC.items()},
         "txns": dict(m.get("txns", {})) if txns is None else txns,
         "added": list(added),
-        "schema": _quoted_ddl(schema) if isinstance(schema, str) else _ddl(schema),
+        "schema": schema if isinstance(schema, str) else _ddl(schema),
         "columns": m.get("columns") if columns is _CARRY else columns,
         "groups": groups,
         "dvs": _carry_dvs(m, groups) if dvs is None else dvs,
@@ -775,31 +775,41 @@ def _align(df: DataFrame, target: T.StructType) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# a DDL field: its name, quoted or not, then a type as simpleString
+# renders it (a nested type, a multi-word type, or one word with an
+# optional "(...)"); _DDL_FIRST is the first-token fallback
+_DDL_FIELD = re.compile(
+    r"(?:`((?:[^`]|``)*)`|(.+?)) +((?:array|map|struct)<.*>"
+    r"|string collate \S+|interval(?: (?:year|month|day|hour|minute"
+    r"|second)(?: to \w+)?)?|\w+(?:\(.*\))?)"
+)
+_DDL_FIRST = re.compile(r"(?:`((?:[^`]|``)*)`|(\S+)) *(.*)")
+
+
 def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
     """The top-level ``(name, type)`` fields of a manifest DDL (_ddl's
     ``name type, ...``), parsed without a session so the stream planner
-    can call it: split at the commas outside backticks, <> and (); the
-    name is everything before the field's last top-level space,
-    unquoted. That also reads a DDL written before _ddl quoted names
-    (``k bigint, a b string``)."""
-    fields, depth, start, spaces, quoted = [], 0, 0, [], False
+    can call it: split at the commas outside backticks, <> and (); an
+    unquoted name ends at the field's first space that leaves a whole
+    type behind. That also reads a DDL written before _ddl quoted names
+    (``k bigint, a b string``); a type _DDL_FIELD does not know keeps
+    the first-token name."""
+    fields, depth, start, quoted = [], 0, 0, False
     for i, ch in enumerate(ddl + ","):
         if ch == "`":
             quoted = not quoted  # a doubled `` toggles back
         if quoted:
             continue
         depth += (ch in "<(") - (ch in ">)")
-        if ch == " " and depth == 0:
-            spaces.append(i)
-        elif ch == "," and depth == 0:
-            cut = max((s for s in spaces if ddl[start:s].strip()
-                       and ddl[s:i].strip()), default=start)
-            name, typ = ddl[start:cut].strip(), ddl[cut:i].strip()
-            if name[:1] == "`":
-                name = name[1:-1].replace("``", "`")
-            if typ:
+        if ch == "," and depth == 0:
+            field = ddl[start:i].strip()
+            if field:
+                q, plain, typ = (
+                    _DDL_FIELD.fullmatch(field) or _DDL_FIRST.fullmatch(field)
+                ).groups()
+                name = plain if q is None else q.replace("``", "`")
                 fields.append((name, typ))
-            start, spaces = i + 1, []
+            start = i + 1
     return fields
 
 
@@ -808,9 +818,10 @@ def _schema_names(ddl: str) -> list[str]:
 
 
 def _quoted_ddl(ddl: str) -> str:
-    """A manifest DDL in the quoted form _ddl writes — every parse of a
-    manifest's schema goes through here, so a legacy unquoted name
-    such as "a b" reads, and the next manifest records it quoted."""
+    """A manifest DDL in the quoted form _ddl writes. _log_manifest
+    loads every manifest's schema through here, so a legacy unquoted
+    name such as "a b" parses, and the next manifest records it
+    quoted."""
     return ", ".join(f"{_quote(name)} {typ}" for name, typ in _ddl_fields(ddl))
 
 
@@ -1039,10 +1050,12 @@ def _log_versions(log, path: str) -> list[int]:
 
 def _log_manifest(log, path: str, version: int) -> dict:
     """Version ``version``'s manifest, with per-group col_ids
-    rehydrated."""
-    return _expand_col_eras(
+    rehydrated and its schema DDL in the quoted form _ddl writes."""
+    m = _expand_col_eras(
         json.loads(log.read_text(_manifest_file(path, version)))
     )
+    m["schema"] = _quoted_ddl(m["schema"])
+    return m
 
 
 # the manifest counters each keyed op records
@@ -1581,7 +1594,7 @@ class SifTable:
         through ``register_view`` (this read) rather than the
         DataSource to keep the stats."""
         m = self._load(version)
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         return self._read_groups(m, m["groups"], target, _columns_of(m))
 
     def register_view(self, name: str, version: int | None = None) -> None:
@@ -1710,7 +1723,7 @@ class SifTable:
         never the correctness input). Bounds must be the column's own
         type (numbers, strings, date/datetime)."""
         m = self._load(version)
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         if col not in [f.name for f in target.fields]:
             raise ValueError(f"no column {col!r} in snapshot schema")
         if lo is None and hi is None:
@@ -1757,7 +1770,7 @@ class SifTable:
             )
         if any(v is None for v in values):
             raise ValueError("lookup(None) is not a range-key lookup")
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         key_types = [target[k].dataType for k in keys]
         bounds = [_stat_bound(v) for v in values]
         candidates = m["groups"]
@@ -1962,7 +1975,7 @@ class SifTable:
         ``head`` (columns by id, then by name) and tagged with
         _commit_version (and _change_type with ``cdf``): the JVM read
         behind changes() and the driver-side change-feed folds."""
-        target = T._parse_datatype_string(_quoted_ddl(head["schema"]))
+        target = T._parse_datatype_string(head["schema"])
         parts = [
             p
             for p in (
@@ -1999,7 +2012,7 @@ class SifTable:
             if txns is None:
                 return m["version"]  # replayed epoch: no-op
             merged = _merge_schema(
-                T._parse_datatype_string(_quoted_ddl(m["schema"])), df.schema
+                T._parse_datatype_string(m["schema"]), df.schema
             )
             cols_next = _next_columns(m, merged)
             group = self._write_group(df, m["version"] + 1, 0, m, cols_next)
@@ -2200,7 +2213,7 @@ class SifTable:
         missing = [k for k in keys if k not in batch.columns]
         if missing:
             raise ValueError(f"{name} batch lacks key column(s) {missing}")
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         merged = _merge_schema(target, batch.schema) if evolve else target
         if check is not None:
             check(m, batch, keys, merged)
@@ -2283,7 +2296,7 @@ class SifTable:
             # dv-aware: tombstoned rows must not resurrect into the
             # survivor rewrite
             old = self._read_groups(
-                m, touched, T._parse_datatype_string(_quoted_ddl(m["schema"])),
+                m, touched, T._parse_datatype_string(m["schema"]),
                 _columns_of(m),
             )
             frames["wg"] = _align(
@@ -2772,7 +2785,7 @@ class SifTable:
         with any part null — originally null (null never equi-matches)
         or nulled by a narrowing try_cast (the value provably cannot
         live in the narrow group) — simply drops from the probe set."""
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         snap_kt = _KTYPE_SEP.join(
             target[k].dataType.simpleString() for k in keys
         )
@@ -2951,7 +2964,7 @@ class SifTable:
         ``cdf=True`` table the deleted rows themselves are materialized
         as 'delete' tombstones in the version's change file."""
         m = self._load()
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         v = m["version"] + 1
         cdf_on = m.get("cdf", False)
         # ONE batched dv-aware probe over every group (guide §1.2/§2.4
@@ -3179,7 +3192,7 @@ class SifTable:
         columns = [
             {**c, "name": new} if c["name"] == old else c for c in columns
         ]
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         renamed = T.StructType([
             T.StructField(new, f.dataType) if f.name == old else f
             for f in target.fields
@@ -3216,7 +3229,7 @@ class SifTable:
             raise ValueError("cannot drop the only column")
         columns, groups = self._bootstrap_columns(m)
         columns = [c for c in columns if c["name"] != name]
-        target = T._parse_datatype_string(_quoted_ddl(m["schema"]))
+        target = T._parse_datatype_string(m["schema"])
         kept = T.StructType([f for f in target.fields if f.name != name])
         return self._commit(next_manifest(
             m, "drop_column", groups, kept, columns=columns, dropped=name
