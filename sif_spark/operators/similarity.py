@@ -23,6 +23,26 @@ Tiers:
 - ``cosine_all_pairs``: corpus×corpus similar-pair search with the
   corpus broadcast (documented fits-in-memory assumption — LSH-block
   first when it doesn't; see dedup.embedding_near_dup_pairs).
+- ``ivf_knn``: inverted file — a k-means coarse quantizer
+  (``build_ivf_index``, grown by ``extend_ivf_index``) splits the
+  corpus into cells; each query exact-ranks only its ``n_probe``
+  nearest cells.
+- ``pq_knn``: product quantization — ``train_pq`` codebooks,
+  ``pq_encode`` codes of 2·m bytes a vector, asymmetric-distance (ADC)
+  top-k over the whole code table.
+- ``ivf_pq_knn``: IVF cell pruning, then ADC over the probed cells'
+  codes only.
+- ``maintain_ivf_index_table``: keeps an IVF(-PQ) index table current
+  from a corpus table's change feed, and retrains it on drift or lost
+  recall.
+
+Shared kernels, one copy each: ``_assign_encode`` (nearest-centroid
+cell, its squared distance and the PQ codes in one Arrow pass — behind
+``assign_cells``, ``pq_encode`` and the maintainer), ``_sq_dist`` (the
+expanded ‖x‖²−2x·c+‖c‖² distance of k-means, PQ codes, ADC tables and
+IVF-PQ probing), ``_normalize_rows``, ``_batch_topk`` (one Arrow
+batch's top-k per query) and ``_top_k`` (the per-qid rank window every
+kNN tier ends with).
 """
 
 from __future__ import annotations
@@ -86,28 +106,92 @@ def cosine_udf(a: Column, b: Column) -> Column:
 # Internals
 # ---------------------------------------------------------------------------
 
-def _collect_normalized(df: DataFrame, vec_col: str, id_col: str) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side collect of (ids, row-normalized float64 matrix) for
-    broadcasting. Only ever called on the SMALL side of an operator."""
+def _normalize_rows(M: np.ndarray) -> np.ndarray:
+    """Each row over its L2 norm; an all-zero row stays zero."""
+    norms = np.linalg.norm(M, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return M / norms
+
+
+def _sq_dist(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(rows of X × rows of C) squared Euclidean distances in the
+    expanded ‖x‖²−2x·cᵀ+‖c‖² form — O(|X|·|C|) memory, never the
+    difference tensor."""
+    return (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
+
+
+def _subspace_sq_dists(X: np.ndarray, books: np.ndarray) -> Iterator[np.ndarray]:
+    """Per PQ subspace j (in order), the squared distances of X's j-th
+    subvectors to codebook j's centroids — one matrix alive at a time."""
+    dsub = books.shape[2]
+    for j, C in enumerate(books):
+        yield _sq_dist(X[:, j * dsub : (j + 1) * dsub], C)
+
+
+def _collect_normalized(
+    df: DataFrame, vec_col: str, id_col: str, normalize: bool = True
+) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side collect of (ids, float64 matrix, row-normalized
+    unless ``normalize=False``) for broadcasting. Only ever called on
+    the SMALL side of an operator; no rows give a (0, 0) matrix."""
     pdf = df.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()
     if len(pdf) == 0:  # e.g. an empty hash-chunk in chunked bf-kNN
         return ids, np.empty((0, 0))
-    M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    norms = np.linalg.norm(M, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return ids, M / norms
+    return ids, _batch_matrix(pdf, vec_col, normalize)
 
 
 def _batch_matrix(
     pdf: pd.DataFrame, vec_col: str, normalize: bool = True
 ) -> np.ndarray:
     B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    if not normalize:  # raw vectors — Euclidean consumers (IVF assignment)
-        return B
-    norms = np.linalg.norm(B, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return B / norms
+    # raw vectors for the Euclidean consumers (IVF assignment, PQ)
+    return _normalize_rows(B) if normalize else B
+
+
+def _batch_topk(
+    D: np.ndarray, nids: np.ndarray, q_ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One Arrow batch's k smallest entries per query column of the
+    (batch × queries) matrix ``D``, self pairs (nid == qid) and
+    non-finite entries dropped: (qid, nid, value) arrays. ``D`` is
+    overwritten."""
+    D[nids[:, None] == q_ids[None, :]] = np.inf
+    kk = min(k, D.shape[0])
+    idx = np.argpartition(D, kk - 1, axis=0)[:kk]  # (k, n_queries)
+    qcol = np.broadcast_to(np.arange(D.shape[1]), idx.shape)
+    vals = D[idx, qcol]
+    keep = np.isfinite(vals)
+    return q_ids[qcol[keep]], nids[idx[keep]], vals[keep]
+
+
+def _top_k(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """(qid, nid, rank, score): each qid's first k rows, a cosine
+    highest first and a distance lowest first, ties by nid."""
+    order = F.col(score).desc() if score == "cosine" else F.col(score)
+    w = Window.partitionBy("qid").orderBy(order, F.col("nid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "nid", "rank", score)
+    )
+
+
+def _knn_schema(score: str, ranked: bool = False) -> T.StructType:
+    """The non-null (qid, nid[, rank], score) rows a kNN tier scores
+    (``ranked``: the ones it returns)."""
+    fields = [
+        T.StructField("qid", T.LongType(), False),
+        T.StructField("nid", T.LongType(), False),
+    ]
+    if ranked:
+        fields.append(T.StructField("rank", T.IntegerType(), False))
+    return T.StructType(fields + [T.StructField(score, T.DoubleType(), False)])
+
+
+def _no_queries(spark, score: str) -> DataFrame:
+    """The empty result of a tier handed no query rows."""
+    return local_frame(spark, _knn_schema(score, ranked=True))
 
 
 # ---------------------------------------------------------------------------
@@ -189,58 +273,23 @@ def _bf_knn_single(
     qids, Q = _collect_normalized(queries, vec_col, query_id_col)
     spark = corpus.sparkSession
     if len(qids) == 0:  # empty query set (or empty hash-chunk)
-        empty = local_frame(
-            spark,
-            T.StructType(
-                [
-                    T.StructField("qid", T.LongType(), False),
-                    T.StructField("nid", T.LongType(), False),
-                    T.StructField("rank", T.IntegerType(), False),
-                    T.StructField("cosine", T.DoubleType(), False),
-                ]
-            ),
-        )
-        return empty, None
+        return _no_queries(spark, "cosine"), None
     bc = spark.sparkContext.broadcast((qids, Q))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType(), False),
-            T.StructField("nid", T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
 
     def topk_per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, Qm = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            nids = pdf[id_col].to_numpy()
             S = _batch_matrix(pdf, vec_col) @ Qm.T  # (batch, n_queries)
-            S[nids[:, None] == q_ids[None, :]] = -np.inf  # exclude self
-            kk = min(k, S.shape[0])
-            # batch-local top-k rows per query column
-            idx = np.argpartition(-S, kk - 1, axis=0)[:kk]  # (k, n_queries)
-            qcol = np.broadcast_to(np.arange(S.shape[1]), idx.shape)
-            sims = S[idx, qcol]
-            keep = np.isfinite(sims)
-            yield pd.DataFrame(
-                {
-                    "qid": q_ids[qcol[keep]],
-                    "nid": nids[idx[keep]],
-                    "cosine": sims[keep],
-                }
-            )
+            # top-k by cosine = the k smallest of -cosine
+            qid, nid, neg = _batch_topk(-S, pdf[id_col].to_numpy(), q_ids, k)
+            yield pd.DataFrame({"qid": qid, "nid": nid, "cosine": -neg})
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(topk_per_batch, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    ranked = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cosine")
+    partial = corpus.select(id_col, vec_col).mapInPandas(
+        topk_per_batch, _knn_schema("cosine")
     )
-    return ranked, bc
+    return _top_k(partial, k, "cosine"), bc
 
 
 # ---------------------------------------------------------------------------
@@ -294,7 +343,7 @@ def _bucketize(
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            X = _batch_matrix(pdf, vec_col, normalize=False)
             signs = (X @ P.T > 0).reshape(len(pdf), tables, bits)
             buckets = (signs * weights).sum(axis=2)  # (n, tables)
             n = len(pdf)
@@ -375,12 +424,7 @@ def lsh_knn(
         qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
         cands = pairs.join(nv, "nid").join(qv, "qid")
     cands = cands.withColumn("cosine", cosine_udf(F.col("qvec"), F.col("nvec")))
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cosine")
-    )
+    return _top_k(cands, k, "cosine")
 
 
 # ---------------------------------------------------------------------------
@@ -508,112 +552,77 @@ def assign_cells(
     maintainer. ``with_distance`` adds the squared distance to the
     winning centroid — the refresh policy's staleness signal (a batch
     whose vectors sit far from EVERY day-1 centroid is drifted)."""
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(centroids)
-    fields = [
-        T.StructField("nid", T.LongType(), False),
-        T.StructField("cell", T.IntegerType(), False),
-    ]
-    if with_distance:
-        fields.append(T.StructField("dist2", T.DoubleType(), False))
-    schema = T.StructType(fields)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C = bc.value  # argmin ||v - c||^2 = argmin -2 v.c + ||c||^2
-        c_sq = (C * C).sum(axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = _batch_matrix(pdf, vec_col, normalize=False)
-            scores = -2.0 * (V @ C.T) + c_sq
-            cells = np.argmin(scores, axis=1)
-            out = {
-                "nid": pdf[id_col].to_numpy(),
-                "cell": cells.astype(np.int32),
-            }
-            if with_distance:
-                # full ||v-c||^2 needs +||v||^2 (constant per row for
-                # the argmin, not for the magnitude)
-                v_sq = (V * V).sum(axis=1)
-                out["dist2"] = (
-                    scores[np.arange(len(cells)), cells] + v_sq
-                )
-            yield pd.DataFrame(out)
-
-    return vectors.select(id_col, vec_col).mapInPandas(assign, schema)
+    return _assign_encode(
+        vectors, centroids, None, vec_col, id_col, with_distance=with_distance
+    )
 
 
 def _assign_encode(
     vectors: DataFrame,
-    centroids: np.ndarray,
-    codebook: "PQCodebook",
+    centroids: np.ndarray | None,
+    codebook: "PQCodebook | None",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     with_distance: bool = False,
 ) -> DataFrame:
-    """(nid, cell[, dist2], codes) in ONE Arrow pass — the fused
-    kernel of ``assign_cells`` + ``pq_encode`` (round 15, guide §2.4):
-    the maintainer fold and the refresh swap previously computed the
-    two halves as separate mapInPandas scans glued by an inner join on
-    nid, paying an Exchange per micro-batch/swap for frames that are
-    row-aligned by construction. Identical math in identical order on
-    both halves; rows with NULL vectors are excluded exactly as the
-    old inner-join-with-pq_encode shape excluded them."""
+    """(nid[, cell[, dist2]][, codes]) in ONE Arrow pass: the cell
+    against ``centroids`` (``assign_cells``' rule) and ``with_distance``
+    its squared distance; the PQ codes under ``codebook`` (each
+    subspace's nearest codebook centroid, after L2 normalization when
+    the codebook was trained normalized). Either input may be None:
+    ``assign_cells`` passes no codebook, ``pq_encode`` no centroids.
+    The maintainer's fold and refresh swap pass both, so they get a
+    batch's cells and codes from one scan instead of two scans joined
+    on nid (an Exchange per micro-batch for row-aligned frames).
+
+    NULL vectors: with a codebook their rows are dropped (they carry no
+    codes); without one the batch fails, as ``assign_cells`` always
+    has (np.stack cannot stack a missing vector)."""
     spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (centroids, codebook.codebooks, codebook.normalized)
-    )
-    fields = [
-        T.StructField("nid", T.LongType(), False),
-        T.StructField("cell", T.IntegerType(), False),
-    ]
-    if with_distance:
-        fields.append(T.StructField("dist2", T.DoubleType(), False))
-    fields.append(
-        T.StructField("codes", T.ArrayType(T.ShortType(), False), False)
-    )
-    schema = T.StructType(fields)
+    pq_books = None if codebook is None else (codebook.codebooks, codebook.normalized)
+    bc = spark.sparkContext.broadcast((centroids, pq_books))
+    fields = [T.StructField("nid", T.LongType(), False)]
+    if centroids is not None:
+        fields.append(T.StructField("cell", T.IntegerType(), False))
+        if with_distance:
+            fields.append(T.StructField("dist2", T.DoubleType(), False))
+    if codebook is not None:
+        fields.append(
+            T.StructField("codes", T.ArrayType(T.ShortType(), False), False)
+        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C, books, normed = bc.value
-        c_sq = (C * C).sum(axis=1)
-        m, ksub, dsub = books.shape
+        C, pq = bc.value
+        if C is not None:  # argmin ||v - c||^2 = argmin -2 v.c + ||c||^2
+            c_sq = (C * C).sum(axis=1)
         for pdf in batches:
             if pdf.empty:
                 continue
             V = _batch_matrix(pdf, vec_col, normalize=False)
-            scores = -2.0 * (V @ C.T) + c_sq
-            cells = np.argmin(scores, axis=1)
-            out = {
-                "nid": pdf[id_col].to_numpy(),
-                "cell": cells.astype(np.int32),
-            }
-            if with_distance:
-                v_sq = (V * V).sum(axis=1)
-                out["dist2"] = scores[np.arange(len(cells)), cells] + v_sq
-            X = V.astype(np.float64, copy=False)
-            if normed:
-                nrm = np.linalg.norm(X, axis=1, keepdims=True)
-                nrm[nrm == 0] = 1.0
-                X = X / nrm
-            codes = np.empty((len(X), m), dtype=np.int16)
-            for j in range(m):
-                S = X[:, j * dsub : (j + 1) * dsub]
-                Cb = books[j]
-                d2 = (
-                    (S * S).sum(1)[:, None]
-                    - 2.0 * (S @ Cb.T)
-                    + (Cb * Cb).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(1).astype(np.int16)
-            out["codes"] = list(codes)
+            out = {"nid": pdf[id_col].to_numpy()}
+            if C is not None:
+                scores = -2.0 * (V @ C.T) + c_sq
+                cells = np.argmin(scores, axis=1)
+                out["cell"] = cells.astype(np.int32)
+                if with_distance:
+                    # full ||v-c||^2 needs +||v||^2 (constant per row
+                    # for the argmin, not for the magnitude)
+                    v_sq = (V * V).sum(axis=1)
+                    out["dist2"] = scores[np.arange(len(cells)), cells] + v_sq
+            if pq is not None:
+                books, normed = pq
+                X = _normalize_rows(V) if normed else V
+                codes = [d2.argmin(1) for d2 in _subspace_sq_dists(X, books)]
+                out["codes"] = list(np.stack(codes, axis=1).astype(np.int16))
             yield pd.DataFrame(out)
 
-    return (
-        vectors.filter(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col)
-        .mapInPandas(run, schema)
+    # the UDF name is part of the plan fingerprints: one per use
+    run.__name__ = (
+        "encode" if centroids is None else "assign" if codebook is None else "run"
     )
+    if codebook is not None:
+        vectors = vectors.filter(F.col(vec_col).isNotNull())
+    return vectors.select(id_col, vec_col).mapInPandas(run, T.StructType(fields))
 
 
 class AnnGenMeta:
@@ -943,21 +952,13 @@ def maintain_ivf_index_table(
         avg() aggregate cost one more action wave per fold."""
         from pyspark.sql import Observation
 
-        cents = meta.centroids if meta else centroids
-        cb = meta.codebook if meta else pq_codebook
-        if cb is not None:
-            # fused assignment+encoding: one Arrow pass, no glue join
-            # (round 15 — the old assign ⋈ encode inner join cost an
-            # Exchange per micro-batch for row-aligned frames)
-            assigned = _assign_encode(
-                df, cents, cb, vec_col=vec_col, id_col=id_col,
-                with_distance=refresh_on,
-            )
-        else:
-            assigned = assign_cells(
-                df, cents, vec_col=vec_col, id_col=id_col,
-                with_distance=refresh_on,
-            )
+        # assignment (+ encoding with a codebook): one Arrow pass
+        assigned = _assign_encode(
+            df,
+            meta.centroids if meta else centroids,
+            meta.codebook if meta else pq_codebook,
+            vec_col=vec_col, id_col=id_col, with_distance=refresh_on,
+        )
         if meta is not None:
             assigned = assigned.withColumn("gen", F.lit(meta.gen))
         mean_d = None
@@ -1077,16 +1078,9 @@ def maintain_ivf_index_table(
             index_table_path,
             AnnGenMeta(new_gen, new_cents, new_cb, anchor),
         )
-        if new_cb is not None:
-            # one fused Arrow pass (assignment + codes), no glue join
-            rows = _assign_encode(
-                corpus, new_cents, new_cb, vec_col=vec_col, id_col=id_col
-            )
-        else:
-            rows = assign_cells(
-                corpus, new_cents, vec_col=vec_col, id_col=id_col
-            )
-        rows = rows.withColumn("gen", F.lit(new_gen))
+        rows = _assign_encode(
+            corpus, new_cents, new_cb, vec_col=vec_col, id_col=id_col
+        ).withColumn("gen", F.lit(new_gen))
         SifTable(session, index_table_path).overwrite(
             rows, txn=(f"{app_id}-refresh", txn_epoch)
         )
@@ -1262,6 +1256,22 @@ def maintain_ivf_index_table(
     )
 
 
+def _check_index(
+    index: IVFIndex, df: DataFrame, vec_col: str, use: str, side: str
+) -> None:
+    """An index's provenance against the frame it is ``use``d with: the
+    recorded vec_col, and the centroid dim against a 1-row probe of
+    ``df``'s vectors (``side`` names them in the error)."""
+    if index.vec_col is not None and index.vec_col != vec_col:
+        raise ValueError(
+            f"IVF index was built on column {index.vec_col!r}, "
+            f"{use} {vec_col!r}"
+        )
+    probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    if probe is not None and probe["d"] != index.dim:
+        raise ValueError(f"IVF index dim {index.dim} != {side} dim {probe['d']}")
+
+
 def extend_ivf_index(
     index: IVFIndex,
     new_vectors: DataFrame,
@@ -1284,16 +1294,7 @@ def extend_ivf_index(
     ``check_duplicates=True`` (one id-keyed join job) rejects new ids
     that already exist in the index — a silent double-insert would
     return duplicate neighbors forever after."""
-    if index.vec_col is not None and index.vec_col != vec_col:
-        raise ValueError(
-            f"IVF index was built on column {index.vec_col!r}, "
-            f"extended with {vec_col!r}"
-        )
-    probe = new_vectors.select(F.size(F.col(vec_col)).alias("d")).first()
-    if probe is not None and probe["d"] != index.dim:
-        raise ValueError(
-            f"IVF index dim {index.dim} != new vector dim {probe['d']}"
-        )
+    _check_index(index, new_vectors, vec_col, "extended with", "new vector")
     new_assigned = assign_cells(
         new_vectors, index.centroids, vec_col=vec_col, id_col=id_col
     )
@@ -1398,16 +1399,7 @@ def ivf_knn(
     if index is None:
         index = build_ivf_index(corpus, vec_col, id_col, n_cells, seed, max_iter)
     else:
-        if index.vec_col is not None and index.vec_col != vec_col:
-            raise ValueError(
-                f"IVF index was built on column {index.vec_col!r}, "
-                f"queried with {vec_col!r}"
-            )
-        probe = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-        if probe is not None and probe["d"] != index.dim:
-            raise ValueError(
-                f"IVF index dim {index.dim} != corpus vector dim {probe['d']}"
-            )
+        _check_index(index, corpus, vec_col, "queried with", "corpus vector")
         if index.corpus_rows is not None:
             n = corpus.count()
             if n != index.corpus_rows:
@@ -1427,6 +1419,8 @@ def ivf_knn(
     if broadcast_queries:
         # query-side probe list: small — computed on the driver
         qids, Q = _collect_normalized(queries, vec_col, id_col)
+        if len(qids) == 0:
+            return _no_queries(spark, "cosine")
         probe_cells = np.argsort(-(Q @ cnorm.T), axis=1)[:, :n_probe]
         probes = _probe_frame(spark, qids, probe_cells)
         cands = (
@@ -1471,12 +1465,7 @@ def ivf_knn(
         cands = pairs.join(nvecs, "nid").join(qvecs, "qid")
 
     cands = cands.withColumn("cosine", cosine_udf(F.col("qvec"), F.col("nvec")))
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "cosine")
-    )
+    return _top_k(cands, k, "cosine")
 
 
 def lsh_similar_pairs(
@@ -1650,12 +1639,7 @@ def _lloyd(X: np.ndarray, k: int, iters: int, rng: np.random.RandomState) -> np.
     k = min(k, len(X))
     C = X[rng.permutation(len(X))[:k]].copy()
     for _ in range(iters):
-        d2 = (
-            (X * X).sum(1)[:, None]
-            - 2.0 * (X @ C.T)
-            + (C * C).sum(1)[None, :]
-        )
-        assign = d2.argmin(1)
+        assign = _sq_dist(X, C).argmin(1)
         for j in range(k):
             pts = X[assign == j]
             if len(pts):
@@ -1688,11 +1672,7 @@ def train_pq(
         .select(vec_col)
         .toPandas()
     )
-    X = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
-    if normalize:
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        X = X / n
+    X = _batch_matrix(sample, vec_col, normalize)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1716,77 +1696,18 @@ def pq_encode(
     """Encode every corpus vector to its m PQ codes — one Arrow scan,
     zero shuffle: per batch, each subspace's assignment is a
     (batch × ksub) GEMM argmin. Returns (nid, codes array<smallint>):
-    the frame to persist and serve from — ~2·m bytes a vector."""
-    vec_col = vec_col or codebook.vec_col
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (codebook.codebooks, codebook.normalized)
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("nid", T.LongType(), False),
-            T.StructField("codes", T.ArrayType(T.ShortType(), False), False),
-        ]
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books, normed = bc.value
-        m, ksub, dsub = books.shape
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if normed:
-                nrm = np.linalg.norm(X, axis=1, keepdims=True)
-                nrm[nrm == 0] = 1.0
-                X = X / nrm
-            codes = np.empty((len(X), m), dtype=np.int16)
-            for j in range(m):
-                S = X[:, j * dsub : (j + 1) * dsub]
-                C = books[j]
-                d2 = (
-                    (S * S).sum(1)[:, None]
-                    - 2.0 * (S @ C.T)
-                    + (C * C).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(1).astype(np.int16)
-            yield pd.DataFrame(
-                {"nid": pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    # NULL vectors carry no codes — excluded here exactly like the
-    # other kNN tiers (the r4 NULL-vector lesson: a None cell inside
-    # np.stack poisons the whole Arrow batch)
-    return (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col)
-        .mapInPandas(encode, out_schema)
-    )
+    the frame to persist and serve from — ~2·m bytes a vector. NULL
+    vectors carry no codes and are excluded, like the other kNN tiers
+    (a None cell inside np.stack poisons the whole Arrow batch)."""
+    return _assign_encode(corpus, None, codebook, vec_col or codebook.vec_col, id_col)
 
 
-def _pq_luts(codebook: PQCodebook, queries: DataFrame, vec_col: str, qid_col: str):
-    """Driver-side (qids, query matrix, LUT tensor (Q, m, ksub)): per
-    query and subspace, the squared distance from the query subvector
-    to every centroid — the asymmetric-distance tables ADC sums over
-    codes. The returned query matrix lives in the SAME space the
-    codebook was trained in (normalized or raw), so every consumer —
-    LUTs here, cell probing in ivf_pq_knn — measures consistently."""
-    qids, Qm = _collect_normalized(queries, vec_col, qid_col)
-    if not codebook.normalized and len(qids):
-        # _collect_normalized L2-normalizes; recollect raw
-        pdf = queries.select(qid_col, vec_col).toPandas()
-        qids = pdf[qid_col].to_numpy()
-        Qm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    books = codebook.codebooks
-    m, ksub, dsub = books.shape
-    luts = np.empty((len(qids), m, ksub))
-    for j in range(m):
-        S = Qm[:, j * dsub : (j + 1) * dsub]
-        C = books[j]
-        luts[:, j, :] = (
-            (S * S).sum(1)[:, None] - 2.0 * (S @ C.T) + (C * C).sum(1)[None, :]
-        )
-    return qids, Qm, luts
+def _pq_luts(codebook: PQCodebook, Qm: np.ndarray) -> np.ndarray:
+    """The LUT tensor (Q, m, ksub) of a query matrix in the codebook's
+    space (normalized or raw, as it was trained): per query and
+    subspace, the squared distance from the query subvector to every
+    centroid — the asymmetric-distance tables ADC sums over codes."""
+    return np.stack(list(_subspace_sq_dists(Qm, codebook.codebooks)), axis=1)
 
 
 def pq_knn(
@@ -1805,19 +1726,13 @@ def pq_knn(
     adist is the approximate squared L2 (monotone in cosine when the
     codebook is normalized)."""
     vec_col = vec_col or codebook.vec_col
-    qids, _Qm, luts = _pq_luts(codebook, queries, vec_col, query_id_col)
+    qids, Qm = _collect_normalized(
+        queries, vec_col, query_id_col, codebook.normalized
+    )
     spark = codes.sparkSession
     if len(qids) == 0:
-        return local_frame(spark, "qid long, nid long, rank int, adist double")
-    bc = spark.sparkContext.broadcast((qids, luts))
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType(), False),
-            T.StructField("nid", T.LongType(), False),
-            T.StructField("adist", T.DoubleType(), False),
-        ]
-    )
-
+        return _no_queries(spark, "adist")
+    bc = spark.sparkContext.broadcast((qids, _pq_luts(codebook, Qm)))
     def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, L = bc.value
         m = L.shape[1]
@@ -1829,27 +1744,10 @@ def pq_knn(
             D = np.zeros((len(nids), len(q_ids)))
             for j in range(m):
                 D += L[:, j, C[:, j]].T  # (B, Q)
-            D[nids[:, None] == q_ids[None, :]] = np.inf  # exclude self
-            kk = min(k, D.shape[0])
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            qcol = np.broadcast_to(np.arange(D.shape[1]), idx.shape)
-            dist = D[idx, qcol]
-            keep = np.isfinite(dist)
-            yield pd.DataFrame(
-                {
-                    "qid": q_ids[qcol[keep]],
-                    "nid": nids[idx[keep]],
-                    "adist": dist[keep],
-                }
-            )
+            qid, nid, dist = _batch_topk(D, nids, q_ids, k)
+            yield pd.DataFrame({"qid": qid, "nid": nid, "adist": dist})
 
-    partial = codes.mapInPandas(topk, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("adist"), F.col("nid"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "adist")
-    )
+    return _top_k(codes.mapInPandas(topk, _knn_schema("adist")), k, "adist")
 
 
 def ivf_pq_knn(
@@ -1869,25 +1767,20 @@ def ivf_pq_knn(
     keyed on uniform cell/nid — the raw vector column is never read at
     query time. Same output contract as pq_knn."""
     vec_col = vec_col or codebook.vec_col
-    qids, Qm, luts = _pq_luts(codebook, queries, vec_col, query_id_col)
+    qids, Qm = _collect_normalized(
+        queries, vec_col, query_id_col, codebook.normalized
+    )
     spark = codes.sparkSession
     if len(qids) == 0:
-        return local_frame(spark, "qid long, nid long, rank int, adist double")
+        return _no_queries(spark, "adist")
     cents = index.centroids
     if codebook.normalized:
-        nrm = np.linalg.norm(cents, axis=1, keepdims=True)
-        nrm[nrm == 0] = 1.0
-        cents = cents / nrm
+        cents = _normalize_rows(cents)
     # per-query probed cells from the (tiny) centroid matrix, in the
     # SAME space (normalized or raw) the codebook measures in — one
     # driver-side collect serves both the LUTs and the probe
-    d2 = (
-        (Qm * Qm).sum(1)[:, None]
-        - 2.0 * (Qm @ cents.T)
-        + (cents * cents).sum(1)[None, :]
-    )
     n_probe = min(n_probe, cents.shape[0])
-    probe = np.argsort(d2, axis=1)[:, :n_probe]
+    probe = np.argsort(_sq_dist(Qm, cents), axis=1)[:, :n_probe]
     probe_df = _probe_frame(spark, qids, probe)
     cand = (
         F.broadcast(probe_df)
@@ -1895,15 +1788,7 @@ def ivf_pq_knn(
         .select("qid", "nid")
         .join(codes, "nid")
     )
-    bc = spark.sparkContext.broadcast((qids, luts))
-    out_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType(), False),
-            T.StructField("nid", T.LongType(), False),
-            T.StructField("adist", T.DoubleType(), False),
-        ]
-    )
-
+    bc = spark.sparkContext.broadcast((qids, _pq_luts(codebook, Qm)))
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, L = bc.value
         m = L.shape[1]
@@ -1924,10 +1809,4 @@ def ivf_pq_knn(
                 }
             )
 
-    scored = cand.mapInPandas(score, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.col("adist"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", "adist")
-    )
+    return _top_k(cand.mapInPandas(score, _knn_schema("adist")), k, "adist")

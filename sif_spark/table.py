@@ -388,9 +388,21 @@ def _ddl(schema: T.StructType) -> str:
     """A schema as the manifest's DDL string (``name type, ...``), a
     name that is not a plain identifier in backticks (Spark's
     quoteIfNeeded rule), so that every DDL parses back."""
-    return ", ".join(
-        f"{_quote(f.name)} {f.dataType.simpleString()}" for f in schema.fields
-    )
+    return ", ".join(f"{_quote(f.name)} {_type_ddl(f.dataType)}" for f in schema.fields)
+
+
+def _type_ddl(t: T.DataType) -> str:
+    """``t.simpleString()`` with each nested struct field name quoted
+    by _quote (simpleString leaves ``struct<a b:bigint>`` unparsable);
+    pure Python, so a commit without a session can call it."""
+    if isinstance(t, T.StructType):
+        fields = (f"{_quote(f.name)}:{_type_ddl(f.dataType)}" for f in t.fields)
+        return f"struct<{','.join(fields)}>"
+    if isinstance(t, T.ArrayType):
+        return f"array<{_type_ddl(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"map<{_type_ddl(t.keyType)},{_type_ddl(t.valueType)}>"
+    return t.simpleString()
 
 
 def _quote(name: str) -> str:
@@ -820,9 +832,28 @@ def _schema_names(ddl: str) -> list[str]:
 def _quoted_ddl(ddl: str) -> str:
     """A manifest DDL in the quoted form _ddl writes. _log_manifest
     loads every manifest's schema through here, so a legacy unquoted
-    name such as "a b" parses, and the next manifest records it
-    quoted."""
-    return ", ".join(f"{_quote(name)} {typ}" for name, typ in _ddl_fields(ddl))
+    name such as "a b", or a nested ``s struct<a b:bigint>``, parses,
+    and the next manifest records it quoted."""
+    return ", ".join(
+        f"{_quote(name)} {_quoted_type(typ)}" for name, typ in _ddl_fields(ddl)
+    )
+
+
+def _quoted_type(typ: str) -> str:
+    """A type string with every struct field name in _quote's form: a
+    name is the text up to its ":" after a struct's "<" or ",", and one
+    already in backticks passes through."""
+    out, structs, name_next = [], [], False
+    for tok in re.findall(r"`(?:[^`]|``)*`|[^`<>(),:]+|.", typ):
+        if name_next:
+            tok = tok if tok.startswith("`") else _quote(tok)
+        elif tok in ("<", "("):
+            structs.append(tok == "<" and out[-1:] == ["struct"])
+        elif tok in (">", ")") and structs:  # unbalanced: the parser reports it
+            structs.pop()
+        name_next = tok in ("<", "(", ",") and bool(structs) and structs[-1]
+        out.append(tok)
+    return "".join(out)
 
 
 def _columns_of(m: dict) -> list[dict] | None:

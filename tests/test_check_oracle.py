@@ -9,11 +9,12 @@ DuckDB can produce both sides of the repro.
 """
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from check_oracle import compare_tables, type_category
 

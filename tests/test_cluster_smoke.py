@@ -10,7 +10,7 @@ test pins the actual cross-process execution: a subprocess (one JVM
 per process — the suite's local[8] session can't be re-mastered)
 starts `local-cluster[2,2,1024]` and runs a mapInPandas job whose
 closure calls a sif_spark module function, forcing the executor-side
-unpickle + module import on a worker that never saw /root/repo.
+unpickle + module import on a worker that never saw the checkout.
 
 Costs ~20 s (worker JVM spin-up) and guards the single
 highest-impact regression class the repo has had.
@@ -25,10 +25,13 @@ pytestmark = pytest.mark.cluster
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 CHILD = r"""
 import os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from sif_spark.session import get_session
 
 spark = get_session("cluster_smoke_child", shuffle_partitions=4)
@@ -62,7 +65,7 @@ def test_module_closure_executes_on_real_executors():
         SPARK_GRAFT_DRIVER_MEM="2g",
     )
     proc = subprocess.run(
-        [sys.executable, "-c", CHILD],
+        [sys.executable, "-c", CHILD, ROOT],
         env=env,
         capture_output=True,
         text=True,

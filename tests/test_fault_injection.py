@@ -22,11 +22,14 @@ pytestmark = pytest.mark.cluster
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 
 def test_executor_loss_recovers_bit_identical():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/fault_injection_probe.py"],
+        [sys.executable, str(TOOLS / "fault_injection_probe.py")],
         capture_output=True,
         text=True,
         timeout=580,

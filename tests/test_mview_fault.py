@@ -12,15 +12,18 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 pytestmark = pytest.mark.cluster
 
 
 def test_mv_fold_survives_sigkill_mid_drain():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/mv_fault_probe.py"],
+        [sys.executable, str(TOOLS / "mv_fault_probe.py")],
         capture_output=True,
         text=True,
         timeout=900,
@@ -41,7 +44,7 @@ def test_cdf_mv_fold_survives_sigkill_mid_mutation_window():
     postimage and the delete's tombstones) — a replayed epoch after the
     kill would double both the adds and the retractions."""
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/mv_fault_probe.py", "--cdf"],
+        [sys.executable, str(TOOLS / "mv_fault_probe.py"), "--cdf"],
         capture_output=True,
         text=True,
         timeout=900,

@@ -1629,6 +1629,75 @@ def test_pq_encode_skips_null_vectors(spark):
     assert sorted(r["nid"] for r in out) == [1, 3]  # NULL row carries no codes
 
 
+def test_fused_assign_encode_equals_assign_join_encode(spark):
+    """The fused assign+encode kernel (the index maintainer's fold and
+    refresh swap) gives exactly ``assign_cells(with_distance=True)`` ⋈
+    ``pq_encode`` on nid — equal cell, dist2 and codes, bit for bit, on
+    any partitioning, for a normalized and a raw codebook. NULL
+    vectors: pq_encode and the fused kernel drop the row, assign_cells
+    fails its task (np.stack cannot stack a missing vector)."""
+    import numpy as np
+    from pyspark.errors import PythonException
+
+    rng = np.random.RandomState(11)
+    rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(300)]
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(rows, schema)
+    centroids = rng.randn(6, 16)
+    books = [
+        sim.train_pq(corpus, m=4, ksub=8, sample_rows=300, iters=4),
+        sim.train_pq(corpus, m=4, ksub=8, sample_rows=300, iters=4, normalize=False),
+    ]
+
+    def by_nid(df):
+        return {
+            r["nid"]: (r["cell"], r["dist2"], list(r["codes"]))
+            for r in df.collect()
+        }
+
+    for cb in books:
+        for df in (corpus, corpus.repartition(7)):
+            ref = by_nid(
+                sim.assign_cells(df, centroids, with_distance=True).join(
+                    sim.pq_encode(df, cb), "nid"
+                )
+            )
+            fused = by_nid(
+                sim._assign_encode(df, centroids, cb, with_distance=True)
+            )
+            assert len(ref) == 300
+            assert fused == ref
+
+    with_null = corpus.unionByName(spark.createDataFrame([(999, None)], schema))
+    cb = books[0]
+    fused = sim._assign_encode(with_null, centroids, cb).collect()
+    assert len(fused) == 300 and 999 not in {r["nid"] for r in fused}
+    assert 999 not in {r["nid"] for r in sim.pq_encode(with_null, cb).collect()}
+    with pytest.raises(PythonException):
+        sim.assign_cells(with_null, centroids).collect()
+
+
+def test_knn_tiers_with_no_queries_return_empty(spark):
+    """An empty query frame gives an empty (qid, nid, rank, score)
+    result on every broadcast-query tier instead of a numpy matmul
+    error on the (0, 0) query matrix."""
+    corpus = _emb(spark, 100)
+    none = corpus.filter(F.col("vec_id") < 0)
+    index = sim.build_ivf_index(corpus, n_cells=4)
+    cb = sim.train_pq(corpus, m=4, ksub=8, sample_rows=100, iters=2)
+    codes = sim.pq_encode(corpus, cb)
+    results = {
+        "brute_force_knn": sim.brute_force_knn(corpus, none),
+        "ivf_knn": sim.ivf_knn(corpus, none, index=index),
+        "pq_knn": sim.pq_knn(codes, cb, none),
+        "ivf_pq_knn": sim.ivf_pq_knn(codes, cb, index, none),
+    }
+    for name, df in results.items():
+        score = "adist" if "pq" in name else "cosine"
+        assert df.columns == ["qid", "nid", "rank", score], name
+        assert df.collect() == [], name
+
+
 def test_salted_join_rejects_empty_keys(spark):
     from sif_spark.operators.joins import salted_join
 

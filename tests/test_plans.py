@@ -3,6 +3,8 @@ scale must hold — pushdown, pruning, broadcast, partial aggregation."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from sif_spark.plans import audit, has_pushed_filter, join_strategies, scans
@@ -731,7 +733,7 @@ def test_bench_compare_adjudicates_by_fingerprint(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     import bench_compare as bc
 
     def capture(vals, fps, path):
@@ -810,7 +812,7 @@ def test_bench_compare_history_adjudicates_mean_reversion(tmp_path, monkeypatch)
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     import bench_compare as bc
 
     def capture(vals, path, fp="same"):

@@ -13,11 +13,14 @@ pytestmark = pytest.mark.cluster
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 
 def test_heavy_tail_spills_and_stays_oracle_correct():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/spill_probe.py"],
+        [sys.executable, str(TOOLS / "spill_probe.py")],
         capture_output=True,
         text=True,
         timeout=580,

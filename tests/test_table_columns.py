@@ -514,3 +514,48 @@ def test_legacy_unquoted_ddl_reads_and_next_manifest_quotes(spark, tdir):
     )
     assert sorted(tuple(r) for r in t.read().collect()) == want
     assert recorded() == "k bigint, `a b` string"
+
+
+def test_nested_struct_field_names_are_quoted(spark, tdir):
+    """A struct column whose field name is not a plain identifier
+    (``s.`a b```) records ``s struct<`a b`:bigint>``, so the table
+    reads and appends after create. A manifest written before nested
+    names were quoted (``s struct<a b:bigint>``) reads and appends
+    again, and the next manifest records the quoted form."""
+    from sif_spark.table import _ddl_fields
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.struct(F.col("id").alias("a b"), F.lit("v").alias("c")).alias("s"),
+        )
+
+    def got(df):
+        return sorted((r["k"], r["s"]["a b"], r["s"]["c"]) for r in df.collect())
+
+    mdir = os.path.join(tdir, "_manifests")
+
+    def recorded():  # the newest manifest's DDL as written on disk
+        with open(os.path.join(mdir, max(os.listdir(mdir)))) as fh:
+            return json.load(fh)["schema"]
+
+    t = SifTable.create(spark, tdir, rows(0, 10), key_col="k")
+    quoted = "k bigint, s struct<`a b`:bigint,c:string>"
+    assert recorded() == quoted
+    assert _ddl_fields(quoted)[1] == ("s", "struct<`a b`:bigint,c:string>")
+    assert got(t.read()) == [(k, k, "v") for k in range(10)]
+    t.append(rows(10, 15))
+    assert got(t.read()) == [(k, k, "v") for k in range(15)]
+
+    for name in os.listdir(mdir):
+        p = os.path.join(mdir, name)
+        with open(p) as fh:
+            text = fh.read()
+        with open(p, "w") as fh:
+            fh.write(text.replace("`a b`", "a b"))
+    assert recorded() == "k bigint, s struct<a b:bigint,c:string>"
+    t = SifTable(spark, tdir)
+    assert got(t.read()) == [(k, k, "v") for k in range(15)]
+    t.append(rows(15, 20))
+    assert got(t.read()) == [(k, k, "v") for k in range(20)]
+    assert recorded() == quoted

@@ -13,15 +13,18 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 pytestmark = pytest.mark.cluster
 
 
 def test_table_sigkill_mid_commit_never_tears_a_snapshot():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/table_fault_probe.py"],
+        [sys.executable, str(TOOLS / "table_fault_probe.py")],
         capture_output=True,
         text=True,
         timeout=1200,
@@ -42,7 +45,7 @@ def test_table_sigkill_under_conditional_put_store():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/table_fault_probe.py",
+            str(TOOLS / "table_fault_probe.py"),
             "--logstore=excl",
         ],
         capture_output=True,
@@ -61,7 +64,7 @@ def test_stream_cdc_apply_sigkill_mid_stream_never_double_applies():
     epoch as a committed no-op and converge to the source's exact
     content. See tools/stream_merge_fault_probe.py."""
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/stream_merge_fault_probe.py"],
+        [sys.executable, str(TOOLS / "stream_merge_fault_probe.py")],
         capture_output=True,
         text=True,
         timeout=1200,

@@ -16,13 +16,14 @@ tools/check_oracle.py.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
 pytestmark = pytest.mark.heavy
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from check_oracle import compare_tables
 from sif_spark.sources.parquet import TABLES

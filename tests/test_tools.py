@@ -5,10 +5,10 @@ Spark session.
   the verify skill names exists. A deleted probe is cited as
   ``git show <commit>:tools/<name>.py`` next to the record of its
   finding, which this check allows.
-- No tool hard-codes this checkout's path: each finds the repo root
-  from its own ``__file__``, so a run from a second checkout (say, a
-  copy of a parent commit for a before/after) imports that checkout's
-  sif_spark, not another's."""
+- No tool or test hard-codes this checkout's path: each finds the
+  repo root from its own ``__file__``, so a run from a second checkout
+  (say, a copy of a parent commit for a before/after) imports and
+  starts that checkout's sif_spark and tools, not another's."""
 
 from __future__ import annotations
 
@@ -47,7 +47,9 @@ def test_every_named_tool_exists():
 
 def test_no_tool_hard_codes_a_checkout_path():
     bad = [
-        f.name for f in sorted((ROOT / "tools").glob("*.py"))
+        str(f.relative_to(ROOT))
+        for d in ("tools", "tests")
+        for f in sorted((ROOT / d).glob("*.py"))
         if str(ROOT) in f.read_text()
     ]
     assert not bad, bad

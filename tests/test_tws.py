@@ -13,11 +13,14 @@ pytestmark = pytest.mark.cluster
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 
 def test_tws_zscore_parity_ttl_and_provider_gate():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/tws_probe.py"],
+        [sys.executable, str(TOOLS / "tws_probe.py")],
         capture_output=True,
         text=True,
         timeout=540,

@@ -12,15 +12,18 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+TOOLS = Path(__file__).resolve().parent.parent / "tools"
 
 pytestmark = pytest.mark.cluster
 
 
 def test_tws_timer_ports_match_builtin_operators():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/tws_timers_probe.py"],
+        [sys.executable, str(TOOLS / "tws_timers_probe.py")],
         capture_output=True,
         text=True,
         timeout=600,
