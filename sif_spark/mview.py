@@ -76,7 +76,6 @@ def incremental_aggregate_view(
     checkpoint_dir: str,
     app_id: str = "mv",
     starting_version: int = 0,
-    trigger_seconds: float = 0.0,
     max_versions_per_trigger: int = 0,
     cdf: bool = False,
 ) -> FoldQuery:
@@ -104,7 +103,6 @@ def incremental_aggregate_view(
         spark, src_path, fold, checkpoint_dir,
         feed="cdf" if cdf else "additive",
         starting_version=starting_version,
-        trigger_seconds=trigger_seconds,
         max_versions_per_trigger=max_versions_per_trigger,
     )
 

@@ -551,7 +551,8 @@ def assign_cells(
     The shared kernel of extend_ivf_index and the streaming index
     maintainer. ``with_distance`` adds the squared distance to the
     winning centroid — the refresh policy's staleness signal (a batch
-    whose vectors sit far from EVERY day-1 centroid is drifted)."""
+    whose vectors sit far from EVERY day-1 centroid is drifted). Rows
+    with a NULL vector are dropped, as ``pq_encode`` drops them."""
     return _assign_encode(
         vectors, centroids, None, vec_col, id_col, with_distance=with_distance
     )
@@ -575,9 +576,8 @@ def _assign_encode(
     batch's cells and codes from one scan instead of two scans joined
     on nid (an Exchange per micro-batch for row-aligned frames).
 
-    NULL vectors: with a codebook their rows are dropped (they carry no
-    codes); without one the batch fails, as ``assign_cells`` always
-    has (np.stack cannot stack a missing vector)."""
+    NULL vectors: their rows are dropped on every path (a missing
+    vector has no cell and no codes)."""
     spark = vectors.sparkSession
     pq_books = None if codebook is None else (codebook.codebooks, codebook.normalized)
     bc = spark.sparkContext.broadcast((centroids, pq_books))
@@ -620,9 +620,11 @@ def _assign_encode(
     run.__name__ = (
         "encode" if centroids is None else "assign" if codebook is None else "run"
     )
-    if codebook is not None:
-        vectors = vectors.filter(F.col(vec_col).isNotNull())
-    return vectors.select(id_col, vec_col).mapInPandas(run, T.StructType(fields))
+    return (
+        vectors.filter(F.col(vec_col).isNotNull())
+        .select(id_col, vec_col)
+        .mapInPandas(run, T.StructType(fields))
+    )
 
 
 class AnnGenMeta:
@@ -810,6 +812,15 @@ def load_maintained_index(spark, index_table_path: str):
     return load_ann_meta(index_table_path, gen), dst.read()
 
 
+# the maintainer's refresh policy: k-means / PQ training seed, and the
+# serving-health probe's query count, exact top-k and the share of the
+# ADC candidate budget its neighbours must fall in
+_REFRESH_SEED = 43
+_REFRESH_PROBE_QUERIES = 8
+_REFRESH_K = 5
+_REFRESH_MARGIN = 0.5
+
+
 def maintain_ivf_index_table(
     spark,
     corpus_table_path: str,
@@ -820,19 +831,13 @@ def maintain_ivf_index_table(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     starting_version: int = 0,
-    trigger_seconds: float = 0.0,
     max_versions_per_trigger: int = 0,
     pq_codebook: "PQCodebook | None" = None,
     cdf: bool = False,
     refresh_staleness_ratio: float | None = None,
     refresh_sample_rows: int = 4096,
-    refresh_n_cells: int | None = None,
-    refresh_seed: int = 43,
     refresh_candidates: int | None = None,
-    refresh_k: int = 5,
-    refresh_probe_queries: int = 8,
     refresh_growth_check: float = 1.5,
-    refresh_margin: float = 0.5,
 ) -> FoldQuery:
     """Maintain an IVF index AS a SifTable, incrementally, from a
     corpus SifTable's change feed (VERDICT r10 "Next round" #6 — the
@@ -852,7 +857,9 @@ def maintain_ivf_index_table(
     each under the same txn epoch so a crash-replayed batch re-commits
     neither half. Without cdf, a delete version fails the stream
     loudly (the append feed cannot represent it) rather than leaving
-    stale index rows.
+    stale index rows. Corpus rows whose embedding is NULL are
+    skipped: they get no index row, and an upsert that sets an indexed
+    row's embedding to NULL leaves its earlier index row in place.
 
     ``pq_codebook`` (a trained PQCodebook) additionally ENCODES each
     batch — the index table rows become (nid, cell, codes), i.e. the
@@ -875,7 +882,8 @@ def maintain_ivf_index_table(
       measures its batch's mean squared assignment distance against
       the generation's ANCHOR (same statistic over a corpus sample at
       train time); past the ratio, centroids (+ codebook) re-train on
-      a bounded deterministic sample of the CURRENT corpus.
+      a bounded deterministic sample of the CURRENT corpus, keeping the
+      generation's cell count (seed ``_REFRESH_SEED``).
       Same-distribution appends never trip it.
     - ``refresh_candidates``: serving health, the trigger that
       actually protects a FIXED ADC candidate budget (requires
@@ -887,10 +895,10 @@ def maintain_ivf_index_table(
       maintainer probes directly: whenever the corpus has grown
       ``refresh_growth_check``× since the last probe (exact row
       counts from the manifest — O(log n) probes over a table's
-      lifetime), it takes ``refresh_probe_queries`` hash-sampled
-      queries, computes their exact top-``refresh_k`` (one bounded
+      lifetime), it takes ``_REFRESH_PROBE_QUERIES`` hash-sampled
+      queries, computes their exact top-``_REFRESH_K`` (one bounded
       distributed pass), and checks containment in the index's ADC
-      top-(``refresh_margin``·``refresh_candidates``). A miss
+      top-(``_REFRESH_MARGIN``·``refresh_candidates``). A miss
       refreshes with the code width ESCALATED (m doubled while it
       divides dim), re-encodes, swaps, and re-probes — restoring
       fixed-candidate serving with measured margin.
@@ -1034,13 +1042,13 @@ def maintain_ivf_index_table(
         sample = _hash_sample(
             corpus, id_col, refresh_sample_rows
         ).localCheckpoint(eager=True)
-        n_cells = refresh_n_cells or len(meta.centroids)
+        n_cells = len(meta.centroids)
         if keep_centroids and meta.codebook is not None:
             new_cents = meta.centroids
             new_cb = train_pq(
                 sample, vec_col=vec_col, id_col=id_col,
                 m=m_new or meta.codebook.m, ksub=meta.codebook.ksub,
-                sample_rows=refresh_sample_rows, seed=refresh_seed,
+                sample_rows=refresh_sample_rows, seed=_REFRESH_SEED,
                 normalize=meta.codebook.normalized,
             )
         elif meta.codebook is not None:
@@ -1054,12 +1062,12 @@ def maintain_ivf_index_table(
             new_index, new_cb = _parallel_jobs(
                 lambda: build_ivf_index(
                     sample, vec_col=vec_col, id_col=id_col,
-                    n_cells=n_cells, max_iter=4, seed=refresh_seed,
+                    n_cells=n_cells, max_iter=4, seed=_REFRESH_SEED,
                 ),
                 lambda: train_pq(
                     sample, vec_col=vec_col, id_col=id_col,
                     m=m_new or meta.codebook.m, ksub=meta.codebook.ksub,
-                    sample_rows=refresh_sample_rows, seed=refresh_seed,
+                    sample_rows=refresh_sample_rows, seed=_REFRESH_SEED,
                     normalize=meta.codebook.normalized,
                 ),
             )
@@ -1067,7 +1075,7 @@ def maintain_ivf_index_table(
         else:
             new_cents = build_ivf_index(
                 sample, vec_col=vec_col, id_col=id_col, n_cells=n_cells,
-                max_iter=4, seed=refresh_seed,
+                max_iter=4, seed=_REFRESH_SEED,
             ).centroids
             new_cb = None
         anchor = _mean_assign_dist2(sample, new_cents, vec_col, id_col)
@@ -1127,17 +1135,17 @@ def maintain_ivf_index_table(
         if "true" not in ctx:
             corpus = SifTable(session, corpus_table_path).read()
             qs = _hash_sample(
-                corpus, id_col, refresh_probe_queries
+                corpus, id_col, _REFRESH_PROBE_QUERIES
             ).localCheckpoint(eager=True)
             ctx["qs"] = qs
             ctx["true"] = brute_force_knn(
-                corpus, qs, k=refresh_k, vec_col=vec_col, id_col=id_col
+                corpus, qs, k=_REFRESH_K, vec_col=vec_col, id_col=id_col
             ).select("qid", "nid").localCheckpoint(eager=False)
         qs, true = ctx["qs"], ctx["true"]
         idx_rows = SifTable(session, index_table_path).read().select(
             "nid", "codes"
         )
-        budget = max(1, int(refresh_candidates * refresh_margin))
+        budget = max(1, int(refresh_candidates * _REFRESH_MARGIN))
         cand = pq_knn(
             idx_rows, meta.codebook, qs, k=budget,
             vec_col=vec_col, query_id_col=id_col,
@@ -1251,7 +1259,6 @@ def maintain_ivf_index_table(
         spark, corpus_table_path, fold, checkpoint_dir,
         feed="cdf" if cdf else "keyed",
         starting_version=starting_version,
-        trigger_seconds=trigger_seconds,
         max_versions_per_trigger=max_versions_per_trigger,
     )
 
@@ -1396,6 +1403,12 @@ def ivf_knn(
     instead of silently joining stale (nid, cell) assignments
     (ADVICE r4)."""
     spark = corpus.sparkSession
+    collected = None
+    if broadcast_queries and index is None:
+        # the query side before the fit: no queries, no k-means
+        collected = _collect_normalized(queries, vec_col, id_col)
+        if len(collected[0]) == 0:
+            return _no_queries(spark, "cosine")
     if index is None:
         index = build_ivf_index(corpus, vec_col, id_col, n_cells, seed, max_iter)
     else:
@@ -1418,7 +1431,7 @@ def ivf_knn(
 
     if broadcast_queries:
         # query-side probe list: small — computed on the driver
-        qids, Q = _collect_normalized(queries, vec_col, id_col)
+        qids, Q = collected or _collect_normalized(queries, vec_col, id_col)
         if len(qids) == 0:
             return _no_queries(spark, "cosine")
         probe_cells = np.argsort(-(Q @ cnorm.T), axis=1)[:, :n_probe]

@@ -925,8 +925,7 @@ def q183_incremental_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sgsim.maintain_ivf_index_table(
         spark, corpus_path, idx_path, seed_index.centroids, ckpt,
         app_id="q183", max_versions_per_trigger=2, pq_codebook=cb,
-        refresh_candidates=200, refresh_k=5, refresh_probe_queries=8,
-        refresh_growth_check=2.0, refresh_margin=0.5,
+        refresh_candidates=200, refresh_growth_check=2.0,
         refresh_sample_rows=32768,
     )
     try:

@@ -579,10 +579,13 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
     driver-side commit() (a sessionless Python worker — everything is
     plain file I/O on the shared FS, the same contract the planner
     already relies on) moves the staged files into a version-named
-    group dir and publishes the manifest through the PosixExclLogStore
-    conditional put, retrying CAS losses against the fresh snapshot. A
-    failure anywhere before the publish leaves an invisible staging
-    orphan. ``txn_app``/``txn_epoch`` options give appends the same
+    group dir and publishes the manifest through table._publish over
+    the PosixExclLogStore conditional put — the one commit loop every
+    SifTable writer uses. A lost CAS re-reads the head, re-checks the
+    refusals below against it, renames the group dir to the next
+    version (os.rename) and re-puts; no executor work re-runs. A
+    failure anywhere before the publish removes the staging dir and
+    the moved group dir. ``txn_app``/``txn_epoch`` options give appends the same
     crash-replay idempotence as SifTable.append(txn=).
 
     Boundaries (raise, never corrupt): the incoming schema must equal
@@ -663,20 +666,21 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         import shutil
 
         # Error paths (bucketed-table / schema-mismatch ValueError,
-        # CAS starvation) must reclaim the staging dir AND a group dir
-        # already moved under data/ on a lost CAS iteration — Spark is
-        # not guaranteed to call abort() after a driver-side commit
-        # failure, and vacuum never lists _staging, so the orphans
-        # would accumulate forever (ADVICE r11 low). A dir under
-        # data/ that never made a manifest is invisible to readers,
-        # so removing it here is safe at any point before the publish.
-        self._moved_gpath = None
+        # CAS starvation) must reclaim the staging dir AND the group
+        # dir already moved under data/ (under its latest name) —
+        # Spark is not guaranteed to call abort() after a driver-side
+        # commit failure, and vacuum never lists _staging, so the
+        # orphans would accumulate forever (ADVICE r11 low). A dir
+        # under data/ that never made a manifest is invisible to
+        # readers, so removing it here is safe at any point before the
+        # publish.
+        self._fresh: list[dict] = []
         try:
             self._commit_inner(messages)
         except BaseException:
             shutil.rmtree(self.staging, ignore_errors=True)
-            if self._moved_gpath is not None:
-                shutil.rmtree(self._moved_gpath, ignore_errors=True)
+            for d in self._fresh:
+                shutil.rmtree(d["path"], ignore_errors=True)
             raise
 
     def _commit_inner(self, messages) -> None:
@@ -687,8 +691,8 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         from sif_spark.table import (
             _advance_txns,
             _ddl,
-            _intern_col_eras,
-            _manifest_file,
+            _fresh_columns,
+            _publish,
             next_manifest,
         )
 
@@ -710,75 +714,46 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 col_stats[c] = [min(los) if los else None,
                                 max(his) if his else None]
         ddl = _ddl(self.schema)
-        store = PosixExclLogStore()
-        gpath = None
-        for _ in range(30):
-            versions = _versions_on_disk(self.table_path)
-            if not versions:
-                m, v, op = {}, 1, "create"
-            else:
-                m = _load_manifest(self.table_path, versions[-1])
-                if m.get("bucket"):
-                    raise ValueError(
-                        "bucketed tables own their layout — write through "
-                        "SifTable.append(), which plans the bucketed write"
-                    )
-                if m["schema"] != ddl:
-                    raise ValueError(
-                        f"sif_table writer schema {ddl!r} != snapshot schema "
-                        f"{m['schema']!r} — schema evolution goes through "
-                        "the SifTable API"
-                    )
-                v = m["version"] + 1
-                op = "overwrite" if self.overwrite else "append"
-            txns = _advance_txns(m, self.txn)
-            if txns is None:
-                shutil.rmtree(self.staging, ignore_errors=True)
-                return  # replayed epoch: committed no-op
+        versions = _versions_on_disk(self.table_path)
+        head = _load_manifest(self.table_path, versions[-1]) if versions else {}
+        if _advance_txns(head, self.txn) is None:
+            shutil.rmtree(self.staging, ignore_errors=True)
+            return  # replayed epoch: committed no-op
+        if files:
+            v = head.get("version", 0) + 1
+            gid = f"g-{v:010d}-000-{uuid.uuid4().hex[:8]}"
+            gpath = os.path.join(self.table_path, "data", gid)
+            self._fresh.append({"id": gid, "path": gpath})
+            os.makedirs(gpath, exist_ok=True)
+            for msg in files:
+                os.rename(
+                    msg.file, os.path.join(gpath, os.path.basename(msg.file))
+                )
+
+        def build(m: dict) -> dict:
+            if m.get("bucket"):
+                raise ValueError(
+                    "bucketed tables own their layout — write through "
+                    "SifTable.append(), which plans the bucketed write"
+                )
+            if m and m["schema"] != ddl:
+                raise ValueError(
+                    f"sif_table writer schema {ddl!r} != snapshot schema "
+                    f"{m['schema']!r} — schema evolution goes through "
+                    "the SifTable API"
+                )
             key = m.get("key_col") or self.key_col
-            if m:
-                columns = m.get("columns")
-            else:
-                # fresh table: mint column ids (the rename/drop
-                # machinery's anchor — same rule as SifTable.create)
-                columns = [
-                    {"id": i, "name": f.name}
-                    for i, f in enumerate(self.schema.fields)
-                ]
-            col_ids = (
-                {c["name"]: c["id"] for c in columns} if columns else None
-            )
-            added: list[str] = []
-            new_groups: list[dict] = []
-            if files:
-                gid = f"g-{v:010d}-000-{uuid.uuid4().hex[:8]}"
-                new_gpath = os.path.join(self.table_path, "data", gid)
-                if gpath is None:
-                    os.makedirs(new_gpath, exist_ok=True)
-                    for msg in files:
-                        os.rename(
-                            msg.file,
-                            os.path.join(
-                                new_gpath, os.path.basename(msg.file)
-                            ),
-                        )
-                else:
-                    # CAS retry: re-mint the version in the group name
-                    os.rename(gpath, new_gpath)
-                gpath = new_gpath
-                self._moved_gpath = gpath  # reclaimed if commit fails
-                group = {"id": gid, "path": gpath, "schema": ddl,
-                         "rows": total_rows}
-                if col_ids:
-                    group["col_ids"] = col_ids
+            columns = m.get("columns") if m else _fresh_columns(self.schema)
+            new_groups = []
+            for entry in self._fresh:
+                group = {**entry, "schema": ddl, "rows": total_rows}
+                if columns:
+                    group["col_ids"] = {c["name"]: c["id"] for c in columns}
                 if col_stats:
-                    group["stats"] = {
-                        c: list(b) for c, b in col_stats.items()
-                    }
+                    group["stats"] = {c: list(b) for c, b in col_stats.items()}
                 if key and key in col_stats:
                     group["key_min"], group["key_max"] = col_stats[key]
-                added = [gid]
-                new_groups = [group]
+                new_groups.append(group)
             # an empty-frame OVERWRITE commits groups=[] (a readable
             # empty snapshot) — a zero-file group dir would make the
             # new latest version unreadable
@@ -790,24 +765,19 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             # dvs list silently resurrected every tombstoned row) and
             # the monotonic column-id watermark (the DS writer never
             # mints ids, but a later API-side drop/re-add relies on it)
-            manifest = next_manifest(
-                m, op, groups, ddl, columns=columns, added=added,
-                txns=txns, key_col=key,
+            op = "overwrite" if self.overwrite else "append"
+            return next_manifest(
+                m, op if m else "create", groups, ddl, columns=columns,
+                added=[g["id"] for g in new_groups],
+                txns=_advance_txns(m, self.txn), key_col=key,
             )
-            if store.put_if_absent(
-                _manifest_file(self.table_path, v),
-                json.dumps(_intern_col_eras(manifest), indent=1),
-            ):
-                self._moved_gpath = None  # committed: now owned by readers
-                shutil.rmtree(
-                    os.path.join(self.table_path, "_staging", self.write_id),
-                    ignore_errors=True,
-                )
-                return
-            # lost the CAS: loop re-reads the fresh snapshot
-        raise RuntimeError(
-            "sif_table writer starved through 30 commit retries"
+
+        _publish(
+            PosixExclLogStore(), self.table_path, head, build, self._fresh,
+            os.rename, self.txn,
         )
+        self._fresh = []  # committed: now owned by readers
+        shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:
         import shutil
@@ -926,7 +896,7 @@ class FoldQuery:
     def __init__(self, table: SifTable,
                  fold: Callable[[DataFrame, int], None],
                  checkpoint_dir: str, feed: str, starting_version: int,
-                 trigger_seconds: float, max_versions: int):
+                 max_versions: int):
         from sif_spark.table import strip_file_scheme
 
         self._table = table
@@ -935,7 +905,6 @@ class FoldQuery:
         self._flags = _FEED_FLAGS[feed]
         self._cdf = feed == "cdf"
         self._start = int(starting_version)
-        self._poll = max(float(trigger_seconds), _MIN_POLL_S)
         self._cap = int(max_versions)
         self._head = table._load()
         self._epoch, self._after, self._pending = self._recover()
@@ -998,7 +967,7 @@ class FoldQuery:
                     continue
                 with self._cv:
                     if not (self._wake or self._stopping):
-                        self._cv.wait(self._poll)
+                        self._cv.wait(_MIN_POLL_S)
                     self._wake = False
         except Exception as e:  # any fold or planner error ends the query
             self._error = self._query_error(e)
@@ -1114,7 +1083,6 @@ def fold_table_changes(
     *,
     feed: str,
     starting_version: int = 0,
-    trigger_seconds: float = 0.0,
     max_versions_per_trigger: int = 0,
 ) -> FoldQuery:
     """Start the one change-feed consumer: hand each window of
@@ -1125,8 +1093,8 @@ def fold_table_changes(
     ``feed`` is ``"cdf"`` (every row change with its ``_change_type``),
     ``"additive"`` or ``"keyed"`` (the append feed, refusing a version
     that replaced or removed rows, or only one that removed them).
-    ``max_versions_per_trigger`` caps each window; ``trigger_seconds``
-    is the idle poll interval. ``checkpoint_dir`` keeps Spark's
+    ``max_versions_per_trigger`` caps each window; an idle source is
+    polled every ``_MIN_POLL_S``. ``checkpoint_dir`` keeps Spark's
     offsets/commits layout, so a checkpoint written by a ``sif_table``
     foreachBatch query resumes here. The fold starts with
     ``settle_changes`` and commits with ``txn=(app_id, epoch_id)``, so
@@ -1140,7 +1108,7 @@ def fold_table_changes(
 
     return FoldQuery(
         SifTable(spark, src_path), fold, checkpoint_dir, feed,
-        starting_version, trigger_seconds, max_versions_per_trigger,
+        starting_version, max_versions_per_trigger,
     )
 
 

@@ -866,7 +866,6 @@ def merge_changes_into_table(
     target_table_path: str,
     app_id: str,
     checkpoint_dir: str,
-    trigger_seconds: float = 0.0,
     starting_version: int = 0,
     max_versions_per_trigger: int = 0,
 ) -> FoldQuery:
@@ -933,6 +932,5 @@ def merge_changes_into_table(
     return fold_table_changes(
         spark, source_table_path, apply_batch, checkpoint_dir, feed="cdf",
         starting_version=starting_version,
-        trigger_seconds=trigger_seconds,
         max_versions_per_trigger=max_versions_per_trigger,
     )

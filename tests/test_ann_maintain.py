@@ -88,6 +88,32 @@ def test_maintain_resumes_and_folds_reembedding(spark, dirs):
     assert idx.select("nid").distinct().count() == 150
 
 
+def test_maintain_skips_null_embeddings_without_codebook(spark, dirs):
+    """A corpus row with a NULL embedding gets no index row, with or
+    without a codebook: the maintainer without ``pq_codebook`` folds
+    past it instead of failing its assignment task."""
+    src_path, idx_path, ck = dirs
+    src = SifTable.create(
+        spark, src_path, _vecs(spark, 0, 60), key_col="vec_id"
+    )
+    centroids = sgsim.build_ivf_index(
+        _vecs(spark, 0, 60), n_cells=4, max_iter=2
+    ).centroids
+    batch = _vecs(spark, 60, 90).withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 5 != 0, F.col("embedding")),
+    )
+    src.append(batch)
+    q = sgsim.maintain_ivf_index_table(
+        spark, src_path, idx_path, centroids, ck, app_id="m"
+    )
+    _drain(q)
+    assert q.exception() is None
+    nids = {r["nid"] for r in SifTable(spark, idx_path).read().collect()}
+    assert nids == set(range(60)) | {i for i in range(60, 90) if i % 5}
+    _assert_index_exact(spark, idx_path, src.read(), centroids)
+
+
 def test_cdf_maintain_retires_deleted_vectors(spark, dirs):
     """cdf=True maintenance: corpus deletes retire their index rows
     (delete_keys under the batch's second sub-epoch), re-embeddings

@@ -1634,10 +1634,8 @@ def test_fused_assign_encode_equals_assign_join_encode(spark):
     refresh swap) gives exactly ``assign_cells(with_distance=True)`` ⋈
     ``pq_encode`` on nid — equal cell, dist2 and codes, bit for bit, on
     any partitioning, for a normalized and a raw codebook. NULL
-    vectors: pq_encode and the fused kernel drop the row, assign_cells
-    fails its task (np.stack cannot stack a missing vector)."""
+    vectors: every path of the kernel drops the row."""
     import numpy as np
-    from pyspark.errors import PythonException
 
     rng = np.random.RandomState(11)
     rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(300)]
@@ -1673,8 +1671,22 @@ def test_fused_assign_encode_equals_assign_join_encode(spark):
     fused = sim._assign_encode(with_null, centroids, cb).collect()
     assert len(fused) == 300 and 999 not in {r["nid"] for r in fused}
     assert 999 not in {r["nid"] for r in sim.pq_encode(with_null, cb).collect()}
-    with pytest.raises(PythonException):
-        sim.assign_cells(with_null, centroids).collect()
+    assigned = sim.assign_cells(with_null, centroids).collect()
+    assert len(assigned) == 300 and 999 not in {r["nid"] for r in assigned}
+
+
+def test_ivf_knn_with_no_queries_fits_no_index(spark):
+    """ivf_knn(index=None) collects a broadcast query frame before it
+    fits the k-means index, so an empty query frame returns the empty
+    result after the query collect alone: no k-means job runs."""
+    corpus = _emb(spark, 100)
+    none = corpus.filter(F.col("vec_id") < 0)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    n0 = sched.nextJobId()
+    out = sim.ivf_knn(corpus, none, n_cells=4)
+    assert sched.nextJobId() - n0 <= 1
+    assert out.columns == ["qid", "nid", "rank", "cosine"]
+    assert out.collect() == []
 
 
 def test_knn_tiers_with_no_queries_return_empty(spark):

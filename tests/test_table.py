@@ -2016,6 +2016,71 @@ def test_rebase_commit_deterministic_remints_version_dirs(spark, tdir):
     assert ch.filter("v = 'IB'").count() == 100
 
 
+def test_append_rebase_writes_its_group_once(spark, tdir):
+    """Deterministic append rebase: the appender plans against a stale
+    snapshot (one-shot stale _load) while another append commits v2,
+    so its first manifest put loses. The group it already wrote is
+    re-committed on the new head: the group write runs ONCE, the
+    committed group's id and path carry the committed version (the
+    change feed derives _commit_version from the path), and no other
+    dir from this append is left under data/."""
+    import os
+
+    SifTable.create(spark, tdir, _df(spark, 0, 10, "base"), key_col="k")
+    tb = SifTable(spark, tdir)
+    m0 = tb._load()
+    real_load, real_write = tb._load, tb._write_group
+    state = {"stale": True}
+    writes: list = []
+
+    def stale_once(v=None):
+        if v is None and state["stale"]:
+            state["stale"] = False
+            return m0
+        return real_load(v)
+
+    def counted(*a, **kw):
+        writes.append(a[1])
+        return real_write(*a, **kw)
+
+    tb._load, tb._write_group = stale_once, counted
+    SifTable(spark, tdir).append(_df(spark, 10, 20, "other"))  # v2
+    before = set(os.listdir(f"{tdir}/data"))
+    assert tb.append(_df(spark, 100, 110, "mine")) == 3
+    assert writes == [2]  # written once, planned as version 2
+    m3 = tb._load(3)
+    g = m3["groups"][-1]
+    assert g["id"].startswith("g-0000000003-")
+    assert g["path"] == f"{tdir}/data/{g['id']}"
+    assert m3["added"] == [g["id"]] and m3["parent"] == 2
+    ch = tb.changes(2)
+    assert {r["_commit_version"] for r in ch.collect()} == {3}
+    assert sorted(r["k"] for r in ch.collect()) == list(range(100, 110))
+    assert set(os.listdir(f"{tdir}/data")) - before == {g["id"]}
+    assert tb.read().count() == 30
+
+
+def test_one_manifest_put_site():
+    """Every manifest publish goes through table._publish: exactly one
+    call of put_if_absent in sif_spark/ outside the log stores."""
+    import ast
+    import pathlib
+
+    import sif_spark
+
+    root = pathlib.Path(sif_spark.__file__).parent
+    sites = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in sorted(root.rglob("*.py"))
+        if f.name != "logstore.py"
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "put_if_absent"
+    ]
+    assert len(sites) == 1 and sites[0].startswith("table.py:"), sites
+
+
 def test_merge_raw_source_conditions_and_evolve_schema_flag(spark, tdir):
     """merge() clause conditions see the RAW source (a CDC op column
     steers clauses without joining the table schema), and
