@@ -814,11 +814,13 @@ def load_maintained_index(spark, index_table_path: str):
 
 # the maintainer's refresh policy: k-means / PQ training seed, and the
 # serving-health probe's query count, exact top-k and the share of the
-# ADC candidate budget its neighbours must fall in
+# ADC candidate budget its neighbours must fall in; the probe re-runs
+# once the corpus has grown _REFRESH_GROWTH_CHECK-fold since the last one
 _REFRESH_SEED = 43
 _REFRESH_PROBE_QUERIES = 8
 _REFRESH_K = 5
 _REFRESH_MARGIN = 0.5
+_REFRESH_GROWTH_CHECK = 2.0
 
 
 def maintain_ivf_index_table(
@@ -837,7 +839,6 @@ def maintain_ivf_index_table(
     refresh_staleness_ratio: float | None = None,
     refresh_sample_rows: int = 4096,
     refresh_candidates: int | None = None,
-    refresh_growth_check: float = 1.5,
 ) -> FoldQuery:
     """Maintain an IVF index AS a SifTable, incrementally, from a
     corpus SifTable's change feed (VERDICT r10 "Next round" #6 — the
@@ -857,9 +858,12 @@ def maintain_ivf_index_table(
     each under the same txn epoch so a crash-replayed batch re-commits
     neither half. Without cdf, a delete version fails the stream
     loudly (the append feed cannot represent it) rather than leaving
-    stale index rows. Corpus rows whose embedding is NULL are
-    skipped: they get no index row, and an upsert that sets an indexed
-    row's embedding to NULL leaves its earlier index row in place.
+    stale index rows. Corpus rows whose embedding is NULL get no index
+    row, and an upsert that sets an indexed row's embedding to NULL
+    retires that row's index entry: with ``cdf`` as one more tombstone
+    of the window's delete_keys, otherwise by a delete_keys under
+    ``txn=(f"{app_id}-retire", epoch)`` (skipped for a window of
+    appends only, whose keys were never indexed).
 
     ``pq_codebook`` (a trained PQCodebook) additionally ENCODES each
     batch — the index table rows become (nid, cell, codes), i.e. the
@@ -893,7 +897,7 @@ def maintain_ivf_index_table(
       corpus does NOT fix it (worst true-neighbor rank 833 → 1048),
       DOUBLING the code width does (m=8 → m=16: 833 → 46). So the
       maintainer probes directly: whenever the corpus has grown
-      ``refresh_growth_check``× since the last probe (exact row
+      ``_REFRESH_GROWTH_CHECK``× since the last probe (exact row
       counts from the manifest — O(log n) probes over a table's
       lifetime), it takes ``_REFRESH_PROBE_QUERIES`` hash-sampled
       queries, computes their exact top-``_REFRESH_K`` (one bounded
@@ -949,20 +953,24 @@ def maintain_ivf_index_table(
         return meta_cache[g]
 
     def _assign(df: DataFrame, meta: "AnnGenMeta | None"):
-        """(assigned rows, batch mean dist2 or None) against the
-        CURRENT generation's centroids/codebook. The RETURNED frame is
+        """(assigned rows, batch mean dist2 or None, the batch's count
+        of NULL embeddings) against the CURRENT generation's
+        centroids/codebook. The RETURNED frame is
         eagerly materialized (one localCheckpoint holding assignment +
         codes + gen): the merge downstream runs ~4 actions over it
         (key bounds, bloom probes, group writes) and each would
         otherwise re-run both GEMMs — and re-read the batch source —
-        per action. The staleness statistic (mean dist2) rides the
-        SAME checkpoint job as an observed metric — the old separate
-        avg() aggregate cost one more action wave per fold."""
+        per action. The staleness statistic (mean dist2) and the NULL
+        count ride the SAME checkpoint job as observed metrics — the
+        old separate avg() aggregate cost one more action wave per
+        fold."""
         from pyspark.sql import Observation
 
-        # assignment (+ encoding with a codebook): one Arrow pass
+        # assignment (+ encoding with a codebook): one Arrow pass. The
+        # kernel drops NULL vectors, so they are counted on its input
+        nulls = Observation()
         assigned = _assign_encode(
-            df,
+            df.observe(nulls, F.count_if(F.col(vec_col).isNull()).alias("n")),
             meta.centroids if meta else centroids,
             meta.codebook if meta else pq_codebook,
             vec_col=vec_col, id_col=id_col, with_distance=refresh_on,
@@ -980,7 +988,7 @@ def maintain_ivf_index_table(
             assigned = assigned.drop("dist2")
         else:
             assigned = assigned.localCheckpoint(eager=True)
-        return assigned, mean_d
+        return assigned, mean_d, int(nulls.get["n"])
 
     def _merge(
         session, assigned: DataFrame, txn: tuple, all_new: bool = False
@@ -1177,7 +1185,7 @@ def maintain_ivf_index_table(
         except FileNotFoundError:
             return  # nothing indexed yet
         rows_now = _corpus_rows(session)
-        if rows_now < refresh_growth_check * max(
+        if rows_now < _REFRESH_GROWTH_CHECK * max(
             1, _read_probe_state(session, index_table_path)
         ):
             return
@@ -1218,13 +1226,24 @@ def maintain_ivf_index_table(
         )
         meta = _meta_for(session)
         if not cdf:
-            assigned, mean_d = _assign(fin, meta)
-            _merge(session, assigned, (app_id, int(epoch_id)), all_new)
+            assigned, mean_d, nulls = _assign(fin, meta)
+            dst = _merge(session, assigned, (app_id, int(epoch_id)), all_new)
+            if nulls and not all_new:
+                # an upsert nulled these rows' embeddings: retire their
+                # index rows under the maintainer's own retire txn app
+                dst.delete_keys(
+                    fin.filter(F.col(vec_col).isNull())
+                    .select(F.col(id_col).alias("nid")),
+                    txn=(f"{app_id}-retire", int(epoch_id)),
+                )
             _maybe_refresh(session, meta, mean_d, epoch_id)
             return
         # ONE aggregate over the settled in-memory batch settles both
-        # emptiness gates
+        # emptiness gates; outside an all-appends window a NULL
+        # embedding retires its index row like a delete
         is_del = F.col("_change_type") == "delete"
+        if not all_new:
+            is_del = is_del | F.col(vec_col).isNull()
         n_ups, n_dels = fin.agg(
             F.count_if(~is_del), F.count_if(is_del)
         ).first()
@@ -1237,7 +1256,7 @@ def maintain_ivf_index_table(
         base = 2 * int(epoch_id)
         mean_d = None
         if n_ups:
-            assigned, mean_d = _assign(ups, meta)
+            assigned, mean_d, _ = _assign(ups, meta)
             dst = _merge(session, assigned, (app_id, base), all_new)
         else:
             dst = SifTable(session, index_table_path)

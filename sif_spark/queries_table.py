@@ -319,9 +319,9 @@ def q175_table_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = _dt.datetime(1995, 6, 1)
     hi = _dt.datetime(1996, 6, 1)
     m = t._load()
-    from sif_spark.table import _stat_bound
+    from sif_spark.table import _stat_bound, prune_groups
 
-    kept = t._prune_groups(m, "o_orderdate", _stat_bound(lo), _stat_bound(hi))
+    kept = prune_groups(m, {"o_orderdate": (_stat_bound(lo), _stat_bound(hi))})
     assert len(kept) == 1, f"data skipping must keep 1 of 3 groups, kept {len(kept)}"
     return t.read_between("o_orderdate", lo, hi).agg(
         F.count(F.lit(1)).alias("n"),
@@ -925,8 +925,7 @@ def q183_incremental_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sgsim.maintain_ivf_index_table(
         spark, corpus_path, idx_path, seed_index.centroids, ckpt,
         app_id="q183", max_versions_per_trigger=2, pq_codebook=cb,
-        refresh_candidates=200, refresh_growth_check=2.0,
-        refresh_sample_rows=32768,
+        refresh_candidates=200, refresh_sample_rows=32768,
     )
     try:
         q.processAllAvailable()

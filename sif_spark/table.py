@@ -62,15 +62,19 @@ a matched key: range-disjoint groups skip on min/max, and
 range-OVERLAPPING groups skip when no update key survives their bloom
 (interleaved key layouts defeat min/max alone — every group overlaps
 every batch). The nightly cost is O(batch + touched groups), not
-O(table). Saturated blooms (>60 % fill) are dropped, falling back to
-range-only — skipping is an optimization, never a correctness input
-(false positive ⇒ harmless rewrite). Group dirs are plain parquet:
-every scan benefit (pushdown, pruning, row-group stats) is Spark's.
+O(table). One sessionless function, ``prune_groups``, makes every
+group-skipping decision: read_between, lookup, the `sif_table` batch
+reader's pushed filters, the keyed mutations' rewrite set and the
+commit rebase's conflict check. Saturated blooms (>60 % fill) are
+dropped, falling back to range-only — skipping is an optimization,
+never a correctness input (false positive ⇒ harmless rewrite). Group
+dirs are plain parquet: every scan benefit (pushdown, pruning,
+row-group stats) is Spark's.
 
 Keyed mutations: upsert, merge and delete_keys share ONE per-attempt
 core, ``SifTable._keyed_once`` (txn-replay check → key validation →
-source materialization → the bounds ∥ bloom-probe wave → the two-tier
-group split → one parallel write wave → manifest → ``_publish``,
+source materialization → the bounds ∥ bloom-probe wave →
+``prune_groups`` → one parallel write wave → manifest → ``_publish``,
 whose conflict-granular rebase is ``_rebased``), retried by one
 wrapper (``_retrying``);
 each op only plans what differs — the anti-join survivor rewrite
@@ -270,8 +274,9 @@ def _stat_json(v):
 
 def _stat_bound(v):
     """A caller-supplied pruning bound → the same JSON form used by
-    _stat_json, so comparisons are like-vs-like."""
-    out = _stat_json(v)
+    _stat_json, so comparisons are like-vs-like. A string of any length
+    compares: only the recorded stats are capped."""
+    out = v if isinstance(v, str) else _stat_json(v)
     if out is _STAT_SKIP:
         raise TypeError(f"read_between cannot prune on values of {type(v)}")
     return out
@@ -338,31 +343,52 @@ def _java_error_is(spark: SparkSession, e, java_class: str) -> bool:
     return is_instance_of(spark.sparkContext._gateway, e.java_exception, java_class)
 
 
-def prune_groups(m: dict, col: str, lo, hi) -> list[dict]:
-    """Groups of manifest ``m`` that MAY hold a row with ``col`` in
-    [lo, hi] — the read-side data-skipping decision, as a module
-    function so the sessionless DataSource planner (sources/
-    table_stream.py reader) shares the exact same logic as
-    SifTable.read_between/lookup. Conservative by design: groups
-    without stats for the column always survive; an all-null group
-    never can (range predicates reject NULL)."""
-    keep = []
+def prune_groups(
+    m: dict, bounds: dict, probes: tuple[dict, str] | None = None
+) -> list[dict]:
+    """The groups of manifest ``m`` that MAY hold a row matching every
+    bound, in manifest order: the one group-skipping decision behind
+    read_between, lookup, the `sif_table` batch reader's pushed
+    filters, the keyed mutations' rewrite set and the commit rebase's
+    conflict check. Sessionless, so the DataSource planner runs it too.
+
+    ``bounds`` maps a snapshot column to ``(lo, hi)`` in JSON-stat form
+    (_stat_bound), either side None = open; a column mapped to None has
+    no non-null value to match (an all-NULL key batch), so no group
+    matches. A column the caller cannot stat-compare is simply left out.
+    ``probes`` is _bloom_probe_sets' ``(hash pairs by ktype, snapshot
+    ktype)``. Conservative: a group without stats for a column, with a
+    bloom ktype the probes lack, or whose probe set was capped, stays;
+    an all-NULL group, or one that never held the column's id, never
+    matches (range and equality predicates reject NULL). 1-ary keyed
+    tables also check the key column against ``key_min``/``key_max``."""
+    if any(b is None for b in bounds.values()):
+        return []
+    columns = _columns_of(m)
+    keys = _key_cols(m)
+    key = keys[0] if len(keys) == 1 else None
+    by_ktype, snap_kt = probes or ({}, None)
+    out = []
     for g in m["groups"]:
-        st = _group_stat_range(m.get("columns"), g, col)
-        if st is _RANGE_ABSENT:
-            continue
-        if st is _RANGE_UNKNOWN:
-            keep.append(g)
-            continue
-        gmin, gmax = st
-        if gmin is None and gmax is None:
-            continue  # every value NULL: no row satisfies a range
-        if lo is not None and gmax is not None and gmax < lo:
-            continue
-        if hi is not None and gmin is not None and gmin > hi:
-            continue
-        keep.append(g)
-    return keep
+        for col, (lo, hi) in bounds.items():
+            st = _group_stat_range(columns, g, col)
+            ranges = [] if st is None else [st]
+            if col == key and g.get("key_min") is not None:
+                ranges.append((g["key_min"], g["key_max"]))
+            if any(
+                (gmin is None and gmax is None)
+                or (lo is not None and gmax is not None and gmax < lo)
+                or (hi is not None and gmin is not None and gmin > hi)
+                for gmin, gmax in ranges
+            ):
+                break
+        else:
+            bloom = g.get("key_bloom")
+            kt = bloom.get("ktype", snap_kt) if bloom else None
+            pairs = by_ktype.get(kt)
+            if pairs is None or _bloom_maybe_contains(bloom, pairs):
+                out.append(g)
+    return out
 
 
 # a data file's OWN path names the group that owns it — the deletion-
@@ -634,17 +660,12 @@ def _volatile(expr) -> bool:
     return any(_volatile(kids.apply(i)) for i in range(kids.length()))
 
 
-_RANGE_ABSENT = object()   # group never held the column id: all NULL
-_RANGE_UNKNOWN = object()  # no stats recorded: cannot prune on this col
-
-
 def _group_stat_range(columns: list[dict] | None, g: dict, col: str):
-    """The group's recorded [min, max] for snapshot column ``col`` in
-    JSON-stat form, with prune_groups' id-aware written-name
-    translation: a renamed column's stats live under the group's
-    WRITTEN name; a group that never held the column id holds only
-    NULLs (_RANGE_ABSENT — prunable for equi-matches); no stats at all
-    is _RANGE_UNKNOWN (never prune)."""
+    """The group's recorded (min, max) for snapshot column ``col`` in
+    JSON-stat form, read under the group's WRITTEN name (a renamed
+    column's stats keep the name it was written with). A group that
+    never held the column id holds only NULLs: (None, None), as for an
+    all-NULL column. None when no stats were recorded (never prune)."""
     stat_key = col
     if columns is not None:
         col_id = next(
@@ -654,12 +675,10 @@ def _group_stat_range(columns: list[dict] | None, g: dict, col: str):
         if col_id is not None and ids is not None:
             written = [w for w, i in ids.items() if i == col_id]
             if not written:
-                return _RANGE_ABSENT
+                return None, None
             stat_key = written[0]
     st = g.get("stats", {}).get(stat_key)
-    if st is None:
-        return _RANGE_UNKNOWN
-    return st[0], st[1]
+    return None if st is None else (st[0], st[1])
 
 
 # ---------------------------------------------------------------------------
@@ -784,6 +803,12 @@ _NARROW_LEAF_NODES = frozenset(
 _PLAN_NODE_NAME_RE = re.compile(r"^[\s+:\-]*([A-Za-z]\w*)", re.MULTILINE)
 
 
+def _plan_tree(df: DataFrame) -> str:
+    """``df``'s optimized logical plan as a tree string. A planner
+    error raises here, as the checkpoint that would follow raises it."""
+    return df._jdf.queryExecution().optimizedPlan().treeString()
+
+
 def _materialized_leaf_plan(df: DataFrame) -> bool:
     """True when ``df`` is a narrow pipeline over an already-
     materialized leaf (a localCheckpoint's LogicalRDD or an in-memory
@@ -791,11 +816,7 @@ def _materialized_leaf_plan(df: DataFrame) -> bool:
     construction, so even a shuffle-light derived frame (e.g. a
     distinct over a 3-row key list) should not pay a checkpoint job
     (ADVICE r14 low)."""
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    except Exception:
-        return False
-    names = set(_PLAN_NODE_NAME_RE.findall(tree))
+    names = set(_PLAN_NODE_NAME_RE.findall(_plan_tree(df)))
     return bool(names) and names <= _NARROW_LEAF_NODES
 
 
@@ -811,11 +832,7 @@ def _materialize_source(df: DataFrame) -> DataFrame:
     source across all clauses. Sources that are already materialized
     pipelines (a localCheckpoint's LogicalRDD, an in-memory
     LocalRelation — the streaming folds' shape) skip the extra job."""
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    except Exception:
-        return df.localCheckpoint(eager=True)
-    if _WIDE_PLAN_NODE_RE.search(tree) is not None:
+    if _WIDE_PLAN_NODE_RE.search(_plan_tree(df)) is not None:
         return df.localCheckpoint(eager=True)
     return df
 
@@ -1090,6 +1107,16 @@ def _written_names(
     return {
         n: cur_to_written.get(n, None if n in blocked else n) for n in names
     }
+
+
+def _dv_key_names(
+    ids: dict | None, columns: list[dict] | None, keys: list[str]
+) -> dict:
+    """{key: the name a deletion-vector sidecar written with col_ids
+    ``ids`` stores it under}, so tombstones stay exact across a key
+    rename. Sessionless: the `sif_table` batch reader uses it too."""
+    names = _written_names(ids, columns, keys) or {}
+    return {k: names.get(k, k) for k in keys}
 
 
 def _align_ids(
@@ -1711,9 +1738,6 @@ class SifTable:
         O(1): the latest manifest carries the rolled-up txns map."""
         return int(self._load().get("txns", {}).get(app_id, -1))
 
-    def _prune_groups(self, m: dict, col: str, lo, hi) -> list[dict]:
-        return prune_groups(m, col, lo, hi)
-
     def _dv_frame(
         self, m: dict, dvs: list[dict], columns: list[dict] | None
     ) -> DataFrame:
@@ -1727,19 +1751,14 @@ class SifTable:
         daily erasure batches accumulate sidecars); legacy entries
         without a recorded schema fall back to one scan each."""
         keys = _key_cols(m)
-        id_of = (
-            {c["name"]: c["id"] for c in columns} if columns else {}
-        )
         parts = []
         for ids, paths, ents in _scan_classes(dvs):
             df = _scan(self.spark, ents[0].get("schema"), paths)
-            ids = ids or {}
-            written_by_id = {i: w for w, i in ids.items()}
-            sel = [F.col("_gid").alias("__gid")]
-            for k in keys:
-                w = written_by_id.get(id_of.get(k), k)
-                sel.append(F.col(w).alias(k))
-            parts.append(df.select(*sel))
+            names = _dv_key_names(ids, columns, keys)
+            parts.append(df.select(
+                F.col("_gid").alias("__gid"),
+                *[F.col(names[k]).alias(k) for k in keys],
+            ))
         return functools.reduce(DataFrame.unionByName, parts)
 
     def _read_groups(
@@ -1831,12 +1850,10 @@ class SifTable:
             # all-null groups (whose rows pass the lit(True) filter) —
             # silent row loss in the degenerate call (ADVICE r10)
             return self._read_groups(m, m["groups"], target, _columns_of(m))
-        keep = self._prune_groups(
-            m,
-            col,
+        keep = prune_groups(m, {col: (
             _stat_bound(lo) if lo is not None else None,
             _stat_bound(hi) if hi is not None else None,
-        )
+        )})
         out = self._read_groups(m, keep, target, _columns_of(m))
         cond = F.lit(True)
         if lo is not None:
@@ -1871,83 +1888,23 @@ class SifTable:
         if any(v is None for v in values):
             raise ValueError("lookup(None) is not a range-key lookup")
         target = T._parse_datatype_string(m["schema"])
-        key_types = [target[k].dataType for k in keys]
-        bounds = [_stat_bound(v) for v in values]
-        candidates = m["groups"]
-        for k, b in zip(keys, bounds):
-            candidates = self._prune_groups(
-                {**m, "groups": candidates}, k, b, b
-            )
-        if len(keys) == 1:
-            # 1-ary fast path: the dedicated key_min/key_max pair
-            bound = bounds[0]
-            kept = []
-            for g in candidates:
-                gmin, gmax = g.get("key_min"), g.get("key_max")
-                if gmin is not None and gmax is not None:
-                    b = _stat_bound(gmin), _stat_bound(gmax)
-                    if bound < b[0] or bound > b[1]:
-                        continue
-                kept.append(g)
-            candidates = kept
-        if any(g.get("key_bloom") for g in candidates):
-            # the tuple's seeded probes, hashed by Spark itself so the
-            # hash matches the write side's column hashing exactly —
-            # each part cast to the group's RECORDED bloom dtype
-            # (groups written before a key widening hashed the narrow
-            # type; probing with the snapshot type would
-            # false-negative every one)
-            snap_kt = _KTYPE_SEP.join(t.simpleString() for t in key_types)
-            pair_by_ktype: dict[str, list] = {}
-            for kt in {
-                g["key_bloom"].get("ktype", snap_kt)
-                for g in candidates
-                if g.get("key_bloom")
-            }:
-                kts = kt.split(_KTYPE_SEP)
-                if len(kts) != len(keys):
-                    pair_by_ktype[kt] = None  # other arity: never skip
-                    continue
-                # try_cast (ANSI-safe): a value that does not fit the
-                # group's narrow recorded dtype provably is not in
-                # that group — an empty probe list excludes it
-                casted = [
-                    F.lit(v).try_cast(t) for v, t in zip(values, kts)
-                ]
-                probe = self.spark.range(1).select(
-                    *[c.alias(f"__k{i}") for i, c in enumerate(casted)],
-                    *[
-                        F.xxhash64(*casted, F.lit(s)).alias(f"h{i}")
-                        for i, s in enumerate(_BLOOM_SEEDS)
-                    ],
-                ).collect()[0]
-                pair_by_ktype[kt] = (
-                    []
-                    if any(
-                        probe[f"__k{i}"] is None for i in range(len(keys))
-                    )
-                    else [
-                        tuple(
-                            probe[f"h{i}"]
-                            for i in range(len(_BLOOM_SEEDS))
-                        )
-                    ]
-                )
-            candidates = [
-                g
-                for g in candidates
-                if not g.get("key_bloom")
-                or pair_by_ktype[g["key_bloom"].get("ktype", snap_kt)]
-                is None
-                or _bloom_maybe_contains(
-                    g["key_bloom"],
-                    pair_by_ktype[g["key_bloom"].get("ktype", snap_kt)],
-                )
-            ]
-        out = self._read_groups(m, candidates, target, _columns_of(m))
+        bounds = {k: (_stat_bound(v),) * 2 for k, v in zip(keys, values)}
+        # probe only the bloom ktypes of the groups the ranges keep: one
+        # job per such ktype, none when no kept group has a bloom
+        ranged = {**m, "groups": prune_groups(m, bounds)}
+        probes = self._bloom_probe_sets(
+            ranged,
+            self.spark.range(1).select(
+                *[F.lit(v).alias(k) for k, v in zip(keys, values)]
+            ),
+            keys,
+        )
+        out = self._read_groups(
+            m, prune_groups(ranged, bounds, probes), target, _columns_of(m)
+        )
         cond = F.lit(True)
-        for k, v, t in zip(keys, values, key_types):
-            cond = cond & (F.col(k) == F.lit(v).cast(t))
+        for k, v in zip(keys, values):
+            cond = cond & (F.col(k) == F.lit(v).cast(target[k].dataType))
         return out.filter(cond)
 
     # every group/cdc dir is named [gc]-<version>-<seq>-<hex8>, so the
@@ -1959,35 +1916,34 @@ class SifTable:
 
     def _batched_tagged_read(
         self,
-        path_schemas: list[tuple[str, str, dict | None]],
+        entries: list[FeedEntry],
         target: T.StructType,
         columns: list[dict] | None,
         tag: str | None,
         with_change_type: bool,
     ) -> DataFrame | None:
         """Read many group dirs with ONE scan per distinct (on-disk
-        schema, id-mapping) class, aligning to ``target`` and deriving
-        _commit_version from each file's path. Each entry is (path,
-        ddl, written col_ids or None); ``columns`` is the TARGET
+        schema, id-mapping) class (_scan_classes), aligning to
+        ``target`` and deriving _commit_version from each file's path.
+        ``entries`` are feed_window's dirs; ``columns`` is the TARGET
         snapshot's id list, so files written before a rename align by
         id under the new name. ``tag`` is a constant _change_type
         ('insert') or None to read the dir's own _change_type column
         (cdc dirs); ``with_change_type`` controls whether the column
         appears at all (non-cdf feeds omit it)."""
-        if not path_schemas:
+        if not entries:
             return None
-        by_class: dict[tuple, tuple[dict | None, list[str]]] = {}
-        for path, ddl, ids in path_schemas:
-            key = (ddl, tuple(sorted(ids.items())) if ids else None)
-            by_class.setdefault(key, (ids, []))[1].append(path)
         ver = (
             F.regexp_extract(F.col("_metadata.file_path"), self._VER_PAT, 1)
             .cast("int")
             .alias("_commit_version")
         )
         parts = []
-        for (ddl, _), (ids, paths) in by_class.items():
-            df = _scan(self.spark, ddl, paths)
+        for ids, paths, ents in _scan_classes([
+            {"path": e.path, "schema": e.ddl, "col_ids": e.col_ids}
+            for e in entries
+        ]):
+            df = _scan(self.spark, ents[0]["schema"], paths)
             cols = _align_ids_select(df.columns, ids, target, columns)
             if with_change_type:
                 if tag is not None:
@@ -2080,7 +2036,7 @@ class SifTable:
             p
             for p in (
                 self._batched_tagged_read(
-                    [(e.path, e.ddl, e.col_ids) for e in entries if e.tag == tag],
+                    [e for e in entries if e.tag == tag],
                     target, _columns_of(head), tag, cdf,
                 )
                 for tag in ("insert", None)
@@ -2299,10 +2255,10 @@ class SifTable:
         """One attempt of a keyed mutation — upsert, merge and
         delete_keys all run this core: txn-replay check → key
         validation → the op's clause ``check`` → source
-        materialization → the bounds ∥ bloom-probe wave → the two-tier
-        group split → the op's ``plan`` → ONE parallel write wave → the
-        successor manifest → _publish (a lost race rebases through
-        _rebased).
+        materialization → the bounds ∥ bloom-probe wave →
+        prune_groups (the touched groups) → the op's ``plan`` → ONE
+        parallel write wave → the successor manifest → _publish (a
+        lost race rebases through _rebased).
 
         ``plan(m, batch, keys, merged, cols_next, keep, touched)``
         returns a _KeyedPlan: the groups carried into the next
@@ -2355,7 +2311,10 @@ class SifTable:
             lambda: self._key_bounds(batch, keys, cardinality=op == "merge"),
             lambda: self._bloom_probe_sets(m, batch, keys),
         )
-        keep, touched = self._split_groups_by_keys(m, keys, bounds, probes)
+        # the groups that may hold a batch key rewrite; the rest carry
+        touched = prune_groups(m, bounds, probes)
+        hit = {g["id"] for g in touched}
+        keep = [g for g in m["groups"] if g["id"] not in hit]
         p = plan(m, batch, keys, merged, cols_next, keep, touched)
         v = m["version"] + 1
         writers = {
@@ -2385,7 +2344,7 @@ class SifTable:
 
         def build(h: dict) -> dict:
             groups = list(p.carried) if h is m else self._rebased(
-                m, h, p.carried, keys, bounds, probes
+                m, h, p.carried, bounds, probes
             )
             groups += new
             return next_manifest(
@@ -2740,8 +2699,7 @@ class SifTable:
         m: dict,
         h: dict,
         carried: list[dict],
-        keys: list[str],
-        bounds: list[tuple],
+        bounds: dict,
         probes: tuple[dict, str],
     ) -> list[dict]:
         """A keyed op's ``carried`` groups (planned on ``m``) re-applied
@@ -2773,9 +2731,7 @@ class SifTable:
                 "full retry required"
             )
         delta = [g for g in h["groups"] if g["id"] not in m_by_id]
-        if delta and self._split_groups_by_keys(
-            {**h, "groups": delta}, keys, bounds, probes
-        )[1]:
+        if delta and prune_groups({**h, "groups": delta}, bounds, probes):
             raise ConcurrentCommitError(
                 "concurrently added groups may hold this op's keys — "
                 "full retry required"
@@ -2788,9 +2744,11 @@ class SifTable:
 
     def _key_bounds(
         self, df: DataFrame, keys: list[str], cardinality: bool = False
-    ) -> list[tuple]:
-        """Per-key-column (min, max) of the batch's non-null values —
-        ONE aggregate job regardless of key arity. ``cardinality=True``
+    ) -> dict:
+        """Per-key-column (min, max) of the batch's non-null values as
+        prune_groups bounds (None: the column has no non-null value; a
+        column whose values cannot be stat-compared is left out) — ONE
+        aggregate job regardless of key arity. ``cardinality=True``
         (merge) enforces ANSI MERGE's cardinality rule in the same job:
         the distinct count is over fully-non-null key TUPLES (a null
         part never equi-matches, so such rows can only be dead weight),
@@ -2817,7 +2775,17 @@ class SifTable:
                 "forbids multiple source rows matching one target row "
                 "(and a null key part never matches anything)"
             )
-        return [(row[f"lo{i}"], row[f"hi{i}"]) for i in range(len(keys))]
+        out = {}
+        for i, k in enumerate(keys):
+            lo, hi = row[f"lo{i}"], row[f"hi{i}"]
+            if lo is None:
+                out[k] = None
+                continue
+            try:
+                out[k] = (_stat_bound(lo), _stat_bound(hi))
+            except TypeError:
+                pass  # not stat-comparable: the column prunes nothing
+        return out
 
     def _bloom_probe_sets(
         self, m: dict, keyed_df: DataFrame, keys: list[str]
@@ -2875,76 +2843,6 @@ class SifTable:
                 else None
             )
         return out, snap_kt
-
-    def _split_groups_by_keys(
-        self, m: dict, keys: list[str], bounds: list[tuple],
-        probes: tuple[dict, str],
-    ) -> tuple[list[dict], list[dict]]:
-        """upsert/delete_keys/merge's shared two-tier group split:
-        (keep, rewrite) where keep-groups PROVABLY hold none of
-        ``keyed_df``'s key tuples — conservative, so a false positive
-        only rewrites. Tier 1 is per-column range disjointness: a
-        tuple can only live in a group if EVERY key column's batch
-        range overlaps the group's recorded range (single-key tables
-        use the dedicated key_min/key_max; all arities also use the
-        per-column stats, translated to each group's WRITTEN name so
-        skipping survives renames — and a group that never held a key
-        column's id holds only NULLs there, which no tuple can
-        equi-match). Tier 2 is the key-tuple bloom. ``probes`` is
-        _bloom_probe_sets' result, computed ONCE by the caller (and
-        reused job-free by the conflict-granular commit rebase); a
-        group bloom ktype absent from it simply never skips."""
-        probe_by_ktype, snap_kt = probes
-        columns = _columns_of(m)
-        single = len(keys) == 1
-        # JSON-stat form of each column's batch bounds, for comparison
-        # against manifest stats: "empty" = the batch has NO fully
-        # usable value for this column (all null — no tuple matches
-        # anything); None = the type can't be stat-compared (never
-        # prune via stats on this column)
-        jbounds: list = []
-        for lo, hi in bounds:
-            if lo is None and hi is None:
-                jbounds.append("empty")
-                continue
-            try:
-                jbounds.append((_stat_bound(lo), _stat_bound(hi)))
-            except TypeError:
-                jbounds.append(None)
-        keep, rewrite = [], []
-        batch_empty = any(jb == "empty" for jb in jbounds)
-        for g in m["groups"]:
-            disjoint = batch_empty
-            if not disjoint and single:
-                lo, hi = bounds[0]
-                gmin, gmax = g.get("key_min"), g.get("key_max")
-                disjoint = gmin is not None and (gmax < lo or gmin > hi)
-            if not disjoint:
-                for k, jb in zip(keys, jbounds):
-                    if not isinstance(jb, tuple):
-                        continue
-                    rng = _group_stat_range(columns, g, k)
-                    if rng is _RANGE_ABSENT:
-                        disjoint = True
-                        break
-                    if rng is _RANGE_UNKNOWN:
-                        continue
-                    gmin, gmax = rng
-                    if gmin is None and gmax is None:
-                        disjoint = True  # group all-NULL on a key col
-                        break
-                    jlo, jhi = jb
-                    if (gmax is not None and gmax < jlo) or (
-                        gmin is not None and gmin > jhi
-                    ):
-                        disjoint = True
-                        break
-            if not disjoint and g.get("key_bloom"):
-                pp = probe_by_ktype.get(g["key_bloom"].get("ktype", snap_kt))
-                if pp is not None:
-                    disjoint = not _bloom_maybe_contains(g["key_bloom"], pp)
-            (keep if disjoint else rewrite).append(g)
-        return keep, rewrite
 
     def _dv_per_gid(self, doomed: DataFrame) -> tuple[dict, int]:
         """Per-group tombstone counts of the doomed (__gid + row)

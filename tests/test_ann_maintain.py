@@ -90,28 +90,49 @@ def test_maintain_resumes_and_folds_reembedding(spark, dirs):
 
 def test_maintain_skips_null_embeddings_without_codebook(spark, dirs):
     """A corpus row with a NULL embedding gets no index row, with or
-    without a codebook: the maintainer without ``pq_codebook`` folds
-    past it instead of failing its assignment task."""
+    without cdf: the maintainer without ``pq_codebook`` folds past it
+    instead of failing its assignment task, and a later upsert that
+    sets an indexed row's embedding to NULL retires its index row."""
     src_path, idx_path, ck = dirs
-    src = SifTable.create(
-        spark, src_path, _vecs(spark, 0, 60), key_col="vec_id"
-    )
-    centroids = sgsim.build_ivf_index(
-        _vecs(spark, 0, 60), n_cells=4, max_iter=2
-    ).centroids
-    batch = _vecs(spark, 60, 90).withColumn(
-        "embedding",
-        F.when(F.col("vec_id") % 5 != 0, F.col("embedding")),
-    )
-    src.append(batch)
-    q = sgsim.maintain_ivf_index_table(
-        spark, src_path, idx_path, centroids, ck, app_id="m"
-    )
-    _drain(q)
-    assert q.exception() is None
-    nids = {r["nid"] for r in SifTable(spark, idx_path).read().collect()}
-    assert nids == set(range(60)) | {i for i in range(60, 90) if i % 5}
-    _assert_index_exact(spark, idx_path, src.read(), centroids)
+    for cdf in (False, True):
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+        src = SifTable.create(
+            spark, src_path, _vecs(spark, 0, 60), key_col="vec_id", cdf=cdf
+        )
+        centroids = sgsim.build_ivf_index(
+            _vecs(spark, 0, 60), n_cells=4, max_iter=2
+        ).centroids
+        src.append(_vecs(spark, 60, 90).withColumn(
+            "embedding",
+            F.when(F.col("vec_id") % 5 != 0, F.col("embedding")),
+        ))
+
+        def drain():
+            q = sgsim.maintain_ivf_index_table(
+                spark, src_path, idx_path, centroids, ck, app_id="m",
+                cdf=cdf,
+            )
+            _drain(q)
+            assert q.exception() is None
+            return {
+                r["nid"] for r in SifTable(spark, idx_path).read().collect()
+            }
+
+        assert drain() == set(range(60)) | {
+            i for i in range(60, 90) if i % 5
+        }
+        # 5, 10 and 66 lose their embedding; 70 gains one
+        src.upsert(_vecs(spark, 0, 90).filter(
+            F.col("vec_id").isin(5, 10, 66, 70)
+        ).withColumn(
+            "embedding",
+            F.when(F.col("vec_id") == 70, F.col("embedding")),
+        ))
+        assert drain() == (
+            set(range(60)) | {i for i in range(60, 90) if i % 5} | {70}
+        ) - {5, 10, 66}
+        _assert_index_exact(spark, idx_path, src.read(), centroids)
 
 
 def test_cdf_maintain_retires_deleted_vectors(spark, dirs):
@@ -163,7 +184,7 @@ def test_cdf_maintain_retires_deleted_vectors(spark, dirs):
 def test_non_cdf_maintain_fails_loudly_on_corpus_delete(spark, dirs):
     """ADVICE r11 high: a NON-cdf maintainer must FAIL when the corpus
     commits a delete — the delete version adds no groups, so without
-    the plan-time fail_on_removal_ops guard it planned zero partitions
+    the plan-time keyed-feed guard it planned zero partitions
     and was silently skipped, leaving stale index rows forever. The
     docstring's 'a delete version fails the stream loudly' is now
     enforced. Upserts, by contrast, keep folding fine (keyed

@@ -11,7 +11,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from sif_spark.table import ConcurrentCommitError, SifTable
+from sif_spark.table import ConcurrentCommitError, SifTable, prune_groups
 
 BASE = "/tmp/sif_table_test"
 
@@ -329,14 +329,14 @@ def test_read_between_prunes_groups_and_matches_full_filter(spark, tdir):
     t.append(_df(spark, 200, 300, "c"))
     m = t._load()
     assert all("stats" in g and "k" in g["stats"] for g in m["groups"])
-    kept = t._prune_groups(m, "k", 120, 180)
+    kept = prune_groups(m, {"k": (120, 180)})
     assert len(kept) == 1 and kept[0]["stats"]["k"] == [100, 199]
     got = _rows(t.read_between("k", 120, 180))
     exp = _rows(t.read().filter("k BETWEEN 120 AND 180"))
     assert got == exp and len(got) == 61
     # open-ended bounds and string-column stats prune too
-    assert len(t._prune_groups(m, "k", 200, None)) == 1
-    assert len(t._prune_groups(m, "v", "b", "b")) == 1
+    assert len(prune_groups(m, {"k": (200, None)})) == 1
+    assert len(prune_groups(m, {"v": ("b", "b")})) == 1
     # a no-match range reads ZERO groups but still returns the schema
     empty = t.read_between("k", 500, 600)
     assert empty.count() == 0 and empty.columns == ["k", "v"]
@@ -353,8 +353,64 @@ def test_read_between_skips_all_null_groups(spark, tdir):
     )
     m = t._load()
     assert m["groups"][1]["stats"]["v"] == [None, None]
-    assert len(t._prune_groups(m, "v", "a", "a")) == 1  # null group skipped
+    assert len(prune_groups(m, {"v": ("a", "a")})) == 1  # null group skipped
     assert t.read_between("v", "a", "a").count() == 10
+
+
+def test_prune_groups_rules():
+    """The one group-skipping decision over hand-built manifests, no
+    session: open bounds, an all-NULL batch column, all-NULL and
+    never-held columns, missing stats, the 1-ary key_min/key_max pair
+    (which still prunes a long string key whose column stats were
+    capped away) and the bloom's ktype, cap and empty-probe rules."""
+    import base64
+
+    from sif_spark.table import _stat_bound
+
+    def ids(m, bounds, probes=None):
+        return [g["id"] for g in prune_groups(m, bounds, probes)]
+
+    both = {"k": 1, "v": 2}
+    m = {
+        "key_col": "k",
+        "columns": [{"name": "k", "id": 1}, {"name": "v", "id": 2}],
+        "groups": [
+            {"id": "a", "col_ids": both, "key_min": 0, "key_max": 9,
+             "stats": {"k": [0, 9], "v": ["a", "c"]}},
+            {"id": "b", "col_ids": both, "key_min": 10, "key_max": 19,
+             "stats": {"k": [10, 19], "v": [None, None]}},
+            {"id": "c", "col_ids": {"k": 1}, "stats": {"k": [20, 29]}},
+            {"id": "d", "col_ids": both},
+        ],
+    }
+    assert ids(m, {"k": (None, 12)}) == ["a", "b", "d"]
+    assert ids(m, {"k": (25, None)}) == ["c", "d"]
+    assert ids(m, {"k": None}) == []
+    assert ids(m, {"v": ("b", "b")}) == ["a", "d"]
+    assert ids(m, {}) == ["a", "b", "c", "d"]
+    long = {"key_col": "s", "groups": [
+        {"id": "a", "key_min": "a" * 300, "key_max": "b" * 300},
+        {"id": "b", "key_min": "c" * 300, "key_max": "d" * 300},
+    ]}
+    assert ids(long, {"s": (_stat_bound("c" * 301),) * 2}) == ["b"]
+
+    def bloom(fill, kt):
+        bits = base64.b64encode(bytes([fill]) * 8).decode()
+        return {"m": 64, "bits": bits, "ktype": kt}
+
+    blooms = {"key_col": "k", "groups": [
+        {"id": "all", "key_bloom": bloom(0xFF, "bigint")},
+        {"id": "none", "key_bloom": bloom(0x00, "bigint")},
+        {"id": "int", "key_bloom": bloom(0x00, "int")},
+        {"id": "plain"},
+    ]}
+    assert ids(blooms, {}, ({"bigint": [(1, 2)]}, "bigint")) == [
+        "all", "int", "plain"
+    ]
+    assert ids(blooms, {}, ({"bigint": None}, "bigint")) == [
+        "all", "none", "int", "plain"
+    ]
+    assert ids(blooms, {}, ({"bigint": []}, "bigint")) == ["int", "plain"]
 
 
 def test_lookup_uses_range_and_bloom(spark, tdir):
@@ -371,7 +427,7 @@ def test_lookup_uses_range_and_bloom(spark, tdir):
     # timestamps of the decision: the manifest alone (no data I/O for
     # range misses) — structural check via the pruning helpers
     m = t._load()
-    assert len(t._prune_groups(m, "k", 999, 999)) == 0
+    assert len(prune_groups(m, {"k": (999, 999)})) == 0
 
 
 def test_changes_feed_semantics(spark, tdir):

@@ -244,6 +244,83 @@ def test_jobs_delete_keys_dv(spark, tdir):
     })
 
 
+# --- lookup: jobs at call time and the groups the frame reads --------
+
+
+def _lookup(spark, t, value):
+    """(jobs lookup() starts, sorted group ids its frame scans): the
+    bloom probes run at call time; the groups come from the returned
+    frame's input files, listed without a job."""
+    df, n = _count_jobs(spark, lambda: t.lookup(value))
+    gids = {p.rsplit("/", 2)[-2] for p in df.inputFiles()}
+    names = [g["id"] for g in t._load()["groups"]]
+    return n, sorted(names.index(g) for g in gids)
+
+
+def _evens_then_odds(spark, path, cast="long", **kw):
+    """Group 0 holds the multiples of 4 in [0, 80) (key type ``cast``),
+    group 1 the odd keys in [41, 121) (bigint): their ranges overlap on
+    [41, 76], so a key there survives range skipping in both groups."""
+    t = SifTable.create(
+        spark, path,
+        spark.range(0, 80, 4).select(
+            F.col("id").cast(cast).alias("k"), F.lit("a").alias("v")
+        ),
+        **kw,
+    )
+    t.append(_df(spark, 0, 40, "b").select(
+        (F.col("k") * 2 + 41).alias("k"), "v"
+    ))
+    return t
+
+
+def test_jobs_lookup_plain(spark, tdir):
+    t = _evens_then_odds(spark, tdir, key_col="k")
+    assert _lookup(spark, t, 999) == (0, [])  # range miss
+    assert _lookup(spark, t, 62) == (0, [0, 1])  # no bloom: both read
+    assert _lookup(spark, t, 20) == (0, [0])
+    assert [r["v"] for r in t.lookup(61).collect()] == ["b"]
+
+
+def test_jobs_lookup_key_bloom(spark, tdir):
+    t = _evens_then_odds(spark, tdir, key_col="k", key_bloom=True)
+    assert _lookup(spark, t, 999) == (0, [])
+    assert _lookup(spark, t, 62) == (1, [])  # bloom miss in both
+    assert _lookup(spark, t, 60) == (1, [0])
+    assert _lookup(spark, t, 61) == (1, [1])
+    assert [r["v"] for r in t.lookup(61).collect()] == ["b"]
+
+
+def test_jobs_lookup_widened_key(spark, tdir):
+    """Group 0 was written (and its bloom hashed) under an int key, the
+    append widened it to bigint: one probe job per recorded ktype among
+    the groups that survive range skipping."""
+    t = _evens_then_odds(spark, tdir, cast="int", key_col="k",
+                         key_bloom=True)
+    m = t._load()
+    assert [g["key_bloom"]["ktype"] for g in m["groups"]] == ["int", "bigint"]
+    assert _lookup(spark, t, 999) == (0, [])
+    assert _lookup(spark, t, 20) == (1, [0])  # only group 0's range
+    assert _lookup(spark, t, 100) == (1, [])  # only group 1's range
+    assert _lookup(spark, t, 62) == (2, [])
+    assert _lookup(spark, t, 60) == (2, [0])
+    assert _lookup(spark, t, 61) == (2, [1])
+    assert [r["v"] for r in t.lookup(60).collect()] == ["a"]
+
+
+def test_jobs_lookup_composite_key(spark, tdir):
+    t = SifTable.create(
+        spark, tdir, _cdf(spark, 0, 40, "a"), key_cols=["r", "d"],
+        key_bloom=True,
+    )
+    t.append(_cdf(spark, 40, 80, "b").filter(F.col("d") != 3))
+    assert _lookup(spark, t, (99, 0)) == (0, [])  # range miss on r
+    assert _lookup(spark, t, (5, 3)) == (1, [])  # bloom miss
+    assert _lookup(spark, t, (5, 2)) == (1, [1])
+    assert _lookup(spark, t, (1, 3)) == (1, [0])
+    assert [r["v"] for r in t.lookup((5, 2)).collect()] == ["b"]
+
+
 def test_write_wave_jobs_keep_the_callers_job_group(spark, tdir):
     """The survivor rewrite, the batch group and the change file of a
     cdf upsert are written from pool threads: each of those jobs must
