@@ -109,9 +109,9 @@ def compact_parquet(
     files; at 100 TB the NameNode/listing cost alone kills scans).
 
     The output file count derives from the ACTUAL input bytes (one
-    driver-side FileSystem listing — metadata only, no data read);
-    rows are shuffled to evenly-sized files (`repartition`, or a
-    range exchange when ``sort_cols`` is given, which re-establishes
+    driver-side listing through the path's store — metadata only, no
+    data read); rows are shuffled to evenly-sized files (`repartition`,
+    or a range exchange when ``sort_cols`` is given, which re-establishes
     min/max pruning while compacting — compaction and clustering are
     one pass, not two).
 
@@ -120,25 +120,14 @@ def compact_parquet(
     compaction can't destroy the source."""
     import math
 
+    from sif_spark.logstore import store_for
+
     if src.rstrip("/") == dst.rstrip("/"):
         raise ValueError("dst must differ from src (no in-place compaction)")
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(src)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    # recursive listing: a partition_by layout keeps its data in
-    # subdirectories — a flat listStatus would total 0 bytes and
-    # silently compact everything into one file
-    total = 0
-    stack = [p]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            if name.startswith("_"):
-                continue
-            if st.isDirectory():
-                stack.append(st.getPath())
-            elif st.isFile():
-                total += st.getLen()
+    # recursive: a partition_by layout keeps its data in subdirectories
+    # — a flat listing would total 0 bytes and silently compact
+    # everything into one file
+    total = store_for(src, spark).data_bytes(src)
     n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(src)
     if sort_cols:

@@ -47,6 +47,7 @@ kNN tier ends with).
 
 from __future__ import annotations
 
+import io
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -54,6 +55,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
+from sif_spark.logstore import store_for
 from sif_spark.sources.memory import local_frame
 
 if TYPE_CHECKING:
@@ -652,11 +654,6 @@ def _ann_meta_path(index_table_path: str, gen: int) -> str:
 
 
 def save_ann_meta(index_table_path: str, meta: AnnGenMeta) -> None:
-    import io
-    import os
-
-    d = os.path.join(index_table_path, "ann_meta")
-    os.makedirs(d, exist_ok=True)
     payload: dict = {
         "gen": np.int64(meta.gen),
         "centroids": meta.centroids,
@@ -668,14 +665,14 @@ def save_ann_meta(index_table_path: str, meta: AnnGenMeta) -> None:
         payload["cb_normalized"] = np.bool_(meta.codebook.normalized)
     buf = io.BytesIO()
     np.savez(buf, **payload)
-    tmp = os.path.join(d, f".gen-{meta.gen:06d}.tmp")
-    with open(tmp, "wb") as fh:
-        fh.write(buf.getvalue())
-    os.replace(tmp, _ann_meta_path(index_table_path, meta.gen))
+    store_for(index_table_path).replace(
+        _ann_meta_path(index_table_path, meta.gen), buf.getvalue()
+    )
 
 
 def load_ann_meta(index_table_path: str, gen: int) -> AnnGenMeta:
-    with np.load(_ann_meta_path(index_table_path, gen)) as z:
+    path = _ann_meta_path(index_table_path, gen)
+    with np.load(io.BytesIO(store_for(index_table_path).read_bytes(path))) as z:
         cb = None
         if "codebooks" in z:
             cb = PQCodebook(
@@ -713,63 +710,32 @@ def _probe_state_path(index_table_path: str) -> str:
     return f"{index_table_path}/ann_meta/probe_state.json"
 
 
-# Probe state goes through the SAME Hadoop FileSystem API as the
-# manifests (VERDICT r14 "What's wrong" #4): a raw local open() on a
-# table path breaks the moment the index table lives on an object
-# store. Only a missing or garbled file is harmless by design — the
-# row count degrades to 0 and the next fold re-probes; any other error
-# (permissions, a dead gateway, a bug) propagates.
-_MISSING = "java.io.FileNotFoundException"
-_GARBLED = "org.apache.hadoop.fs.ChecksumException"
-
-
-def _read_probe_state(session, index_table_path: str) -> int:
+# Probe state goes through the index table's store, like the manifests
+# (VERDICT r14 "What's wrong" #4). Only a missing or garbled file
+# (FileNotFoundError; a failed checksum or unparsable content) is
+# harmless by design — the row count degrades to 0 and the next fold
+# re-probes; any other error (permissions, a dead gateway, a bug)
+# propagates.
+def _read_probe_state(log, index_table_path: str) -> int:
     """Corpus rows at the maintainer's last recall probe (0 if the
     state file is missing or unparsable)."""
     import json as _json
 
-    from py4j.protocol import Py4JJavaError
-
-    from sif_spark.table import _fs, _java_error_is
-
-    fs, p, _jvm = _fs(session, _probe_state_path(index_table_path))
     try:
-        stream = fs.open(p)
-        try:
-            data = bytes(stream.readAllBytes())  # Java 11+ API
-        finally:
-            stream.close()
-    except Py4JJavaError as e:
-        if _java_error_is(session, e, _MISSING) or _java_error_is(session, e, _GARBLED):
-            return 0
-        raise
-    try:
-        return int(_json.loads(data.decode("utf-8"))["rows_at_probe"])
-    except (ValueError, KeyError, TypeError):  # torn or foreign content
+        data = log.read_bytes(_probe_state_path(index_table_path))
+        return int(_json.loads(data)["rows_at_probe"])
+    except (FileNotFoundError, ValueError, KeyError, TypeError):
         return 0
 
 
-def _write_probe_state(session, index_table_path: str, rows: int) -> None:
-    """Record ``rows`` as the corpus size of the last recall probe. A
-    missing index directory (the table was dropped meanwhile) only
-    costs an extra probe, so it is ignored."""
+def _write_probe_state(log, index_table_path: str, rows: int) -> None:
+    """Record ``rows`` as the corpus size of the last recall probe."""
     import json as _json
 
-    from py4j.protocol import Py4JJavaError
-
-    from sif_spark.table import _fs, _java_error_is
-
-    fs, p, _jvm = _fs(session, _probe_state_path(index_table_path))
-    try:
-        out = fs.create(p, True)
-    except Py4JJavaError as e:
-        if _java_error_is(session, e, _MISSING):
-            return
-        raise
-    try:
-        out.write(bytearray(_json.dumps({"rows_at_probe": int(rows)}), "utf-8"))
-    finally:
-        out.close()
+    log.replace(
+        _probe_state_path(index_table_path),
+        _json.dumps({"rows_at_probe": int(rows)}).encode(),
+    )
 
 
 def _hash_sample(df: DataFrame, id_col: str, n: int) -> DataFrame:
@@ -914,8 +880,6 @@ def maintain_ivf_index_table(
     table is readable mid-stream
     (snapshot isolation); without refresh,
     `IVFIndex(centroids, table.read()...)` serves queries."""
-    import os
-
     from sif_spark.sources.table_stream import (
         fold_table_changes,
         settle_changes,
@@ -930,7 +894,8 @@ def maintain_ivf_index_table(
     refresh_on = (
         refresh_staleness_ratio is not None or refresh_candidates is not None
     )
-    if refresh_on and not os.path.exists(_ann_meta_path(index_table_path, 0)):
+    meta_log = store_for(index_table_path, spark)
+    if refresh_on and not meta_log.exists(_ann_meta_path(index_table_path, 0)):
         # gen-0 meta: the caller's centroids/codebook anchored on the
         # current corpus (idempotent — recomputed identically on a
         # crash before the first fold)
@@ -1186,7 +1151,7 @@ def maintain_ivf_index_table(
             return  # nothing indexed yet
         rows_now = _corpus_rows(session)
         if rows_now < _REFRESH_GROWTH_CHECK * max(
-            1, _read_probe_state(session, index_table_path)
+            1, _read_probe_state(meta_log, index_table_path)
         ):
             return
         dim = meta.centroids.shape[1]
@@ -1203,7 +1168,7 @@ def maintain_ivf_index_table(
                 session, meta, e4 + 1 + attempt, m_new=m_esc,
                 keep_centroids=True,
             )
-        _write_probe_state(session, index_table_path, rows_now)
+        _write_probe_state(meta_log, index_table_path, rows_now)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         # each nid's LATEST image: one micro-batch can span an append

@@ -24,30 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _has_success_marker(spark, path: str) -> bool:
-    """True iff ``path`` holds a committed Spark write (its _SUCCESS
-    marker exists) — checked through the Hadoop FileSystem API so the
-    same code works on local paths, HDFS, and object stores."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _write_text(spark, path: str, content: str) -> None:
-    """Write a small text file through the Hadoop FileSystem API
-    (works on local paths, HDFS, and object stores alike) — used for
-    the run manifest, the audit record of what a checkpointed
-    pipeline run actually executed."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
+from sif_spark.logstore import store_for
 
 
 class Stage:
@@ -285,6 +262,7 @@ class CorpusPipeline:
 
         self.last_stats: list[tuple[str, int]] = []
         spark = df.sparkSession
+        log = None if checkpoint_dir is None else store_for(checkpoint_dir, spark)
         fingerprint = input_token or ""
         fingerprints: list[str] = []
         for i, stage in enumerate(self.stages):
@@ -298,7 +276,7 @@ class CorpusPipeline:
                 # marker is written at job commit, so a crashed write
                 # (partial files, no marker) recomputes instead of
                 # silently serving half a stage
-                if _has_success_marker(spark, path):
+                if log.exists(f"{path}/_SUCCESS"):
                     df = spark.read.parquet(path)
                     if collect_stats:
                         self.last_stats.append((stage.name, df.count()))
@@ -313,15 +291,16 @@ class CorpusPipeline:
         if checkpoint_dir is not None:
             import json
 
+            # the run manifest: the audit record of what a checkpointed
+            # run actually executed
             manifest = {
                 "stages": [st.name for st in self.stages],
                 "fingerprints": fingerprints,
                 "stats": self.last_stats if collect_stats else None,
             }
-            _write_text(
-                spark,
+            log.replace(
                 f"{checkpoint_dir}/manifest.json",
-                json.dumps(manifest, indent=2),
+                json.dumps(manifest, indent=2).encode(),
             )
         return df
 
@@ -353,25 +332,18 @@ def _bucketed_store_frame(
     return spark.table(name)
 
 
-def _list_committed_epochs(spark, store_dir: str) -> list[str]:
+def _list_committed_epochs(log, store_dir: str) -> list[str]:
     """Epoch directories under ``store_dir`` whose survivors write
-    committed (_SUCCESS) — via the Hadoop FS API so local/HDFS/object
-    stores behave alike. A crashed epoch (partial files, no marker)
-    is invisible to history, so a retry recomputes it instead of
-    deduping tonight's batch against half-written state."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    out = []
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("epoch_"):
-            d = f"{store_dir}/{name}"
-            if _has_success_marker(spark, f"{d}/survivors"):
-                out.append(d)
-    return sorted(out)
+    committed (_SUCCESS), through the store ``log``. A crashed epoch
+    (partial files, no marker) is invisible to history, so a retry
+    recomputes it instead of deduping tonight's batch against
+    half-written state."""
+    return sorted(
+        f"{store_dir}/{n}"
+        for n in log.list_names(store_dir)
+        if n.startswith("epoch_")
+        and log.exists(f"{store_dir}/{n}/survivors/_SUCCESS")
+    )
 
 
 def daily_ingest(
@@ -463,10 +435,11 @@ def daily_ingest(
     )
     fp = hashlib.md5(params.encode()).hexdigest()[:12]
     epoch_dir = f"{store_dir}/epoch_{fp}"
-    if _has_success_marker(spark, f"{epoch_dir}/survivors"):
+    log = store_for(store_dir, spark)
+    if log.exists(f"{epoch_dir}/survivors/_SUCCESS"):
         return spark.read.parquet(f"{epoch_dir}/survivors")
 
-    history = [d for d in _list_committed_epochs(spark, store_dir) if d != epoch_dir]
+    history = [d for d in _list_committed_epochs(log, store_dir) if d != epoch_dir]
     if history:
         # Signature compatibility gate (ADVICE r7): signatures are only
         # band-joinable when built with the same (num_hashes, shingle_k,
@@ -478,15 +451,16 @@ def daily_ingest(
         id_ddl = batch.schema[id_col].dataType.simpleString()
         epoch_meta: dict[str, dict] = {}
         for d in history:
-            try:
-                row = spark.read.parquet(f"{d}/sig_params").collect()[0]
-                got = (row["num_hashes"], row["shingle_k"], row["hash_fn"])
-            except Exception:
+            # a record without its _SUCCESS marker is absent; any error
+            # reading a committed one propagates
+            if not log.exists(f"{d}/sig_params/_SUCCESS"):
                 raise ValueError(
                     f"history epoch {d} has no sig_params record — rebuild "
                     "the store (pre-round-8 epochs cannot prove signature "
                     "compatibility)"
-                ) from None
+                )
+            row = spark.read.parquet(f"{d}/sig_params").collect()[0]
+            got = (row["num_hashes"], row["shingle_k"], row["hash_fn"])
             if got != want:
                 raise ValueError(
                     f"history epoch {d} was ingested with sig params "
@@ -537,7 +511,7 @@ def daily_ingest(
                 rec = epoch_meta[d]["buckets"]
                 if rec is not None:
                     return rec == store_buckets
-                return _has_success_marker(spark, f"{d}/bands")
+                return log.exists(f"{d}/bands/_SUCCESS")
 
             hist_fps = [
                 _bucketed_store_frame(
@@ -559,7 +533,7 @@ def daily_ingest(
                     "band_key",
                     store_buckets,
                 )
-                if _is_bucketed(d) and _has_success_marker(spark, f"{d}/bands")
+                if _is_bucketed(d) and log.exists(f"{d}/bands/_SUCCESS")
                 # plain epoch inside a bucketed-mode read: derive keys
                 else sig_band_keys(
                     spark.read.parquet(f"{d}/sigs"),

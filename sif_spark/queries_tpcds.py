@@ -139,10 +139,10 @@ def _partitioned_fact_dir(spark: SparkSession, sf_dir: str) -> str:
     for dynamic partition pruning."""
     from sif_spark.queries_ext import _io_dir
 
-    path = _io_dir(sf_dir, "lineitem_by_month")
-    from sif_spark.pipeline import _has_success_marker
+    from sif_spark.logstore import store_for
 
-    if not _has_success_marker(spark, path):
+    path = _io_dir(sf_dir, "lineitem_by_month")
+    if not store_for(path, spark).exists(f"{path}/_SUCCESS"):
         read_table(spark, sf_dir, "lineitem").withColumn(
             "ship_month", F.date_format("l_shipdate", "yyyy-MM")
         ).write.mode("overwrite").partitionBy("ship_month").parquet(path)

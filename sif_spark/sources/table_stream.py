@@ -52,9 +52,9 @@ Usage:
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
+import shutil
 import threading
 import time
 from collections import deque
@@ -82,32 +82,22 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
+from sif_spark.logstore import store_for, strip_file_scheme
+
 if TYPE_CHECKING:
     from sif_spark.table import SifTable
 
 
-def _local_path(p: str) -> str:
-    """SQL DDL (CREATE TABLE ... USING sif_table) hands the path
-    option through the catalog as a ``file:`` URI; the planner/
-    executor helpers here are plain-POSIX (the shared-FS contract), so
-    strip the scheme (one shared implementation in table.py)."""
-    from sif_spark.table import strip_file_scheme
-
-    return strip_file_scheme(p)
-
-
 def _versions_on_disk(table_path: str) -> list[int]:
-    from sif_spark.logstore import PosixExclLogStore
     from sif_spark.table import _log_versions
 
-    return _log_versions(PosixExclLogStore(), table_path)
+    return _log_versions(store_for(table_path), table_path)
 
 
 def _load_manifest(table_path: str, version: int) -> dict:
-    from sif_spark.logstore import PosixExclLogStore
     from sif_spark.table import _log_manifest
 
-    return _log_manifest(PosixExclLogStore(), table_path, version)
+    return _log_manifest(store_for(table_path), table_path, version)
 
 
 class _GroupFilePartition(InputPartition):
@@ -134,7 +124,7 @@ class _GroupFilePartition(InputPartition):
 
 class _SifTableStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
-        self.table_path = _local_path(options["path"])
+        self.table_path = strip_file_scheme(options["path"])
         self.schema = schema
         self.start_after = int(options.get("starting_version", 0))
         # backlog rate limit: at most N table versions per micro-batch
@@ -142,9 +132,9 @@ class _SifTableStreamReader(DataSourceStreamReader):
         # giant batch). The argless latestOffset() cannot see the
         # checkpoint — and is called BEFORE initialOffset — so the
         # anchor (the highest version ever PLANNED) persists in a
-        # caller-supplied sidecar dir via tmp+rename. planned >=
-        # committed always, so a restarted reader's capped offsets
-        # never move backward and never stall.
+        # caller-supplied sidecar dir via the store's atomic replace.
+        # planned >= committed always, so a restarted reader's capped
+        # offsets never move backward and never stall.
         self.max_versions = int(options.get("max_versions_per_trigger", 0))
         # cdf: emit every row change with _change_type (insert/
         # update_preimage/update_postimage/delete) from the table's
@@ -157,6 +147,7 @@ class _SifTableStreamReader(DataSourceStreamReader):
             == "true"
         )
         self.anchor_dir = options.get("rate_anchor_dir")
+        self._anchor_file = f"{self.anchor_dir}/anchor.json"
         # pin the head manifest alongside the schema: files written
         # under pre-rename names map BY ID to the pinned names; a
         # restarted stream re-pins both from the then-latest manifest
@@ -170,8 +161,8 @@ class _SifTableStreamReader(DataSourceStreamReader):
 
     def _anchor(self) -> int:
         try:
-            with open(os.path.join(self.anchor_dir, "anchor.json")) as fh:
-                return max(self.start_after, int(json.load(fh)["planned"]))
+            got = store_for(self.anchor_dir).read_bytes(self._anchor_file)
+            return max(self.start_after, int(json.loads(got)["planned"]))
         except (OSError, ValueError, KeyError):
             return self.start_after
 
@@ -182,11 +173,9 @@ class _SifTableStreamReader(DataSourceStreamReader):
         were already delivered (ADVICE r10 medium)."""
         try:
             planned = max(planned, self._anchor())
-            os.makedirs(self.anchor_dir, exist_ok=True)
-            tmp = os.path.join(self.anchor_dir, ".anchor.tmp")
-            with open(tmp, "w") as fh:
-                json.dump({"planned": planned}, fh)
-            os.replace(tmp, os.path.join(self.anchor_dir, "anchor.json"))
+            store_for(self.anchor_dir).replace(
+                self._anchor_file, json.dumps({"planned": planned}).encode()
+            )
         except OSError:
             pass  # degraded = uncapped next trigger; never wrong rows
 
@@ -399,7 +388,7 @@ class _SifTableBatchReader(DataSourceReader):
     contract in docs/table.md."""
 
     def __init__(self, schema: StructType, options: dict):
-        self.table_path = _local_path(options["path"])
+        self.table_path = strip_file_scheme(options["path"])
         self.schema = schema
         self.version = (
             int(options["version"]) if options.get("version") else None
@@ -567,10 +556,10 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
     plain file I/O on the shared FS, the same contract the planner
     already relies on) moves the staged files into a version-named
     group dir and publishes the manifest through table._publish over
-    the PosixExclLogStore conditional put — the one commit loop every
-    SifTable writer uses. A lost CAS re-reads the head, re-checks the
-    refusals below against it, renames the group dir to the next
-    version (os.rename) and re-puts; no executor work re-runs. A
+    the table path's store (logstore.store_for) — the one commit loop
+    every SifTable writer uses. A lost CAS re-reads the head, re-checks
+    the refusals below against it, renames the group dir to the next
+    version through the store and re-puts; no executor work re-runs. A
     failure anywhere before the publish removes the staging dir and
     the moved group dir. ``txn_app``/``txn_epoch`` options give appends the same
     crash-replay idempotence as SifTable.append(txn=).
@@ -585,7 +574,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         import uuid
 
-        self.table_path = _local_path(options["path"])
+        self.table_path = strip_file_scheme(options["path"])
         self.schema = schema
         self.overwrite = overwrite
         self.key_col = options.get("key_col")
@@ -650,8 +639,6 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
     # -- driver side -----------------------------------------------------------
 
     def commit(self, messages) -> None:
-        import shutil
-
         # Error paths (bucketed-table / schema-mismatch ValueError,
         # CAS starvation) must reclaim the staging dir AND the group
         # dir already moved under data/ (under its latest name) —
@@ -671,10 +658,8 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             raise
 
     def _commit_inner(self, messages) -> None:
-        import shutil
         import uuid
 
-        from sif_spark.logstore import PosixExclLogStore
         from sif_spark.table import (
             _advance_txns,
             _ddl,
@@ -701,6 +686,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 col_stats[c] = [min(los) if los else None,
                                 max(his) if his else None]
         ddl = _ddl(self.schema)
+        log = store_for(self.table_path)
         versions = _versions_on_disk(self.table_path)
         head = _load_manifest(self.table_path, versions[-1]) if versions else {}
         if _advance_txns(head, self.txn) is None:
@@ -709,13 +695,10 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         if files:
             v = head.get("version", 0) + 1
             gid = f"g-{v:010d}-000-{uuid.uuid4().hex[:8]}"
-            gpath = os.path.join(self.table_path, "data", gid)
+            gpath = f"{self.table_path}/data/{gid}"
             self._fresh.append({"id": gid, "path": gpath})
-            os.makedirs(gpath, exist_ok=True)
             for msg in files:
-                os.rename(
-                    msg.file, os.path.join(gpath, os.path.basename(msg.file))
-                )
+                log.rename(msg.file, f"{gpath}/{os.path.basename(msg.file)}")
 
         def build(m: dict) -> dict:
             if m.get("bucket"):
@@ -759,16 +742,11 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 txns=_advance_txns(m, self.txn), key_col=key,
             )
 
-        _publish(
-            PosixExclLogStore(), self.table_path, head, build, self._fresh,
-            os.rename, self.txn,
-        )
+        _publish(log, self.table_path, head, build, self._fresh, self.txn)
         self._fresh = []  # committed: now owned by readers
         shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:
-        import shutil
-
         shutil.rmtree(self.staging, ignore_errors=True)
 
 
@@ -784,7 +762,7 @@ class SifTableDataSource(DataSource):
     def schema(self) -> str:
         # a DDL STRING, not a StructType: this runs in a sessionless
         # planner worker where _parse_datatype_string cannot run
-        table_path = _local_path(self.options["path"])
+        table_path = strip_file_scheme(self.options["path"])
         versions = _versions_on_disk(table_path)
         if not versions:
             raise FileNotFoundError(
@@ -884,11 +862,10 @@ class FoldQuery:
                  fold: Callable[[DataFrame, int], None],
                  checkpoint_dir: str, feed: str, starting_version: int,
                  max_versions: int):
-        from sif_spark.table import strip_file_scheme
-
         self._table = table
         self._fold = fold
         self._ck = strip_file_scheme(checkpoint_dir.rstrip("/"))
+        self._log = store_for(self._ck, table.spark)
         self._flags = _FEED_FLAGS[feed]
         self._cdf = feed == "cdf"
         self._start = int(starting_version)
@@ -980,7 +957,7 @@ class FoldQuery:
         marks.append(time.perf_counter())
         entries = feed_window(
             versions, cache(partial(_log_manifest, t.log, t.path)),
-            self._after, hi, head=self._head, exists=t._path_exists,
+            self._after, hi, head=self._head, exists=t.log.exists,
             **self._flags,
         )
         marks.append(time.perf_counter())
@@ -1025,15 +1002,12 @@ class FoldQuery:
     # -- the checkpoint --------------------------------------------------------
 
     def _batch_ids(self, kind: str) -> list[int]:
-        try:
-            names = os.listdir(os.path.join(self._ck, kind))
-        except FileNotFoundError:
-            return []
+        names = self._log.list_names(f"{self._ck}/{kind}")
         return sorted(int(n) for n in names if n.isdigit())
 
     def _offset(self, n: int) -> int:
-        with open(os.path.join(self._ck, "offsets", str(n))) as fh:
-            return int(json.loads(fh.read().splitlines()[-1])["version"])
+        text = self._log.read_text(f"{self._ck}/offsets/{n}")
+        return int(json.loads(text.splitlines()[-1])["version"])
 
     def _recover(self) -> tuple[int, int, int | None]:
         """(next epoch, last folded version, the end of an epoch that
@@ -1042,24 +1016,18 @@ class FoldQuery:
         if not offsets:
             return 0, self._start, None
         n = offsets[-1]
-        if os.path.exists(os.path.join(self._ck, "commits", str(n))):
+        if self._log.exists(f"{self._ck}/commits/{n}"):
             return n + 1, self._offset(n), None
         after = self._offset(n - 1) if n > 0 else self._start
         return n, after, self._offset(n)
 
     def _write(self, kind: str, text: str) -> None:
-        d = os.path.join(self._ck, kind)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".{self._epoch}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(text)
-        os.replace(tmp, os.path.join(d, str(self._epoch)))
+        self._log.replace(f"{self._ck}/{kind}/{self._epoch}", text.encode())
 
     def _purge(self, n: int) -> None:
         for kind in ("offsets", "commits") if n >= 0 else ():
             for name in (str(n), f".{n}.crc"):
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(self._ck, kind, name))
+                self._log.delete(f"{self._ck}/{kind}/{name}")
 
 
 def fold_table_changes(

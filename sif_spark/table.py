@@ -101,6 +101,8 @@ from typing import Callable, NamedTuple
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from sif_spark.logstore import store_for, strip_file_scheme
+
 _MANIFESTS = "_manifests"
 # Per-write Hadoop option (DataFrameWriter options merge into the write
 # job's Hadoop conf): skip the _SUCCESS marker for table-internal dirs,
@@ -282,36 +284,6 @@ def _stat_bound(v):
     return out
 
 
-def strip_file_scheme(p: str) -> str:
-    """``file:``-URI → plain POSIX path (SQL DDL and some Spark APIs
-    hand paths through as URIs; the table's POSIX-side helpers and the
-    link(2) log store need the raw path). The single shared
-    implementation — sources/table_stream.py reuses it.
-
-    A non-empty authority other than ``localhost`` raises: the old
-    code turned ``file://host/path`` into the RELATIVE path
-    ``host/path``, silently pointing the table at the wrong location
-    (ADVICE r11 low). RFC 8089 file URIs have no meaningful remote
-    host here — the shared-FS contract is local mounts."""
-    if p.startswith("file://"):
-        rest = p[len("file://"):]
-        if not rest:
-            return "/"
-        if rest.startswith("/"):
-            return rest  # file:///path — empty authority
-        netloc, sep, tail = rest.partition("/")
-        if netloc.lower() != "localhost":
-            raise ValueError(
-                f"file URI {p!r} names remote authority {netloc!r} — "
-                "sif tables live on locally-mounted paths "
-                "(file:///... or file:/...)"
-            )
-        return "/" + tail if sep else "/"
-    if p.startswith("file:"):
-        return p[len("file:"):]
-    return p
-
-
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first — re-read and retry."""
 
@@ -327,20 +299,6 @@ class ChangeFeedIncompleteError(ValueError):
     ``cdf`` option. Also raised (by feed_window, for every reader)
     when the window reaches into a vacuumed prefix or a reclaimed
     change file."""
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _java_error_is(spark: SparkSession, e, java_class: str) -> bool:
-    """True iff the Py4JJavaError ``e`` wraps a ``java_class`` (or a
-    subclass), e.g. ``java.io.FileNotFoundException``."""
-    from py4j.java_gateway import is_instance_of
-
-    return is_instance_of(spark.sparkContext._gateway, e.java_exception, java_class)
 
 
 def prune_groups(
@@ -518,7 +476,6 @@ def _publish(
     m: dict,
     build: Callable[[dict], dict],
     fresh: list[dict] = (),
-    rename: Callable[[str, str], None] | None = None,
     txn: tuple[str, int] | None = None,
 ) -> int:
     """Publish the snapshot after ``m`` through the log store's
@@ -531,11 +488,13 @@ def _publish(
     ``txn``'s epoch (our own replay won) it returns ``h``'s version.
     Otherwise it renames each freshly written dir in ``fresh`` (dicts
     with a ``path`` and, for a data group, an ``id``; both updated in
-    place) to ``h``'s successor version, since every feed derives
-    _commit_version from the ``[gcd]-<version>-...`` dir name, and puts
-    ``build(h)``. ``build`` raises ConcurrentCommitError when the op
-    cannot rebase onto ``h``; the caller's _retrying then re-runs the
-    whole attempt."""
+    place) to ``h``'s successor version through ``log.rename``, since
+    every feed derives _commit_version from the ``[gcd]-<version>-...``
+    dir name, and puts ``build(h)``. ``build`` raises
+    ConcurrentCommitError when the op cannot rebase onto ``h``, and a
+    failed rename does too (ADVICE r13 medium: a manifest over
+    re-minted paths that do not exist would be an unreadable committed
+    version); the caller's _retrying then re-runs the whole attempt."""
     h = m
     for _ in range(_PUBLISH_TRIES):
         manifest = build(h)
@@ -554,7 +513,12 @@ def _publish(
             kind, _, rest = name.split("-", 2)
             new = f"{kind}-{int(h.get('version', 0)) + 1:010d}-{rest}"
             if new != name:
-                rename(d["path"], f"{head}/{new}")
+                try:
+                    log.rename(d["path"], f"{head}/{new}")
+                except OSError as e:
+                    raise ConcurrentCommitError(
+                        f"{e} — rebase abandoned, full retry required"
+                    ) from e
                 d["path"] = f"{head}/{new}"
                 if "id" in d:
                     d["id"] = new
@@ -1360,9 +1324,10 @@ class SifTable:
     """Handle on a versioned table directory. Cheap to construct —
     every operation re-resolves the latest committed manifest.
 
-    ``log_store`` selects the manifest commit protocol (logstore.py).
-    Default: PosixExclLogStore (link(2) conditional put — the
-    kernel-atomic primitive) for local/`file:` paths, and
+    ``log_store`` is the table's storage seam (logstore.py): the
+    manifest commit protocol and every other file and directory step.
+    Default (``store_for``): PosixExclLogStore (link(2) conditional put
+    — the kernel-atomic primitive) for local/`file:` paths, and
     HadoopRenameLogStore (rename-CAS, atomic-and-exclusive by HDFS
     contract) for schemed paths. The local choice matters twice over:
     (a) Hadoop's LOCAL rename is java.io.File.renameTo — POSIX
@@ -1374,25 +1339,11 @@ class SifTable:
     ConditionalPutLogStore for S3-class object stores."""
 
     def __init__(self, spark: SparkSession, path: str, log_store=None):
-        from sif_spark.logstore import (
-            HadoopRenameLogStore,
-            PosixExclLogStore,
-        )
-
         self.spark = spark
-        path = strip_file_scheme(path.rstrip("/"))
-        self.path = path
-        if log_store is not None:
-            self.log = log_store
-        elif "://" in path or ":" in path.split("/", 1)[0]:
-            self.log = HadoopRenameLogStore(spark)  # hdfs:// and friends
-        else:
-            self.log = PosixExclLogStore()
+        self.path = strip_file_scheme(path.rstrip("/"))
+        self.log = log_store or store_for(self.path, spark)
 
     # -- manifest plumbing -------------------------------------------------
-
-    def _manifest_path(self, version: int) -> str:
-        return _manifest_file(self.path, version)
 
     def _versions(self) -> list[int]:
         return _log_versions(self.log, self.path)
@@ -1492,8 +1443,7 @@ class SifTable:
         # just wrote): feeds size_bytes() → read()'s automatic
         # broadcast hint, the stats channel the Python DataSource API
         # cannot carry to Catalyst (VERDICT r11 "Next round" #4)
-        gbytes = self._dir_bytes(gpath)
-        stats: dict = {"rows": row["rows"], "bytes": gbytes}
+        stats: dict = {"rows": row["rows"], "bytes": self.log.data_bytes(gpath)}
         col_stats = {}
         for c in stat_cols:
             lo = _stat_json(row[f"min::{c}"])
@@ -1503,8 +1453,14 @@ class SifTable:
         if col_stats:
             stats["stats"] = col_stats
         if has_key:
-            stats["key_min"] = row["kmin"]
-            stats["key_max"] = row["kmax"]
+            # the pruning-bound JSON form: dates and timestamps as ISO
+            # strings, strings at full length; a decimal key gets no pair
+            try:
+                stats["key_min"], stats["key_max"] = (
+                    _stat_bound(row["kmin"]), _stat_bound(row["kmax"])
+                )
+            except TypeError:
+                pass
         if m.get("key_bloom") and keys and all(k in df.columns for k in keys):
             # one column-pruned scan of the freshly written group
             # (the key column(s) only); None when saturated
@@ -1520,23 +1476,6 @@ class SifTable:
             out["col_ids"] = ids
         return out
 
-    def _path_exists(self, path: str) -> bool:
-        fs, _, jvm = _fs(self.spark, self.path)
-        return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
-
-    def _dir_bytes(self, path: str) -> int:
-        """Total bytes of the data files under ``path`` (recursive,
-        via the table's Hadoop FS so hdfs:// groups work too)."""
-        fs, _, jvm = _fs(self.spark, self.path)
-        total = 0
-        it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
-        while it.hasNext():
-            st = it.next()
-            name = st.getPath().getName()
-            if not name.startswith(("_", ".")):
-                total += st.getLen()
-        return total
-
     def size_bytes(self, version: int | None = None) -> int:
         """Exact on-disk bytes of a snapshot — per-group ``bytes``
         recorded at write time; legacy groups (pre-round-12 manifests)
@@ -1545,7 +1484,7 @@ class SifTable:
         total = 0
         for g in m["groups"]:
             b = g.get("bytes")
-            total += int(b) if b is not None else self._dir_bytes(g["path"])
+            total += int(b) if b is not None else self.log.data_bytes(g["path"])
         return total
 
     def _group_table_name(self, gpath: str) -> str:
@@ -1888,7 +1827,12 @@ class SifTable:
         if any(v is None for v in values):
             raise ValueError("lookup(None) is not a range-key lookup")
         target = T._parse_datatype_string(m["schema"])
-        bounds = {k: (_stat_bound(v),) * 2 for k, v in zip(keys, values)}
+        bounds = {}
+        for k, v in zip(keys, values):
+            try:
+                bounds[k] = (_stat_bound(v),) * 2
+            except TypeError:
+                pass  # no stat form (a decimal key): no range skip
         # probe only the bloom ktypes of the groups the ranges keep: one
         # job per such ktype, none when no kept group has a bloom
         ranged = {**m, "groups": prune_groups(m, bounds)}
@@ -2020,7 +1964,7 @@ class SifTable:
         load = functools.cache(self._load)
         entries = feed_window(
             versions, load, after_version, hi, cdf=cdf,
-            exists=self._path_exists,
+            exists=self.log.exists,
         )
         return self._read_feed(entries, load(hi), cdf)
 
@@ -2090,9 +2034,7 @@ class SifTable:
                 added=[group["id"]], txns=_advance_txns(h, txn),
             )
 
-        return _publish(
-            self.log, self.path, m, build, [group], self._rename_dir, txn
-        )
+        return _publish(self.log, self.path, m, build, [group], txn)
 
     # -- keyed mutations: upsert / merge / delete_keys ------------------------
 
@@ -2356,7 +2298,7 @@ class SifTable:
 
         return _publish(
             self.log, self.path, m, build, new + dvs + ([cdc] if cdc else []),
-            self._rename_dir, txn,
+            txn,
         )
 
     def _plan_keyset(
@@ -2646,24 +2588,6 @@ class SifTable:
                     "its own job and could disagree with the committed "
                     "rows"
                 )
-
-    def _rename_dir(self, old_path: str, new_path: str) -> None:
-        """Rename with the result CHECKED (ADVICE r13 medium):
-        FileSystem.rename reports failure as a boolean, and a silently
-        failed rename inside _publish's rebase would publish a
-        manifest whose re-minted group/dv/cdc paths don't exist — an
-        unreadable committed version. Raising ConcurrentCommitError
-        routes the caller to its full retry instead."""
-        fs, _, jvm = _fs(self.spark, self.path)
-        ok = fs.rename(
-            jvm.org.apache.hadoop.fs.Path(old_path),
-            jvm.org.apache.hadoop.fs.Path(new_path),
-        )
-        if not ok:
-            raise ConcurrentCommitError(
-                f"rename {old_path} -> {new_path} failed — rebase "
-                "abandoned, full retry required"
-            )
 
     @staticmethod
     def _meta_matches(a: dict, b: dict) -> bool:
@@ -3195,29 +3119,18 @@ class SifTable:
         capped by the manifest retention."""
         versions = self._versions()
         doomed = []
-        fs, _, jvm = _fs(self.spark, self.path)
         if cdf_retain_last is not None and len(versions) > cdf_retain_last:
             for v in versions[:-cdf_retain_last]:
-                dm = self._load(v)
-                cdc = dm.get("cdc")
-                if cdc and fs.exists(
-                    jvm.org.apache.hadoop.fs.Path(cdc["path"])
-                ):
+                cdc = self._load(v).get("cdc")
+                if cdc and self.log.exists(cdc["path"]):
                     doomed.append(cdc["path"])
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(cdc["path"]), True
-                    )
+                    self.log.delete(cdc["path"])
         if len(versions) <= retain_last:
             return doomed
-        keep_versions = versions[-retain_last:]
-        live = set()
-        live_dv = set()
-        for v in keep_versions:
+        live = set()  # group and dv sidecar dirs a retained version reads
+        for v in versions[-retain_last:]:
             km = self._load(v)
-            for g in km["groups"]:
-                live.add(g["path"])
-            for d in km.get("dvs") or []:
-                live_dv.add(d["path"])
+            live.update(d["path"] for d in km["groups"] + (km.get("dvs") or []))
         doomed_manifests = versions[: -retain_last]
         doomed2 = []
         for v in doomed_manifests:
@@ -3229,14 +3142,13 @@ class SifTable:
             # until their groups rewrite) — reclaim only when no
             # retained manifest references them
             for d in dm.get("dvs") or []:
-                if d["path"] not in live_dv and d["path"] not in doomed2:
+                if d["path"] not in live and d["path"] not in doomed2:
                     doomed2.append(d["path"])
             if dm.get("cdc") and dm["cdc"]["path"] not in doomed:
                 # a change file belongs to exactly its own version —
                 # dropping the manifest makes it unreachable
                 doomed2.append(dm["cdc"]["path"])
-        for path in doomed2:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-        for v in doomed_manifests:
-            self.log.delete(self._manifest_path(v))
+        manifests = [_manifest_file(self.path, v) for v in doomed_manifests]
+        for path in doomed2 + manifests:  # data dirs first
+            self.log.delete(path)
         return doomed + doomed2

@@ -441,47 +441,51 @@ def test_append_window_folds_without_rewriting_index_groups(spark, dirs):
     _assert_index_exact(spark, idx_path, src.read(), centroids)
 
 
-def test_probe_state_tolerates_only_missing_or_garbled_file(spark, tmp_path, monkeypatch):
+def test_probe_state_tolerates_only_missing_or_garbled_file(spark, tmp_path):
     """The maintainer's probe-state hint degrades to 0 (one extra recall
     probe) when the file is missing or unparsable; any other failure of
-    the read or the write propagates instead of being swallowed."""
+    the store's read or write propagates instead of being swallowed.
+    The checksum case runs on the Hadoop store, the only one that
+    writes a .crc sidecar."""
     from py4j.protocol import Py4JJavaError
 
-    import sif_spark.table as table_mod
+    from sif_spark.logstore import HadoopRenameLogStore, PosixExclLogStore
 
     idx = str(tmp_path / "idx")
-    assert sgsim._read_probe_state(spark, idx) == 0  # never written
-    sgsim._write_probe_state(spark, idx, 1234)
-    assert sgsim._read_probe_state(spark, idx) == 1234
+    hadoop = HadoopRenameLogStore(spark)
+    assert sgsim._read_probe_state(hadoop, idx) == 0  # never written
+    sgsim._write_probe_state(hadoop, idx, 1234)
+    assert sgsim._read_probe_state(hadoop, idx) == 1234
     state = tmp_path / "idx" / "ann_meta" / "probe_state.json"
     state.write_bytes(b"{\"rows_at")  # no longer matches its checksum
-    assert sgsim._read_probe_state(spark, idx) == 0
+    assert sgsim._read_probe_state(hadoop, idx) == 0
     (tmp_path / "idx" / "ann_meta" / ".probe_state.json.crc").unlink()
-    for garbled in (b"{\"rows_at", b"[1, 2]", b"{}", b"\xff\xfe"):
-        state.write_bytes(garbled)
-        assert sgsim._read_probe_state(spark, idx) == 0, garbled
+    for log in (hadoop, PosixExclLogStore()):
+        for garbled in (b"{\"rows_at", b"[1, 2]", b"{}", b"\xff\xfe"):
+            state.write_bytes(garbled)
+            assert sgsim._read_probe_state(log, idx) == 0, garbled
+    sgsim._write_probe_state(PosixExclLogStore(), idx, 77)
+    assert sgsim._read_probe_state(hadoop, idx) == 77
 
     jvm = spark.sparkContext._jvm
     io_error = Py4JJavaError("fs call", jvm.java.io.IOException("disk gone"))
 
-    class FailingFs:
+    class FailingStore(PosixExclLogStore):
         def __init__(self, err):
             self.err = err
 
-        def open(self, p):
+        def read_bytes(self, path):
             raise self.err
 
-        def create(self, p, overwrite):
+        def replace(self, path, data):
             raise self.err
 
-    for err in (io_error, RuntimeError("gateway down")):
-        monkeypatch.setattr(
-            table_mod, "_fs", lambda s, p, err=err: (FailingFs(err), p, None)
-        )
+    errors = (io_error, PermissionError("denied"), RuntimeError("gateway down"))
+    for err in errors:
         with pytest.raises(type(err)):
-            sgsim._read_probe_state(spark, idx)
+            sgsim._read_probe_state(FailingStore(err), idx)
         with pytest.raises(type(err)):
-            sgsim._write_probe_state(spark, idx, 1)
+            sgsim._write_probe_state(FailingStore(err), idx, 1)
 
 
 def test_load_ivf_index_meta_errors_propagate(spark, tmp_path):

@@ -310,6 +310,7 @@ def test_daily_ingest_rejects_incompatible_history_params(spark, tmp_path):
     assert out.count() == 1
     # an epoch with its params record deleted is unprovable -> loud
     import glob
+    import os
     import shutil
 
     for p in glob.glob(f"{store}/epoch_*/sig_params"):
@@ -319,3 +320,16 @@ def test_daily_ingest_rejects_incompatible_history_params(spark, tmp_path):
             spark.createDataFrame([(3, "third doc")], "doc_id long, text string"),
             store, "e3", hash_fn="md5", num_hashes=32,
         )
+    # a committed (_SUCCESS-marked) but unreadable record is not "no
+    # record": the read error propagates
+    for p in glob.glob(f"{store}/epoch_*"):
+        os.makedirs(f"{p}/sig_params")
+        for name, data in (("_SUCCESS", b""), ("part-0.parquet", b"garbage")):
+            with open(f"{p}/sig_params/{name}", "wb") as fh:
+                fh.write(data)
+    with pytest.raises(Exception) as err:
+        daily_ingest(
+            spark.createDataFrame([(3, "third doc")], "doc_id long, text string"),
+            store, "e3", hash_fn="md5", num_hashes=32,
+        )
+    assert not isinstance(err.value, ValueError), err.value

@@ -183,37 +183,36 @@ def test_ds_batch_read_applies_dv(spark, tdir):
     assert df.filter("k % 3 = 0").count() == 0
 
 
-def test_rename_dir_failure_raises(spark, tdir, monkeypatch):
-    """ADVICE r13 medium: FileSystem.rename reports failure as a
-    FALSE return (it throws only for some failure classes) — a false
-    must raise ConcurrentCommitError (-> caller's full retry), never
-    let the rebase commit a manifest pointing at paths that don't
-    exist."""
-    import sif_spark.table as tb
-    from sif_spark.table import ConcurrentCommitError
+def test_rename_dir_failure_raises(spark, tdir):
+    """ADVICE r13 medium: a rebase rename can fail (FileSystem.rename
+    reports most failures as a FALSE return, which the store raises as
+    OSError) — _publish must raise ConcurrentCommitError (-> caller's
+    full retry), never let the rebase commit a manifest pointing at
+    paths that don't exist. The failure is injected through the store."""
+    from sif_spark.logstore import PosixExclLogStore
+    from sif_spark.table import ConcurrentCommitError, _publish
 
     t = SifTable.create(spark, tdir, _slice(spark, 0, 10), key_col="k")
+    m = t._load()
+    renames = []
 
-    class _FakeFs:
-        def rename(self, *_):
-            return False  # the silent-failure mode the fix guards
+    class RenameFails(PosixExclLogStore):
+        def rename(self, src, dst):
+            renames.append((src, dst))
+            raise OSError(f"rename {src} -> {dst} failed")
 
-    class _FakePath:
-        def __init__(self, p):
-            self.p = p
-
-    class _FakeJvmNode:
-        def __getattr__(self, _):
-            return self
-
-        def __call__(self, p):
-            return _FakePath(p)
-
-    monkeypatch.setattr(
-        tb, "_fs", lambda spark, path: (_FakeFs(), None, _FakeJvmNode())
-    )
+    gid = "g-0000000001-000-deadbeef"
+    fresh = [{"id": gid, "path": f"{tdir}/data/{gid}"}]
     with pytest.raises(ConcurrentCommitError):
-        t._rename_dir(tdir + "/data/a", tdir + "/data/b")
+        # planned on the empty table, so v1 is taken: the rebase renames
+        # the fresh dir to version 2 and the store reports failure
+        _publish(
+            RenameFails(), tdir, {},
+            lambda h: {**m, "version": h.get("version", 0) + 1}, fresh,
+        )
+    moved = f"{tdir}/data/g-0000000002-000-deadbeef"
+    assert renames == [(f"{tdir}/data/{gid}", moved)]
+    assert t._versions() == [1]
 
 
 def test_meta_matches_normalizes_absent_dvs(spark):

@@ -77,6 +77,7 @@ def _kill_one_executor_when_job_active(spark, killed: dict) -> threading.Thread:
 def main() -> int:
     from pyspark.sql import functions as F
 
+    from sif_spark.logstore import store_for
     from sif_spark.pipeline import _list_committed_epochs, daily_ingest
     from sif_spark.queries import QUERIES
     from sif_spark.session import get_session
@@ -131,12 +132,11 @@ def main() -> int:
     # commit contract: every epoch visible to history has its marker,
     # and exactly the two expected epochs are committed — no
     # half-written epoch is visible after the crash-recovery run
-    epochs = _list_committed_epochs(spark, f"{base}/fault")
+    log = store_for(f"{base}/fault", spark)
+    epochs = _list_committed_epochs(log, f"{base}/fault")
     result["committed_epochs"] = len(epochs)
-    from sif_spark.pipeline import _has_success_marker
-
     result["all_epochs_marked"] = all(
-        _has_success_marker(spark, f"{e}/survivors") for e in epochs
+        log.exists(f"{e}/survivors/_SUCCESS") for e in epochs
     )
 
     result["ok"] = bool(
