@@ -34,9 +34,9 @@ generation meta and probe state, the pipeline run manifest), bytes
 reads, ``exists`` (``_SUCCESS`` markers, change files), the checked
 rename of a commit rebase, the recursive delete of vacuum and the data
 byte size of a written group. ``store_for`` picks the store of a path
-once: plain local paths get PosixExclLogStore (pure-Python I/O, no
-JVM round trip), schemed paths (``hdfs://``, ``file:`` URIs, object
-stores) get HadoopRenameLogStore. A crash point at any storage write
+once: plain local paths and ``file:`` URIs get PosixExclLogStore
+(pure-Python I/O, no JVM round trip, an atomic ``os.replace``), other
+schemed paths (``hdfs://``, object stores) get HadoopRenameLogStore. A crash point at any storage write
 is therefore one wrapped store, not a patch per module.
 
 Why this matters at 100 TB: the table LIVES on object storage there,
@@ -161,10 +161,16 @@ def strip_file_scheme(p: str) -> str:
 
 
 def store_for(path: str, spark=None) -> LogStore:
-    """The store of ``path``: HadoopRenameLogStore for a schemed path
-    (``hdfs://``, a ``file:`` URI, an object store; over ``spark`` or
-    the active session), PosixExclLogStore for a plain local one."""
-    if "://" in path or ":" in path.split("/", 1)[0]:
+    """The store of ``path``: PosixExclLogStore for a plain local path
+    or a ``file:`` URI (it strips the scheme), HadoopRenameLogStore for
+    any other schemed path (``hdfs://``, an object store; over
+    ``spark`` or the active session). A ``file:`` URI stays off the
+    Hadoop store because on a checksummed local FS its replace moves a
+    file and its .crc one after the other, so a racing reader could
+    see no file or a failed checksum."""
+    if not path.startswith("file:") and (
+        "://" in path or ":" in path.split("/", 1)[0]
+    ):
         from pyspark.sql import SparkSession
 
         return HadoopRenameLogStore(spark or SparkSession.active())
@@ -270,7 +276,8 @@ class PosixExclLogStore(LogStore):
     check-then-act window. The local reference implementation of the
     object-store conditional-put shape; also valid on NFS (link is
     the classic NFS-safe lock primitive). Every other operation is
-    plain ``os`` I/O."""
+    plain ``os`` I/O. A ``file:`` URI path is read as the plain path it
+    names (strip_file_scheme)."""
 
     @staticmethod
     def _write_tmp(path: str, data: bytes) -> str:
@@ -285,10 +292,11 @@ class PosixExclLogStore(LogStore):
         return tmp
 
     def read_bytes(self, path: str) -> bytes:
-        with open(path, "rb") as fh:
+        with open(strip_file_scheme(path), "rb") as fh:
             return fh.read()
 
     def put_if_absent(self, path: str, content: str) -> bool:
+        path = strip_file_scheme(path)
         tmp = self._write_tmp(path, content.encode("utf-8"))
         try:
             os.link(tmp, path)  # atomic: EEXIST iff someone else won
@@ -299,12 +307,14 @@ class PosixExclLogStore(LogStore):
             os.unlink(tmp)
 
     def replace(self, path: str, data: bytes) -> None:
+        path = strip_file_scheme(path)
         os.replace(self._write_tmp(path, data), path)
 
     def exists(self, path: str) -> bool:
-        return os.path.exists(path)
+        return os.path.exists(strip_file_scheme(path))
 
     def list_names(self, directory: str) -> list[str]:
+        directory = strip_file_scheme(directory)
         if not os.path.isdir(directory):
             return []
         return os.listdir(directory)
@@ -313,12 +323,14 @@ class PosixExclLogStore(LogStore):
         # rename(2) replaces an existing file (or empty dir); the
         # callers' destinations carry a fresh uuid, so the check
         # cannot race a sibling writer
+        src, dst = strip_file_scheme(src), strip_file_scheme(dst)
         if os.path.lexists(dst):
             raise FileExistsError(f"rename {src} -> {dst}: destination exists")
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
 
     def delete(self, path: str) -> None:
+        path = strip_file_scheme(path)
         if os.path.isdir(path) and not os.path.islink(path):
             shutil.rmtree(path)
         else:
@@ -327,7 +339,7 @@ class PosixExclLogStore(LogStore):
 
     def data_bytes(self, path: str) -> int:
         total = 0
-        for root, dirs, files in os.walk(path):
+        for root, dirs, files in os.walk(strip_file_scheme(path)):
             dirs[:] = [d for d in dirs if not d.startswith(_NOT_DATA)]
             total += sum(
                 os.path.getsize(os.path.join(root, f))

@@ -54,7 +54,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import threading
 import time
 from collections import deque
@@ -98,6 +97,17 @@ def _load_manifest(table_path: str, version: int) -> dict:
     from sif_spark.table import _log_manifest
 
     return _log_manifest(store_for(table_path), table_path, version)
+
+
+def _parquet_files(table_path: str, d: str) -> list[str]:
+    """The parquet files of dir ``d`` in name order, listed through the
+    table path's store. A missing dir (a group vacuumed under a pinned
+    reader) raises FileNotFoundError instead of reading as empty."""
+    log = store_for(table_path)
+    names = sorted(n for n in log.list_names(d) if n.endswith(".parquet"))
+    if not names and not log.exists(d):
+        raise FileNotFoundError(d)
+    return [f"{d}/{n}" for n in names]
 
 
 class _GroupFilePartition(InputPartition):
@@ -230,13 +240,10 @@ class _SifTableStreamReader(DataSourceStreamReader):
         parts: list[InputPartition] = []
         for e in entries:
             cmap = _written_names(e.col_ids, self.head.get("columns"), names)
-            for name in sorted(os.listdir(e.path)):
-                if name.endswith(".parquet"):
-                    parts.append(
-                        _GroupFilePartition(
-                            os.path.join(e.path, name), e.version, e.tag, cmap
-                        )
-                    )
+            parts += [
+                _GroupFilePartition(f, e.version, e.tag, cmap)
+                for f in _parquet_files(self.table_path, e.path)
+            ]
         return parts
 
     def read(self, partition: _GroupFilePartition) -> Iterator:
@@ -471,11 +478,7 @@ class _SifTableBatchReader(DataSourceReader):
         dv_keys = _key_cols(m)
         dv_by_gid: dict[str, list] = {}
         for d in m.get("dvs") or []:
-            files = [
-                os.path.join(d["path"], n)
-                for n in sorted(os.listdir(d["path"]))
-                if n.endswith(".parquet")
-            ]
+            files = _parquet_files(self.table_path, d["path"])
             kmap = _dv_key_names(d.get("col_ids"), m.get("columns"), dv_keys)
             for gid in d["gids"]:
                 dv_by_gid.setdefault(gid, []).extend(
@@ -495,14 +498,10 @@ class _SifTableBatchReader(DataSourceReader):
                 if g["id"] in dv_by_gid
                 else None
             )
-            for name in sorted(os.listdir(g["path"])):
-                if name.endswith(".parquet"):
-                    parts.append(
-                        _GroupFilePartition(
-                            os.path.join(g["path"], name), gv,
-                            colmap=cmap, dv=dv,
-                        )
-                    )
+            parts += [
+                _GroupFilePartition(f, gv, colmap=cmap, dv=dv)
+                for f in _parquet_files(self.table_path, g["path"])
+            ]
         return parts
 
     def read(self, partition: _GroupFilePartition) -> Iterator:
@@ -552,12 +551,14 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
     Mechanics: executors stream Arrow batches straight into staged
     parquet files under <table>/_staging/<write_id>/ and return
     per-file row counts + min/max stats in their commit messages; the
-    driver-side commit() (a sessionless Python worker — everything is
-    plain file I/O on the shared FS, the same contract the planner
-    already relies on) moves the staged files into a version-named
-    group dir and publishes the manifest through table._publish over
-    the table path's store (logstore.store_for) — the one commit loop
-    every SifTable writer uses. A lost CAS re-reads the head, re-checks
+    driver-side commit() (a sessionless Python worker — every file
+    step goes through the table path's store, logstore.store_for, the
+    same contract the planner already relies on) moves the staged files
+    into a version-named group dir, builds its entry with
+    table._group_entry (rows, bytes, stats, key pair, col_ids: the
+    entry every SifTable group write builds) and publishes the manifest
+    through table._publish — the one commit loop every SifTable writer
+    uses. A lost CAS re-reads the head, re-checks
     the refusals below against it, renames the group dir to the next
     version through the store and re-puts; no executor work re-runs. A
     failure anywhere before the publish removes the staging dir and
@@ -649,12 +650,13 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
         # readers, so removing it here is safe at any point before the
         # publish.
         self._fresh: list[dict] = []
+        log = store_for(self.table_path)
         try:
             self._commit_inner(messages)
         except BaseException:
-            shutil.rmtree(self.staging, ignore_errors=True)
+            log.delete(self.staging)
             for d in self._fresh:
-                shutil.rmtree(d["path"], ignore_errors=True)
+                log.delete(d["path"])
             raise
 
     def _commit_inner(self, messages) -> None:
@@ -664,14 +666,16 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             _advance_txns,
             _ddl,
             _fresh_columns,
+            _group_entry,
             _publish,
             next_manifest,
         )
 
+        log = store_for(self.table_path)
         files = [m for m in messages if m is not None and m.file]
         total_rows = sum(m.rows for m in files)
         if not files and not self.overwrite:
-            shutil.rmtree(self.staging, ignore_errors=True)
+            log.delete(self.staging)
             return  # empty append: no version
         # merge per-file stats (a column missing from ANY file's stats
         # carries no group stats — conservative, prune-safe)
@@ -686,11 +690,10 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 col_stats[c] = [min(los) if los else None,
                                 max(his) if his else None]
         ddl = _ddl(self.schema)
-        log = store_for(self.table_path)
         versions = _versions_on_disk(self.table_path)
         head = _load_manifest(self.table_path, versions[-1]) if versions else {}
         if _advance_txns(head, self.txn) is None:
-            shutil.rmtree(self.staging, ignore_errors=True)
+            log.delete(self.staging)
             return  # replayed epoch: committed no-op
         if files:
             v = head.get("version", 0) + 1
@@ -699,6 +702,7 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             self._fresh.append({"id": gid, "path": gpath})
             for msg in files:
                 log.rename(msg.file, f"{gpath}/{os.path.basename(msg.file)}")
+            nbytes = log.data_bytes(gpath)
 
         def build(m: dict) -> dict:
             if m.get("bucket"):
@@ -714,16 +718,13 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
                 )
             key = m.get("key_col") or self.key_col
             columns = m.get("columns") if m else _fresh_columns(self.schema)
-            new_groups = []
-            for entry in self._fresh:
-                group = {**entry, "schema": ddl, "rows": total_rows}
-                if columns:
-                    group["col_ids"] = {c["name"]: c["id"] for c in columns}
-                if col_stats:
-                    group["stats"] = {c: list(b) for c, b in col_stats.items()}
-                if key and key in col_stats:
-                    group["key_min"], group["key_max"] = col_stats[key]
-                new_groups.append(group)
+            new_groups = [
+                _group_entry(
+                    d["id"], d["path"], self.schema, total_rows, nbytes,
+                    col_stats, col_stats.get(key), columns,
+                )
+                for d in self._fresh
+            ]
             # an empty-frame OVERWRITE commits groups=[] (a readable
             # empty snapshot) — a zero-file group dir would make the
             # new latest version unreadable
@@ -744,10 +745,10 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
 
         _publish(log, self.table_path, head, build, self._fresh, self.txn)
         self._fresh = []  # committed: now owned by readers
-        shutil.rmtree(self.staging, ignore_errors=True)
+        log.delete(self.staging)
 
     def abort(self, messages) -> None:
-        shutil.rmtree(self.staging, ignore_errors=True)
+        store_for(self.table_path).delete(self.staging)
 
 
 class SifTableDataSource(DataSource):

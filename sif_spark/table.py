@@ -17,22 +17,26 @@ Layout:
       _manifests/v0000000001.json   # one JSON per snapshot
       data/g-<version>-<seq>-<id>/  # immutable parquet file groups
 
-Commit protocol — the ONLY mutation is manifest creation:
+Commit protocol — the ONLY mutation is manifest creation. Every
+SifTable op runs one core, ``SifTable._op_once``: load the head, skip
+a replayed txn, the op's plan, then
 
-1. write the new data group dirs (Spark parquet writes, each with its
-   own _SUCCESS);
+1. write the plan's new dirs (data groups, a change file, a
+   deletion-vector sidecar) as ONE parallel wave through one directory
+   writer, ``_write_dir`` (no _SUCCESS marker: the manifest gates
+   visibility);
 2. publish the manifest at `v<N+1>.json` via the table's LogStore
    (logstore.py) — an atomic put-if-absent, so two writers racing to
    version N+1 get exactly one winner (optimistic concurrency). Every
    writer publishes through ONE function, ``_publish``: the loser
-   re-reads the head and, when its op can rebase onto it, renames its
-   fresh dirs to the next version and re-puts without re-running a
-   job (append, overwrite, the keyed ops, the `sif_table` writer);
-   otherwise — and always for create, delete, compact, restore and
-   rename/drop column — it raises ConcurrentCommitError and the op's
-   retry re-runs it on the new snapshot. A SIGKILL anywhere before
-   the publish leaves orphan data dirs and/or a .tmp manifest, both
-   invisible to every reader. The default store is the link(2)
+   re-reads the head and, when its plan's rebase rule allows it,
+   renames its fresh dirs to the next version and re-puts without
+   re-running a job (append, overwrite, the keyed ops, the `sif_table`
+   writer); otherwise — and always for create, delete, compact,
+   restore and rename/drop column — it raises ConcurrentCommitError
+   and the op's retry re-runs it on the new snapshot. A SIGKILL
+   anywhere before the publish leaves orphan data dirs and/or a .tmp
+   manifest, both invisible to every reader. The default store is the link(2)
    conditional put for local paths (kernel-atomic; Hadoop's LOCAL
    rename is POSIX rename(2) under a check-then-act wrapper) and
    Hadoop tmp+rename for schemed paths (atomic-and-exclusive by HDFS
@@ -71,17 +75,16 @@ never a correctness input (false positive ⇒ harmless rewrite). Group
 dirs are plain parquet: every scan benefit (pushdown, pruning,
 row-group stats) is Spark's.
 
-Keyed mutations: upsert, merge and delete_keys share ONE per-attempt
-core, ``SifTable._keyed_once`` (txn-replay check → key validation →
-source materialization → the bounds ∥ bloom-probe wave →
-``prune_groups`` → one parallel write wave → manifest → ``_publish``,
-whose conflict-granular rebase is ``_rebased``), retried by one
-wrapper (``_retrying``);
-each op only plans what differs — the anti-join survivor rewrite
-(upsert, copy-on-write delete_keys), merge's LEFT join + CASE, or the
-deletion-vector sidecar (dv delete_keys, delete-only merge). Every
-commit, including the `sif_table` DataSource writer's, builds its
-manifest with ``next_manifest``: the manifest field set lives there and
+Keyed mutations: upsert, merge and delete_keys share ONE planner,
+``SifTable._plan_keyed`` (key validation → source materialization →
+the bounds ∥ bloom-probe wave → ``prune_groups``; a lost race rebases
+through the conflict-granular ``_rebased``), retried by one wrapper
+(``_retrying``); each op only plans what differs — the anti-join
+survivor rewrite (upsert, copy-on-write delete_keys), merge's LEFT
+join + CASE, or the deletion-vector sidecar (dv delete_keys,
+delete-only merge). Every commit, including the `sif_table` DataSource
+writer's, builds its manifest with ``next_manifest`` and each data
+group's entry with ``_group_entry``: those field sets live there and
 nowhere else.
 
 Reference: sif datasource/file/file_datasource.go:24-47 is read-only
@@ -540,13 +543,75 @@ def _retrying(attempt, retries: int) -> int:
     raise last  # type: ignore[misc]
 
 
-class _KeyedPlan(NamedTuple):
-    """A keyed op's plan, handed to the shared core (_keyed_once)."""
+class _Plan(NamedTuple):
+    """One attempt's plan of a table op, run by the op core
+    (SifTable._op_once)."""
 
-    carried: list  # groups kept into the next snapshot, in order
-    frames: dict  # write-wave slot -> frame: "wg" / "ig" / "cdc" / "dv"
-    counts: Callable  # settled write results -> {counter: rows}
-    per_gid: dict | None = None  # "dv": tombstones per group id
+    # the next snapshot's groups in order: kept entries, and the write
+    # slots (str) whose data group lands in that place
+    groups: list
+    schema: T.StructType | str  # the next snapshot's schema
+    columns: list[dict] | None  # its column ids; every write records by them
+    # write slot -> frame: "cdc" a change file, "dv" a deletion-vector
+    # sidecar, any other a data group (numbered in slot order)
+    frames: dict = {}
+    counts: Callable = lambda res: {}  # settled writes -> {counter: rows}
+    fields: dict = {}  # further next_manifest fields (spec, txns, ...)
+    # (m, h, kept groups) -> the kept groups on the head h that won the
+    # race; None refuses every head but m
+    rebase: Callable | None = None
+    drop_empty: bool = False  # a zero-row data group stays an orphan
+
+
+# the dir kind and parent dir of the write slots that are not data groups
+_DIRS = {"cdc": ("c", "cdc"), "dv": ("d", "dv")}
+
+# column types whose min/max a data group records for data skipping
+_STAT_TYPES = (
+    T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.FloatType,
+    T.DoubleType, T.StringType, T.DateType, T.TimestampType, T.BooleanType,
+)
+
+
+def _group_entry(
+    gid: str,
+    path: str,
+    schema: T.StructType,
+    rows: int,
+    nbytes: int,
+    minmax: dict,
+    key_range: tuple | None,
+    columns: list[dict] | None,
+    bloom: dict | None = None,
+) -> dict:
+    """A data group's manifest entry: the one place its fields are
+    built, for the SifTable ops' groups and the `sif_table` writer's
+    alike, with no session. ``minmax`` maps a column to its (min, max),
+    raw or already in JSON-stat form (_stat_json keeps that form); a
+    pair that cannot be order-compared records no stats. ``key_range``
+    is a 1-ary key's (min, max), kept in the pruning-bound form
+    (_stat_bound: dates and timestamps as ISO strings, strings at full
+    length; a decimal key gets none). ``nbytes`` is the dir's exact data
+    bytes, which size_bytes() and read()'s broadcast planning use."""
+    out = {
+        "id": gid, "path": path, "schema": _ddl(schema), "rows": rows,
+        "bytes": nbytes,
+    }
+    stats = {c: [_stat_json(lo), _stat_json(hi)] for c, (lo, hi) in minmax.items()}
+    stats = {c: b for c, b in stats.items() if _STAT_SKIP not in b}
+    if stats:
+        out["stats"] = stats
+    if key_range is not None:
+        try:
+            out["key_min"], out["key_max"] = map(_stat_bound, key_range)
+        except TypeError:
+            pass
+    if bloom is not None:
+        out["key_bloom"] = bloom
+    ids = _col_ids_for(columns, schema)
+    if ids:
+        out["col_ids"] = ids
+    return out
 
 
 def _tagged(df: DataFrame, change_type: str) -> DataFrame:
@@ -1150,7 +1215,7 @@ def _log_manifest(log, path: str, version: int) -> dict:
     return m
 
 
-# the manifest counters each keyed op records
+# the manifest counters each op records (delete: delete_keys and delete)
 _OP_COUNTERS = {
     "upsert": ("replaced_rows",),
     "merge": ("replaced_rows", "deleted_rows"),
@@ -1357,120 +1422,140 @@ class SifTable:
             raise ValueError(f"version {v} not in {versions}")
         return _log_manifest(self.log, self.path, v)
 
-    def _commit(self, manifest: dict) -> int:
-        """Publish ``manifest`` in one try (create, delete, compact,
-        restore, rename/drop column): exactly one writer wins a
-        version, and its build refuses every head but the snapshot it
-        was planned on, so the loser raises ConcurrentCommitError."""
+    # -- the op core ----------------------------------------------------------
+
+    def _op_once(
+        self, op: str, plan: Callable, txn: tuple[str, int] | None = None
+    ) -> int:
+        """One attempt of a table op; every SifTable op runs this core:
+        load the head (``{}`` for create) → skip a replayed ``txn`` →
+        the op's ``plan(m)`` (a _Plan) → the plan's writes as ONE
+        _parallel_jobs wave (independent jobs, so the wave overlaps
+        them; guide §2.6) → _publish the successor manifest. A lost race
+        rebases by the plan's rule, or refuses with ConcurrentCommitError
+        (the caller's retry re-runs the attempt). A change file is
+        SPECULATIVE: it is referenced only when the op's counters show a
+        change, so a bloom/range false positive (no key matched) leaves
+        it an invisible orphan — the artifact a pre-commit crash
+        already leaves."""
+        m = {} if op == "create" else self._load()
+        if _advance_txns(m, txn) is None:
+            return m["version"]  # replayed epoch: committed no-op
+        p = plan(m)
+        v = m.get("version", 0) + 1
+        layout = {f: p.fields.get(f, m.get(f)) for f in _SPEC}
+        seq = {s: i for i, s in enumerate(s for s in p.frames if s not in _DIRS)}
+        res = dict(zip(p.frames, _parallel_jobs(*[
+            functools.partial(
+                self._write_dir, s, f, v, seq.get(s, 0), layout, p.columns
+            )
+            for s, f in p.frames.items()
+        ])))
+        counts = p.counts(res)
+        counters = {c: int(counts.get(c, 0)) for c in _OP_COUNTERS.get(op, ())}
+
+        def landed(s) -> bool:
+            return isinstance(s, dict) or (
+                s in res and not (p.drop_empty and int(res[s]["rows"]) == 0)
+            )
+
+        planned = [s if isinstance(s, dict) else res[s]
+                   for s in p.groups if landed(s)]
+        new = [res[s] for s in p.groups if isinstance(s, str) and landed(s)]
+        dvs = [res["dv"]] if "dv" in res else []
+        cdc = res.get("cdc") if any(counters.values()) else None
 
         def build(h: dict) -> dict:
-            if h is not manifest:
+            if h is m:
+                groups = planned
+            elif p.rebase is None:
                 raise ConcurrentCommitError(
-                    f"version {manifest['version']} was committed by "
-                    "another writer — re-read the table and retry"
+                    f"version {v} was committed by another writer — "
+                    "re-read the table and retry"
                 )
-            return manifest
+            else:
+                kept = [g for g in p.groups if isinstance(g, dict)]
+                groups = p.rebase(m, h, kept) + new
+            return next_manifest(h, op, groups, p.schema, **{
+                "columns": p.columns,
+                "added": [g["id"] for g in new if g is res.get("ig")],
+                "txns": _advance_txns(h, txn),
+                "dvs": _carry_dvs(h, groups) + dvs,
+                "cdc": cdc, **counters, **p.fields,
+            })
 
-        return _publish(self.log, self.path, manifest, build)
+        fresh = new + dvs + ([cdc] if cdc else []) if p.rebase else []
+        return _publish(self.log, self.path, m, build, fresh, txn)
 
-    # -- data groups ---------------------------------------------------------
+    def _write_dir(self, slot: str, df: DataFrame, version: int, seq: int,
+                   m: dict, columns: list[dict] | None) -> dict:
+        """Write ``df`` as the dir of write slot ``slot`` and return its
+        manifest entry — the ONE directory writer: a change file under
+        cdc/, a deletion-vector sidecar under dv/, or a data group under
+        data/ laid out by the key spec, bucket and bloom flag of ``m``,
+        each named ``[gcd]-<version>-<seq>-<hex8>`` (every feed derives
+        _commit_version from that name) and its written columns
+        recorded against the snapshot ``columns``.
 
-    def _write_group(self, df: DataFrame, version: int, seq: int,
-                     m: dict | str, columns: list[dict] | None = None) -> dict:
-        """Write ``df`` as data group ``seq`` of ``version``, laid out
-        by the key spec, bucket and bloom flag of manifest ``m`` (a bare
-        key name stands for a plain keyed table), its written columns
-        recorded against the snapshot ``columns``."""
+        The row count, a data group's per-column min/max and a
+        sidecar's group ids ride the WRITE job as one Observation (a
+        read-back would scan every written dir a second time). No
+        _SUCCESS marker: the manifest commit gates visibility, and the
+        marker is pure commit-tail latency on every dir of every op."""
         from pyspark.sql import Observation
 
-        if isinstance(m, str):
-            m = {"key_col": m}
+        kind, parent = _DIRS.get(slot, ("g", "data"))
+        name = f"{kind}-{version:010d}-{seq:03d}-{uuid.uuid4().hex[:8]}"
+        path = f"{self.path}/{parent}/{name}"
         keys, bucket = _key_cols(m), m.get("bucket")
-        gid = f"g-{version:010d}-{seq:03d}-{uuid.uuid4().hex[:8]}"
-        gpath = f"{self.path}/data/{gid}"
-        # group stats (row count, key min/max for file skipping) ride
-        # the WRITE job via the Observation API — the old
-        # read-back-and-aggregate cost a second full scan per group,
-        # which at compaction scale means reading the table twice
+        key = keys[0] if len(keys) == 1 and keys[0] in df.columns else None
+        stat_cols, ranged = [], []
+        if kind == "g":
+            # per-column min/max for data skipping, and the 1-ary key's
+            # pair (composite keys skip by the column ranges + the bloom)
+            stat_cols = [f.name for f in df.schema.fields
+                         if isinstance(f.dataType, _STAT_TYPES)]
+            ranged = stat_cols + ([key] if key and key not in stat_cols else [])
         obs = Observation()
         agg = [F.count(F.lit(1)).alias("rows")]
-        # the dedicated key_min/key_max pair is the 1-ary fast path;
-        # composite keys skip via the per-column `stats` ranges (below)
-        # plus the key-TUPLE bloom
-        has_key = len(keys) == 1 and keys[0] in df.columns
-        if has_key:
-            agg += [F.min(keys[0]).alias("kmin"), F.max(keys[0]).alias("kmax")]
-        # per-column min/max for read-side data skipping (read_between/
-        # lookup prune whole groups before the union) — same write job
-        stat_cols = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(
-                f.dataType,
-                (
-                    T.IntegerType, T.LongType, T.ShortType, T.ByteType,
-                    T.FloatType, T.DoubleType, T.StringType,
-                    T.DateType, T.TimestampType, T.BooleanType,
-                ),
-            )
-        ]
-        for c in stat_cols:
+        for c in ranged:
             agg += [F.min(c).alias(f"min::{c}"), F.max(c).alias(f"max::{c}")]
-        observed = df.observe(obs, *agg)
-        # no _SUCCESS marker: group visibility is gated by the manifest
-        # commit, not by the dir contents — the marker is pure commit-
-        # tail latency (its cost repeats on every group of every
-        # mutation, incl. each streaming fold's micro-commit)
-        if bucket:
+        if kind == "d":
+            agg.append(F.collect_set("_gid").alias("gids"))
+        w = df.observe(obs, *agg).write.mode("overwrite").option(
+            _NO_SUCCESS_OPT, "false"
+        )
+        if kind == "g" and bucket:
             # bucketed group: hash-clustered files + a session-catalog
-            # external table (the same mechanics as the epoch stores'
-            # zero-shuffle layout) — later equi-joins/aggregations on
-            # the bucket column read this group without an Exchange
-            (
-                observed.write.mode("overwrite")
-                .bucketBy(bucket["n"], bucket["col"])
-                .option("path", gpath)
-                .option(_NO_SUCCESS_OPT, "false")
-                .format("parquet")
-                .saveAsTable(self._group_table_name(gpath))
-            )
+            # external table (the epoch stores' zero-shuffle layout), so
+            # equi-joins/aggregations on the bucket column need no Exchange
+            w.bucketBy(bucket["n"], bucket["col"]).option("path", path).format(
+                "parquet"
+            ).saveAsTable(self._group_table_name(path))
         else:
-            observed.write.mode("overwrite").option(
-                _NO_SUCCESS_OPT, "false"
-            ).parquet(gpath)
+            w.parquet(path)
         row = obs.get
-        # exact on-disk bytes (one driver-side listing of the group we
-        # just wrote): feeds size_bytes() → read()'s automatic
-        # broadcast hint, the stats channel the Python DataSource API
-        # cannot carry to Catalyst (VERDICT r11 "Next round" #4)
-        stats: dict = {"rows": row["rows"], "bytes": self.log.data_bytes(gpath)}
-        col_stats = {}
-        for c in stat_cols:
-            lo = _stat_json(row[f"min::{c}"])
-            hi = _stat_json(row[f"max::{c}"])
-            if lo is not _STAT_SKIP and hi is not _STAT_SKIP:
-                col_stats[c] = [lo, hi]
-        if col_stats:
-            stats["stats"] = col_stats
-        if has_key:
-            # the pruning-bound JSON form: dates and timestamps as ISO
-            # strings, strings at full length; a decimal key gets no pair
-            try:
-                stats["key_min"], stats["key_max"] = (
-                    _stat_bound(row["kmin"]), _stat_bound(row["kmax"])
+        if kind == "g":
+            bloom = None
+            if m.get("key_bloom") and keys and all(k in df.columns for k in keys):
+                # one column-pruned scan of the freshly written group
+                # (the key column(s) only); None when saturated
+                bloom = _bloom_of(
+                    self.spark.read.schema(df.schema).parquet(path), keys,
+                    int(row["rows"]),
                 )
-            except TypeError:
-                pass
-        if m.get("key_bloom") and keys and all(k in df.columns for k in keys):
-            # one column-pruned scan of the freshly written group
-            # (the key column(s) only); None when saturated
-            bloom = _bloom_of(
-                self.spark.read.schema(df.schema).parquet(gpath), keys,
-                int(row["rows"]),
+            minmax = {c: (row[f"min::{c}"], row[f"max::{c}"]) for c in ranged}
+            return _group_entry(
+                name, path, df.schema, row["rows"], self.log.data_bytes(path),
+                {c: minmax[c] for c in stat_cols}, minmax.get(key), columns,
+                bloom,
             )
-            if bloom is not None:
-                stats["key_bloom"] = bloom
-        out = {"id": gid, "path": gpath, "schema": _ddl(df.schema), **stats}
+        out = {"path": path, "rows": int(row["rows"])}
+        if kind == "d":
+            out["gids"] = sorted(row["gids"])
+        # the written DDL keys _scan_classes: dirs of one (schema,
+        # col_ids) class read as ONE multi-path scan
+        out["schema"] = _ddl(df.schema)
         ids = _col_ids_for(columns, df.schema)
         if ids:
             out["col_ids"] = ids
@@ -1491,31 +1576,6 @@ class SifTable:
         import hashlib
 
         return "sif_table_" + hashlib.md5(gpath.encode()).hexdigest()[:16]
-
-    def _write_cdc(self, df: DataFrame, version: int,
-                   columns: list[dict] | None = None) -> dict:
-        """Materialize one version's change file (rows + _change_type)
-        under <table>/cdc/ — written BEFORE the manifest commit, so a
-        SIGKILL between the two leaves an invisible orphan, never a
-        torn feed (the same one-way-door ordering as data groups)."""
-        from pyspark.sql import Observation
-
-        cid = f"c-{version:010d}-000-{uuid.uuid4().hex[:8]}"
-        cpath = f"{self.path}/cdc/{cid}"
-        obs = Observation()
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        observed.write.mode("overwrite").option(
-            _NO_SUCCESS_OPT, "false"
-        ).parquet(cpath)
-        out = {
-            "path": cpath,
-            "rows": int(obs.get["rows"]),
-            "schema": _ddl(df.schema),
-        }
-        ids = _col_ids_for(columns, df.schema)
-        if ids:
-            out["col_ids"] = ids
-        return out
 
     # -- public API ----------------------------------------------------------
 
@@ -1591,11 +1651,11 @@ class SifTable:
             "cdf": cdf,
             "dv": dv,
         }
-        columns = _fresh_columns(df.schema)
-        group = t._write_group(df, 1, 0, spec, columns)
-        t._commit(next_manifest(
-            {}, "create", [group], df.schema, columns=columns,
-            added=[group["id"]], txns=_advance_txns({}, txn), **spec,
+        # the txn is recorded, never checked: a create that loses the
+        # race refuses whatever the winner holds
+        t._op_once("create", lambda m: _Plan(
+            ["ig"], df.schema, _fresh_columns(df.schema), {"ig": df},
+            fields={**spec, "txns": _advance_txns({}, txn)},
         ))
         return t
 
@@ -2007,34 +2067,31 @@ class SifTable:
         otherwise the written group is re-committed on the new head
         without re-running the write, unless the schema, column ids or
         table spec moved (then the whole append retries)."""
-        return _retrying(lambda: self._group_once("append", df, txn), retries)
-
-    def _group_once(
-        self, op: str, df: DataFrame, txn: tuple[str, int] | None
-    ) -> int:
-        """One attempt of append or overwrite: write ``df`` as one
-        group, then publish it over the head's groups (append) or
-        alone (overwrite). A lost race rebases the written group onto
-        the new head when its metadata matches the snapshot read."""
-        m = self._load()
-        if _advance_txns(m, txn) is None:
-            return m["version"]  # replayed epoch: no-op
-        schema = df.schema if op == "overwrite" else _merge_schema(
-            T._parse_datatype_string(m["schema"]), df.schema
+        return _retrying(
+            lambda: self._op_once(
+                "append", functools.partial(self._plan_group, "append", df), txn
+            ),
+            retries,
         )
-        cols = _next_columns(m, schema)
-        group = self._write_group(df, m["version"] + 1, 0, m, cols)
 
-        def build(h: dict) -> dict:
-            if h is not m:
-                self._require_meta(m, h)
-            kept = h["groups"] if op == "append" else []
-            return next_manifest(
-                h, op, kept + [group], schema, columns=cols,
-                added=[group["id"]], txns=_advance_txns(h, txn),
-            )
+    def _plan_group(self, op: str, df: DataFrame, m: dict) -> _Plan:
+        """append and overwrite: ``df`` as one group over the head's
+        groups (append) or alone (overwrite). A lost race rebases the
+        written group onto the new head when its metadata match the
+        snapshot read (_require_meta)."""
+        append = op == "append"
+        schema = _merge_schema(
+            T._parse_datatype_string(m["schema"]), df.schema
+        ) if append else df.schema
 
-        return _publish(self.log, self.path, m, build, [group], txn)
+        def rebase(m: dict, h: dict, kept: list[dict]) -> list[dict]:
+            self._require_meta(m, h)
+            return h["groups"] if append else kept
+
+        return _Plan(
+            m["groups"] + ["ig"] if append else ["ig"], schema,
+            _next_columns(m, schema), {"ig": df}, rebase=rebase,
+        )
 
     # -- keyed mutations: upsert / merge / delete_keys ------------------------
 
@@ -2058,9 +2115,9 @@ class SifTable:
         idempotence as append(txn=) — the contract incremental
         materialized-view maintenance needs."""
         return _retrying(
-            lambda: self._keyed_once(
-                "upsert", updates, txn, self._plan_keyset
-            ),
+            lambda: self._op_once("upsert", functools.partial(
+                self._plan_keyed, "upsert", updates, self._plan_keyset
+            ), txn),
             retries,
         )
 
@@ -2154,12 +2211,11 @@ class SifTable:
     ) -> int:
         """One attempt of merge() — the callable its retry loop re-runs."""
         clauses = (upd, upd_cond, dele, ins, ins_cond)
-        return self._keyed_once(
-            "merge", source, txn,
-            functools.partial(self._plan_merge, clauses),
-            evolve=evolve,
+        return self._op_once("merge", functools.partial(
+            self._plan_keyed, "merge", source,
+            functools.partial(self._plan_merge, clauses), evolve=evolve,
             check=functools.partial(self._check_merge_clauses, clauses),
-        )
+        ), txn)
 
     def delete_keys(
         self,
@@ -2179,43 +2235,34 @@ class SifTable:
         needs (a replayed micro-batch of deletions must not commit
         twice)."""
         return _retrying(
-            lambda: self._keyed_once(
-                "delete", keys, txn, self._plan_delete_keys, evolve=False
-            ),
+            lambda: self._op_once("delete", functools.partial(
+                self._plan_keyed, "delete", keys, self._plan_delete_keys,
+                evolve=False,
+            ), txn),
             retries,
         )
 
-    def _keyed_once(
+    def _plan_keyed(
         self,
         op: str,
         batch: DataFrame,
-        txn: tuple[str, int] | None,
-        plan: Callable,
+        planner: Callable,
+        m: dict,
         evolve: bool = True,
         check: Callable | None = None,
-    ) -> int:
-        """One attempt of a keyed mutation — upsert, merge and
-        delete_keys all run this core: txn-replay check → key
-        validation → the op's clause ``check`` → source
-        materialization → the bounds ∥ bloom-probe wave →
-        prune_groups (the touched groups) → the op's ``plan`` → ONE
-        parallel write wave → the successor manifest → _publish (a
-        lost race rebases through _rebased).
+    ) -> _Plan:
+        """The plan of a keyed mutation — upsert, merge and delete_keys
+        all plan here: key validation → the op's clause ``check`` →
+        source materialization → the bounds ∥ bloom-probe wave →
+        prune_groups (the touched groups) → the op's ``planner``. A lost
+        race rebases through _rebased.
 
-        ``plan(m, batch, keys, merged, cols_next, keep, touched)``
-        returns a _KeyedPlan: the groups carried into the next
-        snapshot, the write wave's frames by slot ("wg" the rewrite of
-        the touched groups, "ig" the op's added group, "cdc" the change
-        file, "dv" the doomed rows of a deletion-vector sidecar) and
-        the counters the settled writes give. The writes are
-        independent jobs, so the wave overlaps them (guide §2.6). The
-        change file is SPECULATIVE: it is referenced only when the
-        counters show a change, so a bloom/range false positive (no key
-        matched) leaves it an invisible orphan — the artifact a
-        pre-commit crash already leaves."""
-        m = self._load()
-        if _advance_txns(m, txn) is None:
-            return m["version"]  # replayed epoch: committed no-op
+        ``planner(m, batch, keys, merged, cols_next, keep, touched)``
+        returns (the groups carried into the next snapshot, the write
+        frames by slot — "wg" the rewrite of the touched groups, "ig"
+        the op's added group, "cdc" the change file, "dv" a
+        deletion-vector sidecar — and the counters the settled writes
+        give)."""
         keys = _key_cols(m)
         name = "delete_keys" if op == "delete" else op
         if not keys:
@@ -2257,53 +2304,20 @@ class SifTable:
         touched = prune_groups(m, bounds, probes)
         hit = {g["id"] for g in touched}
         keep = [g for g in m["groups"] if g["id"] not in hit]
-        p = plan(m, batch, keys, merged, cols_next, keep, touched)
-        v = m["version"] + 1
-        writers = {
-            "wg": lambda f: self._write_group(f, v, 0, m, cols_next),
-            "ig": lambda f: self._write_group(
-                f, v, int("wg" in p.frames), m, cols_next
-            ),
-            "cdc": lambda f: self._write_cdc(f, v, cols_next),
-            "dv": lambda f: self._write_dv_sidecar(
-                f, keys, v, cols_next, p.per_gid
-            ),
-        }
-        res = dict(zip(p.frames, _parallel_jobs(*[
-            functools.partial(writers[slot], f)
-            for slot, f in p.frames.items()
-        ])))
-        counts = p.counts(res)
-        counters = {c: int(counts.get(c, 0)) for c in _OP_COUNTERS[op]}
+        carried, frames, counts = planner(
+            m, batch, keys, merged, cols_next, keep, touched
+        )
         # a zero-row group stays an unreferenced orphan — except
         # upsert's, which keeps its layout (survivors, then batch)
-        new = [
-            res[s] for s in ("wg", "ig")
-            if s in res and (op == "upsert" or int(res[s]["rows"]) > 0)
-        ]
-        dvs = [res["dv"]] if "dv" in res else []
-        cdc = res.get("cdc") if any(counters.values()) else None
-
-        def build(h: dict) -> dict:
-            groups = list(p.carried) if h is m else self._rebased(
-                m, h, p.carried, bounds, probes
-            )
-            groups += new
-            return next_manifest(
-                h, op, groups, merged, columns=cols_next,
-                added=[g["id"] for g in new if g is res.get("ig")],
-                txns=_advance_txns(h, txn),
-                dvs=_carry_dvs(h, groups) + dvs, cdc=cdc, **counters,
-            )
-
-        return _publish(
-            self.log, self.path, m, build, new + dvs + ([cdc] if cdc else []),
-            txn,
+        return _Plan(
+            carried + ["wg", "ig"], merged, cols_next, frames, counts,
+            rebase=functools.partial(self._rebased, bounds=bounds, probes=probes),
+            drop_empty=op != "upsert",
         )
 
     def _plan_keyset(
         self, m, batch, keys, merged, cols_next, keep, touched, upsert=True
-    ) -> _KeyedPlan:
+    ) -> tuple:
         """upsert, and delete_keys on a copy-on-write table: the touched
         groups rewrite as their anti-join survivors against the batch's
         key set ("wg"), and the counter is the rows that left them.
@@ -2345,18 +2359,13 @@ class SifTable:
             frames["cdc"] = cdc
         live = sum(_live_rows(g) for g in touched)
         counter = "replaced_rows" if upsert else "deleted_rows"
-        return _KeyedPlan(
-            keep,
-            frames,
-            lambda res: (
-                {counter: live - int(res["wg"]["rows"])} if "wg" in res
-                else {}
-            ),
+        return keep, frames, lambda res: (
+            {counter: live - int(res["wg"]["rows"])} if "wg" in res else {}
         )
 
     def _plan_delete_keys(
         self, m, keys_df, keys, merged, cols_next, keep, touched
-    ) -> _KeyedPlan:
+    ) -> tuple:
         if m.get("dv", False) and touched:
             # merge-on-read: a key-tombstone sidecar instead of rewriting
             # the touched groups (VERDICT r12 "Next round" #2) — a
@@ -2373,7 +2382,7 @@ class SifTable:
 
     def _plan_merge(
         self, clauses, m, source, keys, merged, cols_next, keep, touched
-    ) -> _KeyedPlan:
+    ) -> tuple:
         """merge's clauses over the touched groups: ONE LEFT join of
         their rows to the RAW source with a per-row CASE (round 15,
         guide §2.4/§2.6) rewrites them ("wg") — matched rows deleted or
@@ -2488,22 +2497,15 @@ class SifTable:
                 cdc.unionByName(_tagged(frames["ig"], "insert"))
                 if ins else cdc
             )
-        return _KeyedPlan(
-            carried,
-            frames,
-            lambda res: (
-                {
-                    "replaced_rows": obs.get["nu"] or 0,
-                    "deleted_rows": obs.get["nd"] or 0,
-                }
-                if obs is not None
-                else {}
-            ),
+        return carried, frames, lambda res: (
+            {"replaced_rows": obs.get["nu"] or 0, "deleted_rows": obs.get["nd"] or 0}
+            if obs is not None
+            else {}
         )
 
     def _plan_dv(
         self, m, keys, merged, cols_next, touched, doomed_of, inserts_of=None
-    ) -> _KeyedPlan:
+    ) -> tuple:
         """Merge-on-read delete on a ``dv=True`` table (delete_keys and
         the delete-only merge): ZERO group rewrites. ``doomed_of`` picks
         the doomed rows from the touched groups' LIVE rows (each tagged
@@ -2525,7 +2527,9 @@ class SifTable:
         # checkpoint and settles every gate exactly)
         doomed = doomed_of(u).localCheckpoint(eager=False)
         per_gid, n = self._dv_per_gid(doomed)
-        frames = {"dv": doomed} if n else {}
+        frames = {
+            "dv": doomed.select(F.col("__gid").alias("_gid"), *keys)
+        } if n else {}
         if inserts_of is not None:
             frames["ig"] = inserts_of(u)
         if m.get("cdf", False) and n:
@@ -2534,11 +2538,9 @@ class SifTable:
                 cdc.unionByName(_tagged(frames["ig"], "insert"))
                 if "ig" in frames else cdc
             )
-        return _KeyedPlan(
-            self._dv_bumped_groups(m, per_gid),
-            frames,
+        return (
+            self._dv_bumped_groups(m, per_gid), frames,
             lambda res: {"deleted_rows": n},
-            per_gid,
         )
 
     def _check_merge_clauses(self, clauses, m, source, keys, merged) -> None:
@@ -2780,38 +2782,6 @@ class SifTable:
         }
         return per_gid, sum(per_gid.values())
 
-    def _write_dv_sidecar(
-        self,
-        doomed: DataFrame,
-        kcols: list[str],
-        v: int,
-        columns: list[dict] | None,
-        per_gid: dict,
-    ) -> dict:
-        """Persist the doomed (__gid + row) frame's (group id, key
-        tuple) sidecar under <table>/dv/; returns its manifest dv entry
-        (``per_gid``: the precomputed per-group counts, so this write
-        overlaps the wave's other writes)."""
-        did = f"d-{v:010d}-000-{uuid.uuid4().hex[:8]}"
-        dpath = f"{self.path}/dv/{did}"
-        written = doomed.select(
-            F.col("__gid").alias("_gid"), *[F.col(k) for k in kcols]
-        )
-        written.write.mode("overwrite").option(
-            _NO_SUCCESS_OPT, "false"
-        ).parquet(dpath)
-        id_of = {c["name"]: c["id"] for c in columns} if columns else {}
-        kids = {k: id_of[k] for k in kcols if k in id_of}
-        return {
-            "path": dpath,
-            "rows": sum(per_gid.values()),
-            "gids": sorted(g for g, n in per_gid.items() if n),
-            # the written DDL keys _scan_classes: sidecars of one
-            # (schema, col_ids) class read as ONE multi-path scan
-            "schema": _ddl(written.schema),
-            **({"col_ids": kids} if kids else {}),
-        }
-
     @staticmethod
     def _dv_bumped_groups(m: dict, per_gid: dict) -> list[dict]:
         """m's groups BY REFERENCE in original order, the touched
@@ -2830,81 +2800,57 @@ class SifTable:
         manifest records the EXACT deleted row count (old rows of
         touched groups minus their rewritten survivors), and on a
         ``cdf=True`` table the deleted rows themselves are materialized
-        as 'delete' tombstones in the version's change file."""
-        m = self._load()
-        target = T._parse_datatype_string(m["schema"])
-        v = m["version"] + 1
-        cdf_on = m.get("cdf", False)
-        # ONE batched dv-aware probe over every group (guide §1.2/§2.4
-        # — the old shape ran two limit-1 probe jobs PER GROUP,
-        # serially: O(groups) driver-side action waves before a single
-        # rewrite started): per-gid counts of predicate-TRUE rows
-        # (group must rewrite; SQL DELETE semantics — pred=NULL rows
-        # STAY, so the survivor filter is NOT coalesce(pred, false))
-        # and of surviving rows (rewrite lands a group iff > 0).
-        counts: dict[str, tuple[int, int]] = {}
-        if m["groups"]:
-            u = self._read_groups(
-                m, m["groups"], target, _columns_of(m), keep_gid=True
-            )
-            pred_t = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
-            counts = {
-                r["__gid"]: (int(r["n_match"]), int(r["n_keep"]))
-                for r in u.groupBy("__gid")
-                .agg(
-                    F.sum(F.when(pred_t, 1).otherwise(0)).alias("n_match"),
-                    F.sum(F.when(~pred_t, 1).otherwise(0)).alias("n_keep"),
-                )
-                .collect()
-            }
-        groups: list = []
-        removed_old = 0
-        rewrites: list[tuple[int, dict, int]] = []
-        seq = 0
-        for g in m["groups"]:
-            n_match, n_keep = counts.get(g["id"], (0, 0))
-            if n_match == 0:
-                groups.append(g)
-                continue
-            removed_old += _live_rows(g)
-            if n_keep > 0:
-                rewrites.append((len(groups), g, seq))
-                groups.append(None)  # placed after the parallel writes
-                seq += 1
-            # else: every live row matched — the group simply drops
-        # all per-group survivor rewrites plus (cdf) the tombstone
-        # change file are independent jobs — overlap them (guide §2.6)
-        deleted_exact = sum(
-            n for n, _ in (counts.get(g["id"], (0, 0)) for g in m["groups"])
-        )
+        as 'delete' tombstones in the version's change file. Rewritten
+        groups keep their places in the group list."""
 
-        def _rw(g: dict, s: int):
-            gdf = self._read_groups(m, [g], target, _columns_of(m))
-            remaining = gdf.filter(f"NOT coalesce(({predicate}), false)")
-            return self._write_group(remaining, v, s, m, _columns_of(m))
-
-        thunks = [lambda g=g, s=s: _rw(g, s) for _, g, s in rewrites]
-        cdc_idx = None
-        if cdf_on and deleted_exact > 0:
-            cdc_idx = len(thunks)
-            thunks.append(
-                lambda: self._write_cdc(
-                    _tagged(u.filter(pred_t).drop("__gid"), "delete"),
-                    v,
-                    _columns_of(m),
-                )
+        def plan(m: dict) -> _Plan:
+            target = T._parse_datatype_string(m["schema"])
+            cols = _columns_of(m)
+            # ONE batched dv-aware probe over every group (guide
+            # §1.2/§2.4 — the old shape ran two limit-1 probe jobs PER
+            # GROUP, serially): per-gid counts of predicate-TRUE rows
+            # (group must rewrite; SQL DELETE semantics — pred=NULL
+            # rows STAY, so the survivor filter is NOT
+            # coalesce(pred, false)) and of surviving rows (a rewrite
+            # lands a group iff > 0)
+            counts: dict[str, tuple[int, int]] = {}
+            if m["groups"]:
+                u = self._read_groups(m, m["groups"], target, cols, keep_gid=True)
+                pred_t = F.coalesce(F.expr(f"({predicate})"), F.lit(False))
+                counts = {
+                    r["__gid"]: (int(r["n_match"]), int(r["n_keep"]))
+                    for r in u.groupBy("__gid")
+                    .agg(
+                        F.sum(F.when(pred_t, 1).otherwise(0)).alias("n_match"),
+                        F.sum(F.when(~pred_t, 1).otherwise(0)).alias("n_keep"),
+                    )
+                    .collect()
+                }
+            groups: list = []
+            frames: dict = {}
+            removed = 0
+            for g in m["groups"]:
+                n_match, n_keep = counts.get(g["id"], (0, 0))
+                if n_match == 0:
+                    groups.append(g)
+                    continue
+                removed += _live_rows(g)
+                if n_keep > 0:  # else every live row matched: it drops
+                    slot = f"wg{len(frames)}"
+                    frames[slot] = self._read_groups(m, [g], target, cols).filter(
+                        f"NOT coalesce(({predicate}), false)"
+                    )
+                    groups.append(slot)
+            if m.get("cdf", False) and any(n for n, _ in counts.values()):
+                frames["cdc"] = _tagged(u.filter(pred_t).drop("__gid"), "delete")
+            return _Plan(
+                groups, m["schema"], cols, frames,
+                lambda res: {"deleted_rows": removed - sum(
+                    int(res[s]["rows"]) for s in groups if isinstance(s, str)
+                )},
             )
-        res = _parallel_jobs(*thunks)
-        kept_new = 0
-        for (pos, _, _), wg in zip(rewrites, res):
-            kept_new += int(wg["rows"])
-            groups[pos] = wg
-        groups = [g for g in groups if g is not None]
-        deleted = removed_old - kept_new
-        cdc = res[cdc_idx] if cdc_idx is not None and deleted > 0 else None
-        return self._commit(next_manifest(
-            m, "delete", groups, m["schema"], deleted_rows=deleted, cdc=cdc
-        ))
+
+        return self._op_once("delete", plan)
 
     def overwrite(
         self,
@@ -2927,7 +2873,11 @@ class SifTable:
         preserved for surviving ones, so later renames stay safe). A
         lost commit race rebases like append()'s."""
         return _retrying(
-            lambda: self._group_once("overwrite", df, txn), retries
+            lambda: self._op_once(
+                "overwrite", functools.partial(self._plan_group, "overwrite", df),
+                txn,
+            ),
+            retries,
         )
 
     def compact(
@@ -2946,37 +2896,38 @@ class SifTable:
         single sort column can't serve every query. Readers pinned on
         any older version are untouched: their groups stay on disk
         until vacuum()."""
-        m = self._load()
-        df = self.read(m["version"])
-        keys = _key_cols(m)
-        bucket = m.get("bucket")
-        if bucket:
-            if zorder_by:
-                raise ValueError(
-                    "bucketed tables own their layout — zorder_by does "
-                    "not compose with bucket_by"
-                )
-            pass  # bucketBy owns the layout — the write clusters it
-        elif zorder_by:
-            from sif_spark.operators.layout import zorder_key
 
-            df2, zk = zorder_key(df, zorder_by)
-            df = df2.withColumn("__zkey", zk)
-            df = (
-                df.repartitionByRange(num_files, "__zkey")
-                if num_files
-                else df.repartitionByRange("__zkey")
-            ).sortWithinPartitions("__zkey").drop("__zkey")
-        elif num_files and keys:
-            df = df.repartitionByRange(num_files, *keys).sortWithinPartitions(
-                *keys
-            )
-        elif num_files:
-            df = df.repartition(num_files)
-        elif keys:
-            df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
-        group = self._write_group(df, m["version"] + 1, 0, m, _columns_of(m))
-        return self._commit(next_manifest(m, "compact", [group], m["schema"]))
+        def plan(m: dict) -> _Plan:
+            df = self.read(m["version"])
+            keys = _key_cols(m)
+            if m.get("bucket"):
+                # bucketBy owns the layout — the write clusters it
+                if zorder_by:
+                    raise ValueError(
+                        "bucketed tables own their layout — zorder_by does "
+                        "not compose with bucket_by"
+                    )
+            elif zorder_by:
+                from sif_spark.operators.layout import zorder_key
+
+                df2, zk = zorder_key(df, zorder_by)
+                df = df2.withColumn("__zkey", zk)
+                df = (
+                    df.repartitionByRange(num_files, "__zkey")
+                    if num_files
+                    else df.repartitionByRange("__zkey")
+                ).sortWithinPartitions("__zkey").drop("__zkey")
+            elif num_files and keys:
+                df = df.repartitionByRange(num_files, *keys).sortWithinPartitions(
+                    *keys
+                )
+            elif num_files:
+                df = df.repartition(num_files)
+            elif keys:
+                df = df.repartitionByRange(*keys).sortWithinPartitions(*keys)
+            return _Plan(["wg"], m["schema"], _columns_of(m), {"wg": df})
+
+        return self._op_once("compact", plan)
 
     def restore(self, version: int) -> int:
         """Roll the table back to ``version`` as a NEW commit (the
@@ -2990,12 +2941,11 @@ class SifTable:
         nothing for a restore (append-mostly contract: removals are
         not tombstoned)."""
         old = self._load(version)  # raises on unknown version
-        m = self._load()
-        return self._commit(next_manifest(
-            m, "restore", old["groups"], old["schema"],
-            columns=_columns_of(old), dvs=old.get("dvs") or [],
-            restored_from=version,
-            **{f: old.get(f, _SPEC[f]) for f in _SPEC if f not in ("cdf", "dv")},
+        return self._op_once("restore", lambda m: _Plan(
+            old["groups"], old["schema"], _columns_of(old), fields={
+                "dvs": old.get("dvs") or [], "restored_from": version,
+                **{f: old.get(f, _SPEC[f]) for f in _SPEC if f not in ("cdf", "dv")},
+            },
         ))
 
     def _bootstrap_columns(self, m: dict) -> tuple[list[dict], list[dict]]:
@@ -3034,38 +2984,40 @@ class SifTable:
         stats/bloom skipping follow the rename. The bucket column
         cannot be renamed (its name is baked into the persistent
         bucketed-table DDL)."""
-        m = self._load()
-        names = _schema_names(m["schema"])
-        if old not in names:
-            raise ValueError(f"no column {old!r} in snapshot schema")
-        if new in names:
-            raise ValueError(f"column {new!r} already exists")
-        if not new.isidentifier():
-            raise ValueError(f"invalid column name {new!r}")
-        if m.get("bucket") and m["bucket"]["col"] == old:
-            raise ValueError(
-                "the bucket column's name is baked into the bucketed "
-                "layout DDL — rebuild the table to rename it"
-            )
-        columns, groups = self._bootstrap_columns(m)
-        columns = [
-            {**c, "name": new} if c["name"] == old else c for c in columns
-        ]
-        target = T._parse_datatype_string(m["schema"])
-        renamed = T.StructType([
-            T.StructField(new, f.dataType) if f.name == old else f
-            for f in target.fields
-        ])
-        return self._commit(next_manifest(
-            m, "rename_column", groups, renamed, columns=columns,
-            renamed={"from": old, "to": new},
-            key_col=new if m.get("key_col") == old else m.get("key_col"),
-            key_cols=(
-                [new if c == old else c for c in m["key_cols"]]
-                if m.get("key_cols")
-                else m.get("key_cols")
-            ),
-        ))
+
+        def plan(m: dict) -> _Plan:
+            names = _schema_names(m["schema"])
+            if old not in names:
+                raise ValueError(f"no column {old!r} in snapshot schema")
+            if new in names:
+                raise ValueError(f"column {new!r} already exists")
+            if not new.isidentifier():
+                raise ValueError(f"invalid column name {new!r}")
+            if m.get("bucket") and m["bucket"]["col"] == old:
+                raise ValueError(
+                    "the bucket column's name is baked into the bucketed "
+                    "layout DDL — rebuild the table to rename it"
+                )
+            columns, groups = self._bootstrap_columns(m)
+            columns = [
+                {**c, "name": new} if c["name"] == old else c for c in columns
+            ]
+            target = T._parse_datatype_string(m["schema"])
+            renamed = T.StructType([
+                T.StructField(new, f.dataType) if f.name == old else f
+                for f in target.fields
+            ])
+            return _Plan(groups, renamed, columns, fields={
+                "renamed": {"from": old, "to": new},
+                "key_col": new if m.get("key_col") == old else m.get("key_col"),
+                "key_cols": (
+                    [new if c == old else c for c in m["key_cols"]]
+                    if m.get("key_cols")
+                    else m.get("key_cols")
+                ),
+            })
+
+        return self._op_once("rename_column", plan)
 
     def drop_column(self, name: str) -> int:
         """Drop a column as a METADATA-ONLY commit: the data files
@@ -3076,23 +3028,24 @@ class SifTable:
         column id, so the old files' data can never resurface under
         the new column (pinned in tests). The merge key and bucket
         column cannot be dropped."""
-        m = self._load()
-        names = _schema_names(m["schema"])
-        if name not in names:
-            raise ValueError(f"no column {name!r} in snapshot schema")
-        if name in _key_cols(m):
-            raise ValueError("cannot drop the table's merge key")
-        if m.get("bucket") and m["bucket"]["col"] == name:
-            raise ValueError("cannot drop the bucket column")
-        if len(names) == 1:
-            raise ValueError("cannot drop the only column")
-        columns, groups = self._bootstrap_columns(m)
-        columns = [c for c in columns if c["name"] != name]
-        target = T._parse_datatype_string(m["schema"])
-        kept = T.StructType([f for f in target.fields if f.name != name])
-        return self._commit(next_manifest(
-            m, "drop_column", groups, kept, columns=columns, dropped=name
-        ))
+
+        def plan(m: dict) -> _Plan:
+            names = _schema_names(m["schema"])
+            if name not in names:
+                raise ValueError(f"no column {name!r} in snapshot schema")
+            if name in _key_cols(m):
+                raise ValueError("cannot drop the table's merge key")
+            if m.get("bucket") and m["bucket"]["col"] == name:
+                raise ValueError("cannot drop the bucket column")
+            if len(names) == 1:
+                raise ValueError("cannot drop the only column")
+            columns, groups = self._bootstrap_columns(m)
+            columns = [c for c in columns if c["name"] != name]
+            target = T._parse_datatype_string(m["schema"])
+            kept = T.StructType([f for f in target.fields if f.name != name])
+            return _Plan(groups, kept, columns, fields={"dropped": name})
+
+        return self._op_once("drop_column", plan)
 
     def vacuum(
         self, retain_last: int = 2, cdf_retain_last: int | None = None

@@ -54,3 +54,14 @@ def union_find_clusters(edges: list[tuple[int, int]]) -> dict[int, int]:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {n: find(n) for n in parent}
+
+
+@pytest.fixture()
+def tdir(tmp_path) -> str:
+    """An empty directory of this test's own under pytest's tmp_path, so
+    two concurrent runs never share (or delete) each other's tables.
+    Tests that need several dirs derive them from it (``f"{tdir}-ck"``
+    stays inside tmp_path)."""
+    d = tmp_path / "t"
+    d.mkdir()
+    return str(d)

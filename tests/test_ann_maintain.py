@@ -15,17 +15,10 @@ from pyspark.sql import functions as F
 from sif_spark.operators import similarity as sgsim
 from sif_spark.table import SifTable
 
-BASE = "/tmp/sif_ann_maint_test"
-
 
 @pytest.fixture()
-def dirs():
-    paths = (f"{BASE}-src", f"{BASE}-idx", f"{BASE}-ck")
-    for d in paths:
-        shutil.rmtree(d, ignore_errors=True)
-    yield paths
-    for d in paths:
-        shutil.rmtree(d, ignore_errors=True)
+def dirs(tdir):
+    return (f"{tdir}-src", f"{tdir}-idx", f"{tdir}-ck")
 
 
 def _vecs(spark, lo, hi, dim=8, flip=False, scale=1.0):

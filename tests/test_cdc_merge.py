@@ -5,22 +5,10 @@ window that carries no row change commits nothing."""
 
 from __future__ import annotations
 
-import shutil
-
-import pytest
 from pyspark.sql import functions as F
 
 from sif_spark.streaming.stream import merge_changes_into_table
 from sif_spark.table import SifTable
-
-BASE = "/tmp/sif_cdc_merge_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _df(spark, lo, hi, val):

@@ -13,7 +13,6 @@ fold_table_changes): its restart contract and its plan.
 from __future__ import annotations
 
 import os
-import shutil
 from collections import Counter
 
 import pytest
@@ -24,15 +23,6 @@ from sif_spark.sources.table_stream import (
 )
 from sif_spark.table import SifTable
 from test_table_feed import _df, _history
-
-BASE = "/tmp/sif_fold_loop_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _drain(q):

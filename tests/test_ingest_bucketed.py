@@ -6,8 +6,6 @@ bucketed mode's output pinned equal to the plain store's."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 
 pytestmark = pytest.mark.heavy
@@ -17,7 +15,6 @@ from sif_spark.pipeline import _bucketed_store_frame, daily_ingest
 from sif_spark.sources.parquet import read_table
 
 SF = "/root/testdata/sf0.001"
-BASE = "/tmp/sif_spark_bucketed_ingest_test"
 
 
 @pytest.fixture()
@@ -27,7 +24,6 @@ def days(spark):
     not_bench = F.col("doc_id") % 20 != 19
     day1 = d.filter((F.col("doc_id") < 250) & not_bench)
     day2 = d.filter((F.col("doc_id") >= 250) & not_bench)
-    shutil.rmtree(BASE, ignore_errors=True)
     return day1, day2, bench
 
 
@@ -35,19 +31,21 @@ def _rows(df):
     return sorted((r["doc_id"], r["lang"]) for r in df.select("doc_id", "lang").collect())
 
 
-def test_bucketed_store_matches_plain_and_plans_zero_store_exchange(spark, days):
+def test_bucketed_store_matches_plain_and_plans_zero_store_exchange(
+    spark, days, tdir
+):
     day1, day2, bench = days
 
     # plain-mode reference
-    daily_ingest(day1, f"{BASE}/plain", "day1", benchmark=bench, hash_fn="md5")
-    ref = daily_ingest(day2, f"{BASE}/plain", "day2", benchmark=bench, hash_fn="md5")
+    daily_ingest(day1, f"{tdir}/plain", "day1", benchmark=bench, hash_fn="md5")
+    ref = daily_ingest(day2, f"{tdir}/plain", "day2", benchmark=bench, hash_fn="md5")
 
     # bucketed mode: same params + store_buckets
     daily_ingest(
-        day1, f"{BASE}/bkt", "day1", benchmark=bench, hash_fn="md5", store_buckets=8
+        day1, f"{tdir}/bkt", "day1", benchmark=bench, hash_fn="md5", store_buckets=8
     )
     got = daily_ingest(
-        day2, f"{BASE}/bkt", "day2", benchmark=bench, hash_fn="md5", store_buckets=8
+        day2, f"{tdir}/bkt", "day2", benchmark=bench, hash_fn="md5", store_buckets=8
     )
     assert _rows(got) == _rows(ref)
 
@@ -63,7 +61,7 @@ def test_bucketed_store_matches_plain_and_plans_zero_store_exchange(spark, days)
 
     (epoch1,) = [
         p
-        for p in glob.glob(f"{BASE}/bkt/epoch_*")
+        for p in glob.glob(f"{tdir}/bkt/epoch_*")
         if glob.glob(f"{p}/bands/_SUCCESS")
         and _rows_exist(spark, f"{p}/fingerprints")
     ][:1] or [None]
@@ -154,7 +152,7 @@ def _scan_is_bucketed(plan_text: str, path_fragment: str) -> bool:
     )
 
 
-def test_string_id_store_and_layout_compat_gates(spark, days):
+def test_string_id_store_and_layout_compat_gates(spark, days, tdir):
     """ADVICE r9: the bands-store DDL must derive from the REAL id
     type (string/UUID doc ids broke the fresh-session re-declare when
     it was hardcoded BIGINT), and store_buckets / id_type drift across
@@ -168,12 +166,12 @@ def test_string_id_store_and_layout_compat_gates(spark, days):
     s1, s2, sb = sid(day1), sid(day2), sid(bench)
 
     # plain-mode reference with the same string ids
-    daily_ingest(s1, f"{BASE}/plain_sid", "day1", benchmark=sb,
+    daily_ingest(s1, f"{tdir}/plain_sid", "day1", benchmark=sb,
                  hash_fn="md5", id_col="sid")
-    ref = daily_ingest(s2, f"{BASE}/plain_sid", "day2", benchmark=sb,
+    ref = daily_ingest(s2, f"{tdir}/plain_sid", "day2", benchmark=sb,
                        hash_fn="md5", id_col="sid")
 
-    daily_ingest(s1, f"{BASE}/sid", "day1", benchmark=sb,
+    daily_ingest(s1, f"{tdir}/sid", "day1", benchmark=sb,
                  hash_fn="md5", id_col="sid", store_buckets=4)
     # simulate a fresh session: drop the session-catalog entries so
     # day-2 re-declares the external bucketed tables purely from the
@@ -181,18 +179,18 @@ def test_string_id_store_and_layout_compat_gates(spark, days):
     for t in spark.catalog.listTables():
         if t.name.startswith("sif_store_"):
             spark.sql(f"DROP TABLE {t.name}")
-    got = daily_ingest(s2, f"{BASE}/sid", "day2", benchmark=sb,
+    got = daily_ingest(s2, f"{tdir}/sid", "day2", benchmark=sb,
                        hash_fn="md5", id_col="sid", store_buckets=4)
     assert _rows(got) == _rows(ref)
 
     # bucket-count drift: the zero-shuffle joins would assign rows to
     # different buckets than the files carry — must raise, not misplan
     with pytest.raises(ValueError, match="store_buckets"):
-        daily_ingest(s2, f"{BASE}/sid", "day3", benchmark=sb,
+        daily_ingest(s2, f"{tdir}/sid", "day3", benchmark=sb,
                      hash_fn="md5", id_col="sid", store_buckets=16)
 
     # id-type drift: same column name, different type — must raise
     bigint_sid = day2.withColumn("sid", F.col("doc_id"))
     with pytest.raises(ValueError, match="id type|miscast"):
-        daily_ingest(bigint_sid, f"{BASE}/sid", "day3", benchmark=bench,
+        daily_ingest(bigint_sid, f"{tdir}/sid", "day3", benchmark=bench,
                      hash_fn="md5", id_col="sid", store_buckets=4)

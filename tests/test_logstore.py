@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import threading
 
 import pytest
@@ -31,16 +30,6 @@ from sif_spark.logstore import (
     PosixExclLogStore,
 )
 from sif_spark.table import ConcurrentCommitError, SifTable
-
-BASE = "/tmp/sif_logstore_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    os.makedirs(BASE)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 class NonAtomicRenameStore(PosixExclLogStore):

@@ -12,7 +12,11 @@ import threading
 
 import pytest
 
-from sif_spark.logstore import HadoopRenameLogStore, PosixExclLogStore
+from sif_spark.logstore import (
+    HadoopRenameLogStore,
+    PosixExclLogStore,
+    store_for,
+)
 
 
 @pytest.fixture(params=["posix", "hadoop"])
@@ -20,11 +24,6 @@ def store(request):
     if request.param == "posix":
         return PosixExclLogStore()
     return HadoopRenameLogStore(request.getfixturevalue("spark"))
-
-
-@pytest.fixture()
-def tdir(tmp_path):
-    return str(tmp_path)
 
 
 def test_store_replace_overwrites_and_is_never_half_written(store, tdir):
@@ -106,3 +105,26 @@ def test_store_delete_is_recursive_and_size_skips_hidden_names(store, tdir):
     store.delete(root)
     assert not store.exists(root)
     store.delete(root)  # missing: a no-op
+
+
+def test_file_uri_paths_get_the_posix_store(tdir):
+    """A ``file:`` URI gets the POSIX store, which strips the scheme:
+    the ANN generation meta under a ``file:`` index path round-trips
+    through an atomic os.replace and leaves no Hadoop .crc sidecar."""
+    import numpy as np
+
+    from sif_spark.operators.similarity import (
+        AnnGenMeta,
+        load_ann_meta,
+        save_ann_meta,
+    )
+
+    idx = f"file://{tdir}/idx"
+    assert isinstance(store_for(idx), PosixExclLogStore)
+    assert isinstance(store_for(f"file:{tdir}/idx"), PosixExclLogStore)
+    meta = AnnGenMeta(3, np.eye(4, dtype=np.float32), None, 0.5)
+    save_ann_meta(idx, meta)
+    got = load_ann_meta(idx, 3)
+    assert (got.gen, got.codebook, got.anchor) == (3, None, 0.5)
+    np.testing.assert_array_equal(got.centroids, meta.centroids)
+    assert os.listdir(f"{tdir}/idx/ann_meta") == ["gen-000003.npz"]

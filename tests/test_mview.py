@@ -12,17 +12,10 @@ from pyspark.sql import functions as F
 from sif_spark.mview import incremental_aggregate_view, merge_partials
 from sif_spark.table import SifTable
 
-BASE = "/tmp/sif_mv_test"
-
 
 @pytest.fixture()
-def dirs():
-    paths = (f"{BASE}-src", f"{BASE}-dst", f"{BASE}-ck")
-    for d in paths:
-        shutil.rmtree(d, ignore_errors=True)
-    yield paths
-    for d in paths:
-        shutil.rmtree(d, ignore_errors=True)
+def dirs(tdir):
+    return (f"{tdir}-src", f"{tdir}-dst", f"{tdir}-ck")
 
 
 def _src(spark, lo, hi):

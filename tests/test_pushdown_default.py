@@ -34,21 +34,9 @@ the default can flip.
 
 from __future__ import annotations
 
-import shutil
-
-import pytest
 from pyspark.sql import functions as F
 
 from sif_spark.table import SifTable
-
-BASE = "/tmp/sif_pushdown_default_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _table(spark, tdir):

@@ -13,15 +13,6 @@ from pyspark.sql import functions as F
 
 from sif_spark.table import ConcurrentCommitError, SifTable, prune_groups
 
-BASE = "/tmp/sif_table_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
-
 
 def _df(spark, lo, hi, val):
     return spark.range(lo, hi).select(
@@ -119,13 +110,19 @@ def test_delete_and_compact_under_concurrent_reader(spark, tdir):
 
 
 def test_optimistic_commit_cas(spark, tdir):
+    from sif_spark.table import _columns_of, _Plan
+
     t = SifTable.create(spark, f"{tdir}/t5", _df(spark, 0, 3, "a"))
     m = t._load()
-    # two writers race to version 2: exactly one rename wins
-    win = dict(m, version=2, parent=1, op="append")
-    t._commit(win)
+
+    def plan(h):  # an op that refuses to rebase
+        return _Plan(h["groups"], h["schema"], _columns_of(h))
+
+    # two writers race to version 2: exactly one publish wins
+    t._op_once("append", plan)
+    t._load = lambda version=None: m  # the loser planned on version 1
     with pytest.raises(ConcurrentCommitError, match="committed by another"):
-        t._commit(dict(m, version=2, parent=1, op="append"))
+        t._op_once("append", plan)
     # upsert retries through the conflict window by re-reading
     t6 = SifTable.create(spark, f"{tdir}/t6", _df(spark, 0, 3, "a"), key_col="k")
     t6.upsert(_df(spark, 1, 2, "z"))
@@ -137,7 +134,8 @@ def test_orphan_data_invisible_without_manifest(spark, tdir):
     invisible to every reader — the commit IS the manifest."""
     t = SifTable.create(spark, f"{tdir}/t7", _df(spark, 0, 5, "a"), key_col="k")
     # simulate the crash: group written, commit never happened
-    t._write_group(_df(spark, 100, 200, "ghost"), 2, 0, "k")
+    t._write_dir("ig", _df(spark, 100, 200, "ghost"), 2, 0, {"key_col": "k"},
+                 None)
     assert t.read().count() == 5
     assert t._load()["version"] == 1
     # and the next real commit is unaffected
@@ -1301,6 +1299,31 @@ def test_mixed_writer_stress_upsert_compact_delete(spark, tdir):
     shutil.rmtree(replay_dir, ignore_errors=True)
 
 
+def test_batch_datasource_writer_records_group_bytes(spark, tdir):
+    """A group the `sif_table` writer commits records its data bytes,
+    as every SifTable group write does, so size_bytes() reads the
+    manifest and equals the group dirs' listing."""
+    import os
+
+    from sif_spark.sources.table_stream import register_table_source
+
+    register_table_source(spark)
+    for lo, mode in ((0, "append"), (50, "append"), (80, "overwrite")):
+        (_df(spark, lo, lo + 30, "a").write.format("sif_table")
+         .option("path", tdir).option("key_col", "k").mode(mode).save())
+        t = SifTable(spark, tdir)
+        listed = sum(
+            os.path.getsize(os.path.join(g["path"], n))
+            for g in t._load()["groups"]
+            for n in os.listdir(g["path"])
+            if not n.startswith(("_", "."))
+        )
+        assert all(g["bytes"] > 0 for g in t._load()["groups"])
+        assert t.size_bytes() == sum(
+            g["bytes"] for g in t._load()["groups"]
+        ) == listed > 0
+
+
 def test_batch_datasource_writer_roundtrip_txn_and_guards(spark, tdir):
     """df.write.format('sif_table'): create + append + overwrite via
     the DS writer interoperate with the full API (upsert, lookup,
@@ -2130,7 +2153,7 @@ def test_append_rebase_writes_its_group_once(spark, tdir):
     SifTable.create(spark, tdir, _df(spark, 0, 10, "base"), key_col="k")
     tb = SifTable(spark, tdir)
     m0 = tb._load()
-    real_load, real_write = tb._load, tb._write_group
+    real_load, real_write = tb._load, tb._write_dir
     state = {"stale": True}
     writes: list = []
 
@@ -2141,10 +2164,10 @@ def test_append_rebase_writes_its_group_once(spark, tdir):
         return real_load(v)
 
     def counted(*a, **kw):
-        writes.append(a[1])
+        writes.append(a[2])
         return real_write(*a, **kw)
 
-    tb._load, tb._write_group = stale_once, counted
+    tb._load, tb._write_dir = stale_once, counted
     SifTable(spark, tdir).append(_df(spark, 10, 20, "other"))  # v2
     before = set(os.listdir(f"{tdir}/data"))
     assert tb.append(_df(spark, 100, 110, "mine")) == 3
@@ -2182,11 +2205,58 @@ def test_one_manifest_put_site():
     assert len(sites) == 1 and sites[0].startswith("table.py:"), sites
 
 
+def test_one_op_core():
+    """Every SifTable op plans, writes and publishes through one core:
+    _publish and next_manifest are each called from exactly two
+    functions, SifTable._op_once and the `sif_table` writer's commit,
+    and no function but the core starts a directory write (only
+    _write_dir touches a DataFrameWriter in table.py)."""
+    import ast
+    import pathlib
+
+    import sif_spark
+
+    root = pathlib.Path(sif_spark.__file__).parent
+
+    def functions(tree):
+        """(qualified name, node) of each top-level function and method."""
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    if isinstance(fn, ast.FunctionDef):
+                        yield f"{node.name}.{fn.name}", fn
+            elif isinstance(node, ast.FunctionDef):
+                yield node.name, node
+
+    def users(files, name, calls_only=True):
+        return {
+            owner
+            for f in files
+            for owner, fn in functions(ast.parse(f.read_text()))
+            for node in ast.walk(fn)
+            if (isinstance(node, ast.Call) or not calls_only)
+            and name in (
+                getattr(getattr(node, "func", node), "id", None),
+                getattr(getattr(node, "func", node), "attr", None),
+            )
+        }
+
+    files = sorted(root.rglob("*.py"))
+    core = {"SifTable._op_once", "_SifTableBatchWriter._commit_inner"}
+    assert users(files, "_publish") == core
+    assert users(files, "next_manifest") == core
+    assert users(files, "_write_dir", calls_only=False) == {"SifTable._op_once"}
+    assert users([root / "table.py"], "write", calls_only=False) == {
+        "SifTable._write_dir"
+    }
+
+
 def test_one_storage_seam():
     """Every storage step goes through the log store picked for its
     path: no module in sif_spark/ but logstore.py reaches a Hadoop
     FileSystem, and _publish renames through its log store, not a
     caller-supplied rename."""
+    import ast
     import inspect
     import pathlib
     import re
@@ -2203,6 +2273,17 @@ def test_one_storage_seam():
     ]
     assert named == [], named
     assert "rename" not in inspect.signature(_publish).parameters
+    # the table layer and its stream source list and delete through
+    # the store too
+    for name in ("table.py", "sources/table_stream.py"):
+        bypass = [
+            node.lineno
+            for node in ast.walk(ast.parse((root / name).read_text()))
+            if isinstance(node, ast.Attribute)
+            and (getattr(node.value, "id", None), node.attr)
+            in {("os", "listdir"), ("shutil", "rmtree")}
+        ]
+        assert bypass == [], (name, bypass)
 
 
 def test_merge_raw_source_conditions_and_evolve_schema_flag(spark, tdir):

@@ -19,15 +19,6 @@ from pyspark.sql import functions as F
 
 from sif_spark.table import SifTable
 
-BASE = "/tmp/sif_table_columns_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
-
 
 def _df(spark, lo, hi, val="a"):
     return spark.range(lo, hi).select(

@@ -18,15 +18,6 @@ from pyspark.sql import functions as F
 
 from sif_spark.table import SifTable
 
-BASE = "/tmp/sif_table_composite_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
-
 
 def _df(spark, lo, hi, val="a"):
     """Rows keyed by (region, day): region cycles 0..9, day = id//10."""

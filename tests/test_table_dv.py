@@ -11,21 +11,11 @@ merge-on-read writes O(deleted keys) bytes."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from sif_spark.table import SifTable
-
-BASE = "/tmp/sif_table_dv_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _slice(spark, mod, rem, n=300, val="a"):

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from collections import Counter
 
 import pytest
@@ -18,15 +17,6 @@ from pyspark.sql import functions as F
 
 from sif_spark.sources.table_stream import register_table_source
 from sif_spark.table import ChangeFeedIncompleteError, SifTable
-
-BASE = "/tmp/sif_table_feed_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _df(spark, lo, hi, val="a"):

@@ -17,14 +17,10 @@ maintainer, CDC merge) over a backlog fixed before the query starts."""
 
 from __future__ import annotations
 
-import shutil
-
-import pytest
 from pyspark.sql import functions as F
 
 from sif_spark.table import SifTable
 
-BASE = "/tmp/sif_table_jobs_test"
 
 # every field a keyed-mutation / append manifest may carry (absent ≡
 # null: the set compared is the fields with a non-null value)
@@ -33,13 +29,6 @@ _BASE_FIELDS = {
     "added", "schema", "columns", "last_column_id", "groups",
     "col_id_eras",
 }
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _df(spark, lo, hi, val):
@@ -510,3 +499,181 @@ def test_column_name_with_space_reads_and_upserts(spark, tdir):
     assert sorted(tuple(r) for r in t.read().collect()) == want
     _, inferred = _count_jobs(spark, lambda: t.read().count())
     assert inferred == quoted + 1
+
+
+# --- the other table ops: jobs, manifest shape and group layout ------
+
+
+def _layout(m: dict) -> list[tuple]:
+    """Each group of ``m`` in manifest order: its dir name without the
+    random hex (kind, version, seq), its row count and its field set."""
+    return [(g["id"][:16], g["rows"], sorted(g)) for g in m["groups"]]
+
+
+_GROUP = ["bytes", "col_ids", "id", "path", "rows", "schema", "stats"]
+_KEYED_GROUP = sorted(_GROUP + ["key_max", "key_min"])
+
+
+def _check_op(spark, t, fn, jobs, shape, layout):
+    _check(spark, t, fn, jobs, shape)
+    assert _layout(t._load()) == layout
+
+
+def _count_create(spark, path, df, **kw):
+    t, n = _count_jobs(spark, lambda: SifTable.create(spark, path, df, **kw))
+    assert t._load()["version"] == 1
+    return t, n
+
+
+def test_jobs_create_plain(spark, tdir):
+    t, n = _count_create(spark, tdir, _df(spark, 0, 40, "a"))
+    m = t._load()
+    assert (n, _shape(m)) == (1, {
+        "fields": _fields() - {"parent"},
+        "op": "create", "replaced_rows": None, "deleted_rows": None,
+        "groups": 1, "added": 1, "cdc": False, "dvs": 0,
+    })
+    assert m["parent"] is None and m["txns"] == {}
+    assert _layout(m) == [("g-0000000001-000", 40, _GROUP)]
+
+
+def test_jobs_create_key_bloom(spark, tdir):
+    t, n = _count_create(spark, tdir, _df(spark, 0, 40, "a"), key_col="k",
+                         key_bloom=True, txn=("app", 3))
+    m = t._load()
+    assert (n, _shape(m)) == (3, {
+        "fields": _fields("key_col") - {"parent"},
+        "op": "create", "replaced_rows": None, "deleted_rows": None,
+        "groups": 1, "added": 1, "cdc": False, "dvs": 0,
+    })
+    assert m["txns"] == {"app": 3} and m["key_bloom"] is True
+    assert _layout(m) == [
+        ("g-0000000001-000", 40, sorted(_KEYED_GROUP + ["key_bloom"]))
+    ]
+    assert m["groups"][0]["key_bloom"]["ktype"] == "bigint"
+    assert (m["groups"][0]["key_min"], m["groups"][0]["key_max"]) == (0, 39)
+
+
+def test_jobs_create_bucketed(spark, tdir):
+    t, n = _count_create(spark, tdir, _df(spark, 0, 40, "a"), key_col="k",
+                         bucket_by="k", n_buckets=4)
+    m = t._load()
+    assert (n, _shape(m)) == (1, {
+        "fields": _fields("key_col", "bucket") - {"parent"},
+        "op": "create", "replaced_rows": None, "deleted_rows": None,
+        "groups": 1, "added": 1, "cdc": False, "dvs": 0,
+    })
+    assert m["bucket"] == {"col": "k", "n": 4}
+    assert _layout(m) == [("g-0000000001-000", 40, _KEYED_GROUP)]
+
+
+def test_jobs_overwrite(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    _check_op(spark, t, lambda: t.overwrite(_df(spark, 100, 110, "o")), 1, {
+        "fields": _fields("key_col"),
+        "op": "overwrite", "replaced_rows": None, "deleted_rows": None,
+        "groups": 1, "added": 1, "cdc": False, "dvs": 0,
+    }, [("g-0000000003-000", 10, _KEYED_GROUP)])
+
+
+def test_jobs_compact_plain(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    t.upsert(_df(spark, 5, 10, "u"))
+    _check_op(spark, t, lambda: t.compact(), 3, {
+        "fields": _fields("key_col"),
+        "op": "compact", "replaced_rows": None, "deleted_rows": None,
+        "groups": 1, "added": 0, "cdc": False, "dvs": 0,
+    }, [("g-0000000004-000", 80, _KEYED_GROUP)])
+    assert t.read().filter("v = 'u'").count() == 5
+
+
+def test_jobs_compact_zorder(spark, tdir):
+    def xy(lo, hi):
+        return spark.range(lo, hi).select(
+            (F.col("id") % 7).alias("x"), (F.col("id") % 5).alias("y")
+        )
+
+    t = SifTable.create(spark, tdir, xy(0, 40))
+    t.append(xy(40, 70))
+    _check_op(spark, t, lambda: t.compact(num_files=2, zorder_by=["x", "y"]),
+              5, {
+        "fields": _fields(),
+        "op": "compact", "replaced_rows": None, "deleted_rows": None,
+        "groups": 1, "added": 0, "cdc": False, "dvs": 0,
+    }, [("g-0000000003-000", 70, _GROUP)])
+
+
+def _four_group_table(spark, path, **kw):
+    """[0, 40) a, [40, 50) b, [50, 60) c, [60, 80) d."""
+    t = SifTable.create(spark, path, _df(spark, 0, 40, "a"), key_col="k",
+                        **kw)
+    t.append(_df(spark, 40, 50, "b"))
+    t.append(_df(spark, 50, 60, "c"))
+    t.append(_df(spark, 60, 80, "d"))
+    return t
+
+
+# the first and last groups rewrite, the second drops whole (every row
+# matches), the third carries by reference: kept groups stay in place
+_DELETE_PRED = "(k >= 30 AND k < 50) OR (k >= 70 AND k < 75)"
+
+
+def test_jobs_delete_predicate_plain(spark, tdir):
+    t = _four_group_table(spark, tdir)
+    _check_op(spark, t, lambda: t.delete(_DELETE_PRED), 4, {
+        "fields": _fields("key_col", "deleted_rows"),
+        "op": "delete", "replaced_rows": None, "deleted_rows": 25,
+        "groups": 3, "added": 0, "cdc": False, "dvs": 0,
+    }, [
+        ("g-0000000005-000", 30, _KEYED_GROUP),
+        ("g-0000000003-000", 10, _KEYED_GROUP),
+        ("g-0000000005-001", 15, _KEYED_GROUP),
+    ])
+
+
+def test_jobs_delete_predicate_cdf(spark, tdir):
+    t = _four_group_table(spark, tdir, cdf=True)
+    _check_op(spark, t, lambda: t.delete(_DELETE_PRED), 5, {
+        "fields": _fields("key_col", "deleted_rows", "cdc"),
+        "op": "delete", "replaced_rows": None, "deleted_rows": 25,
+        "groups": 3, "added": 0, "cdc": True, "dvs": 0,
+    }, [
+        ("g-0000000005-000", 30, _KEYED_GROUP),
+        ("g-0000000003-000", 10, _KEYED_GROUP),
+        ("g-0000000005-001", 15, _KEYED_GROUP),
+    ])
+    cdc = t._load()["cdc"]
+    assert cdc["path"].rsplit("/", 1)[1][:16] == "c-0000000005-000"
+    assert (cdc["rows"], sorted(cdc)) == (25, ["col_ids", "path", "rows",
+                                                "schema"])
+    assert t.changes(4, cdf=True).count() == 25
+
+
+def test_jobs_restore(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    t.upsert(_df(spark, 5, 10, "u"))
+    _check_op(spark, t, lambda: t.restore(2), 0, {
+        "fields": _fields("key_col", "restored_from"),
+        "op": "restore", "replaced_rows": None, "deleted_rows": None,
+        "groups": 2, "added": 0, "cdc": False, "dvs": 0,
+    }, [
+        ("g-0000000001-000", 40, _KEYED_GROUP),
+        ("g-0000000002-000", 40, _KEYED_GROUP),
+    ])
+    assert t._load()["restored_from"] == 2
+
+
+def test_jobs_rename_column(spark, tdir):
+    t = _two_group_table(spark, tdir, key_col="k")
+    _check_op(spark, t, lambda: t.rename_column("v", "w"), 0, {
+        "fields": _fields("key_col", "renamed"),
+        "op": "rename_column", "replaced_rows": None, "deleted_rows": None,
+        "groups": 2, "added": 0, "cdc": False, "dvs": 0,
+    }, [
+        ("g-0000000001-000", 40, _KEYED_GROUP),
+        ("g-0000000002-000", 40, _KEYED_GROUP),
+    ])
+    m = t._load()
+    assert m["schema"] == "k bigint, w string"
+    assert m["renamed"] == {"from": "v", "to": "w"}
+    assert m["groups"][0]["col_ids"] == {"k": 0, "v": 1}

@@ -6,21 +6,11 @@ clauses on a change-feed table."""
 
 from __future__ import annotations
 
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from sif_spark.table import SifTable
-
-BASE = "/tmp/sif_table_keyed_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _df(spark, lo, hi, val):

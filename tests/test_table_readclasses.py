@@ -15,22 +15,12 @@ renames, dv anti-join, time travel).
 
 from __future__ import annotations
 
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from sif_spark.plans.audit import scans
 from sif_spark.table import SifTable
-
-BASE = "/tmp/sif_table_readclasses_test"
-
-
-@pytest.fixture()
-def tdir():
-    shutil.rmtree(BASE, ignore_errors=True)
-    yield BASE
-    shutil.rmtree(BASE, ignore_errors=True)
 
 
 def _slice(spark, lo, hi, val="a"):
