@@ -25,10 +25,9 @@ custom column types (column_type.go:16-23).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from sif_spark.operators import multimodal as mm
@@ -40,14 +39,18 @@ def _pcm_int16(x: np.ndarray) -> np.ndarray:
     return v.astype(np.int64)
 
 
+def _require_frame_samples(n: int) -> None:
+    if n <= 0:
+        raise ValueError(f"frame_samples must be positive, got {n}")
+
+
 def frame_features_np(v: np.ndarray, frame_samples: int) -> list[tuple[int, int, int, int]]:
     """Per non-overlapping window: (frame_idx, energy=Σv², zcr, peak).
     ZCR counts strict sign flips (v[i-1]·v[i] < 0) between CONSECUTIVE
     samples inside the window — window-local, so frames are
     independent and the count is partitioning-invariant. The last
     partial window is kept (its energy simply sums fewer samples)."""
-    if frame_samples <= 0:
-        raise ValueError(f"frame_samples must be positive, got {frame_samples}")
+    _require_frame_samples(frame_samples)
     out = []
     for f, start in enumerate(range(0, len(v), frame_samples)):
         w = v[start : start + frame_samples]
@@ -74,49 +77,24 @@ def audio_frame_features(
     """(id, frame_idx, energy, zcr, peak) — one row per window, the
     FlatMap shape. ``on_error="null"`` skips undecodable blobs (zero
     rows emitted), the IgnoreRowErrors lever (operation.go:10-27)."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
+    # checked here, not per blob, so "null" cannot read it as corrupt blobs
+    _require_frame_samples(frame_samples)
     decoder = decoder or mm.media_decoder
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("frame_idx", T.IntegerType(), True),
-            T.StructField("energy", T.LongType(), True),
-            T.StructField("zcr", T.IntegerType(), True),
-            T.StructField("peak", T.IntegerType(), True),
-        ]
+    fields = [
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("energy", T.LongType()),
+        T.StructField("zcr", T.IntegerType()),
+        T.StructField("peak", T.IntegerType()),
+    ]
+    return mm.blob_stage(
+        df,
+        blob_col,
+        id_col,
+        fields,
+        lambda b: frame_features_np(_pcm_int16(decoder(b)), frame_samples),
+        on_error,
+        flat=True,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, energy, zcr, peak = [], [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                if b is None:
-                    continue
-                try:
-                    v = _pcm_int16(decoder(bytes(b)))
-                except (ValueError, NotImplementedError):
-                    if on_error == "null":
-                        continue
-                    raise
-                for f, e, z, p in frame_features_np(v, frame_samples):
-                    ids.append(i)
-                    fidx.append(f)
-                    energy.append(e)
-                    zcr.append(z)
-                    peak.append(p)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": fidx,
-                    "energy": energy,
-                    "zcr": zcr,
-                    "peak": peak,
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def trim_silence_np(
@@ -149,47 +127,19 @@ def trim_silence(
     binary column again — chainable into sample_frames /
     audio_frame_features / dedup_blobs). All-silent inputs yield a
     NULL blob and kept_samples = 0 rather than a zero-length WAV."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
+    _require_frame_samples(frame_samples)
     decoder = decoder or mm.media_decoder
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("blob", T.BinaryType(), True),
-            T.StructField("kept_samples", T.LongType(), True),
-        ]
-    )
-
-    def one(b):
-        if b is None:
-            return None, None
-        try:
-            v = _pcm_int16(decoder(bytes(b)))
-        except (ValueError, NotImplementedError):
-            if on_error == "null":
-                return None, None
-            raise
+    def trimmed(b: bytes) -> tuple[bytes | None, int]:
+        v = _pcm_int16(decoder(b))
         s, e = trim_silence_np(v, frame_samples, peak_threshold)
         if e <= s:
             return None, 0
         kept = v[s:e].astype(np.int16)
         return mm.encode_wav(kept, sample_rate=sample_rate), int(e - s)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pairs = [one(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "blob": [p[0] for p in pairs],
-                    # nullable Int64: a None mixed into a plain list
-                    # would infer float64 (the 53-bit rounding trap
-                    # caught in image_dhash)
-                    "kept_samples": pd.array(
-                        [p[1] for p in pairs], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
+    fields = [
+        T.StructField("blob", T.BinaryType()),
+        T.StructField("kept_samples", T.LongType()),
+    ]
+    return mm.blob_stage(df, blob_col, id_col, fields, trimmed, on_error)

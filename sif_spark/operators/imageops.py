@@ -30,10 +30,9 @@ resize before embed, always, at 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from sif_spark.operators import multimodal as mm
@@ -212,43 +211,11 @@ def image_dhash(
 ) -> DataFrame:
     """(id, dhash: long) via Arrow-batched mapInPandas — the image
     analog of dedup.simhash's (id, signature) contract."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     decoder = decoder or mm.media_decoder
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("dhash", T.LongType(), True),
-        ]
+    fields = [T.StructField("dhash", T.LongType())]
+    return mm.blob_stage(
+        df, blob_col, id_col, fields, lambda b: (dhash64(decoder(b)),), on_error
     )
-
-    def one(b):
-        if b is None:
-            return None
-        try:
-            return dhash64(decoder(bytes(b)))
-        except (ValueError, NotImplementedError):
-            if on_error == "null":
-                return None
-            raise
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # nullable Int64, NOT a plain list: a batch mixing ints
-            # with a None (tolerated decode failure) would otherwise
-            # infer float64 and silently round the 64-bit hash to 53
-            # mantissa bits — found by the banded-pairs equality test
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "dhash": pd.array(
-                        [one(b) for b in pdf[blob_col]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def image_near_dup_pairs(
@@ -293,38 +260,16 @@ def transform_blobs(
     errors (the IgnoreRowErrors lever, internal/util/operation.go:
     10-27), keeping a 100 TB preprocessing pass alive over corrupt
     inputs."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     decoder = decoder or mm.media_decoder
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("blob", T.BinaryType(), True),
-        ]
-    )
-
-    def one(b):
-        if b is None:
-            return None
-        try:
-            arr = transform(decoder(bytes(b)))
-            a = np.asarray(arr)
-            if a.dtype != np.uint8:
-                raise ValueError(
-                    f"transform produced dtype {a.dtype}; PPM re-encode "
-                    "needs uint8 — clip/round inside the transform"
-                )
-            return mm.encode_ppm(a)
-        except (ValueError, NotImplementedError):
-            if on_error == "null":
-                return None
-            raise
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "blob": [one(b) for b in pdf[blob_col]]}
+    def transformed(b: bytes) -> tuple[bytes]:
+        a = np.asarray(transform(decoder(b)))
+        if a.dtype != np.uint8:
+            raise ValueError(
+                f"transform produced dtype {a.dtype}; PPM re-encode "
+                "needs uint8 — clip/round inside the transform"
             )
+        return (mm.encode_ppm(a),)
 
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
+    fields = [T.StructField("blob", T.BinaryType())]
+    return mm.blob_stage(df, blob_col, id_col, fields, transformed, on_error)

@@ -41,7 +41,7 @@ plumbing unchanged.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -1678,6 +1678,64 @@ def default_embedder(decoded: np.ndarray, dims: int = 16) -> np.ndarray:
     return flat.reshape(dims, -1).mean(axis=1).astype(np.float32)
 
 
+def blob_stage(
+    df: DataFrame,
+    blob_col: str,
+    id_col: str,
+    fields: list[T.StructField],
+    fn: Callable[[bytes], tuple | Iterable[tuple]],
+    on_error: str,
+    flat: bool = False,
+) -> DataFrame:
+    """(id, *fields) from one Arrow-batched mapInPandas pass over
+    ``blob_col`` — the per-blob stage every media operator runs, and
+    the one copy of the reference's row-error wrapper
+    (IgnoreRowErrors, internal/util/operation.go:10-27) at the decode
+    boundary.
+
+    ``fn(blob_bytes)`` returns one tuple of ``fields`` values (map
+    shape) or, with ``flat``, an iterable of such tuples (FlatMap
+    shape; the whole iterable is listed inside the error guard, so a
+    blob yields all its rows or none). A NULL blob gives one all-NULL
+    row (map) or no rows (flat). A ValueError/NotImplementedError
+    raised anywhere in ``fn`` — the decoders' typed-error contract —
+    gives that same NULL outcome under ``on_error="null"`` and fails
+    the task under ``"raise"``; any other exception always fails it.
+    LongType fields are built as nullable Int64, so a 64-bit value next
+    to a NULL in one batch never rounds through float64."""
+    if on_error not in ("raise", "null"):
+        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
+    schema = T.StructType(
+        [T.StructField(id_col, df.schema[id_col].dataType, True), *fields]
+    )
+    none = [] if flat else [(None,) * len(fields)]
+
+    def rows(b) -> list[tuple]:
+        if b is None:
+            return none
+        try:
+            return list(fn(bytes(b))) if flat else [fn(bytes(b))]
+        except (ValueError, NotImplementedError):
+            if on_error == "null":
+                return none
+            raise
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            per_blob = [rows(b) for b in pdf[blob_col]]
+            ids = pdf[id_col].repeat([len(rs) for rs in per_blob])
+            out = {id_col: ids.reset_index(drop=True)}
+            emitted = [r for rs in per_blob for r in rs]
+            for k, f in enumerate(fields):
+                col = [r[k] for r in emitted]
+                if isinstance(f.dataType, T.LongType):
+                    col = pd.array(col, dtype="Int64")
+                out[f.name] = col
+            yield pd.DataFrame(out)
+
+    return df.select(id_col, blob_col).mapInPandas(run, schema)
+
+
 def decode_features(
     df: DataFrame,
     blob_col: str,
@@ -1719,34 +1777,12 @@ def decode_features(
     `default_embedder` mean-pool — so an honestly-decoded 8×8 PGM
     thumbnail gets the same feature semantics as any other image
     (ADVICE r6)."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     decoder = decoder or media_decoder
     emb = embedder or (fake_embedder if decoder is fake_decoder else default_embedder)
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("features", T.ArrayType(T.DoubleType()), True),
-        ]
+    fields = [T.StructField("features", T.ArrayType(T.DoubleType()))]
+    return blob_stage(
+        df, blob_col, id_col, fields, lambda b: (emb(decoder(b)).tolist(),), on_error
     )
-
-    def one(b) -> list | None:
-        if b is None:
-            return None
-        if on_error == "null":
-            try:
-                return emb(decoder(bytes(b))).tolist()
-            except (ValueError, NotImplementedError):
-                return None
-        return emb(decoder(bytes(b))).tolist()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [one(b) for b in pdf[blob_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def sample_frames(
@@ -1770,37 +1806,20 @@ def sample_frames(
     error instead of failing the task (zero frames emitted for that
     blob) — the IgnoreRowErrors lever for crawl-scale corpora, same
     contract as `decode_features`."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     frame_decoder = frame_decoder or media_frame_decoder
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("frame_idx", T.IntegerType(), True),
-            T.StructField("frame", T.BinaryType(), True),
-        ]
+    fields = [
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("frame", T.BinaryType()),
+    ]
+    return blob_stage(
+        df,
+        blob_col,
+        id_col,
+        fields,
+        lambda b: enumerate(frame_decoder(b, every_n)),
+        on_error,
+        flat=True,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                if b is None:
-                    continue
-                try:
-                    decoded = frame_decoder(bytes(b), every_n)
-                except (ValueError, NotImplementedError):
-                    if on_error == "null":
-                        continue
-                    raise
-                for j, fr in enumerate(decoded):
-                    ids.append(i)
-                    idxs.append(j)
-                    frames.append(fr)
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def fake_frame_decoder(blob: bytes, every_n: int) -> list[bytes]:

@@ -26,9 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from sif_spark.operators import multimodal as mm
 
@@ -209,34 +207,10 @@ def attach_id3(
     text-frame metadata for audio-corpus curation (dedup by
     title+artist, language/genre stratification). Blobs without a tag
     yield an empty map; malformed tags follow ``on_error``."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField(
-                "id3", T.MapType(T.StringType(), T.StringType()), True
-            ),
-        ]
+    fields = [T.StructField("id3", T.MapType(T.StringType(), T.StringType()))]
+    return mm.blob_stage(
+        df, blob_col, id_col, fields, lambda b: (id3_tags(b),), on_error
     )
-
-    def one(b):
-        if b is None:
-            return None
-        try:
-            return id3_tags(bytes(b))
-        except (ValueError, NotImplementedError):
-            if on_error == "null":
-                return None
-            raise
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "id3": [one(b) for b in pdf[blob_col]]}
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def probe_mp3(blob: bytes) -> dict:
@@ -867,34 +841,10 @@ def attach_audio_tags(
 ) -> DataFrame:
     """(id, tags: map<string,string>) via Arrow-batched mapInPandas —
     the cross-codec audio curation stage (attach_id3 generalized)."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField(
-                "tags", T.MapType(T.StringType(), T.StringType()), True
-            ),
-        ]
+    fields = [T.StructField("tags", T.MapType(T.StringType(), T.StringType()))]
+    return mm.blob_stage(
+        df, blob_col, id_col, fields, lambda b: (audio_tags(b),), on_error
     )
-
-    def one(b):
-        if b is None:
-            return None
-        try:
-            return audio_tags(bytes(b))
-        except (ValueError, NotImplementedError):
-            if on_error == "null":
-                return None
-            raise
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "tags": [one(b) for b in pdf[blob_col]]}
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def _vorbis_comment_bytes(tags: dict[str, str], vendor: bytes = b"sif") -> bytes:
@@ -1200,30 +1150,10 @@ def attach_probe(
     the metadata-only scan a pipeline runs over a fresh corpus before
     deciding what to decode. Default ``on_error="null"`` (unlike the
     decoders) because a probe's whole job is surveying unknown bytes."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("probe", PROBE_SCHEMA, True),
-        ]
-    )
 
-    def one(b):
-        if b is None:
-            return None
-        try:
-            p = probe_media(bytes(b))
-        except (ValueError, NotImplementedError):
-            if on_error == "null":
-                return None
-            raise
-        return tuple(p.get(k) for k in _FIELDS)
+    def probe(b: bytes) -> tuple:
+        p = probe_media(b)
+        return (tuple(p.get(k) for k in _FIELDS),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "probe": [one(b) for b in pdf[blob_col]]}
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
+    fields = [T.StructField("probe", PROBE_SCHEMA)]
+    return mm.blob_stage(df, blob_col, id_col, fields, probe, on_error)

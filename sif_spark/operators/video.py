@@ -31,8 +31,15 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+from pyspark.sql import types as T
 
-from sif_spark.operators.multimodal import _check_pixel_budget, encode_ppm
+from sif_spark.operators.multimodal import (
+    _check_pixel_budget,
+    blob_stage,
+    decode_ppm,
+    encode_ppm,
+    media_frame_decoder,
+)
 
 #: Codecs with a built-in decoder. Anything else raises
 #: NotImplementedError naming the fourcc (the injected-codec gate).
@@ -259,43 +266,18 @@ def scene_cuts(
     executor; SAD is integer-exact so q128 gates it in closed form.
     ``on_error="null"`` skips undecodable blobs (IgnoreRowErrors,
     internal/util/operation.go:10-27)."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    def cuts(b: bytes) -> Iterator[tuple[int, int]]:
+        frames = [decode_ppm(f) for f in media_frame_decoder(b, 1)]
+        for k in range(1, len(frames)):
+            s = frame_sad(frames[k - 1], frames[k])
+            if s > threshold:
+                yield k, s
 
-    from sif_spark.operators.multimodal import decode_ppm, media_frame_decoder
-
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("frame_idx", T.IntegerType(), True),
-            T.StructField("sad", T.LongType(), True),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids, fidx, sads = [], [], []
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                if b is None:
-                    continue
-                try:
-                    frames = [decode_ppm(f) for f in media_frame_decoder(bytes(b), 1)]
-                except (ValueError, NotImplementedError):
-                    if on_error == "null":
-                        continue
-                    raise
-                for k in range(1, len(frames)):
-                    s = frame_sad(frames[k - 1], frames[k])
-                    if s > threshold:
-                        ids.append(i)
-                        fidx.append(k)
-                        sads.append(s)
-            yield pd.DataFrame({id_col: ids, "frame_idx": fidx, "sad": sads})
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
+    fields = [
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("sad", T.LongType()),
+    ]
+    return blob_stage(df, blob_col, id_col, fields, cuts, on_error, flat=True)
 
 
 # ---------------------------------------------------------------------------

@@ -29,6 +29,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from sif_spark.operators.multimodal import blob_stage
+
 #: Member-count cap per shard — a forged archive can't explode one
 #: task's row buffer (real WebDataset shards hold ~10k samples).
 MAX_TAR_MEMBERS = 1 << 20
@@ -83,7 +85,11 @@ def iter_tar_members(blob: bytes) -> Iterator[tuple[str, bytes]]:
         raise ValueError("trailing bytes too short for a tar header")
 
 
-UNTAR_SCHEMA = "member string, payload binary"
+#: The rows `untar_blobs` and `unzip_blobs` emit per archive member.
+MEMBER_FIELDS = [
+    T.StructField("member", T.StringType()),
+    T.StructField("payload", T.BinaryType()),
+]
 
 
 def untar_blobs(
@@ -95,33 +101,9 @@ def untar_blobs(
     """Explode tar-shard blobs into (id_col, member, payload) rows —
     one Arrow-batched pass per shard. ``on_error="null"`` drops
     corrupt shards (zero rows) instead of failing the task."""
-    import pandas as pd
-
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("member", T.StringType(), True),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    return blob_stage(
+        df, blob_col, id_col, MEMBER_FIELDS, iter_tar_members, on_error, flat=True
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for sid, b in zip(pdf[id_col], pdf[blob_col]):
-                if b is None:
-                    continue
-                try:
-                    for name, payload in iter_tar_members(bytes(b)):
-                        recs.append((sid, name, payload))
-                except (ValueError, NotImplementedError):
-                    if on_error == "raise":
-                        raise
-            yield pd.DataFrame(recs, columns=[id_col, "member", "payload"])
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)
 
 
 def webdataset_samples(
@@ -349,30 +331,6 @@ def unzip_blobs(
 ) -> DataFrame:
     """Zip variant of `untar_blobs` — same output shape, so
     `webdataset_samples` regroups either archive family."""
-    import pandas as pd
-
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType, True),
-            T.StructField("member", T.StringType(), True),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    return blob_stage(
+        df, blob_col, id_col, MEMBER_FIELDS, iter_zip_members, on_error, flat=True
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for sid, b in zip(pdf[id_col], pdf[blob_col]):
-                if b is None:
-                    continue
-                try:
-                    for name, payload in iter_zip_members(bytes(b)):
-                        recs.append((sid, name, payload))
-                except (ValueError, NotImplementedError):
-                    if on_error == "raise":
-                        raise
-            yield pd.DataFrame(recs, columns=[id_col, "member", "payload"])
-
-    return df.select(id_col, blob_col).mapInPandas(run, out_schema)

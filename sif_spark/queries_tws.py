@@ -71,10 +71,7 @@ class _provider:
         self.spark = spark
 
     def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(_PROVIDER_KEY)
-        except Exception:
-            self.prev = None
+        self.prev = self.spark.conf.get(_PROVIDER_KEY, None)
         self.spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
 
     def __exit__(self, *exc):

@@ -523,17 +523,19 @@ def _arrow_col_minmax(col) -> tuple | None:
     """Arrow column → (lo, hi) in the manifest's JSON-stat form, or
     None when the type/values can't be order-compared after JSON
     round-tripping (mirrors table._stat_json exactly — the stats feed
-    the SAME prune_groups decisions)."""
+    the SAME prune_groups decisions). Arrow has no min_max kernel for
+    list, struct, map and dictionary columns."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
     from sif_spark.table import _STAT_SKIP, _stat_json
 
     try:
         mm = pc.min_max(col)
-        lo = _stat_json(mm["min"].as_py())
-        hi = _stat_json(mm["max"].as_py())
-    except Exception:
+    except pa.ArrowNotImplementedError:
         return None
+    lo = _stat_json(mm["min"].as_py())
+    hi = _stat_json(mm["max"].as_py())
     if lo is _STAT_SKIP or hi is _STAT_SKIP:
         return None
     return (lo, hi)

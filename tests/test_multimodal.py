@@ -637,6 +637,43 @@ def test_sample_frames_on_error_null(spark):
         mm.sample_frames(df, "blob", "id", every_n=1).collect()
 
 
+def test_blob_stage_error_rule(spark):
+    """blob_stage's one error rule, past decode: a typed error raised
+    after a flat blob already produced rows drops that blob whole under
+    'null', an untyped one fails the task under either setting, and a
+    map-shaped LongType field keeps its NULLs."""
+    from pyspark.sql import types as T
+
+    def parts(b):
+        yield (b[:1].decode(),)
+        if b[1:] == b"!":
+            raise ValueError("late typed error")
+        if b[1:] == b"?":
+            raise KeyError("untyped error")
+        yield (b[1:].decode(),)
+
+    fields = [T.StructField("part", T.StringType())]
+    df = spark.createDataFrame(
+        [(1, b"ab"), (2, b"c!"), (3, None)], "id long, blob binary"
+    ).coalesce(1)
+    got = mm.blob_stage(df, "blob", "id", fields, parts, "null", flat=True)
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (1, "b")]
+    with pytest.raises(Exception, match="late typed error"):
+        mm.blob_stage(df, "blob", "id", fields, parts, "raise", flat=True).collect()
+    untyped = spark.createDataFrame([(1, b"a?")], "id long, blob binary")
+    for on_error in ("raise", "null"):
+        with pytest.raises(Exception, match="untyped error"):
+            mm.blob_stage(
+                untyped, "blob", "id", fields, parts, on_error, flat=True
+            ).collect()
+
+    big = [T.StructField("n", T.LongType())]
+    got = mm.blob_stage(df, "blob", "id", big, lambda b: (2**62 + len(b),), "null")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 2**62 + 2), (2, 2**62 + 2), (3, None)
+    ]
+
+
 def test_decompression_bomb_bounds(monkeypatch):
     """ADVICE r7: attacker-controlled compressed payloads must stop at
     a typed error BEFORE the memory is spent. Three bounded paths:

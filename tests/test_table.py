@@ -1324,6 +1324,20 @@ def test_batch_datasource_writer_records_group_bytes(spark, tdir):
         ) == listed > 0
 
 
+def test_arrow_col_minmax_skips_only_kernel_less_types():
+    """The `sif_table` writer's batch stats: a column type Arrow has no
+    min_max kernel for (a list) gives no stats, while any other failure,
+    such as a non-Arrow argument, is raised."""
+    import pyarrow as pa
+
+    from sif_spark.sources.table_stream import _arrow_col_minmax
+
+    assert _arrow_col_minmax(pa.chunked_array([[3, 1, 2]])) == (1, 3)
+    assert _arrow_col_minmax(pa.chunked_array([[[1], [2, 3]]])) is None
+    with pytest.raises(TypeError):
+        _arrow_col_minmax(object())
+
+
 def test_batch_datasource_writer_roundtrip_txn_and_guards(spark, tdir):
     """df.write.format('sif_table'): create + append + overwrite via
     the DS writer interoperate with the full API (upsert, lookup,
@@ -2249,6 +2263,44 @@ def test_one_op_core():
     assert users([root / "table.py"], "write", calls_only=False) == {
         "SifTable._write_dir"
     }
+
+
+def test_one_blob_stage():
+    """Every media operator's per-blob pass runs through one stage: in
+    the six media operator modules only multimodal.blob_stage calls
+    mapInPandas, and sif_spark/ checks ``on_error`` in one place."""
+    import ast
+    import pathlib
+
+    import sif_spark
+
+    root = pathlib.Path(sif_spark.__file__).parent
+    media = ("audio", "imageops", "multimodal", "probe", "video", "webdataset")
+    callers = {
+        f"{name}.{getattr(top, 'name', '<module>')}"
+        for name in media
+        for top in ast.parse((root / "operators" / f"{name}.py").read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "mapInPandas"
+    }
+    assert callers == {"multimodal.blob_stage"}
+
+    def is_check(node):
+        return (
+            isinstance(node, ast.Compare)
+            and getattr(node.left, "id", None) == "on_error"
+            and isinstance(node.ops[0], ast.NotIn)
+            and ast.literal_eval(node.comparators[0]) == ("raise", "null")
+        )
+
+    checks = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text()))
+        if is_check(node)
+    ]
+    assert len(checks) == 1 and checks[0].startswith("operators/multimodal.py:")
 
 
 def test_one_storage_seam():

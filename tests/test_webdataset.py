@@ -251,3 +251,35 @@ def test_duplicate_member_last_wins(spark):
         "txt": b"second",
         "cls": b"3",
     }
+
+
+def test_null_drops_a_shard_whose_later_member_fails(spark):
+    """on_error='null' drops a corrupt shard whole, even when its walk
+    has already yielded members: a two-member tar whose second header
+    fails its checksum, and a two-member zip whose second local header
+    is bad, emit zero rows next to an intact shard."""
+    from sif_spark.operators.webdataset import iter_zip_members, unzip_blobs
+
+    entries = [("a.txt", b"one"), ("b.txt", b"two")]
+    tar = bytearray(make_tar(entries))
+    tar[1024] ^= 0xFF  # the second member's header starts at 1024
+    zipped = bytearray(make_zip(entries))
+    zipped[zipped.index(b"PK\x03\x04", 1)] ^= 0xFF
+    for explode, walk, good, bad, msg in (
+        (untar_blobs, iter_tar_members, make_tar(entries), bytes(tar),
+         "checksum mismatch at offset 1024"),
+        (unzip_blobs, iter_zip_members, make_zip(entries), bytes(zipped),
+         "bad local header"),
+    ):
+        members = walk(bad)
+        assert next(members) == ("a.txt", b"one")
+        with pytest.raises(ValueError, match=msg):
+            next(members)
+        df = spark.createDataFrame(
+            [(1, good), (2, bad)], "shard_id long, blob binary"
+        ).coalesce(1)
+        got = sorted(
+            (r["shard_id"], r["member"])
+            for r in explode(df, "blob", "shard_id", on_error="null").collect()
+        )
+        assert got == [(1, "a.txt"), (1, "b.txt")]
