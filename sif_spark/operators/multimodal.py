@@ -1805,7 +1805,10 @@ def sample_frames(
     ``on_error="null"`` skips blobs whose frame decode raises a typed
     error instead of failing the task (zero frames emitted for that
     blob) — the IgnoreRowErrors lever for crawl-scale corpora, same
-    contract as `decode_features`."""
+    contract as `decode_features`. ``every_n`` must be positive
+    (ValueError on the driver otherwise)."""
+    if every_n <= 0:
+        raise ValueError(f"every_n must be positive, got {every_n}")
     frame_decoder = frame_decoder or media_frame_decoder
     fields = [
         T.StructField("frame_idx", T.IntegerType()),

@@ -527,15 +527,22 @@ def save_ivf_index(index: IVFIndex, path: str) -> None:
 
     spark = index.assigned.sparkSession
     index.assigned.write.mode("overwrite").parquet(os.path.join(path, "assigned"))
-    cent_rows = [
-        (i, [float(x) for x in index.centroids[i]]) for i in range(index.n_cells)
-    ]
-    spark.createDataFrame(cent_rows, "cell int, vector array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    spark.createDataFrame(
-        [(index.vec_col, index.dim, index.corpus_rows)],
+    local_frame(
+        spark,
+        "cell int, vector array<double>",
+        {
+            "cell": list(range(index.n_cells)),
+            "vector": index.centroids.astype(np.float64).tolist(),
+        },
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    local_frame(
+        spark,
         "vec_col string, dim int, corpus_rows long",
+        {
+            "vec_col": [index.vec_col],
+            "dim": [index.dim],
+            "corpus_rows": [index.corpus_rows],
+        },
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
 

@@ -283,7 +283,8 @@ class CorpusPipeline:
                     continue
                 df = stage.fn(df)
                 df.write.mode("overwrite").parquet(path)
-                df = spark.read.parquet(path)
+                # under the written frame's schema: no footer-inference job
+                df = spark.read.schema(df.schema).parquet(path)
             else:
                 df = stage.fn(df)
             if collect_stats:
@@ -611,18 +612,17 @@ def daily_ingest(
     # committed epoch can prove signature compatibility (ADVICE r7)
     # and store-layout compatibility — id type + bucket count are
     # facts of the written files, not of a later caller (ADVICE r9)
-    spark.createDataFrame(
-        [
-            (
-                num_hashes,
-                shingle_k,
-                hash_fn,
-                batch.schema[id_col].dataType.simpleString(),
-                store_buckets or 0,
-            )
-        ],
+    local_frame(
+        spark,
         "num_hashes int, shingle_k int, hash_fn string, "
         "id_type string, store_buckets int",
+        {
+            "num_hashes": [num_hashes],
+            "shingle_k": [shingle_k],
+            "hash_fn": [hash_fn],
+            "id_type": [batch.schema[id_col].dataType.simpleString()],
+            "store_buckets": [store_buckets or 0],
+        },
     ).coalesce(1).write.mode("overwrite").parquet(f"{epoch_dir}/sig_params")
     survivors.drop("sig").write.mode("overwrite").parquet(f"{epoch_dir}/survivors")
     return spark.read.parquet(f"{epoch_dir}/survivors")

@@ -23,6 +23,28 @@ cluster whose executors have ``sif_spark`` installed can opt in with the
 plain Spark conf ``spark.python.daemon.module=sif_spark._daemon``;
 sif_spark adds no option of its own. Spark starts its data-source
 planner workers from ``pyspark.daemon`` whatever that conf says.
+
+Codecs come in two tiers. Bytes sif_spark keeps (pipeline checkpoints,
+table groups, change files, deletion-vector sidecars, bucketed stores,
+index tables, ingest epochs) are written once and re-read, so every
+parquet file is ``PARQUET_CODEC``, zstd: about half the bytes of
+Spark's snappy default on the corpus text perfbench cleans. Transient
+bytes (shuffle and spill) stay LZ4, the reference's codec. Both are
+plain Spark defaults that a user overrides as any other:
+``spark.sql.parquet.compression.codec`` and
+``spark.io.compression.codec`` in ``extra_conf``, or a write's own
+``.option("compression", ...)``. The ``sif_table`` data-source writer
+is the exception: it writes with pyarrow from a sessionless Python
+worker that Spark's conf does not reach, so it always uses
+``PARQUET_CODEC``.
+
+Spark's codegen cache (``spark.sql.codegen.cache.maxEntries``, a static
+conf) holds 1,000 compiled classes instead of 100. One warm perfbench
+pass generates 86 distinct classes on ``corpus_clean`` and 104 on
+``ann_ingest``; Guava evicts per segment, so at 100 entries every later
+pass re-compiled 26 and 50 of them from byte-identical sources, and at
+1,000 none. Set it in ``extra_conf`` to change it; it cannot change
+after the session starts.
 """
 
 from __future__ import annotations
@@ -30,6 +52,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Codec of every parquet file sif_spark writes (see the module docstring).
+PARQUET_CODEC = "zstd"
 
 _DEFAULTS: dict[str, str] = {
     # AQE: runtime partition coalescing, skew-join splitting, plan re-opt.
@@ -42,6 +67,10 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # Lz4 matches the reference's spill/shuffle codec (SURVEY.md §4.2).
     "spark.io.compression.codec": "lz4",
+    # Kept bytes (checkpoints, table groups, index tables) are zstd.
+    "spark.sql.parquet.compression.codec": PARQUET_CODEC,
+    # Room for every class a warm pipeline pass generates (module docstring).
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # FileOutputCommitter v2: task commits move files into the final
     # dir directly instead of a second job-commit rename pass. Every
     # sif_spark write lands in a fresh unique dir whose visibility is
@@ -90,12 +119,14 @@ def get_session(
     # inherit the environment the context STARTS with, so the protobuf
     # shim (sif_spark/streaming/tws_env.py) has to be on $PYTHONPATH
     # now for q167/q168's transformWithState to run in this session.
-    # No-op when protobuf is installed; never fails session creation.
-    try:
-        from sif_spark.streaming.tws_env import ensure_protobuf_env
+    # No-op when protobuf is installed. A shim that cannot be written
+    # (OSError) leaves the session without it: only the TWS entries
+    # need it, and they report a missing protobuf themselves.
+    from sif_spark.streaming.tws_env import ensure_protobuf_env
 
+    try:
         ensure_protobuf_env()
-    except Exception:
+    except OSError:
         pass
 
     builder = SparkSession.builder.master(master).appName(app_name)
@@ -156,11 +187,7 @@ def _ship_package(spark: SparkSession) -> None:
     reintroduce the very ModuleNotFoundError this code prevents), and
     any addPyFile error now propagates."""
     sc = spark.sparkContext
-    try:
-        already = any("sif_spark_pyfiles" in f for f in sc.listFiles)
-    except Exception:
-        already = False  # listFiles unavailable on this master — ship anyway
-    if already:
+    if any("sif_spark_pyfiles" in f for f in sc.listFiles):
         return
     sc.addPyFile(_build_pkg_zip())
 

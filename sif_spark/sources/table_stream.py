@@ -82,6 +82,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from sif_spark.logstore import store_for, strip_file_scheme
+from sif_spark.session import PARQUET_CODEC
 
 if TYPE_CHECKING:
     from sif_spark.table import SifTable
@@ -551,7 +552,9 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
     the change feeds and both feed guards refuse to cross it).
 
     Mechanics: executors stream Arrow batches straight into staged
-    parquet files under <table>/_staging/<write_id>/ and return
+    parquet files (codec ``session.PARQUET_CODEC``: pyarrow, which
+    Spark's parquet codec conf does not reach) under
+    <table>/_staging/<write_id>/ and return
     per-file row counts + min/max stats in their commit messages; the
     driver-side commit() (a sessionless Python worker — every file
     step goes through the table path's store, logstore.store_for, the
@@ -609,7 +612,9 @@ class _SifTableBatchWriter(DataSourceArrowWriter):
             if batch.num_rows == 0:
                 continue
             if writer is None:
-                writer = pq.ParquetWriter(fpath, batch.schema)
+                writer = pq.ParquetWriter(
+                    fpath, batch.schema, compression=PARQUET_CODEC
+                )
             writer.write_batch(batch)
             rows += batch.num_rows
             tbl = pa.Table.from_batches([batch])

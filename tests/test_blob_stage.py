@@ -167,3 +167,17 @@ def test_media_operator_blob_contract(spark, name):
         n_out = len(want[0])
         rows += [(2, *[None] * n_out), (3, *[None] * n_out)]
     assert got == rows
+
+
+@pytest.mark.parametrize("every_n", [0, -1])
+@pytest.mark.parametrize("on_error", ["raise", "null"])
+def test_sample_frames_rejects_non_positive_every_n(spark, every_n, on_error):
+    """``every_n <= 0`` raises on the driver before any job starts: 0
+    used to make every decoder's ``frames[::0]`` fail, which ``"null"``
+    turned into zero rows; -1 returned the frames reversed."""
+    df = spark.createDataFrame([(1, WAV)], "id long, blob binary")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    with pytest.raises(ValueError, match="every_n must be positive"):
+        mm.sample_frames(df, "blob", "id", every_n=every_n, on_error=on_error)
+    assert sched.nextJobId() == j0

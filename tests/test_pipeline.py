@@ -333,3 +333,63 @@ def test_daily_ingest_rejects_incompatible_history_params(spark, tmp_path):
             store, "e3", hash_fn="md5", num_hashes=32,
         )
     assert not isinstance(err.value, ValueError), err.value
+
+
+def _kinds_docs(spark):
+    rows = [
+        (i, f"the cat and dog sat with the word{i % 7} here\nline {i % 3}",
+         f"s{i % 2}")
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+def test_checkpoint_read_back_schema_equals_inferred(spark, tmp_path):
+    """A checkpointed stage is read back under the schema of the frame
+    just written (no footer-inference job): for every stage kind that
+    schema equals the one Spark infers from the written files."""
+    import glob
+
+    ckpt = str(tmp_path / "ck")
+    docs = _kinds_docs(spark)
+    full = (
+        CorpusPipeline()
+        .quality_filter(0.0)
+        .language_filter(exclude=())
+        .gopher_filter(min_words=1)
+        .exact_dedup()
+        .line_dedup(mode="drop_common", min_docs=100)
+        .near_dup_dedup(threshold=0.9)
+        .mixture({"s0": 1, "s1": 1})
+        .stratified_sample("source", {"s0": 100, "s1": 100})
+        .custom("nested", lambda df: df.withColumn(
+            "meta", F.struct(F.lit(1).alias("a"), F.array(F.col("doc_id")).alias("b"))
+        ))
+    )
+    for i in range(len(full.stages)):
+        # stages < i resume from their checkpoints; stage i is written
+        # and read back by this run
+        prefix = CorpusPipeline()
+        prefix.stages = full.stages[: i + 1]
+        out = prefix.run(docs, checkpoint_dir=ckpt)
+        (path,) = glob.glob(f"{ckpt}/stage_{i:02d}_*")
+        assert out.schema == spark.read.parquet(path).schema, full.stages[i].name
+
+
+def test_checkpointed_run_job_count(spark, tmp_path):
+    """Five checkpointed stages start 19 jobs: each stage's own jobs and
+    no schema-inference job for its read-back (a read-back that infers
+    the schema from the footers adds one job per stage)."""
+    docs = _kinds_docs(spark)
+    pipe = (
+        CorpusPipeline()
+        .quality_filter(0.0)
+        .language_filter(exclude=())
+        .exact_dedup()
+        .near_dup_dedup(threshold=0.9)
+        .mixture({"s0": 1, "s1": 1})
+    )
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    pipe.run(docs, checkpoint_dir=str(tmp_path / "ck"))
+    assert sched.nextJobId() - j0 == 19

@@ -251,6 +251,81 @@ def test_ivf_knn_probe_list_is_a_local_scan(spark, tmp_path):
     assert "LocalTableScan" in executed, executed
 
 
+def _write_plans(spark, fn):
+    """The physical plans of the SQL executions ``fn`` runs (the status
+    store's record, once the listener bus has caught up)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    seen = {e.executionId() for e in _seq(store.executionsList())}
+    fn()
+    bus.waitUntilEmpty()
+    return [
+        e.physicalPlanDescription()
+        for e in _seq(store.executionsList())
+        if e.executionId() not in seen
+    ]
+
+
+def _seq(jseq):
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def test_driver_built_records_are_local_scans(spark, tmp_path):
+    """save_ivf_index's centroids and meta and daily_ingest's sig_params
+    record are written from LocalTableScans: no ExistingRDD scan (a
+    Python RDD whose tasks start Python workers) in any write's plan,
+    and each record reads back with the values and types it had."""
+    import glob
+
+    import numpy as np
+
+    from sif_spark.operators.similarity import (
+        build_ivf_index,
+        load_ivf_index,
+        save_ivf_index,
+    )
+    from sif_spark.pipeline import daily_ingest
+
+    index = build_ivf_index(_vec_df(spark, 60), n_cells=3, max_iter=2, seed=7)
+    ivf = str(tmp_path / "ivf")
+    plans = _write_plans(spark, lambda: save_ivf_index(index, ivf))
+    cent = spark.read.parquet(f"{ivf}/centroids")
+    assert cent.schema.simpleString() == "struct<cell:int,vector:array<double>>"
+    got = {r["cell"]: r["vector"] for r in cent.collect()}
+    assert got == {i: [float(x) for x in c] for i, c in enumerate(index.centroids)}
+    meta = spark.read.parquet(f"{ivf}/meta")
+    assert meta.schema.simpleString() == (
+        "struct<vec_col:string,dim:int,corpus_rows:bigint>"
+    )
+    assert [tuple(r) for r in meta.collect()] == [("embedding", 4, 60)]
+    back = load_ivf_index(spark, ivf)
+    assert np.array_equal(back.centroids, index.centroids)
+    assert (back.vec_col, back.dim, back.corpus_rows) == ("embedding", 4, 60)
+
+    docs = spark.range(6).selectExpr("id AS doc_id", "concat('a b c d ', id) AS text")
+    store = str(tmp_path / "store")
+    plans += _write_plans(
+        spark, lambda: daily_ingest(docs, store, "d1", hash_fn="md5", num_hashes=16)
+    )
+    (params,) = glob.glob(f"{store}/epoch_*/sig_params")
+    rec = spark.read.parquet(params)
+    assert rec.schema.simpleString() == (
+        "struct<num_hashes:int,shingle_k:int,hash_fn:string,"
+        "id_type:string,store_buckets:int>"
+    )
+    assert [tuple(r) for r in rec.collect()] == [(16, 3, "md5", "bigint", 0)]
+
+    records = [
+        p for p in plans
+        if "InsertIntoHadoopFsRelationCommand" in p
+        and any(f"/{n}," in p for n in ("centroids", "meta", "sig_params"))
+    ]
+    assert len(records) == 3, plans
+    for p in records:
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+
+
 def test_global_rank_plan_flat_at_high_partition_count(spark):
     """VERDICT r2 'What's wrong' #2: the per-partition rank offsets must
     ship as a broadcast-joined frame, not an O(#partitions) CASE chain —
