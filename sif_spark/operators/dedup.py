@@ -748,6 +748,16 @@ def near_dup_clusters(
     broadcast-join-sized, and enforced on measured bytes rather than
     assumed id width.
 
+    The driver tier hands its result to the JVM as Arrow
+    (``sources.memory.local_frame``): it plans as a ``LocalTableScan``
+    and reading it runs no Python task. (A ``createDataFrame`` over the
+    Python rows would be a Python RDD, whose tasks start a second Python
+    worker daemon beside the UDF one.) A LocalTableScan carries its true
+    size, so a join against it may plan as a broadcast; a caller that
+    needs the join's shuffle says so with a hint, as
+    ``CorpusPipeline.near_dup_dedup`` does to keep its anti-join output
+    in one AQE-coalesced partition.
+
     NOTE — laziness contract: when the driver tier is eligible this
     function is EAGER (it runs the upstream pair job at call time to
     collect the edges) and its result is a small local DataFrame.
@@ -780,7 +790,9 @@ def near_dup_clusters(
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        out_rows = [(n, find(n)) for n in parent]
+        from sif_spark.sources.memory import local_frame
+
+        nodes = list(parent)
         id_type = pairs.schema[id_a].dataType
         schema = T.StructType(
             [
@@ -788,7 +800,11 @@ def near_dup_clusters(
                 T.StructField("cluster_id", id_type, True),
             ]
         )
-        return pairs.sparkSession.createDataFrame(out_rows, schema)
+        return local_frame(
+            pairs.sparkSession,
+            schema,
+            {"doc_id": nodes, "cluster_id": [find(n) for n in nodes]},
+        )
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     # No dedup of the edge list: MIN over neighbors is insensitive to

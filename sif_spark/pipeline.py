@@ -165,11 +165,16 @@ class CorpusPipeline:
             # near_dup_clusters always emits hard-coded (doc_id,
             # cluster_id) regardless of the pipeline's id_col — filter
             # on ITS names, then alias back to ours (ADVICE r5: a
-            # non-default id_col crashed here with UNRESOLVED_COLUMN)
+            # non-default id_col crashed here with UNRESOLVED_COLUMN).
+            # The merge hint keeps the anti-join a sort-merge join when
+            # the clusters are a small LocalTableScan: a broadcast would
+            # keep kept's partitions, one checkpoint file each, where
+            # the shuffle lets AQE coalesce the output to one.
             dupes = (
                 near_dup_clusters(pairs)
                 .filter(F.col("doc_id") != F.col("cluster_id"))
                 .select(F.col("doc_id").alias(self.id_col))
+                .hint("merge")
             )
             return kept.join(dupes, self.id_col, "left_anti")
 

@@ -33,7 +33,7 @@ from sif_spark.frame import SifFrame
 from sif_spark.functions import cents, key_columns_portable
 from sif_spark.sources.dsv import DSVConf, read_dsv, read_dsv_decoded
 from sif_spark.sources.jsonl import read_jsonl
-from sif_spark.sources.memory import from_rows
+from sif_spark.sources.memory import from_rows, local_frame
 from sif_spark.sources.parquet import read_table
 
 
@@ -459,7 +459,7 @@ def q43_collect_partition_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     first') and stays pytest-covered."""
     n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     rows = SifFrame(n).repartition(3, "n_regionkey").collect(partition_limit=3)
-    out = spark.createDataFrame(rows, n.schema)
+    out = local_frame(spark, n.schema, {c: [r[c] for r in rows] for c in n.columns})
     return out.orderBy("n_nationkey")
 
 
@@ -486,8 +486,12 @@ def q47_custom_accumulator(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
     hist = SifFrame(d).accumulate(PyAccumulator(accumulate=fold, merge=merge, zero={}))
-    rows = sorted((lang, int(cnt)) for lang, cnt in hist.items())
-    return spark.createDataFrame(rows, "lang string, n_docs long")
+    langs = sorted(hist)
+    return local_frame(
+        spark,
+        "lang string, n_docs long",
+        {"lang": langs, "n_docs": [int(hist[lang]) for lang in langs]},
+    )
 
 
 ORACLE_Q47 = """

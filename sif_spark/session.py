@@ -22,7 +22,12 @@ Other masters keep Spark's daemon, because their executors have no
 cluster whose executors have ``sif_spark`` installed can opt in with the
 plain Spark conf ``spark.python.daemon.module=sif_spark._daemon``;
 sif_spark adds no option of its own. Spark starts its data-source
-planner workers from ``pyspark.daemon`` whatever that conf says.
+planner workers from ``pyspark.daemon`` whatever that conf says. Spark
+also keys each daemon by its runner's environment, so the tasks of a
+Python RDD (``createDataFrame`` over Python rows) start a second daemon
+and its own workers beside the pandas-UDF ones. Frames that sif_spark
+builds on the driver therefore reach the JVM as Arrow
+(``sources.memory.local_frame``), which runs no Python task.
 
 Codecs come in two tiers. Bytes sif_spark keeps (pipeline checkpoints,
 table groups, change files, deletion-vector sidecars, bucketed stores,

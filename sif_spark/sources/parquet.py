@@ -45,16 +45,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (PARQUET_TYPE_ILLEGAL) or render the timestamps in a non-UTC
     session zone and break oracle comparison.
     """
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F, types as T
 
     def try_conf(key: str, value: str) -> None:
-        # A caller-provided session may refuse runtime conf writes; the
-        # cast fallback below still normalizes types, so never let a
-        # failed set fail the read itself (review r4 — an unguarded
-        # set after a guarded one made the fallback unreachable).
+        # A caller-provided session may refuse runtime conf writes
+        # (CANNOT_MODIFY_CONFIG, an AnalysisException); the cast
+        # fallback below still normalizes types, so a refused set must
+        # not fail the read itself (review r4 — an unguarded set after
+        # a guarded one made the fallback unreachable). Any other
+        # error raises.
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except AnalysisException:
             pass
 
     if name == "events":

@@ -2901,12 +2901,19 @@ class SifTable:
             df = self.read(m["version"])
             keys = _key_cols(m)
             if m.get("bucket"):
-                # bucketBy owns the layout — the write clusters it
                 if zorder_by:
                     raise ValueError(
                         "bucketed tables own their layout — zorder_by does "
                         "not compose with bucket_by"
                     )
+                # one task per bucket (bucketBy's bucket id is this hash
+                # partitioning's) with rows in key order: one file per
+                # bucket, and bytes that do not follow the read's file
+                # packing, so two compacts write the same bytes
+                b = m["bucket"]
+                df = df.repartition(b["n"], b["col"]).sortWithinPartitions(
+                    *(keys or [b["col"]])
+                )
             elif zorder_by:
                 from sif_spark.operators.layout import zorder_key
 

@@ -40,6 +40,33 @@ def test_timestamp_normalization_keeps_pushdown(spark):
     assert has_pushed_filter(QUERIES["q01_pricing_summary"](spark, SF), "l_shipdate")
 
 
+def test_read_table_tolerates_only_a_refused_conf_write(spark):
+    """read_table re-applies its read confs on the caller's session. A
+    session that refuses a runtime conf write (CANNOT_MODIFY_CONFIG, an
+    AnalysisException) still gets its table, normalized; any other
+    error from the conf write raises."""
+    from types import SimpleNamespace
+
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
+
+    from sif_spark.sources.parquet import read_table
+
+    with pytest.raises(AnalysisException) as refused:
+        spark.conf.set("spark.sql.warehouse.dir", "/elsewhere")
+
+    def session(error):
+        def refuse(key, value):
+            raise error
+
+        return SimpleNamespace(read=spark.read, conf=SimpleNamespace(set=refuse))
+
+    df = read_table(session(refused.value), SF, "events")
+    assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+    with pytest.raises(RuntimeError, match="conf store gone"):
+        read_table(session(RuntimeError("conf store gone")), SF, "events")
+
+
 def test_q03_broadcast_joins(spark):
     df = QUERIES["q03_revenue_by_nation"](spark, SF)
     strategies = join_strategies(df)
@@ -324,6 +351,83 @@ def test_driver_built_records_are_local_scans(spark, tmp_path):
     assert len(records) == 3, plans
     for p in records:
         assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+
+
+def test_driver_tier_clusters_are_a_local_scan(spark):
+    """near_dup_clusters' driver union-find tier hands its (doc_id,
+    cluster_id) rows to the JVM as Arrow: the result plans as a
+    LocalTableScan with no ExistingRDD (a Python RDD whose tasks start
+    Spark's RDD worker daemon), keeps the pair ids' type, and holds one
+    row per node labelled with its component's minimum id."""
+    from sif_spark.operators.dedup import near_dup_clusters
+    from sif_spark.sources.memory import local_frame
+
+    edges = {"a": [5, 2, 9, 7, 7], "b": [2, 1, 8, 9, 3]}
+    want = {1: 1, 2: 1, 5: 1, 3: 3, 7: 3, 8: 3, 9: 3}
+    for typ, conv in (("bigint", int), ("string", str)):
+        pairs = local_frame(
+            spark, f"a {typ}, b {typ}", {k: [conv(x) for x in v] for k, v in edges.items()}
+        )
+        out = near_dup_clusters(pairs, id_a="a", id_b="b")
+        assert out.schema.simpleString() == (
+            f"struct<doc_id:{typ},cluster_id:{typ}>"
+        )
+        assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {
+            conv(d): conv(c) for d, c in want.items()
+        }
+        assert out.count() == len(want)
+        executed = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in executed and "ExistingRDD" not in executed, executed
+
+
+def test_near_dup_dedup_checkpoint_is_one_file(spark, tmp_path):
+    """A checkpointed near_dup_dedup over a 4-partition corpus writes its
+    stage as one file: the anti-join against the driver tier's
+    LocalTableScan stays a sort-merge join (a broadcast would keep the
+    corpus's 4 partitions, one file each), and the write's plan reads no
+    ExistingRDD but the stage's own localCheckpoint of the corpus."""
+    import glob
+
+    from sif_spark.pipeline import CorpusPipeline
+
+    docs = spark.range(40).repartition(4).selectExpr(
+        "id AS doc_id",
+        "concat('the cat and the dog sat on the mat near word ', id % 5) AS text",
+    )
+    ck = str(tmp_path / "ck")
+    pipe = CorpusPipeline().near_dup_dedup(threshold=0.9)
+    plans = _write_plans(spark, lambda: pipe.run(docs, checkpoint_dir=ck))
+    (stage,) = glob.glob(f"{ck}/stage_00_*")
+    assert len(glob.glob(f"{stage}/*.parquet")) == 1
+    kept = spark.read.parquet(stage).collect()
+    assert sorted(r["doc_id"] for r in kept) == [0, 1, 2, 3, 4]
+    (write,) = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert "SortMergeJoin" in write and "LocalTableScan" in write, write
+    rdds = [
+        ln for ln in write.splitlines()
+        if ln.startswith("Arguments:") and "ExistingRDD" in ln
+    ]
+    assert rdds and all(" at localCheckpoint " in ln for ln in rdds), rdds
+
+
+def test_no_python_row_frames_outside_memory_source():
+    """Driver-built frames reach the JVM as Arrow: no module of
+    sif_spark/ but sources/memory.py calls createDataFrame (over Python
+    rows that is a Python RDD, read by Python tasks)."""
+    import ast
+
+    import sif_spark
+
+    root = Path(sif_spark.__file__).parent
+    calls = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in sorted(root.rglob("*.py"))
+        if f.relative_to(root) != Path("sources/memory.py")
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "createDataFrame"
+    ]
+    assert calls == []
 
 
 def test_global_rank_plan_flat_at_high_partition_count(spark):

@@ -175,6 +175,31 @@ def test_bucketed_layout_zero_shuffle_after_compact(spark, tdir):
         t2.bucketed_frame()
 
 
+def test_bucketed_compact_writes_same_bytes(spark, tdir):
+    """compact() on a bucketed table writes one file per bucket, rows in
+    key order, so two compacts of the same table write the same bytes
+    (a layout that followed the read's file packing differed from run
+    to run and wrote one file per bucket per read task)."""
+    import glob
+    import hashlib
+
+    def build(name):
+        t = SifTable.create(spark, f"{tdir}/{name}", _df(spark, 0, 30, "a").repartition(3),
+                            key_col="k", bucket_by="k", n_buckets=4)
+        t.append(_df(spark, 30, 60, "b").repartition(2))
+        t.append(_df(spark, 60, 90, "c"))
+        t.compact()
+        (g,) = t._load()["groups"]
+        return g["bytes"], sorted(
+            hashlib.sha256(open(f, "rb").read()).hexdigest()
+            for f in glob.glob(f"{g['path']}/*.parquet")
+        )
+
+    first, second = build("b1"), build("b2")
+    assert len(first[1]) == 4
+    assert first == second
+
+
 def test_txn_append_is_idempotent(spark, tdir):
     """append(txn=) must make crash-replays no-ops: a replayed epoch
     neither adds rows nor bumps the version, per app_id."""
